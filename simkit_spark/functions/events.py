@@ -17,16 +17,22 @@ whole-stage codegen and every aggregate combines map-side:
 Scale notes: every shuffle here is keyed by ``user_id`` (or by the
 tiny post-aggregation type/day keys); per-user state is bounded by
 that user's event count, so skewed power-users are the only hazard and
-AQE's skew-join split handles the funnel's stage joins. Nothing
-collects to the driver.
+AQE's skew-join split handles the funnel's stage joins. The three
+reductions never collect to the driver; :func:`temporal_reachability`
+does, but only when its contact table is driver-sized (it then runs
+one time-ordered pass on the driver instead of Spark sweeps).
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import materialize
+from ..util import local_dispatch_rows, materialize
 
 
 def funnel(
@@ -164,6 +170,77 @@ def temporal_reachability(
     over-reports on event streams because it ignores causality (an
     edge that fired BEFORE you arrived cannot transmit).
 
+    Size dispatch (the repo's *_auto contract): the contact table is
+    checkpointed once; at most ``local_dispatch_rows`` rows (500k for
+    three longs) it is driver-sized, so one Arrow collect and one
+    time-ordered driver pass (:func:`_earliest_arrival_local`) replace
+    the sweeps, whose fixed per-sweep job cost dominates at that size. Larger tables run
+    the distributed frontier-delta sweeps (:func:`_temporal_sweeps`),
+    where ``max_sweeps`` is the backstop. Both paths compute the same
+    fixpoint, so their outputs are identical (parity-tested).
+    """
+    if not seeds:
+        raise ValueError("temporal_reachability requires at least one seed")
+    c = contacts.select("src", "dst", F.col("t").cast("long")).localCheckpoint()
+    if c.count() > local_dispatch_rows(c.schema):
+        return _temporal_sweeps(c, seeds, max_sweeps)
+    return _earliest_arrival_local(c, seeds)
+
+
+def _earliest_arrival_local(c: DataFrame, seeds: list) -> DataFrame:
+    """Driver path of :func:`temporal_reachability`: one pass over the
+    contacts in (t, src) order. When the pass reaches time t every node
+    that will ever arrive by t already has, so a not-yet-arrived node
+    reached at t arrives exactly at t. Contacts with equal t can chain
+    (t >= arrival allows a same-time hop), so each equal-t group runs a
+    BFS from the nodes that had arrived by t; a node arrives once, so
+    the BFS work over the whole pass is bounded by the node count."""
+    id_t = c.schema["src"].dataType.simpleString()
+    pdf = c.toPandas()
+    seed_ids = sorted(set(seeds))
+    ids, inv = np.unique(
+        np.concatenate(
+            [pdf["src"].to_numpy(), pdf["dst"].to_numpy(), np.asarray(seed_ids)]
+        ),
+        return_inverse=True,
+    )
+    m = len(pdf)
+    src, dst, seed_idx = inv[:m], inv[m : 2 * m], inv[2 * m :]
+    t = pdf["t"].to_numpy(dtype=np.int64)
+    order = np.lexsort((src, t))
+    src, dst, t = src[order].tolist(), dst[order].tolist(), t[order].tolist()
+    never = np.iinfo(np.int64).max
+    arr = [never] * len(ids)
+    for s in seed_idx.tolist():
+        arr[s] = 0
+    lo = 0
+    while lo < m:
+        tt = t[lo]
+        hi = bisect_right(t, tt, lo)
+        stack = []
+        for k in range(lo, hi):
+            v = dst[k]
+            if arr[src[k]] <= tt < arr[v]:
+                arr[v] = tt
+                stack.append(v)
+        while stack:  # same-time chains; src is ascending within [lo, hi)
+            u = stack.pop()
+            for k in range(bisect_left(src, u, lo, hi), bisect_right(src, u, lo, hi)):
+                v = dst[k]
+                if tt < arr[v]:
+                    arr[v] = tt
+                    stack.append(v)
+        lo = hi
+    arr = np.asarray(arr, dtype=np.int64)
+    hit = arr < never
+    res = pd.DataFrame({"id": ids[hit].tolist(), "arrival": arr[hit].tolist()})
+    return c.sparkSession.createDataFrame(res, schema=f"id {id_t}, arrival long")
+
+
+def _temporal_sweeps(c: DataFrame, seeds: list, max_sweeps: int) -> DataFrame:
+    """Distributed path of :func:`temporal_reachability` over the
+    (src, dst, t long) contact table ``c``.
+
     Scale shape: FRONTIER-DELTA label-correcting sweeps (delta-SSSP) —
     any improvement to arrival(v) must route through a node whose own
     arrival improved last sweep, so per sweep only the frontier (the
@@ -181,13 +258,11 @@ def temporal_reachability(
     oracle's recursive CTE does too); raises loudly if ``max_sweeps``
     rounds don't converge.
     """
-    if not seeds:
-        raise ValueError("temporal_reachability requires at least one seed")
-    spark = contacts.sparkSession
-    c = contacts.select("src", "dst", F.col("t").cast("long")).localCheckpoint()
     id_t = c.schema["src"].dataType.simpleString()
-    labels = spark.createDataFrame(
-        [(s, 0) for s in sorted(set(seeds))], schema=f"id {id_t}, arr long"
+    seed_ids = sorted(set(seeds))
+    labels = c.sparkSession.createDataFrame(
+        pd.DataFrame({"id": seed_ids, "arr": [0] * len(seed_ids)}),
+        schema=f"id {id_t}, arr long",
     ).localCheckpoint()
     # prev = labels BEFORE the last merge; the frontier (labels that
     # improved last sweep) is the LAZY improvement filter labels⋈prev —

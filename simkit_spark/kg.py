@@ -25,6 +25,7 @@ xxhash64/rand().
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions.dedup import _md5_long
@@ -288,8 +289,9 @@ def transitive_closure(
 
     Below ``local_threshold`` edges (byte-budgeted default) the graph
     is driver-sized: one collect, per-source BFS over an adjacency
-    dict, one createDataFrame back — Arrow-optional (plain Python
-    lists, the CORRECTNESS_r02 kmeans lesson). Same min-hop semantics
+    dict, one pandas frame with an explicit schema back (it plans as a
+    LocalRelation; its cells are Python natives, so it also holds with
+    Arrow off — the CORRECTNESS_r02 kmeans lesson). Same min-hop semantics
     by construction (BFS layers == semi-naive layers).
 
     Reference semantics: transitive reachability over the entity graph
@@ -337,7 +339,8 @@ def transitive_closure(
                     frontier = nxt
                 out_rows.extend((s, d, h) for d, h in dist.items())
             return spark.createDataFrame(
-                out_rows, "subj string, obj string, hops int"
+                pd.DataFrame(out_rows, columns=["subj", "obj", "hops"]),
+                "subj string, obj string, hops int",
             )
         paths = (
             e.select("src", "dst").distinct()
@@ -1126,8 +1129,8 @@ def rdfs_entail(triples: DataFrame, schema: list[tuple[str, str, str]]) -> DataF
 
     def pairs_df(m: dict[str, set[str]], a: str, b: str) -> DataFrame:
         rows = [(k, v) for k, vs in sorted(m.items()) for v in sorted(vs)]
-        return spark.createDataFrame(rows or [("", "")], f"{a} string, {b} string").where(
-            F.col(a) != "" if not rows else F.lit(True)
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=[a, b]), f"{a} string, {b} string"
         )
 
     t = triples.select("subj", "pred", "obj")

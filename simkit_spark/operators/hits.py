@@ -52,7 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize, py_scalar
+from ..util import local_dispatch_rows, materialize
 
 HITS_ITER_DP = 9
 
@@ -109,14 +109,17 @@ def hits_auto(
         h_raw = np.zeros(n, dtype=np.int64)
         np.add.at(h_raw, src, a[dst])
         h = _normalize(h_raw)
+    import pandas as pd
+
     inv = 1.0 / float(scale)
-    rows = [
-        (py_scalar(i), hv, av)
-        for i, hv, av in zip(
-            ids, (h.astype(np.float64) * inv).tolist(), (a.astype(np.float64) * inv).tolist()
-        )
-    ]
-    return spark.createDataFrame(rows, f"id {id_t}, hub double, authority double")
+    res = pd.DataFrame(
+        {
+            "id": ids.tolist(),
+            "hub": (h.astype(np.float64) * inv).tolist(),
+            "authority": (a.astype(np.float64) * inv).tolist(),
+        }
+    )
+    return spark.createDataFrame(res, f"id {id_t}, hub double, authority double")
 
 
 def hits(edges: DataFrame, n_iter: int = 5, iter_dp: int = HITS_ITER_DP) -> DataFrame:

@@ -40,10 +40,12 @@ list = top-k of (current ∪ candidates-both-directions). Monotone:
 per-node lists only improve (the union always contains the current
 list); converged when a sweep changes nothing.
 
-Cost note (documented trade): the paper's "new-flag" optimization
-(only join neighbors not yet joined) roughly halves repeat-pair
-evaluations; omitted here for plan clarity — repeats cost work, never
-correctness, and the distinct-pair dedup bounds them per sweep.
+New-flag rule (the paper's incremental search): a sweep generates only
+pairs with at least one co-neighbor edge that was not in the previous
+sweep's capped list — an anti-join against that list instead of
+per-node flags. Old-old pairs were scored the sweep before and cannot
+change any list, so skipping them saves work without changing output;
+at convergence the pair stream dries up.
 """
 
 from __future__ import annotations

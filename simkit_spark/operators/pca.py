@@ -118,14 +118,17 @@ def transform_pca(
 ) -> DataFrame:
     """Project: (id, out_col array<double>) = (x - mean) @ components,
     optionally divided by sqrt(eigenvalue + eps) (whitening — unit
-    variance per retained direction). Broadcast matmul per Arrow
-    batch; no shuffle."""
+    variance per retained direction). Eigenvalues are clipped at zero
+    first: eigh of a near-singular covariance can return tiny negative
+    ones, whose sqrt would be NaN (eigen.py clips the same way).
+    Broadcast matmul per Arrow batch; no shuffle."""
     import pandas as pd
 
     mu = np.asarray(model["mean"], dtype=np.float64)
     w = np.asarray(model["components"], dtype=np.float64)
     if whiten:
-        w = w / np.sqrt(np.asarray(model["explained_variance"]) + eps)
+        lam = np.asarray(model["explained_variance"], dtype=np.float64)
+        w = w / np.sqrt(np.clip(lam, 0.0, None) + eps)
     bc = emb.sparkSession.sparkContext.broadcast((mu, w))
 
     def gen(it):

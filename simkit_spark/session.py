@@ -60,6 +60,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # timestamp windows and date_trunc follow the session zone: pin
+        # it so no result depends on the host's zone (streaming_hll
+        # windows vs the DuckDB twin on non-whole-hour offsets)
+        .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -47,8 +47,16 @@ def no_arrow(spark):
         "node2vec_walks_knn",
         "skipgram_pairs_knn",
         "hits_knn",
+        # pandas frames with explicit schemas: the driver pass of
+        # temporal reachability, the RDFS ontology tables, the local
+        # transitive closure
+        "events_temporal_reach",
+        "kg_rdfs_entail",
+        "kg_closure",
     ],
 )
 def test_local_fast_paths_without_arrow(no_arrow, name):
+    # a cached entailed KG would skip the ontology-table conversion
+    entry_mod._KG_ENT_CACHE.clear()
     df = entry_mod.queries()[name](no_arrow, SF)
     assert df.count() > 0

@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from simkit_spark.functions import events
 from simkit_spark.functions.events import temporal_reachability
 from simkit_spark.operators.densest import densest_subgraph_rounds
 from simkit_spark.operators.mst import (
@@ -135,19 +137,34 @@ def test_densest_empty(spark):
 
 
 # ------------------------------------------------- temporal reachability
+# Every hand-checked case runs on both paths: the driver pass (these
+# tables are far under the dispatch threshold) and the distributed
+# sweeps, forced by a dispatch threshold below any row count.
 def _contacts(spark, rows):
     return spark.createDataFrame(rows, "src long, dst long, t long")
+
+
+def _arrivals(df):
+    return {r["id"]: r["arrival"] for r in df.collect()}
+
+
+def _reach_both(c, seeds):
+    local = _arrivals(temporal_reachability(c, seeds=seeds))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(events, "local_dispatch_rows", lambda schema: -1)
+        dist = _arrivals(temporal_reachability(c, seeds=seeds))
+    return {"local": local, "distributed": dist}
+
+
+def _on_both(want):
+    return {"local": want, "distributed": want}
 
 
 def test_temporal_respects_causality(spark):
     # 0 -(t=10)-> 1 -(t=5)-> 2: the 1->2 contact fired BEFORE 1 was
     # reached, so 2 is NOT reachable; static BFS would say it is
     c = _contacts(spark, [(0, 1, 10), (1, 2, 5)])
-    got = {
-        r["id"]: r["arrival"]
-        for r in temporal_reachability(c, seeds=[0]).collect()
-    }
-    assert got == {0: 0, 1: 10}
+    assert _reach_both(c, [0]) == _on_both({0: 0, 1: 10})
 
 
 def test_temporal_earliest_arrival(spark):
@@ -155,29 +172,47 @@ def test_temporal_earliest_arrival(spark):
     c = _contacts(
         spark, [(0, 3, 100), (0, 1, 20), (1, 3, 30), (0, 2, 50)]
     )
-    got = {
-        r["id"]: r["arrival"]
-        for r in temporal_reachability(c, seeds=[0]).collect()
-    }
-    assert got == {0: 0, 1: 20, 2: 50, 3: 30}
+    assert _reach_both(c, [0]) == _on_both({0: 0, 1: 20, 2: 50, 3: 30})
 
 
 def test_temporal_equal_time_hop_allowed(spark):
     # same-timestamp chaining is allowed (t >= arrival)
     c = _contacts(spark, [(0, 1, 7), (1, 2, 7)])
-    got = {
-        r["id"]: r["arrival"]
-        for r in temporal_reachability(c, seeds=[0]).collect()
-    }
-    assert got == {0: 0, 1: 7, 2: 7}
+    assert _reach_both(c, [0]) == _on_both({0: 0, 1: 7, 2: 7})
 
 
 def test_temporal_multi_seed_and_validation(spark):
     c = _contacts(spark, [(0, 1, 5), (9, 1, 3)])
-    got = {
-        r["id"]: r["arrival"]
-        for r in temporal_reachability(c, seeds=[0, 9]).collect()
-    }
-    assert got == {0: 0, 9: 0, 1: 3}
+    assert _reach_both(c, [0, 9]) == _on_both({0: 0, 9: 0, 1: 3})
     with pytest.raises(ValueError):
         temporal_reachability(c, seeds=[])
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_temporal_local_matches_sweeps_random(spark, id_type):
+    # few distinct times over a small dense graph: long equal-time
+    # chains (listed in reverse so one scan in list order can't follow
+    # them), cycles, contacts at t = 0, a seed with no contacts (99) and
+    # nodes no seed reaches (30..34 only ever contact each other)
+    rng = np.random.default_rng(5)
+    rows = [
+        (int(u), int(v), int(t))
+        for u, v, t in zip(
+            rng.integers(0, 30, 150), rng.integers(0, 30, 150), rng.integers(0, 6, 150)
+        )
+        if u != v
+    ]
+    rows += [(k + 1, k, 4) for k in range(20, 0, -1)]
+    rows += [(30 + k, 30 + (k + 1) % 5, 0) for k in range(5)]
+    conv = str if id_type == "string" else int
+    rows = [(conv(u), conv(v), t) for u, v, t in rows]
+    seeds = [conv(0), conv(99)]
+    c = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}, t long")
+    local = _arrivals(temporal_reachability(c, seeds=seeds))
+    ref = _arrivals(events._temporal_sweeps(c, seeds, max_sweeps=100))
+    assert local == ref
+    assert local[conv(99)] == 0 and conv(30) not in local
+    # the case exercises same-time chaining past the first hop
+    assert any(
+        u != conv(0) and local.get(u) == local.get(v) == t for u, v, t in rows
+    )

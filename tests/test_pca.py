@@ -71,3 +71,31 @@ def test_pca_validation(spark):
         fit_pca(df, k=3)
     with pytest.raises(ValueError):
         fit_pca(df.where("id < 0"), k=1)
+
+
+def test_whiten_near_degenerate_covariance(spark):
+    # rank-1 data far from the origin: fit_pca's covariance
+    # (g - n*mu*mu^T) / (n-1) cancels, and eigh returns eigenvalues
+    # below -eps for the two null directions; the whitening sqrt must
+    # clip them to zero instead of yielding NaN. The model is built in
+    # numpy with fit_pca's formula so the negative eigenvalue does not
+    # hinge on the partial-Gram fold order.
+    a = np.random.default_rng(0).normal(size=200)
+    x = np.stack([a, 2.0 * a, 3.0 * a], axis=1) + 1e6
+    n, mu = len(x), x.mean(axis=0)
+    cov = (x.T @ x - n * np.outer(mu, mu)) / (n - 1)
+    vals, vecs = np.linalg.eigh(cov)
+    order = np.argsort(vals)[::-1]
+    m = {"mean": mu, "components": vecs[:, order], "explained_variance": vals[order]}
+    assert vals.min() < -1e-9  # the case under test
+    df = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(x)], "id long, vec array<double>"
+    )
+    white = np.asarray(
+        [r["pca"] for r in transform_pca(df, m, whiten=True).collect()],
+        dtype=np.float64,
+    )
+    assert np.isfinite(white).all()
+    # the one real direction still comes out with unit variance, up to
+    # the cancellation error in its eigenvalue
+    assert white[:, 0].var(ddof=1) == pytest.approx(1.0, rel=1e-3)
