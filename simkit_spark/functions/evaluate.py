@@ -42,6 +42,8 @@ from fractions import Fraction
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import util
+
 
 def bcubed_counts(
     assign: DataFrame,
@@ -85,8 +87,21 @@ def bcubed_fscore(
 ) -> dict:
     """Scalar B³ precision / recall / F1 as exact rationals folded on
     the driver (the intersection table is tiny by contract), rounded
-    once at ``dp``. Returns {"precision", "recall", "f1", "n"}."""
-    rows = bcubed_counts(assign, gold, id_col, cluster_col, label_col).collect()
+    once at ``dp``. Returns {"precision", "recall", "f1", "n"}.
+
+    The collect is bounded: an intersection table past the driver
+    budget (``util.local_dispatch_rows`` of its schema) raises
+    ValueError instead of pulling it — aggregate :func:`bcubed_counts`
+    on the cluster then."""
+    counts = bcubed_counts(assign, gold, id_col, cluster_col, label_col)
+    thr = util.local_dispatch_rows(counts.schema)
+    rows = counts.limit(thr + 1).collect()
+    if len(rows) > thr:
+        raise ValueError(
+            f"bcubed_fscore: the (cluster, label) intersection table has "
+            f"more than {thr} rows, too many to fold on the driver; "
+            f"aggregate bcubed_counts(...) distributed instead"
+        )
     n = sum(r["n_cg"] for r in rows)
     if n == 0:
         return {"precision": 0.0, "recall": 0.0, "f1": 0.0, "n": 0}

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def funnel(
@@ -170,24 +170,25 @@ def temporal_reachability(
     over-reports on event streams because it ignores causality (an
     edge that fired BEFORE you arrived cannot transmit).
 
-    Size dispatch (the repo's *_auto contract): the contact table is
-    checkpointed once; at most ``local_dispatch_rows`` rows (500k for
-    three longs) it is driver-sized, so one Arrow collect and one
-    time-ordered driver pass (:func:`_earliest_arrival_local`) replace
-    the sweeps, whose fixed per-sweep job cost dominates at that size. Larger tables run
+    Size-dispatched (``util.size_dispatch``): a driver-sized contact
+    table (500k rows for three longs) takes one time-ordered driver
+    pass (:func:`_earliest_arrival_local`) instead of the sweeps, whose
+    fixed per-sweep job cost dominates at that size. Larger tables run
     the distributed frontier-delta sweeps (:func:`_temporal_sweeps`),
     where ``max_sweeps`` is the backstop. Both paths compute the same
     fixpoint, so their outputs are identical (parity-tested).
     """
     if not seeds:
         raise ValueError("temporal_reachability requires at least one seed")
-    c = contacts.select("src", "dst", F.col("t").cast("long")).localCheckpoint()
-    if c.count() > local_dispatch_rows(c.schema):
-        return _temporal_sweeps(c, seeds, max_sweeps)
-    return _earliest_arrival_local(c, seeds)
+    return size_dispatch(
+        contacts.select("src", "dst", F.col("t").cast("long")),
+        lambda pdf: _earliest_arrival_local(pdf, seeds),
+        lambda c: _temporal_sweeps(c, seeds, max_sweeps),
+        "id {id}, arrival long",
+    )
 
 
-def _earliest_arrival_local(c: DataFrame, seeds: list) -> DataFrame:
+def _earliest_arrival_local(pdf: pd.DataFrame, seeds: list) -> pd.DataFrame:
     """Driver path of :func:`temporal_reachability`: one pass over the
     contacts in (t, src) order. When the pass reaches time t every node
     that will ever arrive by t already has, so a not-yet-arrived node
@@ -195,8 +196,6 @@ def _earliest_arrival_local(c: DataFrame, seeds: list) -> DataFrame:
     (t >= arrival allows a same-time hop), so each equal-t group runs a
     BFS from the nodes that had arrived by t; a node arrives once, so
     the BFS work over the whole pass is bounded by the node count."""
-    id_t = c.schema["src"].dataType.simpleString()
-    pdf = c.toPandas()
     seed_ids = sorted(set(seeds))
     ids, inv = np.unique(
         np.concatenate(
@@ -233,8 +232,7 @@ def _earliest_arrival_local(c: DataFrame, seeds: list) -> DataFrame:
         lo = hi
     arr = np.asarray(arr, dtype=np.int64)
     hit = arr < never
-    res = pd.DataFrame({"id": ids[hit].tolist(), "arrival": arr[hit].tolist()})
-    return c.sparkSession.createDataFrame(res, schema=f"id {id_t}, arrival long")
+    return pd.DataFrame({"id": ids[hit], "arrival": arr[hit]})
 
 
 def _temporal_sweeps(c: DataFrame, seeds: list, max_sweeps: int) -> DataFrame:

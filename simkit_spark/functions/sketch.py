@@ -203,66 +203,7 @@ def hll_distinct(
     row-sized shuffles. Mergeability (register-wise max) is what makes
     the sketch composable per-partition at 100 TB.
     """
-    if not 4 <= p <= 16:
-        raise ValueError(f"p must be in [4, 16], got {p}")
-    m = 1 << p
-    rest_bits = 32 - p
-    k_scale = rest_bits + 1  # max rho; 2^(k_scale - rho) is >= 1
-    h = _md5_long(F.concat_ws(":", F.col(col).cast("string"), F.lit(str(seed))))
-    bucket = (h / F.lit(1 << rest_bits)).cast("long")  # top p bits
-    rest = h % F.lit(1 << rest_bits)
-    # bit length via bin(): bin(0) = '0', handled by the rest=0 branch
-    regs = (
-        df.select(bucket.alias("bucket"), rest.alias("rest"))
-        .select(
-            "bucket",
-            (
-                F.lit(rest_bits)
-                - F.when(F.col("rest") == 0, F.lit(0)).otherwise(
-                    F.length(F.bin(F.col("rest")))
-                )
-                + F.lit(1)
-            ).alias("rho"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("mrho"))
-    )
-    # alpha_m * m^2 * 2^k_scale as ONE python-double literal, so both
-    # engines perform the identical single division by z_int
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    numer = alpha * m * m * float(1 << k_scale)
-    agg = regs.agg(
-        F.count(F.lit(1)).alias("n_filled"),
-        F.coalesce(
-            F.sum(F.expr(f"cast(pow(2, {k_scale} - mrho) as bigint)")), F.lit(0)
-        ).alias("zf"),
-    )
-    return agg.select(
-        F.lit(m).alias("m"),
-        F.col("n_filled"),
-        (
-            (F.lit(m) - F.col("n_filled")) * F.lit(1 << k_scale) + F.col("zf")
-        ).alias("z_int"),
-    ).select(
-        "m",
-        "n_filled",
-        "z_int",
-        F.when(
-            (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m))
-            & (F.col("n_filled") < F.lit(m)),
-            F.lit("linear"),
-        )
-        .otherwise(F.lit("hll"))
-        .alias("branch"),
-        F.round(
-            F.when(
-                (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m))
-                & (F.col("n_filled") < F.lit(m)),
-                F.lit(float(m)) * F.log(F.lit(float(m)) / (F.lit(m) - F.col("n_filled"))),
-            ).otherwise(F.lit(numer) / F.col("z_int")),
-            3,
-        ).alias("est_distinct"),
-    )
+    return _hll(df, col, [], p, seed)
 
 
 def hll_distinct_by(
@@ -286,32 +227,24 @@ def hll_distinct_by(
     cardinality). That bounded per-group state is the whole point of
     sketching at 100 TB: a trillion-row group still ships 2^p rows.
     """
-    if not 4 <= p <= 16:
-        raise ValueError(f"p must be in [4, 16], got {p}")
     if not by:
         raise ValueError("hll_distinct_by needs at least one group column")
+    return _hll(df, col, by, p, seed)
+
+
+def _hll(df: DataFrame, col: str, by: list[str], p: int, seed: int) -> DataFrame:
+    """Registers and estimate of :func:`hll_distinct` (``by`` empty: one
+    global row) and :func:`hll_distinct_by` (one row per group)."""
+    bucket, rho = hll_register_cols(col, p=p, seed=seed)
     m = 1 << p
-    rest_bits = 32 - p
-    k_scale = rest_bits + 1
-    h = _md5_long(F.concat_ws(":", F.col(col).cast("string"), F.lit(str(seed))))
-    bucket = (h / F.lit(1 << rest_bits)).cast("long")
-    rest = h % F.lit(1 << rest_bits)
+    k_scale = 32 - p + 1  # max rho; 2^(k_scale - rho) is >= 1
     regs = (
-        df.select(*by, bucket.alias("bucket"), rest.alias("rest"))
-        .select(
-            *by,
-            "bucket",
-            (
-                F.lit(rest_bits)
-                - F.when(F.col("rest") == 0, F.lit(0)).otherwise(
-                    F.length(F.bin(F.col("rest")))
-                )
-                + F.lit(1)
-            ).alias("rho"),
-        )
+        df.select(*by, bucket.alias("bucket"), rho.alias("rho"))
         .groupBy(*by, "bucket")
         .agg(F.max("rho").alias("mrho"))
     )
+    # alpha_m * m^2 * 2^k_scale as ONE python-double literal, so both
+    # engines perform the identical single division by z_int
     alpha = 0.7213 / (1.0 + 1.079 / m)
     numer = alpha * m * m * float(1 << k_scale)
     agg = regs.groupBy(*by).agg(
@@ -320,29 +253,21 @@ def hll_distinct_by(
             F.sum(F.expr(f"cast(pow(2, {k_scale} - mrho) as bigint)")), F.lit(0)
         ).alias("zf"),
     )
+    z_int = (F.lit(m) - F.col("n_filled")) * F.lit(1 << k_scale) + F.col("zf")
+    linear = (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m)) & (
+        F.col("n_filled") < F.lit(m)
+    )
     return agg.select(
-        *by,
-        F.lit(m).alias("m"),
-        F.col("n_filled"),
-        (
-            (F.lit(m) - F.col("n_filled")) * F.lit(1 << k_scale) + F.col("zf")
-        ).alias("z_int"),
+        *by, F.lit(m).alias("m"), F.col("n_filled"), z_int.alias("z_int")
     ).select(
         *by,
         "m",
         "n_filled",
         "z_int",
-        F.when(
-            (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m))
-            & (F.col("n_filled") < F.lit(m)),
-            F.lit("linear"),
-        )
-        .otherwise(F.lit("hll"))
-        .alias("branch"),
+        F.when(linear, F.lit("linear")).otherwise(F.lit("hll")).alias("branch"),
         F.round(
             F.when(
-                (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m))
-                & (F.col("n_filled") < F.lit(m)),
+                linear,
                 F.lit(float(m)) * F.log(F.lit(float(m)) / (F.lit(m) - F.col("n_filled"))),
             ).otherwise(F.lit(numer) / F.col("z_int")),
             3,
@@ -359,8 +284,9 @@ def hll_register_cols(col, p: int = 8, seed: int = 42):
         raise ValueError(f"p must be in [4, 16], got {p}")
     rest_bits = 32 - p
     h = _md5_long(F.concat_ws(":", F.col(col).cast("string"), F.lit(str(seed))))
-    bucket = (h / F.lit(1 << rest_bits)).cast("long")
+    bucket = (h / F.lit(1 << rest_bits)).cast("long")  # top p bits
     rest = h % F.lit(1 << rest_bits)
+    # bit length via bin(): bin(0) = '0', handled by the rest=0 branch
     rho = (
         F.lit(rest_bits)
         - F.when(rest == 0, F.lit(0)).otherwise(F.length(F.bin(rest)))

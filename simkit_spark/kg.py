@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions.dedup import _md5_long
-from .util import local_dispatch_rows, materialize
+from .util import materialize, size_dispatch
 
 
 def _iri(kind: str, key: Column) -> Column:
@@ -253,7 +253,6 @@ def khop_reachability(
 def transitive_closure(
     triples: DataFrame,
     preds: list[str] | None = None,
-    local_threshold: int | None = None,
     max_iter: int = 64,
     broadcast_rows: int = 1_000_000,
     dedup_edges: bool = False,
@@ -287,12 +286,10 @@ def transitive_closure(
     shallow foreign-key DAG of the relational triple map
     (kg.relational_triples), diameter <= 4.
 
-    Below ``local_threshold`` edges (byte-budgeted default) the graph
-    is driver-sized: one collect, per-source BFS over an adjacency
-    dict, one pandas frame with an explicit schema back (it plans as a
-    LocalRelation; its cells are Python natives, so it also holds with
-    Arrow off — the CORRECTNESS_r02 kmeans lesson). Same min-hop semantics
-    by construction (BFS layers == semi-naive layers).
+    Size-dispatched (``util.size_dispatch``): a driver-sized edge list
+    is collected once through Arrow and closed by a per-source BFS over
+    an adjacency dict. Same min-hop semantics by construction (BFS
+    layers == semi-naive layers).
 
     Reference semantics: transitive reachability over the entity graph
     mirrors the reference's connected-entity expansion
@@ -300,93 +297,94 @@ def transitive_closure(
     components chain); the reference bounds expansion by matrix
     powers, this runs the same fixpoint declaratively.
     """
-    spark = triples.sparkSession
     e = triples
     if preds is not None:
         e = e.where(F.col("pred").isin(list(preds)))
     e = e.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
     if dedup_edges:
         e = e.distinct()
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    e = e.persist()
-    try:
-        n_edges = e.count()
-        if n_edges <= local_threshold:
-            rows = e.collect()
-            adj: dict = {}
-            for r in rows:
-                adj.setdefault(r["src"], set()).add(r["dst"])
-            out_rows: list[tuple] = []
-            for s in adj:
-                # dist records first (= shortest) arrival, INCLUDING a
-                # cyclic return to s itself; expanded gates re-expansion
-                # so the source's successors are walked exactly once
-                dist: dict = {}
-                expanded = {s}
-                frontier = [s]
-                hop = 0
-                while frontier:
-                    hop += 1
-                    nxt = []
-                    for u in frontier:
-                        for v in adj.get(u, ()):
-                            if v not in dist:
-                                dist[v] = hop
-                            if v not in expanded:
-                                expanded.add(v)
-                                nxt.append(v)
-                    frontier = nxt
-                out_rows.extend((s, d, h) for d, h in dist.items())
-            return spark.createDataFrame(
-                pd.DataFrame(out_rows, columns=["subj", "obj", "hops"]),
-                "subj string, obj string, hops int",
-            )
-        paths = (
-            e.select("src", "dst").distinct()
-            .withColumn("hops", F.lit(1))
-            .transform(materialize)
+    return size_dispatch(
+        e,
+        _closure_local,
+        lambda e: _closure_sweeps(e, max_iter, broadcast_rows),
+        "subj {id}, obj {id}, hops int",
+    )
+
+
+def _closure_local(pdf) -> pd.DataFrame:
+    adj: dict = {}
+    for s, d in zip(pdf["src"], pdf["dst"]):
+        adj.setdefault(s, set()).add(d)
+    out_rows: list[tuple] = []
+    for s in adj:
+        # dist records first (= shortest) arrival, INCLUDING a
+        # cyclic return to s itself; expanded gates re-expansion
+        # so the source's successors are walked exactly once
+        dist: dict = {}
+        expanded = {s}
+        frontier = [s]
+        hop = 0
+        while frontier:
+            hop += 1
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, ()):
+                    if v not in dist:
+                        dist[v] = hop
+                    if v not in expanded:
+                        expanded.add(v)
+                        nxt.append(v)
+            frontier = nxt
+        out_rows.extend((s, d, h) for d, h in dist.items())
+    return pd.DataFrame(out_rows, columns=["subj", "obj", "hops"])
+
+
+def _closure_sweeps(e: DataFrame, max_iter: int, broadcast_rows: int) -> DataFrame:
+    """Distributed semi-naive sweeps over the materialized (src, dst)
+    edge list ``e``."""
+    paths = (
+        e.select("src", "dst").distinct()
+        .withColumn("hops", F.lit(1))
+        .transform(materialize)
+    )
+    layers = [(paths, paths.count())]
+    delta, d_cnt = paths, layers[0][1]
+    for i in range(2, max_iter + 2):
+        # rename the delta's columns up front: delta descends from e,
+        # and Spark's dataset-id ambiguity check rejects d["dst"] ==
+        # e["src"] even across a checkpoint boundary
+        d = delta.select(
+            F.col("src").alias("d_src"), F.col("dst").alias("d_dst")
         )
-        layers = [(paths, paths.count())]
-        delta, d_cnt = paths, layers[0][1]
-        for i in range(2, max_iter + 2):
-            # rename the delta's columns up front: delta descends from e,
-            # and Spark's dataset-id ambiguity check rejects d["dst"] ==
-            # e["src"] even across a checkpoint boundary
-            d = delta.select(
-                F.col("src").alias("d_src"), F.col("dst").alias("d_dst")
-            )
-            if d_cnt <= broadcast_rows:
-                d = F.broadcast(d)
-            new = (
-                d.join(e, F.col("d_dst") == F.col("src"))
-                .select(F.col("d_src").alias("src"), F.col("dst"))
-                .distinct()
-            )
-            for prev, pc in layers:
-                p = prev.select("src", "dst")
-                if pc <= broadcast_rows:
-                    p = F.broadcast(p)
-                new = new.join(p, on=["src", "dst"], how="left_anti")
-            new = new.withColumn("hops", F.lit(i)).transform(materialize)
-            d_cnt = new.count()
-            if d_cnt == 0:
-                break
-            layers.append((new, d_cnt))
-            delta = new
-        else:
-            raise RuntimeError(
-                f"transitive_closure did not converge in {max_iter} sweeps "
-                f"(last delta {d_cnt} pairs) — diameter exceeds the backstop"
-            )
-        out = layers[0][0]
-        for layer, _ in layers[1:]:
-            out = out.unionByName(layer)
-        return out.select(
-            F.col("src").alias("subj"), F.col("dst").alias("obj"), "hops"
+        if d_cnt <= broadcast_rows:
+            d = F.broadcast(d)
+        new = (
+            d.join(e, F.col("d_dst") == F.col("src"))
+            .select(F.col("d_src").alias("src"), F.col("dst"))
+            .distinct()
         )
-    finally:
-        e.unpersist()
+        for prev, pc in layers:
+            p = prev.select("src", "dst")
+            if pc <= broadcast_rows:
+                p = F.broadcast(p)
+            new = new.join(p, on=["src", "dst"], how="left_anti")
+        new = new.withColumn("hops", F.lit(i)).transform(materialize)
+        d_cnt = new.count()
+        if d_cnt == 0:
+            break
+        layers.append((new, d_cnt))
+        delta = new
+    else:
+        raise RuntimeError(
+            f"transitive_closure did not converge in {max_iter} sweeps "
+            f"(last delta {d_cnt} pairs) — diameter exceeds the backstop"
+        )
+    out = layers[0][0]
+    for layer, _ in layers[1:]:
+        out = out.unionByName(layer)
+    return out.select(
+        F.col("src").alias("subj"), F.col("dst").alias("obj"), "hops"
+    )
 
 
 def top_hubs(triples: DataFrame, n: int = 20) -> DataFrame:
@@ -1171,7 +1169,6 @@ def rdfs_entail(triples: DataFrame, schema: list[tuple[str, str, str]]) -> DataF
 def sameas_canonicalize(
     triples: DataFrame,
     sameas_pred: str = "sameAs",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """owl:sameAs canonicalization — the connected-components merge of
     entity clusters (BASELINE.json north_star) expressed as a triple-
@@ -1202,7 +1199,7 @@ def sameas_canonicalize(
     sa = triples.where(F.col("pred") == sameas_pred).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    comp = connected_components_auto(sa, local_threshold=local_threshold)
+    comp = connected_components_auto(sa)
     # only non-identity rewrites join back — the map stays alias-sized
     m = comp.where(F.col("id") != F.col("component"))
     rest = triples.select("subj", "pred", "obj").where(

@@ -10,7 +10,8 @@ operators.graphstats.
 
 Two paths, size-dispatched like every iterative operator in this repo:
 
-- EXACT under ``local_threshold`` edges: one Arrow collect, dense
+- EXACT for a driver-sized graph (at most ``util.local_dispatch_rows``
+  edges and ``MAX_LOCAL_NODES`` nodes): one Arrow collect, dense
   boolean reachability closure in numpy (ball(h+1) = ball(h) | ball(h)
   @ A). n^2 bits — fine to ~50k nodes on a driver, and bit-exact for
   the DuckDB recursive-CTE oracle.
@@ -37,7 +38,13 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
-from ..util import local_dispatch_rows, materialize
+from .. import util
+from ..util import materialize
+
+# the exact path holds n^2 BITS on the driver: edge count alone doesn't
+# bound that (a 300k-edge graph can have 60k nodes = 450 MB of
+# bitsets), so the dispatch is also node-capped
+MAX_LOCAL_NODES = 20_000
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -50,27 +57,20 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
 def neighborhood_function(
     edges: DataFrame,
     max_h: int = 6,
-    local_threshold: int | None = None,
     p: int = 6,
     seed: int = 42,
-    max_local_nodes: int = 20_000,
 ) -> DataFrame:
     """(h, n_pairs, frac) for h = 0..max_h over the UNDIRECTED graph
     (edges are symmetrized; self-pairs count at h=0). ``frac`` =
-    n_pairs / n^2, rounded 6 dp. Above ``local_threshold`` edges,
-    n_pairs is the HyperANF estimate (rounded to a whole pair count);
-    below, it is exact.
+    n_pairs / n^2, rounded 6 dp. For a driver-sized graph (module
+    docstring) it is exact; above, n_pairs is the HyperANF estimate
+    (rounded to a whole pair count).
     """
     e = _symmetrized(edges).transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
     n_edges = e.count()
     spark = edges.sparkSession
-    # the exact path holds n^2 BITS on the driver: edge count alone
-    # doesn't bound that (a 300k-edge graph can have 60k nodes = 450 MB
-    # of bitsets), so the dispatch is also node-capped
     n_nodes = e.select("src").distinct().count()
-    if n_edges <= local_threshold and n_nodes <= max_local_nodes:
+    if n_edges <= util.local_dispatch_rows(e.schema) and n_nodes <= MAX_LOCAL_NODES:
         import numpy as np
         import pandas as pd
 

@@ -17,45 +17,42 @@ replacement.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def connected_components_auto(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 50,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched CC: graphs whose edge list fits the driver
-    comfortably collect (via Arrow, as numpy arrays — never Row
-    objects: 300k edges is ~5 MB of int64 columns vs hundreds of MB of
-    Rows) and run union-find in one job round-trip instead of ~2 jobs
-    per propagation round; larger graphs run the distributed loop.
-    Same (id, component) contract, component = min node id — mirrors
-    eigensolve_auto's dispatch."""
-    import numpy as np  # noqa: PLC0415
+    """Size-dispatched CC (``util.size_dispatch``, 300k-row default):
+    a driver-sized edge list is collected through Arrow as numpy arrays
+    — never Row objects: 300k edges is ~5 MB of int64 columns vs
+    hundreds of MB of Rows — and runs union-find in one job round-trip
+    instead of ~2 jobs per propagation round; larger graphs run the
+    distributed loop. Same (id, component) contract, component = min
+    node id. ``nodes`` defaults to the edge endpoints."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda epd: _union_find(
+            epd, None if nodes is None else nodes.select("id").toPandas()
+        ),
+        lambda e: connected_components(e, nodes, max_iter),
+        "id {id}, component {id}",
+        default_rows=300_000,
+    )
 
-    # materialize BEFORE the dispatch actions: count + toPandas are two
-    # separate actions, and without lineage-breaking each one re-runs
-    # the whole upstream chain (for the eps-graph caller that is the
-    # full n^2/2 block kernel — the r2 bench regression)
-    edges = materialize(edges.select("src", "dst"))
-    if nodes is None:
-        nodes = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    nodes = materialize(nodes)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(edges.schema, default_rows=300_000)
-    n_edges = edges.count()
-    if n_edges > local_threshold:
-        return connected_components(edges, nodes, max_iter)
-    ids = np.sort(nodes.toPandas()["id"].to_numpy())
-    epd = edges.toPandas()
+
+def _union_find(epd, npd):
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
     esrc = epd["src"].to_numpy()
     edst = epd["dst"].to_numpy()
+    if npd is None:
+        ids = np.unique(np.concatenate([esrc, edst]))
+    else:
+        ids = np.sort(npd["id"].to_numpy())
     src = np.searchsorted(ids, esrc)
     dst = np.searchsorted(ids, edst)
     # searchsorted silently maps an endpoint id missing from `nodes` to
@@ -100,18 +97,7 @@ def connected_components_auto(
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     comp = np.array([ids[find(i)] for i in range(len(ids))], dtype=ids.dtype)
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.types import StructField, StructType  # noqa: PLC0415
-
-    # explicit schema: an empty graph (no core points, say) must not
-    # fall into schema inference, which raises on zero rows
-    id_type = nodes.schema["id"].dataType
-    schema = StructType(
-        [StructField("id", id_type, False), StructField("component", id_type, False)]
-    )
-    return edges.sparkSession.createDataFrame(
-        pd.DataFrame({"id": ids, "component": comp}), schema=schema
-    )
+    return pd.DataFrame({"id": ids, "component": comp})
 
 
 def connected_components(

@@ -52,7 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 HITS_ITER_DP = 9
 
@@ -61,32 +61,30 @@ def hits_auto(
     edges: DataFrame,
     n_iter: int = 5,
     iter_dp: int = HITS_ITER_DP,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched HITS (the repo's *_auto contract — see
-    pagerank_auto): below ``local_threshold`` distinct edges the graph
-    is driver-sized, so one Arrow collect + vectorized numpy sweeps
-    replace ~4 shuffle stages per sweep. The exact-integer L1 contract
-    (module docstring) makes both paths bit-identical — integer raw
-    sums are exact in any accumulator below 2**53, and the single
-    re-quantization float expression runs in the same IEEE operation
-    order on both engines (parity-tested, long and string ids)."""
+    """Size-dispatched HITS (``util.size_dispatch``): a driver-sized
+    distinct edge list runs vectorized numpy sweeps over one Arrow
+    collect, replacing ~4 shuffle stages per sweep. The exact-integer
+    L1 contract (module docstring) makes both paths bit-identical —
+    integer raw sums are exact in any accumulator below 2**53, and the
+    single re-quantization float expression runs in the same IEEE
+    operation order on both engines (parity-tested, long and string
+    ids)."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    e = edges.select("src", "dst").distinct().transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(e.schema)
-    if e.count() > local_threshold:
+    return size_dispatch(
+        edges.select("src", "dst").distinct(),
+        lambda pdf: _hits_local(pdf, n_iter, iter_dp),
         # already distinct + materialized: skip hits()'s own pass
-        return _hits_from_distinct(e, n_iter, iter_dp)
+        lambda e: _hits_from_distinct(e, n_iter, iter_dp),
+        "id {id}, hub double, authority double",
+    )
 
+
+def _hits_local(pdf, n_iter, iter_dp):
     import numpy as np
+    import pandas as pd
 
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    pdf = e.toPandas()
-    if not len(pdf):
-        return spark.createDataFrame([], f"id {id_t}, hub double, authority double")
     scale = 10**iter_dp
     ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
     n = len(ids)
@@ -109,17 +107,14 @@ def hits_auto(
         h_raw = np.zeros(n, dtype=np.int64)
         np.add.at(h_raw, src, a[dst])
         h = _normalize(h_raw)
-    import pandas as pd
-
     inv = 1.0 / float(scale)
-    res = pd.DataFrame(
+    return pd.DataFrame(
         {
-            "id": ids.tolist(),
-            "hub": (h.astype(np.float64) * inv).tolist(),
-            "authority": (a.astype(np.float64) * inv).tolist(),
+            "id": ids,
+            "hub": h.astype(np.float64) * inv,
+            "authority": a.astype(np.float64) * inv,
         }
     )
-    return spark.createDataFrame(res, f"id {id_t}, hub double, authority double")
 
 
 def hits(edges: DataFrame, n_iter: int = 5, iter_dp: int = HITS_ITER_DP) -> DataFrame:

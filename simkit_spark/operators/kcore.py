@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def kcore(
@@ -100,37 +100,28 @@ def kcore(
     return out
 
 
-def kcore_auto(
-    edges: DataFrame, k: int, n_iter: int = 10, local_threshold: int | None = None
-) -> DataFrame:
-    """Size-dispatched k-core (the repo's *_auto contract — see
-    pagerank_auto): below ``local_threshold`` edges the graph is
-    driver-sized, so one Arrow collect + a numpy bincount peeling loop
-    beats ~3 shuffle stages per sweep; above it, the distributed
-    operator runs. All-integer arithmetic, so the two paths are exactly
-    identical (parity-tested)."""
-    # one evaluation of the upstream plan: count + toPandas would each
-    # re-run it otherwise (the pagerank_auto lesson)
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
-    if n_edges > local_threshold:
-        return kcore(e, k, n_iter)
+def kcore_auto(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
+    """Size-dispatched k-core (``util.size_dispatch``): a driver-sized
+    graph runs a numpy bincount peeling loop over one Arrow collect,
+    which beats ~3 shuffle stages per sweep; a larger one runs the
+    distributed operator. All-integer arithmetic, so the two paths are
+    exactly identical (parity-tested)."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _kcore_local(pdf, k, n_iter),
+        lambda e: kcore(e, k, n_iter),
+        "id {id}, core_deg long",
+    )
 
+
+def _kcore_local(pdf, k, n_iter):
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    spark = edges.sparkSession
-    pdf = e.toPandas()
-    if not len(pdf):
-        return spark.createDataFrame([], "id long, core_deg long")
     u = np.minimum(pdf["src"].values, pdf["dst"].values)
     v = np.maximum(pdf["src"].values, pdf["dst"].values)
     keep = u != v
     uv = np.unique(np.stack([u[keep], v[keep]], axis=1), axis=0)
-    if not len(uv):
-        return spark.createDataFrame([], "id long, core_deg long")
     ids = np.unique(uv)
     n = len(ids)
     a = np.concatenate([np.searchsorted(ids, uv[:, 0]), np.searchsorted(ids, uv[:, 1])])
@@ -144,7 +135,4 @@ def kcore_auto(
     # n_iter sweeps with their degree inside the surviving set
     sel = alive[a] & alive[b]
     deg = np.bincount(a[sel], minlength=n)
-    res = pd.DataFrame(
-        {"id": ids[alive].tolist(), "core_deg": deg[alive].astype(int).tolist()}
-    )
-    return spark.createDataFrame(res, schema="id long, core_deg long")
+    return pd.DataFrame({"id": ids[alive], "core_deg": deg[alive].astype(np.int64)})

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def label_propagation(
@@ -210,31 +210,24 @@ def community_conductance(
     )
 
 
-def label_propagation_auto(
-    edges: DataFrame, n_iter: int = 5, local_threshold: int | None = None
-) -> DataFrame:
-    """Size-dispatched LPA (the repo's *_auto contract): below
-    ``local_threshold`` edges the graph is driver-sized and the
-    synchronous sweeps run as vectorized numpy over one Arrow collect
-    (all-integer arithmetic — the local twin is EXACTLY the operator's
-    fixed point, no rounding contract needed); above it, the
-    distributed loop runs. The input plan is materialized once so the
-    dispatch count and the collect don't each re-run an expensive
-    upstream (e.g. the kNN kernel)."""
-    e0 = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(e0.schema)
-    if e0.count() > local_threshold:
-        return label_propagation(e0, n_iter)
+def label_propagation_auto(edges: DataFrame, n_iter: int = 5) -> DataFrame:
+    """Size-dispatched LPA (``util.size_dispatch``): a driver-sized
+    graph runs the synchronous sweeps as vectorized numpy over one
+    Arrow collect (all-integer arithmetic — the local twin is EXACTLY
+    the operator's fixed point, no rounding contract needed); a larger
+    one runs the distributed loop."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _label_propagation_local(pdf, n_iter),
+        lambda e: label_propagation(e, n_iter),
+        "id {id}, community {id}",
+    )
 
+
+def _label_propagation_local(pdf, n_iter):
     import numpy as np
     import pandas as pd
 
-    spark = edges.sparkSession
-    pdf = e0.toPandas()
-    id_t = e0.schema["src"].dataType.simpleString()
-    if not len(pdf):
-        return spark.createDataFrame([], f"id {id_t}, community {id_t}")
     u = np.minimum(pdf["src"].values, pdf["dst"].values)
     v = np.maximum(pdf["src"].values, pdf["dst"].values)
     keep = u != v
@@ -244,8 +237,6 @@ def label_propagation_auto(
     # value order, so tiebreaks below still agree with the operator.
     ids = np.unique(np.concatenate([u[keep], v[keep]]))
     n = len(ids)
-    if n == 0:  # all edges were self-loops
-        return spark.createDataFrame([], f"id {id_t}, community {id_t}")
     ue = np.searchsorted(ids, u[keep]).astype(np.int64)
     ve = np.searchsorted(ids, v[keep]).astype(np.int64)
     enc = np.unique(ue * n + ve)
@@ -264,7 +255,4 @@ def label_propagation_auto(
         new = lab.copy()
         new[ka[order][firsts]] = klab[order][firsts]
         lab = new
-    res = pd.DataFrame(
-        {"id": ids.tolist(), "community": ids[lab].tolist()}
-    )
-    return spark.createDataFrame(res, schema=f"id {id_t}, community {id_t}")
+    return pd.DataFrame({"id": ids, "community": ids[lab]})

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def _edge_hash(u: Column, v: Column, seed: int) -> Column:
@@ -135,30 +135,26 @@ def maximal_matching_auto(
     seed: int = 42,
     weight_col: str | None = None,
     weight_dp: int = 6,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched maximal matching (the *_auto contract — see
-    kcore_auto): below ``local_threshold`` edges, one Arrow collect +
-    a hashlib replica of the sweep rule; above it, the distributed
-    operator. All-integer keys, so the paths are exactly identical
-    (parity-tested on long AND string ids)."""
+    """Size-dispatched maximal matching (``util.size_dispatch``): a
+    driver-sized graph runs a hashlib replica of the sweep rule over
+    one Arrow collect; a larger one runs the distributed operator.
+    All-integer keys, so the paths are exactly identical (parity-tested
+    on long AND string ids)."""
+    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
+    return size_dispatch(
+        edges.select(*cols),
+        lambda pdf: _matching_local(pdf, n_iter, seed, weight_col, weight_dp),
+        lambda e: maximal_matching(e, n_iter, seed, weight_col, weight_dp),
+        "u {id}, v {id}, sweep int",
+    )
+
+
+def _matching_local(pdf, n_iter, seed, weight_col, weight_dp):
     import hashlib  # noqa: PLC0415
     import math  # noqa: PLC0415
 
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    e = edges.select(*cols).transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
-    if n_edges > local_threshold:
-        return maximal_matching(e, n_iter, seed, weight_col, weight_dp)
-
     import pandas as pd  # noqa: PLC0415
-
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    schema = f"u {id_t}, v {id_t}, sweep int"
-    pdf = e.toPandas()
 
     def h(u, v) -> int:
         return int(
@@ -195,7 +191,4 @@ def maximal_matching_auto(
         matched = {x for uv in sel for x in uv}
         alive = {uv for uv in alive if uv[0] not in matched and uv[1] not in matched}
     rows.sort()
-    if not rows:
-        return spark.createDataFrame([], schema)
-    res = pd.DataFrame(rows, columns=["u", "v", "sweep"])
-    return spark.createDataFrame(res, schema=schema)
+    return pd.DataFrame(rows, columns=["u", "v", "sweep"])

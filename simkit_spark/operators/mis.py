@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def _priority(col: Column, seed: int) -> Column:
@@ -119,35 +119,30 @@ def maximal_independent_set_auto(
     edges: DataFrame,
     n_iter: int = 10,
     seed: int = 42,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched MIS (the repo's *_auto contract — see
-    kcore_auto): below ``local_threshold`` edges, one Arrow collect + a
-    hashlib replica of the sweep loop; above it, the distributed
-    operator. All-integer (hash, id) comparisons, so the two paths are
-    exactly identical (parity-tested on long AND string ids)."""
-    import hashlib  # noqa: PLC0415
+    """Size-dispatched MIS (``util.size_dispatch``): a driver-sized
+    graph runs a hashlib replica of the sweep loop over one Arrow
+    collect; a larger one runs the distributed operator. All-integer
+    (hash, id) comparisons, so the two paths are exactly identical
+    (parity-tested on long AND string ids)."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _mis_local(pdf, n_iter, seed),
+        lambda e: maximal_independent_set(e, n_iter, seed),
+        "id {id}, sweep int",
+    )
 
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
-    if n_edges > local_threshold:
-        return maximal_independent_set(e, n_iter, seed)
+
+def _mis_local(pdf, n_iter, seed):
+    import hashlib  # noqa: PLC0415
 
     import pandas as pd  # noqa: PLC0415
 
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    schema = f"id {id_t}, sweep int"
-    pdf = e.toPandas()
     und = {
         (min(a, b), max(a, b))
         for a, b in zip(pdf["src"], pdf["dst"])
         if a != b
     }
-    if not und:
-        return spark.createDataFrame([], schema)
     nbr: dict = {}
     for u, v in und:
         nbr.setdefault(u, set()).add(v)
@@ -171,7 +166,4 @@ def maximal_independent_set_auto(
         for x in sel:
             alive -= nbr[x]
     rows.sort()
-    if not rows:
-        return spark.createDataFrame([], schema)
-    res = pd.DataFrame(rows, columns=["id", "sweep"])
-    return spark.createDataFrame(res, schema=schema)
+    return pd.DataFrame(rows, columns=["id", "sweep"])

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def _kruskal_numpy(u, v, w):
@@ -64,16 +64,14 @@ def minimum_spanning_forest(
     edges: DataFrame,
     weight_col: str = "weight",
     max_rounds: int = 40,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """(u, v, weight) tree edges of the minimum spanning forest of the
     undirected graph (edges symmetrized+canonicalized here; parallel
     edges collapse to their min weight, then min (u, v) order breaks
-    exact-weight ties deterministically)."""
-    import numpy as np
-    import pandas as pd
-
-    e = materialize(
+    exact-weight ties deterministically). Size-dispatched
+    (``util.size_dispatch``, 300k-row default): local Kruskal for a
+    driver-sized edge list, distributed Borůvka above."""
+    e = (
         edges.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
@@ -83,28 +81,24 @@ def minimum_spanning_forest(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    spark = edges.sparkSession
-    id_t = e.schema["u"].dataType.simpleString()
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema, default_rows=300_000)
-    n_edges = e.count()
+    return size_dispatch(
+        e,
+        _kruskal_local,
+        lambda e: _boruvka(e, max_rounds),
+        "u {id}, v {id}, weight double",
+        default_rows=300_000,
+    )
 
-    if n_edges <= local_threshold:
-        pdf = e.toPandas()
-        if not len(pdf):
-            return spark.createDataFrame(
-                [], schema=f"u {id_t}, v {id_t}, weight double"
-            )
-        keep = _kruskal_numpy(
-            pdf["u"].to_numpy(), pdf["v"].to_numpy(), pdf["w"].to_numpy()
-        )
-        res = pdf[keep].rename(columns={"w": "weight"}).sort_values(["u", "v"])
-        return spark.createDataFrame(
-            res.reset_index(drop=True),
-            schema=f"u {id_t}, v {id_t}, weight double",
-        )
 
-    # ---------------- distributed Borůvka
+def _kruskal_local(pdf):
+    keep = _kruskal_numpy(
+        pdf["u"].to_numpy(), pdf["v"].to_numpy(), pdf["w"].to_numpy()
+    )
+    return pdf[keep].sort_values(["u", "v"])
+
+
+def _boruvka(e: DataFrame, max_rounds: int) -> DataFrame:
+    """Distributed path over the canonicalized, materialized edges."""
     ep = e.repartition("u").persist()
     ep.count()
     labels = (
@@ -163,7 +157,8 @@ def minimum_spanning_forest(
         )
     ep.unpersist()
     if tree is None:
-        return spark.createDataFrame(
+        id_t = e.schema["u"].dataType.simpleString()
+        return e.sparkSession.createDataFrame(
             [], schema=f"u {id_t}, v {id_t}, weight double"
         )
     return tree.select("u", "v", F.col("w").alias("weight"))
@@ -173,7 +168,6 @@ def single_linkage_labels(
     edges: DataFrame,
     k: int,
     weight_col: str = "weight",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Flat single-linkage clustering into (at least) ``k`` clusters:
     build the MSF, drop its k-1 heaviest edges (total (w, u, v) order,
@@ -184,9 +178,9 @@ def single_linkage_labels(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    msf = minimum_spanning_forest(
-        edges, weight_col=weight_col, local_threshold=local_threshold
-    ).transform(materialize)
+    msf = minimum_spanning_forest(edges, weight_col=weight_col).transform(
+        materialize
+    )
     keep = msf
     if k > 1:
         cut = (
@@ -205,5 +199,4 @@ def single_linkage_labels(
     return connected_components_auto(
         keep.select(F.col("u").alias("src"), F.col("v").alias("dst")),
         nodes=nodes,
-        local_threshold=local_threshold,
     )

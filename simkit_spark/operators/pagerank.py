@@ -52,7 +52,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize, py_scalar
+from ..util import materialize, size_dispatch
 
 DAMPING = 0.85
 PR_ITER_DP = 12
@@ -159,43 +159,43 @@ def pagerank(
     return out
 
 
+def _indexed(pdf):
+    """(ids, src, dst): the sorted distinct endpoints of a collected
+    (src, dst) frame and each edge's positions in them."""
+    import numpy as np
+
+    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    return ids, np.searchsorted(ids, pdf["src"].values), np.searchsorted(ids, pdf["dst"].values)
+
+
 def pagerank_auto(
     edges: DataFrame,
     n_iter: int = 10,
     damping: float = DAMPING,
     iter_dp: int = PR_ITER_DP,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched PageRank (the repo's *_auto contract — see
-    connected_components_auto / kmeans_auto / eigensolve_auto): below
-    ``local_threshold`` edges the graph is driver-sized, so one Arrow
-    collect + a vectorized numpy loop beats ~3 shuffle stages per sweep
-    by orders of magnitude; above it, the distributed operator runs.
-    The exact-integer rank contract makes both paths bit-identical
-    (parity-tested), so the dispatch is invisible."""
-    # materialize ONCE: the dispatch needs a count AND (locally) a
-    # collect — two actions that would otherwise each re-run an
-    # arbitrarily expensive upstream plan (the kNN kernel costs more
-    # than the whole PageRank loop at bench scale)
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
-    if n_edges > local_threshold:
-        return pagerank(e, n_iter, damping, iter_dp)
+    """Size-dispatched PageRank (``util.size_dispatch``): a driver-sized
+    graph runs a vectorized numpy loop over one Arrow collect, which
+    beats ~3 shuffle stages per sweep by orders of magnitude; a larger
+    one runs the distributed operator. The exact-integer rank contract
+    makes both paths bit-identical (parity-tested), so the dispatch is
+    invisible."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _pagerank_local(pdf, n_iter, damping, iter_dp),
+        lambda e: pagerank(e, n_iter, damping, iter_dp),
+        "id {id}, rank double",
+    )
 
+
+def _pagerank_local(pdf, n_iter, damping, iter_dp):
     import numpy as np
     import pandas as pd
 
-    pdf = e.toPandas()
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    if not len(pdf):
-        return spark.createDataFrame([], f"id {id_t}, rank double")
-    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    ids, src, dst = _indexed(pdf)
     n = len(ids)
-    src = np.searchsorted(ids, pdf["src"].values)
-    dst = np.searchsorted(ids, pdf["dst"].values)
+    if not n:
+        return pdf
     out = np.bincount(src, minlength=n)
     dangling = out == 0
     safe_out = np.where(dangling, 1, out).astype(np.int64)
@@ -219,8 +219,7 @@ def pagerank_auto(
             * float(scale)
             + 0.5
         ).astype(np.int64)
-    res = pd.DataFrame({"id": ids.tolist(), "rank": (r_i * inv).tolist()})
-    return spark.createDataFrame(res, schema=f"id {id_t}, rank double")
+    return pd.DataFrame({"id": ids, "rank": r_i * inv})
 
 
 def personalized_pagerank(
@@ -229,7 +228,6 @@ def personalized_pagerank(
     n_iter: int = 10,
     damping: float = DAMPING,
     iter_dp: int = PR_ITER_DP,
-    local_threshold: int | None = None,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Personalized PageRank (random-walk-with-restart): teleport mass
@@ -241,13 +239,13 @@ def personalized_pagerank(
     rank_{t+1}(v) = (1-d)·t(v) + d·(inflow(v) + dangling_mass·t(v)),
     t(v) = 1/|S| for seeds, else 0; rank_0 = t. Same determinism
     contract as pagerank (fixed sweeps, exact-integer rank numerators
-    at scale 10**iter_dp), same size dispatch (numpy under one Arrow
-    collect below ``local_threshold`` edges — string KG IRIs sort fine
-    there — else the distributed loop with the same fixed-src edge
-    layout). Unreachable nodes legitimately hold rank 0.0 and are
-    kept. Duplicate seeds are deduplicated at entry (teleport mass
-    must sum to 1); seeds absent from the edge list raise KeyError on
-    BOTH paths, including the empty-edge-list case.
+    at scale 10**iter_dp), same size dispatch (``util.size_dispatch``:
+    numpy for a driver-sized graph — string KG IRIs sort fine there —
+    else the distributed loop with the same fixed-src edge layout).
+    Unreachable nodes legitimately hold rank 0.0 and are kept.
+    Duplicate seeds are deduplicated at entry (teleport mass must sum
+    to 1); seeds absent from the edge list raise KeyError on BOTH
+    paths, including the empty-edge-list case.
     """
     if not seeds:
         raise ValueError("personalized_pagerank requires at least one seed")
@@ -255,58 +253,53 @@ def personalized_pagerank(
     # 1 (duplicate seeds previously tripped the distributed existence
     # check and left sum(t) < 1 on the numpy path)
     seed_set = sorted(set(seeds))
-    ts = 1.0 / float(len(seed_set))
-    # single evaluation of the upstream plan (see pagerank_auto)
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _ppr_local(pdf, seed_set, n_iter, damping, iter_dp),
+        lambda e: _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp, checkpoint_every),
+        "id {id}, rank double",
+    )
+
+
+def _ppr_local(pdf, seed_set, n_iter, damping, iter_dp):
+    import numpy as np
+    import pandas as pd
+
+    ids, src, dst = _indexed(pdf)
+    n = len(ids)
+    missing = sorted(set(seed_set) - set(ids.tolist()))
+    if missing:
+        raise KeyError(f"seeds not present in the edge list: {missing}")
+    pos = np.searchsorted(ids, np.array(seed_set))
+    out = np.bincount(src, minlength=n)
+    dangling = out == 0
+    safe_out = np.where(dangling, 1, out).astype(np.int64)
     scale = 10**iter_dp
     inv = 1.0 / float(scale)
-
-    if n_edges <= local_threshold:
-        import numpy as np
-        import pandas as pd
-
-        pdf = e.toPandas()
-        spark = edges.sparkSession
-        if not len(pdf):
-            # same contract as the non-empty branches: seeds cannot be
-            # present in an empty edge list
-            raise KeyError(f"seeds not present in the edge list: {seed_set}")
-        ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
-        n = len(ids)
-        src = np.searchsorted(ids, pdf["src"].values)
-        dst = np.searchsorted(ids, pdf["dst"].values)
-        out = np.bincount(src, minlength=n)
-        dangling = out == 0
-        safe_out = np.where(dangling, 1, out).astype(np.int64)
-        t = np.zeros(n)
-        pos = np.searchsorted(ids, np.array(seed_set))
-        ok = (pos < n) & (ids[np.minimum(pos, n - 1)] == np.array(seed_set))
-        if not ok.all():
-            missing = [s for s, o in zip(seed_set, ok) if not o]
-            raise KeyError(f"seeds not present in the edge list: {missing}")
-        t[pos] = ts
-        r_i = np.floor(t * float(scale) + 0.5).astype(np.int64)
-        for _ in range(n_iter):
-            contrib_i = r_i // safe_out
-            inflow_i = np.bincount(
-                dst, weights=contrib_i[src].astype(np.float64), minlength=n
+    t = np.zeros(n)
+    t[pos] = 1.0 / float(len(seed_set))
+    r_i = np.floor(t * float(scale) + 0.5).astype(np.int64)
+    for _ in range(n_iter):
+        contrib_i = r_i // safe_out
+        inflow_i = np.bincount(
+            dst, weights=contrib_i[src].astype(np.float64), minlength=n
+        )
+        dmass_i = int(r_i[dangling].sum())
+        r_i = np.floor(
+            (
+                (1.0 - damping) * t
+                + damping * (inflow_i * inv + (float(dmass_i) * inv) * t)
             )
-            dmass_i = int(r_i[dangling].sum())
-            r_i = np.floor(
-                (
-                    (1.0 - damping) * t
-                    + damping * (inflow_i * inv + (float(dmass_i) * inv) * t)
-                )
-                * float(scale)
-                + 0.5
-            ).astype(np.int64)
-        res = pd.DataFrame({"id": ids.tolist(), "rank": (r_i * inv).tolist()})
-        id_t = e.schema["src"].dataType.simpleString()
-        return spark.createDataFrame(res, schema=f"id {id_t}, rank double")
+            * float(scale)
+            + 0.5
+        ).astype(np.int64)
+    return pd.DataFrame({"id": ids, "rank": r_i * inv})
 
+
+def _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp, checkpoint_every):
+    ts = 1.0 / float(len(seed_set))
+    scale = 10**iter_dp
+    inv = 1.0 / float(scale)
     ep = e.repartition("src").persist()
     nodes = (
         ep.select(F.col("src").alias("id"))
@@ -489,46 +482,46 @@ def weighted_pagerank_auto(
     damping: float = DAMPING,
     iter_dp: int = WPR_ITER_DP,
     weight_dp: int = WPR_WEIGHT_DP,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched ``weighted_pagerank`` (the pagerank_auto
-    contract): the all-integer contrib rule (rank_i * w_q div strength,
-    exact int64 sums) plus the single fixed-order float update make the
-    numpy twin bit-identical to the distributed loop — parity-tested on
-    long and string ids, dangling mass, and zero-weight edge drops."""
+    """Size-dispatched ``weighted_pagerank`` (``util.size_dispatch``):
+    the all-integer contrib rule (rank_i * w_q div strength, exact
+    int64 sums) plus the single fixed-order float update make the
+    numpy twin bit-identical to the distributed loop — parity-tested
+    on long and string ids, dangling mass, and zero-weight edge
+    drops."""
     e = edges.select(
         "src",
         "dst",
         F.floor(F.col("weight") * F.lit(float(10**weight_dp)) + F.lit(0.5))
         .cast("long")
         .alias("w_q"),
-    ).where(F.col("w_q") > 0).transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(e.schema)
-    if e.count() > local_threshold:
-        # hand the quantized integers through as weights at weight_dp=0:
-        # the inner floor(w_q*1+0.5) reproduces w_q exactly for every
-        # integer-valued double < 2^53 (a w_q/10^dp division would drift
-        # past ~2^51), and the sweep math consumes only w_q — identical
-        return weighted_pagerank(
+    ).where(F.col("w_q") > 0)
+    # the distributed path gets the quantized integers as weights at
+    # weight_dp=0: the inner floor(w_q*1+0.5) reproduces w_q exactly for
+    # every integer-valued double < 2^53 (a w_q/10^dp division would
+    # drift past ~2^51), and the sweep math consumes only w_q — identical
+    return size_dispatch(
+        e,
+        lambda pdf: _weighted_pagerank_local(pdf, n_iter, damping, iter_dp),
+        lambda e: weighted_pagerank(
             e.select("src", "dst", F.col("w_q").cast("double").alias("weight")),
             n_iter,
             damping,
             iter_dp,
             weight_dp=0,
-        )
+        ),
+        "id {id}, rank double",
+    )
 
+
+def _weighted_pagerank_local(pdf, n_iter, damping, iter_dp):
     import numpy as np
+    import pandas as pd
 
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    pdf = e.toPandas()
-    if not len(pdf):
-        return spark.createDataFrame([], f"id {id_t}, rank double")
-    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    ids, src, dst = _indexed(pdf)
     n = len(ids)
-    src = np.searchsorted(ids, pdf["src"].values)
-    dst = np.searchsorted(ids, pdf["dst"].values)
+    if not n:
+        return pdf
     w_q = pdf["w_q"].values.astype(np.int64)
     strength = np.zeros(n, dtype=np.int64)
     np.add.at(strength, src, w_q)
@@ -548,11 +541,7 @@ def weighted_pagerank_auto(
             inflow.astype(np.float64) * inv + float(dmass) * inv / float(n)
         )
         rank_i = np.floor(update * float(scale) + 0.5).astype(np.int64)
-    rows = [
-        (py_scalar(i), rv)
-        for i, rv in zip(ids, (rank_i.astype(np.float64) * inv).tolist())
-    ]
-    return spark.createDataFrame(rows, f"id {id_t}, rank double")
+    return pd.DataFrame({"id": ids, "rank": rank_i.astype(np.float64) * inv})
 
 
 KATZ_BETA = 0.05
@@ -662,30 +651,25 @@ def katz_auto(
     n_iter: int = 8,
     beta: float = KATZ_BETA,
     iter_dp: int = KATZ_ITER_DP,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched Katz (the pagerank_auto contract): numpy twin
-    under one Arrow collect below ``local_threshold`` edges —
-    bit-identical to the distributed loop (same integer numerators,
-    same fixed-order float update) — else the distributed sweeps."""
-    import numpy as np
+    """Size-dispatched Katz (``util.size_dispatch``): a numpy twin over
+    one Arrow collect for a driver-sized graph — bit-identical to the
+    distributed loop (same integer numerators, same fixed-order float
+    update) — else the distributed sweeps."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _katz_local(pdf, n_iter, beta, iter_dp),
+        lambda e: katz_centrality(e, n_iter=n_iter, beta=beta, iter_dp=iter_dp),
+        "id {id}, katz double",
+    )
 
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    if e.count() > local_threshold:
-        return katz_centrality(e, n_iter=n_iter, beta=beta, iter_dp=iter_dp)
+
+def _katz_local(pdf, n_iter, beta, iter_dp):
+    import numpy as np
     import pandas as pd
 
-    pdf = e.toPandas()
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    if not len(pdf):
-        return spark.createDataFrame([], f"id {id_t}, katz double")
-    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    ids, src, dst = _indexed(pdf)
     n = len(ids)
-    src = np.searchsorted(ids, pdf["src"].values)
-    dst = np.searchsorted(ids, pdf["dst"].values)
     scale = 10**iter_dp
     inv = 1.0 / float(scale)
     x_i = np.full(n, int(scale), dtype=np.int64)
@@ -695,6 +679,6 @@ def katz_auto(
         x_i = np.floor(
             (1.0 + beta * (inflow.astype(np.float64) * inv)) * float(scale) + 0.5
         ).astype(np.int64)
-    _katz_overflow_check((int(x_i.min()), int(x_i.max())), beta=beta)
-    res = pd.DataFrame({"id": ids.tolist(), "katz": (x_i * inv).tolist()})
-    return spark.createDataFrame(res, schema=f"id {id_t}, katz double")
+    if n:
+        _katz_overflow_check((int(x_i.min()), int(x_i.max())), beta=beta)
+    return pd.DataFrame({"id": ids, "katz": x_i * inv})

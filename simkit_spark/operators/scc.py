@@ -7,9 +7,10 @@ component iff u reaches v AND v reaches u. Canonical label = min
 member id — the same contract as connected_components, so downstream
 relabel joins are interchangeable.
 
-Size dispatch mirrors components.connected_components_auto:
+Size dispatch (``util.size_dispatch``, 300k-row default, as
+components.connected_components_auto):
 
-- LOCAL under ``local_threshold`` edges: one Arrow collect, iterative
+- LOCAL for a driver-sized edge list: one Arrow collect, iterative
   Tarjan (explicit stack, no recursion) over CSR adjacency — exact,
   and the shape the DuckDB full-closure oracle checks at sf0.01.
 
@@ -36,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 
 
 def _tarjan_numpy(ids, src, dst):
@@ -103,39 +104,32 @@ def strongly_connected_components(
     edges: DataFrame,
     max_rounds: int = 30,
     max_sweeps: int = 50,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """(id, component) over directed (src, dst) edges; component = min
     member id. Nodes = every edge endpoint (isolated nodes are their
     own singleton SCC and can be unioned in by the caller)."""
+    return size_dispatch(
+        edges.select("src", "dst").distinct(),
+        _scc_local,
+        lambda e0: _fwbw_rounds(e0, max_rounds, max_sweeps),
+        "id {id}, component {id}",
+        default_rows=300_000,
+    )
+
+
+def _scc_local(pdf):
     import numpy as np
     import pandas as pd
 
-    e0 = materialize(edges.select("src", "dst").distinct())
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e0.schema, default_rows=300_000)
-    n_edges = e0.count()
-    spark = edges.sparkSession
-    id_t = e0.schema["src"].dataType.simpleString()
+    ids = np.unique(np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
+    src = np.searchsorted(ids, pdf["src"].to_numpy())
+    dst = np.searchsorted(ids, pdf["dst"].to_numpy())
+    return pd.DataFrame({"id": ids, "component": _tarjan_numpy(ids, src, dst)})
 
-    if n_edges <= local_threshold:
-        pdf = e0.toPandas()
-        ids = np.unique(
-            np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
-        )
-        if not len(ids):
-            return spark.createDataFrame(
-                [], schema=f"id {id_t}, component {id_t}"
-            )
-        src = np.searchsorted(ids, pdf["src"].to_numpy())
-        dst = np.searchsorted(ids, pdf["dst"].to_numpy())
-        comp = _tarjan_numpy(ids, src, dst)
-        res = pd.DataFrame({"id": ids.tolist(), "component": comp.tolist()})
-        return spark.createDataFrame(
-            res, schema=f"id {id_t}, component {id_t}"
-        )
 
-    # ---------------- distributed FW-BW min-label rounds
+def _fwbw_rounds(e0: DataFrame, max_rounds: int, max_sweeps: int) -> DataFrame:
+    """Distributed path: forward-backward min-label rounds over the
+    distinct, materialized edge list (module docstring)."""
     fwd = e0.repartition("src").persist()
     bwd = e0.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -231,5 +225,6 @@ def strongly_connected_components(
     fwd.unpersist()
     bwd.unpersist()
     if resolved is None:
-        return spark.createDataFrame([], schema=f"id {id_t}, component {id_t}")
+        id_t = e0.schema["src"].dataType.simpleString()
+        return e0.sparkSession.createDataFrame([], f"id {id_t}, component {id_t}")
     return resolved

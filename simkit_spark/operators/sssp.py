@@ -22,7 +22,7 @@ into the running distance table. Lineage is broken per sweep.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from ..util import materialize
+from ..util import materialize, size_dispatch
 
 
 def bounded_sssp(
@@ -80,10 +80,9 @@ def bounded_sssp_auto(
     k: int,
     weight_col: str = "weight",
     iter_dp: int = 12,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched ``bounded_sssp`` (the pagerank_auto contract):
-    below the byte-budgeted edge threshold the k sweeps run driver-side.
+    """Size-dispatched ``bounded_sssp`` (``util.size_dispatch``): for a
+    driver-sized edge list the k sweeps run driver-side.
     Bit parity mechanism: min() is order-independent, and the per-sweep
     rounding replicates Spark's Round expression exactly — Java
     BigDecimal.valueOf(double) parses Double.toString's
@@ -96,18 +95,19 @@ def bounded_sssp_auto(
     iter_dp-th digit could round differently — not observed on the
     Java 17 test matrix (parity + oracle gates are green), but the
     contract is strongest on JDK 19+."""
-    from ..util import local_dispatch_rows, py_scalar, materialize
+    return size_dispatch(
+        edges.select("src", "dst", F.col(weight_col).alias("w")),
+        lambda pdf: _sssp_local(pdf, sources, k, iter_dp),
+        lambda e: bounded_sssp(e, sources, k, "w", iter_dp),
+        "id {id}, dist double",
+    )
 
-    e = edges.select("src", "dst", F.col(weight_col).alias("w")).transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    if e.count() > local_threshold:
-        return bounded_sssp(e, sources, k, "w", iter_dp)
 
+def _sssp_local(pdf, sources, k, iter_dp):
     from decimal import ROUND_HALF_UP, Decimal
 
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
+    import pandas as pd
+
     quantum = Decimal(1).scaleb(-iter_dp)
 
     def _round(x) -> float:
@@ -116,7 +116,7 @@ def bounded_sssp_auto(
         return float(Decimal(repr(float(x))).quantize(quantum, rounding=ROUND_HALF_UP))
 
     adj: dict = {}
-    for r in e.toPandas().itertuples(index=False):
+    for r in pdf.itertuples(index=False):
         adj.setdefault(r.src, []).append((r.dst, float(r.w)))
     dist = {s: 0.0 for s in sources}
     frontier = dict(dist)
@@ -134,7 +134,4 @@ def bounded_sssp_auto(
                 frontier[v] = c
         if not frontier:
             break
-    # py_scalar: ids from pandas are numpy scalars, which hard-error
-    # in createDataFrame under Arrow-disabled row verification
-    rows = [(py_scalar(i), d) for i, d in dist.items()]
-    return spark.createDataFrame(rows, f"id {id_t}, dist double")
+    return pd.DataFrame(list(dist.items()), columns=["id", "dist"])

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from ..util import materialize, size_dispatch
 from .triangles import _dedup_undirected, _oriented_triangles
 
 
@@ -95,29 +95,25 @@ def ktruss(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
     )
 
 
-def ktruss_auto(
-    edges: DataFrame, k: int, n_iter: int = 10, local_threshold: int | None = None
-) -> DataFrame:
-    """Size-dispatched k-truss (the repo's *_auto contract — see
-    kcore_auto): below ``local_threshold`` edges one Arrow collect + a
-    python set-intersection peeling loop beats ~4 shuffle stages per
-    sweep; above it, the distributed operator runs. All-integer, so the
-    two paths are exactly identical (parity-tested)."""
+def ktruss_auto(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
+    """Size-dispatched k-truss (``util.size_dispatch``): a driver-sized
+    graph runs a python set-intersection peeling loop over one Arrow
+    collect, which beats ~4 shuffle stages per sweep; a larger one runs
+    the distributed operator. All-integer, so the two paths are exactly
+    identical (parity-tested)."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3 (k-2 triangle witnesses), got {k}")
-    e = edges.select("src", "dst").transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(e.schema)
-    n_edges = e.count()
-    if n_edges > local_threshold:
-        return ktruss(e, k, n_iter)
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _ktruss_local(pdf, k, n_iter),
+        lambda e: ktruss(e, k, n_iter),
+        "u {id}, v {id}, sup long",
+    )
 
+
+def _ktruss_local(pdf, k, n_iter):
     import pandas as pd  # noqa: PLC0415
 
-    spark = edges.sparkSession
-    id_t = e.schema["src"].dataType.simpleString()
-    schema = f"u {id_t}, v {id_t}, sup long"
-    pdf = e.toPandas()
     cur = {
         (min(a, b), max(a, b))
         for a, b in zip(pdf["src"], pdf["dst"])
@@ -136,7 +132,4 @@ def ktruss_auto(
         nbr.setdefault(u, set()).add(v)
         nbr.setdefault(v, set()).add(u)
     rows = sorted((u, v, len(nbr[u] & nbr[v])) for u, v in cur)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    res = pd.DataFrame(rows, columns=["u", "v", "sup"])
-    return spark.createDataFrame(res, schema=schema)
+    return pd.DataFrame(rows, columns=["u", "v", "sup"])

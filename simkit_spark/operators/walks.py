@@ -27,7 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import local_dispatch_rows, materialize
+from .. import util
+from ..util import materialize
 
 
 def _score(seed: int, step: int, start, w, cur, b) -> F.Column:
@@ -154,11 +155,9 @@ def random_walks_auto(
     walk_len: int = 4,
     walks_per_node: int = 2,
     seed: int = 42,
-    local_threshold: int | None = None,
 ) -> DataFrame:
-    """Size-dispatched ``random_walks`` (the repo's *_auto contract —
-    see pagerank_auto / label_propagation_auto): below
-    ``local_threshold`` symmetrized edge rows the graph is driver-sized,
+    """Size-dispatched ``random_walks``: within the
+    ``util.local_dispatch_rows`` budget the graph is driver-sized,
     so one Arrow collect + a hashlib loop replaces ``walk_len``
     sequential join+agg+checkpoint rounds (each a full Spark job) —
     the md5 pick rule is engine-portable, so both paths are
@@ -169,13 +168,11 @@ def random_walks_auto(
     (walk_len+1) driver tuples, so a graph that fits the input budget
     can still be refused locally (nodes <= 2*pairs bounds it)."""
     und = _undirected(edges).transform(materialize)
-    if local_threshold is None:  # byte-budgeted, not a bare row count
-        local_threshold = local_dispatch_rows(und.schema)
     n_und = und.count()
     # nodes <= 2*pairs bounds the amplified walk output; one budget
     # bounds every driver-side materialization, input AND output
     est_out = 2 * n_und * walks_per_node * (walk_len + 1)
-    if max(2 * n_und, est_out) > local_threshold:
+    if max(2 * n_und, est_out) > util.local_dispatch_rows(und.schema):
         return _random_walks_from_und(und, walk_len, walks_per_node, seed)
 
     spark = edges.sparkSession
@@ -204,7 +201,6 @@ def node2vec_walks_auto(
     p_cost: int = 4,
     q_cost: int = 2,
     seed: int = 42,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Size-dispatched ``node2vec_walks`` — same contract as
     ``random_walks_auto``; the all-integer md5_score * {p_cost, 1,
@@ -214,11 +210,9 @@ def node2vec_walks_auto(
     the above-threshold path reuses the distinct pair set (see
     random_walks_auto)."""
     und = _undirected(edges).transform(materialize)
-    if local_threshold is None:
-        local_threshold = local_dispatch_rows(und.schema)
     n_und = und.count()
     est_out = 2 * n_und * walks_per_node * (walk_len + 1)
-    if max(2 * n_und, est_out) > local_threshold:
+    if max(2 * n_und, est_out) > util.local_dispatch_rows(und.schema):
         return _node2vec_from_und(
             und, walk_len, walks_per_node, p_cost, q_cost, seed
         )

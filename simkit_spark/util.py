@@ -70,7 +70,7 @@ def _reset_bloated_stats(ck: DataFrame) -> DataFrame:
 
 
 # --- local-twin dispatch sizing -------------------------------------
-# The *_auto operators (pagerank/kcore/labelprop/components) collect
+# The size-dispatched operators (size_dispatch below) collect
 # driver-sized graphs via ONE Arrow pull and run a vectorized numpy
 # twin. "Driver-sized" must be a BYTE budget, not a row count: 500k
 # (src,dst) int64 edges is ~8 MB, but the same row count of wide rows
@@ -126,8 +126,40 @@ def local_dispatch_rows(
     return max(1_000, min(default_rows, byte_budget // bytes_per_row))
 
 
-def py_scalar(x):
-    """numpy scalar -> Python native (ids collected via pandas/numpy
-    hard-error in createDataFrame under Arrow-disabled row verification
-    — the CORRECTNESS_r02 kmeans lesson). No-op on natives."""
-    return x.item() if hasattr(x, "item") else x
+def size_dispatch(
+    df: DataFrame,
+    local_fn,
+    dist_fn,
+    schema: str,
+    default_rows: int = 500_000,
+) -> DataFrame:
+    """The size dispatch every driver-local twin shares: run ``df``
+    through ``local_fn`` on the driver when it is driver-sized, through
+    ``dist_fn`` otherwise.
+
+    - ``df`` is materialized ONCE first: the count and the collect are
+      two actions, and without the checkpoint each would re-run an
+      arbitrarily expensive upstream (the kNN kernel costs more than a
+      whole PageRank loop at bench scale).
+    - Above ``local_dispatch_rows(df.schema, default_rows)`` rows — a
+      byte budget turned into a row count, so wide rows dispatch
+      earlier — the result is ``dist_fn(df)``.
+    - Otherwise ``df`` is collected once through Arrow and the result
+      is ``local_fn(pdf)``, a pandas frame whose columns are in
+      ``schema`` order, built under the explicit DDL ``schema`` with
+      ``{id}`` filled in from the type of ``df``'s first column.
+      ``local_fn`` also sees an empty input (seeds, a node list or a
+      seed check can make the answer to no edges non-empty); a
+      zero-row answer needs no schema inference, and the frame plans as
+      a LocalRelation whose cells Spark converts to Python natives with
+      Arrow on or off (numpy scalars hard-error under Arrow-off row
+      verification — the CORRECTNESS_r02 kmeans lesson).
+
+    Tests and stress scripts force either path by patching
+    ``local_dispatch_rows`` in this module."""
+    df = materialize(df)
+    if df.count() > local_dispatch_rows(df.schema, default_rows):
+        return dist_fn(df)
+    ddl = schema.replace("{id}", df.schema.fields[0].dataType.simpleString())
+    out = local_fn(df.toPandas())
+    return df.sparkSession.createDataFrame(out if len(out) else [], ddl)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from simkit_spark.session import get_spark
@@ -24,3 +26,21 @@ def tiny5(spark):
         (4, [10.0, 2.0]),
     ]
     return spark.createDataFrame(rows, "id long, vec array<double>")
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Context manager that sends every size-dispatched operator down
+    its distributed path: inside ``with force_distributed():`` the
+    dispatch budget ``simkit_spark.util.local_dispatch_rows`` is -1, so
+    even an empty input is "too large" for the driver."""
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as mp:
+            mp.setattr(
+                "simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1
+            )
+            yield
+
+    return forced

@@ -16,6 +16,9 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.001"
+# the kNN graph's 4-truss is empty at sf0.001, which would hand
+# createDataFrame no rows to convert; sf0.01 has a 6-edge truss
+SF_BY_NAME = {"ktruss_knn": "/root/testdata/sf0.01"}
 
 
 @pytest.fixture()
@@ -53,10 +56,21 @@ def no_arrow(spark):
         "events_temporal_reach",
         "kg_rdfs_entail",
         "kg_closure",
+        # twins answering through util.size_dispatch's pandas frame
+        "scc_knn",
+        "kcore_knn",
+        "mis_knn",
+        "matching_knn",
+        "ktruss_knn",
+        "katz_knn",
+        "weighted_pagerank_affinity",
+        "mst_knn",
+        "anf_knn",
+        "kg_sameas",
     ],
 )
 def test_local_fast_paths_without_arrow(no_arrow, name):
     # a cached entailed KG would skip the ontology-table conversion
     entry_mod._KG_ENT_CACHE.clear()
-    df = entry_mod.queries()[name](no_arrow, SF)
+    df = entry_mod.queries()[name](no_arrow, SF_BY_NAME.get(name, SF))
     assert df.count() > 0

@@ -73,6 +73,17 @@ def test_bcubed_perfect_and_degenerate(spark):
     assert empty == {"precision": 0.0, "recall": 0.0, "f1": 0.0, "n": 0}
 
 
+def test_bcubed_fscore_size_guard(spark, monkeypatch):
+    """Past the driver budget the fold refuses to collect the
+    intersection table and points at bcubed_counts."""
+    assign, gold = _toy(spark)  # 4 (cluster, label) rows
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 3)
+    with pytest.raises(ValueError, match="bcubed_counts"):
+        bcubed_fscore(assign, gold)
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 4)
+    assert bcubed_fscore(assign, gold)["n"] == 7
+
+
 # ------------------------------------------------------- hll_distinct_by
 def test_hll_by_group_matches_global_on_subset(spark):
     rows = [(f"v{i % 37}", "a") for i in range(200)] + [

@@ -129,7 +129,7 @@ def test_hits_auto_string_id_parity(spark):
     assert a == b and len(a) > 0
 
 
-def test_hits_auto_empty_and_forced_distributed(spark):
+def test_hits_auto_empty_and_forced_distributed(spark, force_distributed):
     from simkit_spark.operators.hits import hits_auto
 
     empty = spark.createDataFrame([], "src string, dst string")
@@ -137,6 +137,7 @@ def test_hits_auto_empty_and_forced_distributed(spark):
     assert out.count() == 0
     assert out.schema["id"].dataType == empty.schema["src"].dataType
     df = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
-    a = sorted(map(tuple, hits_auto(df, 3, local_threshold=0).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, hits_auto(df, 3).collect()))
     b = sorted(map(tuple, hits_auto(df, 3).collect()))
     assert a == b

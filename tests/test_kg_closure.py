@@ -30,13 +30,14 @@ def test_closure_chain_local(spark):
     assert got == CHAIN_TC
 
 
-def test_closure_chain_distributed_parity(spark):
+def test_closure_chain_distributed_parity(spark, force_distributed):
     # force the semi-naive distributed loop; must agree bit-for-bit
-    got = _as_set(transitive_closure(_triples(spark, CHAIN), local_threshold=0))
+    with force_distributed():
+        got = _as_set(transitive_closure(_triples(spark, CHAIN)))
     assert got == CHAIN_TC
 
 
-def test_closure_cycle_terminates(spark):
+def test_closure_cycle_terminates(spark, force_distributed):
     # a->b->c->a: closure is all 9 ordered pairs minus... none — every
     # node reaches every node including itself around the loop
     tc = transitive_closure(_triples(spark, [("a", "b"), ("b", "c"), ("c", "a")]))
@@ -48,12 +49,9 @@ def test_closure_cycle_terminates(spark):
     }
     assert got == exp
     # distributed path must terminate (anti-join stops re-derivation)
-    assert _as_set(
-        transitive_closure(
-            _triples(spark, [("a", "b"), ("b", "c"), ("c", "a")]),
-            local_threshold=0,
-        )
-    ) == exp
+    with force_distributed():
+        tc = transitive_closure(_triples(spark, [("a", "b"), ("b", "c"), ("c", "a")]))
+    assert _as_set(tc) == exp
 
 
 def test_closure_pred_filter(spark):
@@ -67,15 +65,13 @@ def test_closure_pred_filter(spark):
     assert got2 == {("a", "b", 1), ("b", "c", 1), ("a", "c", 2)}
 
 
-def test_closure_max_iter_backstop(spark):
+def test_closure_max_iter_backstop(spark, force_distributed):
     long_chain = [(f"n{i}", f"n{i + 1}") for i in range(6)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(
-            _triples(spark, long_chain), local_threshold=0, max_iter=3
-        )
+    with force_distributed(), pytest.raises(RuntimeError, match="did not converge"):
+        transitive_closure(_triples(spark, long_chain), max_iter=3)
 
 
-def test_closure_parallel_edges_and_dedup(spark):
+def test_closure_parallel_edges_and_dedup(spark, force_distributed):
     # same (s, o) under two predicates: multiplicity must not change
     # the closure, with or without the opt-in base dedup
     t = spark.createDataFrame(
@@ -84,4 +80,6 @@ def test_closure_parallel_edges_and_dedup(spark):
     )
     exp = {("a", "b", 1), ("b", "c", 1), ("a", "c", 2)}
     assert _as_set(transitive_closure(t)) == exp
-    assert _as_set(transitive_closure(t, dedup_edges=True, local_threshold=0)) == exp
+    with force_distributed():
+        tc = transitive_closure(t, dedup_edges=True)
+    assert _as_set(tc) == exp

@@ -98,32 +98,34 @@ def _greedy_dup():
     return [(1, 2)]
 
 
-def test_auto_paths_bit_identical(spark):
+def test_auto_paths_bit_identical(spark, force_distributed):
     e = _edges(spark, _PAIRS)
-    dist = sorted((r.u, r.v, r.sweep) for r in
-                  maximal_matching_auto(e, 8, 42, local_threshold=0).collect())
+    with force_distributed():
+        dist = sorted((r.u, r.v, r.sweep) for r in
+                      maximal_matching_auto(e, 8, 42).collect())
     local = sorted((r.u, r.v, r.sweep) for r in
                    maximal_matching_auto(e, 8, 42).collect())
     assert dist == local and dist
 
 
-def test_auto_paths_weighted_bit_identical(spark):
+def test_auto_paths_weighted_bit_identical(spark, force_distributed):
     ws = [((a * 3 + b * 11) % 40) / 8.0 for a, b in _PAIRS]
     rows = [(a, b, w) for (a, b), w in zip(_PAIRS, ws)]
     e = _wedges(spark, rows)
-    dist = sorted((r.u, r.v, r.sweep) for r in
-                  maximal_matching_auto(e, 8, 42, weight_col="weight",
-                                        local_threshold=0).collect())
+    with force_distributed():
+        dist = sorted((r.u, r.v, r.sweep) for r in
+                      maximal_matching_auto(e, 8, 42, weight_col="weight").collect())
     local = sorted((r.u, r.v, r.sweep) for r in
                    maximal_matching_auto(e, 8, 42, weight_col="weight").collect())
     assert dist == local and dist
 
 
-def test_string_ids_both_paths(spark):
+def test_string_ids_both_paths(spark, force_distributed):
     pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "a")]
     e = _edges(spark, pairs, "string")
-    dist = sorted((r.u, r.v) for r in
-                  maximal_matching_auto(e, 6, 7, local_threshold=0).collect())
+    with force_distributed():
+        dist = sorted((r.u, r.v) for r in
+                      maximal_matching_auto(e, 6, 7).collect())
     local = sorted((r.u, r.v) for r in
                    maximal_matching_auto(e, 6, 7).collect())
     assert dist == local

@@ -64,20 +64,22 @@ def test_equals_sequential_greedy(spark):
     assert got == _greedy_mis(_PAIRS, 42)
 
 
-def test_auto_paths_bit_identical(spark):
+def test_auto_paths_bit_identical(spark, force_distributed):
     e = _edges(spark, _PAIRS)
-    dist = sorted((r.id, r.sweep) for r in
-                  maximal_independent_set_auto(e, 8, 42, local_threshold=0).collect())
+    with force_distributed():
+        dist = sorted((r.id, r.sweep) for r in
+                      maximal_independent_set_auto(e, 8, 42).collect())
     local = sorted((r.id, r.sweep) for r in
                    maximal_independent_set_auto(e, 8, 42).collect())
     assert dist == local and dist
 
 
-def test_string_ids_both_paths(spark):
+def test_string_ids_both_paths(spark, force_distributed):
     pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")]
     e = _edges(spark, pairs, "string")
-    dist = sorted((r.id, r.sweep) for r in
-                  maximal_independent_set_auto(e, 6, 7, local_threshold=0).collect())
+    with force_distributed():
+        dist = sorted((r.id, r.sweep) for r in
+                      maximal_independent_set_auto(e, 6, 7).collect())
     local = sorted((r.id, r.sweep) for r in
                    maximal_independent_set_auto(e, 6, 7).collect())
     assert dist == local

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from simkit_spark import util
 from simkit_spark.functions import events
 from simkit_spark.functions.events import temporal_reachability
 from simkit_spark.operators.densest import densest_subgraph_rounds
@@ -46,7 +47,7 @@ def test_mst_tie_break_total_order(spark):
     assert got == [(0, 1), (0, 2)]
 
 
-def test_mst_local_distributed_parity(spark):
+def test_mst_local_distributed_parity(spark, force_distributed):
     n = 70
     edges = []
     for i in range(n):
@@ -59,10 +60,8 @@ def test_mst_local_distributed_parity(spark):
                 edges.append((i, d, (h % 1000) / 100.0))
     e = spark.createDataFrame(edges, "src long, dst long, weight double")
     loc = sorted(tuple(r) for r in minimum_spanning_forest(e).collect())
-    dist = sorted(
-        tuple(r)
-        for r in minimum_spanning_forest(e, local_threshold=0).collect()
-    )
+    with force_distributed():
+        dist = sorted(tuple(r) for r in minimum_spanning_forest(e).collect())
     assert loc == dist
     # spanning forest of a connected graph: n-1 edges
     assert len(loc) == n - 1
@@ -151,7 +150,7 @@ def _arrivals(df):
 def _reach_both(c, seeds):
     local = _arrivals(temporal_reachability(c, seeds=seeds))
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(events, "local_dispatch_rows", lambda schema: -1)
+        mp.setattr(util, "local_dispatch_rows", lambda *a, **k: -1)
         dist = _arrivals(temporal_reachability(c, seeds=seeds))
     return {"local": local, "distributed": dist}
 

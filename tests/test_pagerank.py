@@ -95,14 +95,15 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(df_s, n_iter=3).schema["id"].dataType.simpleString() == "string"
 
 
-def test_pagerank_auto_paths_bit_identical(spark, dangling_graph):
+def test_pagerank_auto_paths_bit_identical(spark, dangling_graph, force_distributed):
     """The exact-integer contract makes the driver-local numpy path
     and the distributed path produce the same bits."""
     from simkit_spark.operators.pagerank import pagerank_auto
 
     _, df = dangling_graph
-    local = sorted(map(tuple, pagerank_auto(df, n_iter=10, local_threshold=10**6).collect()))
-    dist = sorted(map(tuple, pagerank_auto(df, n_iter=10, local_threshold=0).collect()))
+    local = sorted(map(tuple, pagerank_auto(df, n_iter=10).collect()))
+    with force_distributed():
+        dist = sorted(map(tuple, pagerank_auto(df, n_iter=10).collect()))
     assert local == dist
 
 
@@ -158,26 +159,27 @@ def test_ppr_matches_reference_and_concentrates_on_seed(spark):
     assert got["a"] > got["e"] > 0.0
 
 
-def test_ppr_local_distributed_bit_parity(spark):
+def test_ppr_local_distributed_bit_parity(spark, force_distributed):
     from simkit_spark.operators.pagerank import personalized_pagerank
 
     edges = [("n%d" % i, "n%d" % ((i * 7 + 3) % 20)) for i in range(60)]
     df = spark.createDataFrame(edges, "src string, dst string").where("src <> dst")
     loc = personalized_pagerank(df, ["n1", "n4"], n_iter=6)
-    dist = personalized_pagerank(df, ["n1", "n4"], n_iter=6, local_threshold=0)
+    with force_distributed():
+        dist = personalized_pagerank(df, ["n1", "n4"], n_iter=6)
     a = {r["id"]: r["rank"] for r in loc.collect()}
     b = {r["id"]: r["rank"] for r in dist.collect()}
     assert a == b
 
 
-def test_ppr_missing_seed_raises(spark):
+def test_ppr_missing_seed_raises(spark, force_distributed):
     from simkit_spark.operators.pagerank import personalized_pagerank
 
     df = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(KeyError):
         personalized_pagerank(df, ["zz"], n_iter=2)
-    with pytest.raises(KeyError):
-        personalized_pagerank(df, ["zz"], n_iter=2, local_threshold=0)
+    with force_distributed(), pytest.raises(KeyError):
+        personalized_pagerank(df, ["zz"], n_iter=2)
 
 
 def test_ppr_empty_edges_raises_keyerror(spark):
@@ -191,7 +193,7 @@ def test_ppr_empty_edges_raises_keyerror(spark):
         personalized_pagerank(df, ["a"], n_iter=2)
 
 
-def test_ppr_duplicate_seeds_dedup(spark):
+def test_ppr_duplicate_seeds_dedup(spark, force_distributed):
     """Duplicate seeds are deduplicated at entry: both paths accept
     them, agree bit-for-bit with the unique-seed run, and teleport
     mass sums to 1 (previously the distributed path raised a spurious
@@ -202,10 +204,11 @@ def test_ppr_duplicate_seeds_dedup(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     uniq = {r["id"]: r["rank"] for r in personalized_pagerank(df, ["a", "c"], n_iter=5).collect()}
     dup_loc = {r["id"]: r["rank"] for r in personalized_pagerank(df, ["a", "c", "a"], n_iter=5).collect()}
-    dup_dist = {
-        r["id"]: r["rank"]
-        for r in personalized_pagerank(df, ["a", "c", "a"], n_iter=5, local_threshold=0).collect()
-    }
+    with force_distributed():
+        dup_dist = {
+            r["id"]: r["rank"]
+            for r in personalized_pagerank(df, ["a", "c", "a"], n_iter=5).collect()
+        }
     assert dup_loc == uniq == dup_dist
     assert sum(uniq.values()) == pytest.approx(1.0, abs=1e-9)
 
@@ -345,14 +348,15 @@ def test_weighted_pagerank_auto_string_ids_and_empty(spark):
     assert out.schema["id"].dataType == empty.schema["src"].dataType
 
 
-def test_weighted_pagerank_auto_forced_distributed(spark):
+def test_weighted_pagerank_auto_forced_distributed(spark, force_distributed):
     from simkit_spark.operators.pagerank import weighted_pagerank_auto
 
     df = spark.createDataFrame(
         [(0, 1, 0.5), (1, 2, 0.25), (2, 0, 1.0), (0, 2, 0.125)],
         "src long, dst long, weight double",
     )
-    a = sorted(map(tuple, weighted_pagerank_auto(df, 5, local_threshold=0).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, weighted_pagerank_auto(df, 5).collect()))
     b = sorted(map(tuple, weighted_pagerank_auto(df, 5).collect()))
     assert a == b
 
@@ -378,7 +382,7 @@ def test_katz_closed_form_star(spark):
     assert got[0] == exp
 
 
-def test_katz_local_distributed_bit_parity(spark):
+def test_katz_local_distributed_bit_parity(spark, force_distributed):
     import hashlib
 
     from simkit_spark.operators.pagerank import katz_auto
@@ -392,9 +396,8 @@ def test_katz_local_distributed_bit_parity(spark):
         [(a, b) for a, b in edges if a != b], "src long, dst long"
     )
     loc = sorted(tuple(r) for r in katz_auto(e, n_iter=6).collect())
-    dist = sorted(
-        tuple(r) for r in katz_auto(e, n_iter=6, local_threshold=0).collect()
-    )
+    with force_distributed():
+        dist = sorted(tuple(r) for r in katz_auto(e, n_iter=6).collect())
     assert loc == dist  # bit-identical, not approximately
 
 
@@ -417,7 +420,7 @@ def test_katz_string_ids_and_empty(spark):
     assert empty.count() == 0 and empty.columns == ["id", "katz"]
 
 
-def test_katz_overflow_guard_raises(spark):
+def test_katz_overflow_guard_raises(spark, force_distributed):
     # in-star with beta*in_degree = 390: numerators land in the silent
     # hazard zone (2^53, 2^63) by sweep 4 — exact in int64, NOT exact
     # in float64 — where nothing else errors. The runtime guard must
@@ -429,7 +432,7 @@ def test_katz_overflow_guard_raises(spark):
         [(s, 0) for s in range(1, 40)] + [(0, s) for s in range(1, 40)],
         "src long, dst long",
     )
+    with force_distributed(), pytest.raises(ValueError, match="2\\^53"):
+        katz_auto(e, n_iter=4, beta=10.0)
     with pytest.raises(ValueError, match="2\\^53"):
-        katz_auto(e, n_iter=4, beta=10.0, local_threshold=0)
-    with pytest.raises(ValueError, match="2\\^53"):
-        katz_auto(e, n_iter=4, beta=10.0, local_threshold=10**9)
+        katz_auto(e, n_iter=4, beta=10.0)

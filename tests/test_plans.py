@@ -247,7 +247,7 @@ def test_round4f_event_plans(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_kg_closure_local_dispatch_and_distributed_joins(spark):
+def test_kg_closure_local_dispatch_and_distributed_joins(spark, force_distributed):
     """At sf0.01 the FK edge set (~17k rows) is driver-sized, so the
     auto path must dispatch local (LocalTableScan / parallelized rows,
     not an iterative join plan); the forced-distributed path's output
@@ -264,7 +264,8 @@ def test_kg_closure_local_dispatch_and_distributed_joins(spark):
     t = spark.createDataFrame(
         [("a", "p", "b"), ("b", "p", "c")], "subj string, pred string, obj string"
     )
-    out = transitive_closure(t, local_threshold=0)
+    with force_distributed():
+        out = transitive_closure(t)
     assert {(r["subj"], r["obj"], r["hops"]) for r in out.collect()} == {
         ("a", "b", 1), ("b", "c", 1), ("a", "c", 2)
     }

@@ -97,6 +97,47 @@ def test_local_dispatch_rows_byte_budget():
     assert local_dispatch_rows(wide, byte_budget=1) == 1_000
 
 
+def test_size_dispatch_paths_and_empty_input(spark, force_distributed):
+    """util.size_dispatch takes the local twin by default and dist_fn
+    under the force_distributed seam; an empty input comes back as zero
+    rows with the declared schema (``{id}`` filled from the input's
+    first column) on both paths."""
+    from simkit_spark.util import size_dispatch
+
+    def run(df):
+        paths = []
+
+        def local(pdf):
+            paths.append("local")
+            return pdf.assign(twice=pdf["dst"] * 2)
+
+        def dist(e):
+            paths.append("dist")
+            return e.selectExpr("src", "dst", "dst * 2 AS twice")
+
+        out = size_dispatch(df, local, dist, "src {id}, dst long, twice long")
+        return paths, out
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "src string, dst long")
+    paths, out = run(df)
+    assert paths == ["local"]
+    assert sorted(map(tuple, out.collect())) == [("a", 1, 2), ("b", 2, 4)]
+    with force_distributed():
+        paths, out = run(df)
+    assert paths == ["dist"]
+    assert sorted(map(tuple, out.collect())) == [("a", 1, 2), ("b", 2, 4)]
+
+    empty = spark.createDataFrame([], "src string, dst long")
+    want = "struct<src:string,dst:bigint,twice:bigint>"
+    paths, out = run(empty)
+    assert paths == ["local"] and out.count() == 0
+    assert out.schema.simpleString() == want
+    with force_distributed():
+        paths, out = run(empty)
+    assert paths == ["dist"] and out.count() == 0
+    assert out.schema.simpleString() == want
+
+
 def test_materialize_resets_bloated_join_stats(spark):
     # Catalyst multiplies children's sizeInBytes at every join and
     # checkpoints inherit the product into the new leaf: in a fixpoint

@@ -184,7 +184,7 @@ def test_anf_effective_diameter_monotone(spark):
     assert effective_diameter(nf, q=1.0) == 9.0
 
 
-def test_hyperanf_tracks_exact(spark):
+def test_hyperanf_tracks_exact(spark, force_distributed):
     # deterministic random-ish graph: 120 nodes, ring + md5 chords
     n = 120
     edges = [(i, (i + 1) % n) for i in range(n)]
@@ -196,12 +196,11 @@ def test_hyperanf_tracks_exact(spark):
         r["h"]: r["n_pairs"]
         for r in neighborhood_function(e, max_h=4).collect()
     }
-    est = {
-        r["h"]: r["n_pairs"]
-        for r in neighborhood_function(
-            e, max_h=4, local_threshold=0, p=10
-        ).collect()
-    }
+    with force_distributed():
+        est = {
+            r["h"]: r["n_pairs"]
+            for r in neighborhood_function(e, max_h=4, p=10).collect()
+        }
     for h in range(1, 5):
         assert abs(est[h] - exact[h]) / exact[h] < 0.10, (h, est[h], exact[h])
 

@@ -3,6 +3,7 @@ text.bpe_train."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 
 import numpy as np
@@ -35,19 +36,18 @@ def _scc_brute(edges):
 
 
 @pytest.mark.parametrize("local", [True, False])
-def test_scc_matches_closure(spark, local):
+def test_scc_matches_closure(spark, force_distributed, local):
     edges = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 3), (2, 3), (5, 6), (6, 7)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in strongly_connected_components(
-            e, local_threshold=None if local else 0
-        ).collect()
-    }
+    with contextlib.nullcontext() if local else force_distributed():
+        got = {
+            r["id"]: r["component"]
+            for r in strongly_connected_components(e).collect()
+        }
     assert got == _scc_brute(edges)
 
 
-def test_scc_local_distributed_parity(spark):
+def test_scc_local_distributed_parity(spark, force_distributed):
     n = 80
     edges = [(i, (i * 7 + 3) % n) for i in range(n)] + [
         (i, int(hashlib.md5(f"e{i}".encode()).hexdigest()[:4], 16) % n)
@@ -57,10 +57,8 @@ def test_scc_local_distributed_parity(spark):
     loc = sorted(
         tuple(r) for r in strongly_connected_components(e).collect()
     )
-    dist = sorted(
-        tuple(r)
-        for r in strongly_connected_components(e, local_threshold=0).collect()
-    )
+    with force_distributed():
+        dist = sorted(tuple(r) for r in strongly_connected_components(e).collect())
     assert loc == dist
     assert loc == sorted(_scc_brute(edges).items())
 

@@ -84,12 +84,13 @@ def test_sssp_auto_local_distributed_parity(spark):
         assert a == b, k
 
 
-def test_sssp_auto_string_ids_empty_and_forced(spark):
+def test_sssp_auto_string_ids_empty_and_forced(spark, force_distributed):
     from simkit_spark.operators.sssp import bounded_sssp_auto
 
     rows = [("a", "b", 1.5), ("b", "c", 0.25), ("c", "a", 2.0), ("x", "y", 1.0)]
     df = spark.createDataFrame(rows, "src string, dst string, weight double")
-    a = sorted(map(tuple, bounded_sssp_auto(df, ["a"], 4, local_threshold=0).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, bounded_sssp_auto(df, ["a"], 4).collect()))
     b = sorted(map(tuple, bounded_sssp_auto(df, ["a"], 4).collect()))
     assert a == b and len(a) == 3
     empty = spark.createDataFrame([], "src string, dst string, weight double")

@@ -76,7 +76,7 @@ def test_k_below_3_raises(spark):
 
 
 @pytest.mark.parametrize("k,n_iter", [(3, 4), (4, 4), (5, 6)])
-def test_auto_paths_match_brute_force(spark, k, n_iter):
+def test_auto_paths_match_brute_force(spark, force_distributed, k, n_iter):
     # md5-ish deterministic pseudo-random graph, 40 nodes
     pairs = [
         (a, b)
@@ -87,7 +87,8 @@ def test_auto_paths_match_brute_force(spark, k, n_iter):
     want = _brute_ktruss(pairs, k, n_iter)
     assert _rows(ktruss(e, k, n_iter)) == want
     assert _rows(ktruss_auto(e, k, n_iter)) == want  # local twin
-    assert _rows(ktruss_auto(e, k, n_iter, local_threshold=0)) == want
+    with force_distributed():
+        assert _rows(ktruss_auto(e, k, n_iter)) == want
 
 
 def test_string_ids_local_twin(spark):

@@ -178,38 +178,36 @@ def test_walks_auto_empty_edges_schema(spark):
         assert out2.schema["node_id"].dataType == df.schema["src"].dataType
 
 
-def test_walks_auto_forced_distributed_matches_local(spark):
-    """local_threshold=0 forces the distributed path through the same
-    auto entrypoint — the dispatch itself must be invisible."""
+def test_walks_auto_forced_distributed_matches_local(spark, force_distributed):
+    """force_distributed sends the same auto entrypoint down the
+    distributed path
+    — the dispatch itself must be invisible."""
     from simkit_spark.operators.walks import random_walks_auto
 
     edges = [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = sorted(map(tuple, random_walks_auto(df, 4, 2, local_threshold=0).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, random_walks_auto(df, 4, 2).collect()))
     b = sorted(map(tuple, random_walks_auto(df, 4, 2).collect()))
     assert a == b
 
 
-def test_node2vec_auto_forced_distributed_matches_local(spark):
-    """local_threshold=0 forces node2vec's distributed dispatch branch
+def test_node2vec_auto_forced_distributed_matches_local(spark, force_distributed):
+    """force_distributed sends node2vec down its distributed branch
     (arg threading p_cost/q_cost/seed) against the twin."""
     from simkit_spark.operators.walks import node2vec_walks_auto
 
     edges = [(i, (i + 1) % 14) for i in range(14)] + [(0, 7), (3, 10)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = sorted(
-        map(
-            tuple,
-            node2vec_walks_auto(
-                df, 4, 2, p_cost=7, q_cost=3, local_threshold=0
-            ).collect(),
+    with force_distributed():
+        a = sorted(
+            map(tuple, node2vec_walks_auto(df, 4, 2, p_cost=7, q_cost=3).collect())
         )
-    )
     b = sorted(map(tuple, node2vec_walks_auto(df, 4, 2, p_cost=7, q_cost=3).collect()))
     assert a == b and len(a) > 0
 
 
-def test_walks_auto_output_amplification_guard(spark):
+def test_walks_auto_output_amplification_guard(spark, monkeypatch):
     """A graph inside the input budget but whose walk OUTPUT explodes
     past it must dispatch distributed (never a multi-GB driver tuple
     build): 2*n_und=24 <= 130 passes the input check, but
@@ -218,7 +216,9 @@ def test_walks_auto_output_amplification_guard(spark):
 
     edges = [(i, i + 1) for i in range(12)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    guarded = random_walks_auto(df, walk_len=6, walks_per_node=2, local_threshold=130)
+    with monkeypatch.context() as mp:
+        mp.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 130)
+        guarded = random_walks_auto(df, walk_len=6, walks_per_node=2)
     plan = guarded._jdf.queryExecution().executedPlan().toString()
     assert "Union" in plan  # distributed step-union, not a local scan
     local = random_walks_auto(df, walk_len=6, walks_per_node=2)

@@ -15,6 +15,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -62,7 +63,8 @@ def main():
 
     from simkit_spark.operators.pagerank import pagerank_auto
     t0 = time.time()
-    pr = pagerank_auto(edges, n_iter=10, local_threshold=0)  # force distributed
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        pr = pagerank_auto(edges, n_iter=10)  # forced distributed
     total = pr.agg(F.sum("rank")).first()[0]
     res["pagerank_dist_secs"] = round(time.time() - t0, 2)
     res["pagerank_mass"] = round(float(total), 6)

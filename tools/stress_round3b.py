@@ -1,7 +1,7 @@
 """Stress the late-round-3 additions past their test-scale regimes:
 
 1. kcore on the ~1M-edge skewed graph (stress_graph_ops generator),
-   distributed path FORCED (local_threshold=0) vs the numpy local twin
+   distributed path FORCED (dispatch budget patched) vs the numpy local twin
    on the same edges — wall for both + identical survivor sets
    (xor-hash) proving the dispatch is invisible at scale-boundary.
 2. random_walks on the same graph: walk corpus wall + row count
@@ -21,6 +21,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -90,9 +91,8 @@ def main():
     hb_d = _xor_hash(kcore(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_dist_secs"] = round(time.time() - t0, 2)
     t0 = time.time()
-    hb_l = _xor_hash(
-        kcore_auto(bedges, k=8, n_iter=10, local_threshold=1 << 40), ["id", "core_deg"]
-    )
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 1 << 40):
+        hb_l = _xor_hash(kcore_auto(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_local_secs"] = round(time.time() - t0, 2)
     res["kcore_paths_identical"] = hb_d == hb_l
 

@@ -22,6 +22,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -45,9 +46,8 @@ def main():
     from simkit_spark.operators.anf import neighborhood_function
 
     t0 = time.time()
-    nf = neighborhood_function(
-        edges, max_h=3, local_threshold=0, p=6
-    ).collect()
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        nf = neighborhood_function(edges, max_h=3, p=6).collect()
     res["hyperanf_sec"] = round(time.time() - t0, 1)
     curve = sorted((r["h"], r["n_pairs"]) for r in nf)
     res["hyperanf_curve"] = [c for _, c in curve]
@@ -59,9 +59,8 @@ def main():
     from simkit_spark.operators.scc import strongly_connected_components
 
     t0 = time.time()
-    scc = strongly_connected_components(
-        edges, local_threshold=0
-    ).localCheckpoint()
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        scc = strongly_connected_components(edges).localCheckpoint()
     res["scc_sec"] = round(time.time() - t0, 1)
     res["scc_nodes"] = scc.count()
     res["scc_components"] = scc.select("component").distinct().count()
@@ -74,9 +73,8 @@ def main():
     assert res["scc_nodes"] == n_endpoints
     assert scc.where(F.col("component") > F.col("id")).count() == 0
     # local-twin parity on the same graph (driver can hold 1M edges)
-    loc = strongly_connected_components(
-        edges, local_threshold=10_000_000
-    )
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 10_000_000):
+        loc = strongly_connected_components(edges)
     assert (
         scc.exceptAll(loc).count() == 0 and loc.exceptAll(scc).count() == 0
     ), "FW-BW vs Tarjan mismatch"

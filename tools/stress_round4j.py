@@ -20,6 +20,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,7 +52,8 @@ def main():
     from simkit_spark.operators.mst import minimum_spanning_forest
 
     t0 = time.time()
-    msf = minimum_spanning_forest(weighted, local_threshold=0).localCheckpoint()
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        msf = minimum_spanning_forest(weighted).localCheckpoint()
     res["msf_sec"] = round(time.time() - t0, 1)
     res["msf_edges"] = msf.count()
     nodes = (
@@ -68,7 +70,8 @@ def main():
     )
     assert res["msf_edges"] == nodes - comps, (res["msf_edges"], nodes, comps)
     t0 = time.time()
-    loc = minimum_spanning_forest(weighted, local_threshold=10_000_000)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 10_000_000):
+        loc = minimum_spanning_forest(weighted)
     assert msf.exceptAll(loc).count() == 0 and loc.exceptAll(msf).count() == 0
     res["msf_parity"] = "exact"
     res["msf_local_sec"] = round(time.time() - t0, 1)
