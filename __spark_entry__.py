@@ -1812,13 +1812,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # verifies exactly the first 50 entries). Rotation schedule —
         # documented in SURVEY.md §8: r3 checked the original first-50
         # (kernel/graph/text/curation core), r4 checked the 50 entries
-        # r3 did not, and r5 (this window) checks the 32 entries added
-        # in round 4 that neither r3 nor r4 reached, filling the
-        # remaining 18 slots with the OLDEST green entries (r3's
-        # window, untouched impls). r3+r4+r5 = driver-visible rows for
-        # all 132. tools/check_oracle.py sweeps every oracled entry
-        # regardless of order; tests/test_entry.py pins this window.
-        # --- r5 window head: the 32 queries never driver-checked in r3/r4 ---
+        # r3 did not, r5 checked the 32 entries added in round 4 that
+        # neither r3 nor r4 reached plus 18 of the OLDEST green
+        # entries, and r6 (this window) leads with the 5 entries added
+        # in r5, keeps r5's first 45, and rotates out five untouched
+        # r3-green fillers (silhouette_labels .. simhash). r3..r6 =
+        # a checked row for all 137. tools/check_oracle.py sweeps
+        # every oracled entry regardless of order; tests/test_entry.py
+        # pins this window.
+        # --- r6 window head: the 5 queries added in r5, never in a window yet ---
+        "bcubed_eval": _bcubed_eval,
+        "hll_by_source": _hll_by_source,
+        "hll_windows": _hll_windows,
+        "vocab_overlap": _vocab_overlap,
+        "pca_embedding": _pca_embedding,
+        # --- the 32 queries added in r4 (green in the r5 window) ---
         "interval_overlaps": _interval_overlaps,
         "sorted_neighborhood": _sorted_neighborhood,
         "conductance_knn": _conductance_knn,
@@ -1861,16 +1869,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "laplacian_sym": _laplacian("sym"),
         "laplacian_rw": _laplacian("rw"),
         "laplacian_ad": _laplacian_ad,
-        "silhouette_labels": _silhouette_labels,
-        "ari_labels": _ari_labels,
-        "exact_dedup": _exact_dedup,
-        "minhash_signatures": _minhash,
-        "simhash": _simhash,
         "pagerank_knn": _pagerank_knn,
         "communities_knn": _communities_knn,
         "sssp_knn": _sssp_knn,
         # --- past the 50-entry window: driver-green in r3 or r4,
         # implementations unchanged since their green row ---
+        "silhouette_labels": _silhouette_labels,
+        "ari_labels": _ari_labels,
+        "exact_dedup": _exact_dedup,
+        "minhash_signatures": _minhash,
+        "simhash": _simhash,
         "token_quantiles": _token_quantiles,
         "events_asof": _events_asof,
         "events_rollup": _events_rollup,
@@ -1953,16 +1961,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tfidf_topk": _tfidf_topk,
         "embedding_stats": _embedding_stats,
         "triangles_knn": _triangles_knn,
-        # --- new in r5 (appended PAST the 50-entry window per the
-        # rotation contract; all 132 pre-r5 entries are driver-green
-        # across r3/r4/r5, so the r5 additions below are the only
-        # entries without a driver row — rotate them in if a round 6
-        # ever runs) ---
-        "bcubed_eval": _bcubed_eval,
-        "hll_by_source": _hll_by_source,
-        "pca_embedding": _pca_embedding,
-        "hll_windows": _hll_windows,
-        "vocab_overlap": _vocab_overlap,
     }
 
 
@@ -4749,7 +4747,11 @@ def oracle_sql() -> dict[str, str]:
     return {
         # Order mirrors queries() (minus the rows-only entries) — see
         # the coverage-schedule comment there.
-        # --- r5 window head (matches queries() order) ---
+        # --- r6 window head (matches queries() order) ---
+        "bcubed_eval": _BCUBED_SQL,
+        "hll_by_source": _hll_by_source_sql(),
+        "hll_windows": _hll_windows_sql(),
+        "vocab_overlap": _VOCAB_OVERLAP_SQL,
         "interval_overlaps": _INTERVAL_SQL,
         "sorted_neighborhood": _SORTED_NEIGHBORHOOD_SQL,
         "conductance_knn": _conductance_sql(),
@@ -4794,15 +4796,15 @@ def oracle_sql() -> dict[str, str]:
         "laplacian_sym": _LAP_SYM_SQL,
         "laplacian_rw": _LAP_RW_SQL,
         "laplacian_ad": _LAP_AD_SQL,
+        "pagerank_knn": _pagerank_sql(),
+        "communities_knn": _lpa_sql(),
+        "sssp_knn": _sssp_sql(),
+        # --- past the 50-entry window (driver-green in r3/r4) ---
         "silhouette_labels": _SILHOUETTE_SQL,
         "ari_labels": _ARI_SQL,
         "exact_dedup": f"SELECT {_FP_EXPR} AS fp, min(doc_id) AS keep_doc_id, count(*) AS n_dups FROM documents GROUP BY 1",
         "minhash_signatures": _MINHASH_SQL,
         "simhash": _simhash_sql(),
-        "pagerank_knn": _pagerank_sql(),
-        "communities_knn": _lpa_sql(),
-        "sssp_knn": _sssp_sql(),
-        # --- past the 50-entry window (driver-green in r3/r4) ---
         "token_quantiles": _TOKEN_QUANTILES_SQL,
         "events_asof": _ASOF_SQL,
         "events_rollup": _ROLLUP_SQL,
@@ -4877,9 +4879,4 @@ def oracle_sql() -> dict[str, str]:
         "tfidf_topk": _TFIDF_SQL,
         "embedding_stats": _EMB_STATS_SQL,
         "triangles_knn": _TRIANGLES_SQL,
-        # --- new in r5 (past the window; see queries() note) ---
-        "bcubed_eval": _BCUBED_SQL,
-        "hll_by_source": _hll_by_source_sql(),
-        "hll_windows": _hll_windows_sql(),
-        "vocab_overlap": _VOCAB_OVERLAP_SQL,
     }

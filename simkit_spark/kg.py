@@ -25,9 +25,11 @@ xxhash64/rand().
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from . import util
 from .functions.dedup import _md5_long
 from .util import materialize, size_dispatch
 
@@ -1226,7 +1228,6 @@ def rule_mining(
     max_join_degree: int = 1000,
     chain_exclude: list[str] | None = None,
     dp: int = 6,
-    prune_pairs: bool | None = None,
 ) -> DataFrame:
     """AMIE-style horn-rule mining over the triple table (Galarraga et
     al., WWW'13): score every candidate rule whose body is one or two
@@ -1255,27 +1256,63 @@ def rule_mining(
     levels the chain pair space is 9x the base one. This is AMIE's
     practice of mining over base facts.
 
+    Size-dispatched (``util.size_dispatch``) on the distinct
+    (pred, subj, obj) table. Both paths produce the same integer count
+    table (everything but the two ratios, support >= min_support):
+
+    - driver-sized: one Arrow collect and a numpy twin
+      (:func:`_rule_counts_local`) over factorized entity/predicate
+      codes. A driver-sized triple table can still have a quadratic
+      chain space, so before any merge the twin computes the exact
+      chain pair space sum_z in(z)*out(z) (from bincounts) and the row
+      counts of its two (x, y)-keyed self-merges, and declines —
+      handing the table to the distributed plan — when any exceeds the
+      byte budget's worth of three-long rows
+      (``util.local_dispatch_rows``, ~2.8M rows for 64 MiB); the head
+      match of the distinct chain pairs is held to the same bound.
+    - otherwise: the distributed plan (:func:`_rule_counts_dist`).
+
+    The ratios are then ONE Spark projection over either count table,
+    so they are Spark's rounded division on both paths.
+
     Scale (10^12-triple regime): the chain pair space is
     sum_z in(z)*out(z) — the irreducible cost of composition mining —
-    and it is traversed SUPPORT-FIRST: the z-join streams straight
-    into the head join and a countDistinct, so the full pair space is
-    never materialized or deduplicated; body sizes (the confidence
-    denominators) are then recomputed only for the few (p1, p2) bodies
-    that survived min_support, over predicate-filtered streams. The
-    ``max_join_degree`` guard drops over-degree join entities before
-    the quadratic step (the cooccurrence_edges no-silent-quadratic
-    contract — AMIE's functionality pruning plays the same role).
-    No per-rule iteration: all rules of a shape are scored by one
-    grouped plan. The reference has no rule miner; this is
-    KG-consumption surface beyond parity (SURVEY §2 extension).
+    and the distributed plan traverses it SUPPORT-FIRST: the z-join
+    streams straight into the head join and a countDistinct, so the
+    full pair space is never materialized or deduplicated; body sizes
+    (the confidence denominators) are then recomputed only for the few
+    (p1, p2) bodies that survived min_support, over predicate-filtered
+    streams. The ``max_join_degree`` guard drops over-degree join
+    entities before the quadratic step (the cooccurrence_edges
+    no-silent-quadratic contract — AMIE's functionality pruning plays
+    the same role). No per-rule iteration: all rules of a shape are
+    scored by one grouped plan. The reference has no rule miner; this
+    is KG-consumption surface beyond parity (SURVEY §2 extension).
 
     Determinism: counts are exact integers; the two ratios are one
     correctly-rounded double division each (round half-up at ``dp``),
     reproducible bit-exactly by the DuckDB twin.
     """
-    from .util import materialize
+    excl = list(chain_exclude or [])
+    counts = size_dispatch(
+        triples.select("pred", "subj", "obj").distinct(),
+        lambda pdf: _rule_counts_local(pdf, min_support, max_join_degree, excl),
+        lambda t: _rule_counts_dist(t, min_support, max_join_degree, excl),
+        "rule_type string, body1 string, body2 string, head string, "
+        "support long, body_size long, head_size long",
+    )
+    return counts.select(
+        "*",
+        F.round(F.col("support") / F.col("body_size"), dp).alias("confidence"),
+        F.round(F.col("support") / F.col("head_size"), dp).alias("head_coverage"),
+    ).where(F.col("confidence") >= min_confidence)
 
-    t = materialize(triples.select("pred", "subj", "obj").distinct())
+
+def _rule_counts_dist(
+    t: DataFrame, min_support: int, max_join_degree: int, chain_exclude: list[str]
+) -> DataFrame:
+    """Distributed rule counts over the materialized distinct triple
+    table ``t``."""
     # head sizes: #distinct pairs per predicate (t is already distinct)
     hsize = t.groupBy("pred").agg(F.count(F.lit(1)).alias("head_size"))
     head = t.select(
@@ -1284,7 +1321,7 @@ def rule_mining(
         F.col("obj").alias("y"),
     )
 
-    def finish(sup: DataFrame, bsize: DataFrame, keys: list[str], rule_type: str) -> DataFrame:
+    def sized(sup: DataFrame, bsize: DataFrame, keys: list[str], rule_type: str) -> DataFrame:
         return (
             sup.join(F.broadcast(bsize), keys)
             .join(F.broadcast(hsize.withColumnRenamed("pred", "head")), "head")
@@ -1296,10 +1333,7 @@ def rule_mining(
                 "support",
                 "body_size",
                 "head_size",
-                F.round(F.col("support") / F.col("body_size"), dp).alias("confidence"),
-                F.round(F.col("support") / F.col("head_size"), dp).alias("head_coverage"),
             )
-            .where(F.col("confidence") >= min_confidence)
         )
 
     def score_simple(body: DataFrame, rule_type: str) -> DataFrame:
@@ -1312,7 +1346,7 @@ def rule_mining(
             .agg(F.count(F.lit(1)).alias("support"))
             .where(F.col("support") >= min_support)
         )
-        return finish(sup, bsize, ["body1"], rule_type)
+        return sized(sup, bsize, ["body1"], rule_type)
 
     same = t.select(
         F.col("pred").alias("body1"), F.col("subj").alias("x"), F.col("obj").alias("y")
@@ -1332,7 +1366,7 @@ def rule_mining(
     )
     tc = t
     if chain_exclude:
-        tc = t.where(~F.col("pred").isin(list(chain_exclude)))
+        tc = t.where(~F.col("pred").isin(chain_exclude))
     left = tc.select(
         F.col("pred").alias("body1"), F.col("subj").alias("x"), F.col("obj").alias("z")
     ).join(F.broadcast(deg), "z", "left_anti")
@@ -1354,17 +1388,16 @@ def rule_mining(
     # pairs still pay their own sum_z in*out generation — that is the
     # irreducible composition-mining space; AMIE's sampled-support
     # estimate (with exact rescoring) is the lossy lever beyond this.
-    # ``prune_pairs`` gates only whether the accounting pass is PAID,
-    # never the output (the bound is exact). Auto: on when the stream
+    # The pruning never changes the output (the bound is exact), only
+    # whether the accounting pass is paid: it runs when the stream
     # carries >= 16 distinct predicates — below that every pair of a
     # real KG is dense enough that the bound cannot fire, and the two
     # extra degree aggregations are a measured ~6 s dead cost at
     # sf0.1's 12-predicate entailed KG; above it, rare-predicate
     # tails appear and the bound kills their pairs before the z-join
     # (39% of pairs on the 23-predicate 10M-triple stress).
-    if prune_pairs is None:
-        prune_pairs = tc.select("pred").distinct().count() >= 16
-    if prune_pairs:
+    prune = tc.select("pred").distinct().count() >= 16
+    if prune:
         a_deg = left.groupBy("body1", "z").agg(F.count(F.lit(1)).alias("a_n"))
         b_deg = right.groupBy("body2", "z").agg(F.count(F.lit(1)).alias("b_n"))
         pair_space = (
@@ -1388,7 +1421,7 @@ def rule_mining(
     # (body1, body2) kills pruned pairs at emission, before any
     # shuffle.
     pairs = left.join(right, "z")
-    if prune_pairs:
+    if prune:
         pairs = pairs.join(F.broadcast(allowed), ["body1", "body2"], "leftsemi")
     chain_sup = materialize(
         pairs
@@ -1412,8 +1445,122 @@ def rule_mining(
     )
     scored_same = score_simple(same, "same").where(F.col("body1") != F.col("head"))
     scored_inv = score_simple(inv, "inverse")
-    scored_chain = finish(chain_sup, chain_bsize, ["body1", "body2"], "chain")
+    scored_chain = sized(chain_sup, chain_bsize, ["body1", "body2"], "chain")
     return scored_same.unionByName(scored_inv).unionByName(scored_chain)
+
+
+# the decline bound's row shape: a join row of the twin is about three
+# int64 codes (body, x, y)
+_THREE_LONGS = T.StructType([T.StructField(c, T.LongType()) for c in "pxy"])
+
+
+def _expand(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Equi-join expansion: the index pairs (i, j) for every j in
+    [lo[i], hi[i]) — row i of one side against its run of matches in
+    the key-sorted other side."""
+    n = hi - lo
+    i = np.repeat(np.arange(len(lo)), n)
+    j = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n) + lo[i]
+    return i, j
+
+
+def _rule_counts_local(
+    pdf: pd.DataFrame, min_support: int, max_join_degree: int, chain_exclude: list[str]
+) -> pd.DataFrame | None:
+    """Driver twin of :func:`_rule_counts_dist` over the collected
+    distinct triple frame, or None when a join it would run exceeds
+    the driver budget. Null cells behave as in the Spark plan: sizes
+    count every row of their predicate, equi-joins never match a null
+    key, and a null predicate scores no rule (its body and head groups
+    find no size row there)."""
+    n = len(pdf)
+    ent, ents = pd.factorize(pd.concat([pdf["subj"], pdf["obj"]], ignore_index=True))
+    s, o = ent[:n].astype(np.int64), ent[n:].astype(np.int64)
+    p, preds = pd.factorize(pdf["pred"])
+    p, names = p.astype(np.int64), preds.to_numpy(dtype=object)
+    n_ent, n_pred = max(len(ents), 1), max(len(names), 1)
+    size = np.bincount(p[p >= 0], minlength=n_pred)
+
+    # heads (pred, x*n_ent + y), sorted by key; rkey is each head
+    # row's inverted key. Null cells are no head and no key.
+    h = np.flatnonzero((p >= 0) & (s >= 0) & (o >= 0))
+    h = h[np.argsort(s[h] * n_ent + o[h], kind="stable")]
+    hp, hkey, rkey = p[h], s[h] * n_ent + o[h], o[h] * n_ent + s[h]
+
+    def match(key):
+        return np.searchsorted(hkey, key, "left"), np.searchsorted(hkey, key, "right")
+
+    # chain streams: the degree counts every row of the distinct
+    # stream in both orientations; over-degree z, chain_exclude'd and
+    # null cells never reach the z-merge (index -1 is null)
+    deg = np.bincount(s[s >= 0], minlength=n_ent) + np.bincount(o[o >= 0], minlength=n_ent)
+    z_ok = np.append(deg <= max_join_degree, False)
+    body = np.append(~np.isin(names, chain_exclude), False)[p] & (s >= 0) & (o >= 0)
+    lft = np.flatnonzero(body & z_ok[o])  # p1(x, z): z = obj
+    rgt = np.flatnonzero(body & z_ok[s])  # p2(z, y): z = subj
+    rgt = rgt[np.argsort(s[rgt], kind="stable")]
+    out_z = np.bincount(s[rgt], minlength=n_ent)
+
+    # decline before any merge: the exact chain pair space
+    # sum_z in(z)*out(z) and the two key self-merges' row counts
+    budget = util.local_dispatch_rows(_THREE_LONGS, 1 << 62)  # bytes alone bind
+    same_lo, same_hi = match(hkey)
+    inv_lo, inv_hi = match(rkey)
+    if max(
+        int(np.bincount(o[lft], minlength=n_ent) @ out_z),
+        int((same_hi - same_lo).sum()),
+        int((inv_hi - inv_lo).sum()),
+    ) > budget:
+        return None
+
+    def grouped(b, q):
+        # (b, q) -> count; codes stay under n_pred**3 < 2**63 for any
+        # frame under the row budget
+        codes, sup = np.unique(b * n_pred + q, return_counts=True)
+        return codes // n_pred, codes % n_pred, sup
+
+    frames = []
+
+    def emit(rule_type, b1, b2, q, sup, bsize):
+        k = sup >= min_support
+        frames.append(pd.DataFrame({
+            "rule_type": rule_type,
+            "body1": names[b1[k]],
+            "body2": None if b2 is None else names[b2[k]],
+            "head": names[q[k]],
+            "support": sup[k],
+            "body_size": bsize[k],
+            "head_size": size[q[k]],
+        }))
+
+    # same / inverse: the heads are the length-1 bodies with a key
+    i, j = _expand(same_lo, same_hi)
+    diff = hp[i] != hp[j]  # same drops body1 == head
+    b1, q, sup = grouped(hp[i][diff], hp[j][diff])
+    emit("same", b1, None, q, sup, size[b1])
+    i, j = _expand(inv_lo, inv_hi)
+    b1, q, sup = grouped(hp[i], hp[j])
+    emit("inverse", b1, None, q, sup, size[b1])
+
+    # chain: one merge on z, distinct (body1, body2, x, y), then the
+    # head match — bounded once the distinct pairs exist
+    lo = np.searchsorted(s[rgt], o[lft], "left")
+    i, j = _expand(lo, lo + out_z[o[lft]])
+    li, ri = lft[i], rgt[j]
+    pair, key = p[li] * n_pred + p[ri], s[li] * n_ent + o[ri]
+    order = np.lexsort((key, pair))
+    pair, key = pair[order], key[order]
+    first = np.ones(len(pair), dtype=bool)
+    first[1:] = (pair[1:] != pair[:-1]) | (key[1:] != key[:-1])
+    pair, key = pair[first], key[first]
+    lo, hi = match(key)
+    if int((hi - lo).sum()) > budget:
+        return None
+    bodies, bsize = np.unique(pair, return_counts=True)
+    i, j = _expand(lo, hi)
+    pq, q, sup = grouped(pair[i], hp[j])
+    emit("chain", pq // n_pred, pq % n_pred, q, sup, bsize[np.searchsorted(bodies, pq)])
+    return pd.concat(frames, ignore_index=True)
 
 
 def chain_pair_space(

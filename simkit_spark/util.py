@@ -154,6 +154,11 @@ def size_dispatch(
       a LocalRelation whose cells Spark converts to Python natives with
       Arrow on or off (numpy scalars hard-error under Arrow-off row
       verification — the CORRECTNESS_r02 kmeans lesson).
+    - ``local_fn`` may decline by returning ``None``: a driver-sized
+      input can still carry work that is not (a quadratic join space),
+      and only the twin can size that from the collected frame. The
+      materialized ``df`` then goes to ``dist_fn`` as if it were over
+      the row budget.
 
     Tests and stress scripts force either path by patching
     ``local_dispatch_rows`` in this module."""
@@ -162,4 +167,6 @@ def size_dispatch(
         return dist_fn(df)
     ddl = schema.replace("{id}", df.schema.fields[0].dataType.simpleString())
     out = local_fn(df.toPandas())
+    if out is None:
+        return dist_fn(df)
     return df.sparkSession.createDataFrame(out if len(out) else [], ddl)

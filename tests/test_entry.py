@@ -68,11 +68,14 @@ def test_driver_mem_scales_with_local_slots(monkeypatch):
 
 # --- driver-window rotation guard (VERDICT r4, Next round #1/#8) ---
 
-# The r5 window: 32 queries never driver-checked in r3/r4 lead, then 18
-# oldest-green (r3-window) fillers. Documented in SURVEY.md §8. If a new
-# query is added, it must be appended PAST position 50 (rotate it into
-# the window next round) — this test fails on any silent window change.
-R5_WINDOW = [
+# The r6 window: the 5 queries added in r5 lead, then r5's first 45
+# (the 32 r4 additions and 13 oldest-green fillers). Documented in
+# SURVEY.md §8. If a new query is added, it must be appended PAST
+# position 50 (rotate it into the window next round) — this test fails
+# on any silent window change.
+R6_WINDOW = [
+    "bcubed_eval", "hll_by_source", "hll_windows", "vocab_overlap",
+    "pca_embedding",
     "interval_overlaps", "sorted_neighborhood", "conductance_knn",
     "priority_sample", "kg_distmult_rank", "kmv_distinct",
     "weighted_pagerank_affinity", "attribution_pairs", "events_retention",
@@ -83,16 +86,15 @@ R5_WINDOW = [
     "events_temporal_reach", "katz_knn", "oph_signatures", "stress_knn",
     "pairwise_euclidean", "knn_graph", "mutual_knn_graph", "eps_graph",
     "local_sigmas", "gaussian_affinity", "degrees_knn", "laplacian_sym",
-    "laplacian_rw", "laplacian_ad", "silhouette_labels", "ari_labels",
-    "exact_dedup", "minhash_signatures", "simhash", "pagerank_knn",
-    "communities_knn", "sssp_knn",
+    "laplacian_rw", "laplacian_ad", "pagerank_knn", "communities_knn",
+    "sssp_knn",
 ]
 
 
 def test_driver_window_rotation():
     qs = list(entry_mod.queries())
-    assert qs[:50] == R5_WINDOW, (
-        "first-50 driver window drifted from the documented r5 rotation "
+    assert qs[:50] == R6_WINDOW, (
+        "first-50 window drifted from the documented r6 rotation "
         "(SURVEY.md §8); rotate deliberately, not by appending"
     )
 

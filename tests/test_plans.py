@@ -342,7 +342,7 @@ def test_round4h_graph_plans(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_round4i_plans(spark):
+def test_round4i_plans(spark, force_distributed):
     """kg_rules: the chain self-join and support joins are equi-joins
     with the degree blacklist applied via broadcast anti-joins — never
     a nested-loop or cartesian; kg_golden: the survivorship window is
@@ -354,7 +354,12 @@ def test_round4i_plans(spark):
     (kcenter), both join-free after the broadcast of the center."""
     import __spark_entry__ as e
 
-    plan = _plan(e.queries()["kg_rules"](spark, SF))
+    # kg_rules is size-dispatched: at sf0.01 the default plan is the
+    # local twin's LocalTableScan, so the join checks need the forced
+    # distributed plan
+    with force_distributed():
+        plan = _plan(e.queries()["kg_rules"](spark, SF))
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

@@ -138,6 +138,27 @@ def test_size_dispatch_paths_and_empty_input(spark, force_distributed):
     assert out.schema.simpleString() == want
 
 
+def test_size_dispatch_local_fn_none_declines_to_dist(spark):
+    """A local twin that returns None declines: size_dispatch hands the
+    same materialized input to dist_fn, and the answer is dist_fn's."""
+    from simkit_spark.util import size_dispatch
+
+    seen = []
+
+    def local(pdf):
+        seen.append(("local", len(pdf)))
+        return None
+
+    def dist(e):
+        seen.append(("dist", e.count()))
+        return e.selectExpr("src", "dst + 1 AS dst")
+
+    df = spark.createDataFrame([("a", 1), ("b", 2), ("b", 2)], "src string, dst long")
+    out = size_dispatch(df.distinct(), local, dist, "src {id}, dst long")
+    assert seen == [("local", 2), ("dist", 2)]
+    assert sorted(map(tuple, out.collect())) == [("a", 2), ("b", 3)]
+
+
 def test_materialize_resets_bloated_join_stats(spark):
     # Catalyst multiplies children's sizeInBytes at every join and
     # checkpoints inherit the product into the new leaf: in a fixpoint

@@ -3,8 +3,10 @@ sketch.hll_distinct, operators.anf (exact + HyperANF)."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import math
+import re
 
 import numpy as np
 import pytest
@@ -37,52 +39,153 @@ def rule_triples(spark):
     return spark.createDataFrame(rows, "subj string, pred string, obj string")
 
 
-def test_rule_mining_shapes(rule_triples):
-    got = {
-        (r["rule_type"], r["body1"], r["body2"], r["head"]): r
-        for r in rule_mining(
-            rule_triples, min_support=3, min_confidence=0.1
-        ).collect()
-    }
-    sub = got[("same", "p", None, "q")]
-    assert (sub["support"], sub["body_size"], sub["head_size"]) == (6, 6, 9)
-    assert sub["confidence"] == 1.0
-    assert sub["head_coverage"] == round(6 / 9, 6)
-    # reverse subsumption has confidence 6/9
-    assert got[("same", "q", None, "p")]["confidence"] == round(6 / 9, 6)
-    # symmetry shows up as an inverse rule s => s with confidence 1
-    assert got[("inverse", "s", None, "s")]["confidence"] == 1.0
-    chain = got[("chain", "e", "f", "g")]
-    assert (chain["support"], chain["confidence"]) == (5, 1.0)
-    # trivial p => p rules must not appear
-    assert ("same", "p", None, "p") not in got
+def _mine_both(force_distributed, t, **kw):
+    """rule_mining rows on the local twin, then on the forced
+    distributed plan; each path must really run where it should (the
+    twin's answer plans join-free over a local relation)."""
+    out = []
+    for forced in (contextlib.nullcontext, force_distributed):
+        with forced():
+            df = rule_mining(t, **kw)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            out.append(df.collect())
+        assert ("Join" in plan) == (forced is force_distributed), plan
+    return out
 
 
-def test_rule_mining_degree_guard(spark):
+def test_rule_mining_shapes(rule_triples, force_distributed):
+    for rows in _mine_both(
+        force_distributed, rule_triples, min_support=3, min_confidence=0.1
+    ):
+        got = {(r["rule_type"], r["body1"], r["body2"], r["head"]): r for r in rows}
+        sub = got[("same", "p", None, "q")]
+        assert (sub["support"], sub["body_size"], sub["head_size"]) == (6, 6, 9)
+        assert sub["confidence"] == 1.0
+        assert sub["head_coverage"] == round(6 / 9, 6)
+        # reverse subsumption has confidence 6/9
+        assert got[("same", "q", None, "p")]["confidence"] == round(6 / 9, 6)
+        # symmetry shows up as an inverse rule s => s with confidence 1
+        assert got[("inverse", "s", None, "s")]["confidence"] == 1.0
+        chain = got[("chain", "e", "f", "g")]
+        assert (chain["support"], chain["confidence"]) == (5, 1.0)
+        # trivial p => p rules must not appear
+        assert ("same", "p", None, "p") not in got
+
+
+def test_rule_mining_degree_guard(spark, force_distributed):
     # a hub join-entity z with degree > cap kills the chain through it
     rows = [(f"a{i}", "e", "hub") for i in range(10)] + [
         ("hub", "f", "y0"),
         *[(f"a{i}", "g", "y0") for i in range(10)],
     ]
     t = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    with_chain = rule_mining(t, min_support=3, min_confidence=0.1,
-                             max_join_degree=100).where(
-        F.col("rule_type") == "chain"
-    )
-    assert with_chain.count() == 1
-    capped = rule_mining(t, min_support=3, min_confidence=0.1,
-                         max_join_degree=5).where(
-        F.col("rule_type") == "chain"
-    )
-    assert capped.count() == 0
+
+    def n_chain(rows):
+        return sum(r["rule_type"] == "chain" for r in rows)
+
+    for cap, want in ((100, 1), (5, 0)):
+        got = _mine_both(
+            force_distributed, t, min_support=3, min_confidence=0.1,
+            max_join_degree=cap,
+        )
+        assert [n_chain(rows) for rows in got] == [want, want]
 
 
-def test_rule_mining_min_filters(rule_triples):
-    out = rule_mining(rule_triples, min_support=6, min_confidence=0.9)
-    got = {(r["rule_type"], r["body1"], r["head"]) for r in out.collect()}
-    assert ("same", "p", "q") in got          # support 6, conf 1.0
-    assert ("chain", "e", "g") not in got     # support 5 < 6
-    assert ("same", "q", "p") not in got      # conf 0.667 < 0.9
+def test_rule_mining_min_filters(rule_triples, force_distributed):
+    for rows in _mine_both(
+        force_distributed, rule_triples, min_support=6, min_confidence=0.9
+    ):
+        got = {(r["rule_type"], r["body1"], r["head"]) for r in rows}
+        assert ("same", "p", "q") in got          # support 6, conf 1.0
+        assert ("chain", "e", "g") not in got     # support 5 < 6
+        assert ("same", "q", "p") not in got      # conf 0.667 < 0.9
+
+
+def test_rule_mining_local_twin_matches_distributed(spark, force_distributed):
+    """Randomized parity of the two paths on everything the twin must
+    mirror: duplicate rows, null subj/obj/pred cells, a hub above the
+    degree cap, chain_exclude, a symmetric predicate, and >= 16
+    predicates (so the distributed plan prunes pair space too)."""
+    rng = np.random.default_rng(7)
+    ent = [f"e{i}" for i in range(40)]
+
+    def pick(n):
+        return rng.choice(len(ent), size=(n, 2))
+
+    rows = []
+    base = pick(60)
+    rows += [(ent[a], "p", ent[b]) for a, b in base]
+    # sup: a superproperty of p (chain-excluded), plus noise
+    rows += [(ent[a], "sup", ent[b]) for a, b in base]
+    rows += [(ent[a], "sup", ent[b]) for a, b in pick(15)]
+    # sym: symmetric
+    rows += [r for a, b in pick(20) for r in ((ent[a], "sym", ent[b]), (ent[b], "sym", ent[a]))]
+    # chain c1 & c2 => c3, partially
+    c1, c2 = pick(50), pick(50)
+    rows += [(ent[a], "c1", ent[b]) for a, b in c1]
+    rows += [(ent[a], "c2", ent[b]) for a, b in c2]
+    comp = [(x, y) for x, z in c1 for z2, y in c2 if z == z2]
+    rows += [(ent[x], "c3", ent[y]) for x, y in comp[: len(comp) * 2 // 3]]
+    # a hub above the cap: its chains must vanish on both paths
+    rows += [(f"h{i}", "toh", "hub") for i in range(60)]
+    rows += [("hub", "fromh", f"g{i}") for i in range(60)]
+    rows += [(f"h{i}", "via", f"g{j}") for i in range(60) for j in range(0, 60, 9)]
+    # "mid" is under the cap on chain-stream rows alone (70) and over it
+    # with its chain-excluded and null-predicate rows (85): the degree
+    # counts the whole distinct stream
+    rows += [(f"k{i}", "tom", "mid") for i in range(35)]
+    rows += [("mid", "fromm", f"l{i}") for i in range(35)]
+    rows += [(f"k{i}", "viam", f"l{j}") for i in range(35) for j in range(0, 35, 5)]
+    rows += [("mid", "sup", f"k{i}") for i in range(10)]
+    rows += [("mid", None, f"l{i}") for i in range(5)]
+    # rare-predicate tail, one triple each (>= 16 predicates in all)
+    rows += [(ent[a], f"tail{k}", ent[b]) for k, (a, b) in enumerate(pick(10))]
+    # null cells in every position, duplicates
+    rows += [(None, "p", ent[0]), (ent[1], "p", None), (ent[2], None, ent[3])]
+    rows += [(ent[a], None, ent[b]) for a, b in base[:20]]
+    rows += [(None, "c1", ent[z]) for _, z in c1[:5]] + [(ent[z], "c2", None) for z, _ in c2[:5]]
+    rows += rows[:40]
+    t = spark.createDataFrame(rows, "subj string, pred string, obj string")
+
+    kw = dict(min_support=2, min_confidence=0.0, max_join_degree=80,
+              chain_exclude=["sup"])
+    local, dist = (sorted(map(tuple, r)) for r in _mine_both(force_distributed, t, **kw))
+    assert local == dist
+    kinds = {(r[0], r[3]) for r in local}
+    assert {("same", "sup"), ("inverse", "sym"), ("chain", "c3")} <= kinds
+    assert not any(r[0] == "chain" and "sup" in (r[1], r[2]) for r in local)
+    assert not any(r[0] == "chain" and r[1] in ("toh", "tom") for r in local)
+
+
+def test_rule_mining_declines_quadratic_chain_space(spark, monkeypatch):
+    """A driver-sized table whose chain pair space is past the driver
+    budget: ~3.4k triples around one z with in = out = 1,700 (2.89M
+    pairs, degree under the cap). The twin must decline and the
+    distributed plan answer."""
+    from simkit_spark import kg, util
+
+    n = 1700
+    assert n * n > util.local_dispatch_rows(kg._THREE_LONGS, 1 << 62)
+    rows = (
+        [(f"a{i}", "p", "z") for i in range(n)]
+        + [("z", "q", f"b{i}") for i in range(n)]
+        + [(f"a{i}", "r", f"b{i}") for i in range(20)]
+    )
+    t = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    calls = []
+    real = kg._rule_counts_dist
+
+    def spy(*a, **k):
+        calls.append(a[0].count())
+        return real(*a, **k)
+
+    monkeypatch.setattr(kg, "_rule_counts_dist", spy)
+    out = rule_mining(t, min_support=10, min_confidence=0.0,
+                      max_join_degree=2 * n + 1).collect()
+    assert calls == [2 * n + 20]
+    (chain,) = [r for r in out if r["rule_type"] == "chain"]
+    assert (chain["body1"], chain["body2"], chain["head"]) == ("p", "q", "r")
+    assert (chain["support"], chain["body_size"]) == (20, n * n)
 
 
 # ------------------------------------------------------ golden record
@@ -205,10 +308,13 @@ def test_hyperanf_tracks_exact(spark, force_distributed):
         assert abs(est[h] - exact[h]) / exact[h] < 0.10, (h, est[h], exact[h])
 
 
-def test_rule_mining_pairspace_pruning_is_exact(spark):
+def test_rule_mining_pairspace_pruning_is_exact(spark, force_distributed, monkeypatch):
     # a (tiny, tiny) predicate pair whose chain pair space is below
     # min_support must be pruned BEFORE the z-join without changing
-    # the output: its chain support could never reach the filter.
+    # the output: its chain support could never reach the filter. The
+    # distributed plan prunes only streams of >= 16 predicates, so 11
+    # isolated filler predicates join the 5 that carry the case.
+    from simkit_spark import kg
     from simkit_spark.kg import chain_pair_space
 
     rows = (
@@ -218,6 +324,7 @@ def test_rule_mining_pairspace_pruning_is_exact(spark):
         + [(f"u{i}", "g", f"w{i % 2}") for i in range(5)]
         # sparse pair r&t: pair space exactly 1 < min_support 3
         + [("ra", "r", "zz"), ("zz", "t", "tb")]
+        + [(f"fa{k}", f"fill{k}", f"fb{k}") for k in range(11)]
     )
     t = spark.createDataFrame(rows, "subj string, pred string, obj string")
     ps = {
@@ -226,9 +333,26 @@ def test_rule_mining_pairspace_pruning_is_exact(spark):
     }
     assert ps[("r", "t")] == 1  # provably below min_support -> pruned
     assert ps[("e", "f")] == 5  # sum_z in_e(z)*out_f(z) = 3*1 + 2*1
-    got = {
-        (r["rule_type"], r["body1"], r["body2"], r["head"])
-        for r in rule_mining(t, min_support=3, min_confidence=0.1).collect()
-    }
+
+    # the executed plans of the distributed path's checkpoints: the
+    # support stream must carry the (body1, body2) pruning semi-join
+    plans = []
+    real = kg.materialize
+
+    def spy(df, *a, **k):
+        out = real(df, *a, **k)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(kg, "materialize", spy)
+    with force_distributed():
+        dist = rule_mining(t, min_support=3, min_confidence=0.1).collect()
+    semi = re.compile(
+        r"Join \[body1#\d+, body2#\d+\], \[body1#\d+, body2#\d+\], LeftSemi"
+    )
+    assert any(semi.search(p) for p in plans), plans
+    local = rule_mining(t, min_support=3, min_confidence=0.1).collect()
+    assert sorted(map(tuple, dist)) == sorted(map(tuple, local))
+    got = {(r["rule_type"], r["body1"], r["body2"], r["head"]) for r in dist}
     assert ("chain", "e", "f", "g") in got
     assert not any(b1 == "r" and b2 == "t" for _, b1, b2, _ in got)

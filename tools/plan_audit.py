@@ -203,7 +203,8 @@ AUDITED = {
     "(rule count never multiplies passes); over-degree join entities "
     "broadcast-anti-joined away BEFORE the quadratic step; body/head "
     "sizes are predicate-keyed aggregates broadcast onto the support "
-    "stream — no window, no per-rule iteration",
+    "stream — no window, no per-rule iteration. Size-dispatched: the "
+    "sf0.01 plan shown is the local twin",
     "kg_golden": "one vote count agg + one (subj, pred)-window whose "
     "partitions are per-attribute candidate lists (bounded by source "
     "count, hub-immune); no join against the corpus",
