@@ -908,10 +908,9 @@ def _kcore_knn(spark, sf_dir):
     # MUTUAL kNN graph — the plain kNN graph's degrees are too uniform
     # to peel (all-or-nothing at every k, measured at sf0.01); mutual
     # filtering creates the degree variance that makes the check
-    # discriminating (355/500 survive at k=3)
-    from simkit_spark.operators.graphs import mutual_knn_from_points
-
-    edges = mutual_knn_from_points(_emb(spark, sf_dir), KNN_K).select("src", "dst")
+    # discriminating (355/500 survive at k=3). Canonical (src < dst)
+    # mutual edges off the shared cached kernel, not a second top-k run
+    edges = _mutual_knn_k(spark, sf_dir).where(F.col("src") < F.col("dst"))
     return kcore_auto(edges, k=KCORE_K, n_iter=KCORE_ITER)
 
 
@@ -1402,8 +1401,8 @@ def _connected_components_eps(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     edges = eps_neighbor_pairs(emb, EPS_CC, strict=True).select("src", "dst")
     # size-dispatched CC (union-find under one Arrow collect below the
-    # threshold; pointer-doubling loop above) — the auto path also
-    # materializes the eps join once instead of re-running it per action
+    # threshold; pointer-doubling loop above) — the bounded collect runs
+    # the eps join once; only the distributed path checkpoints it
     return connected_components_auto(edges, nodes=emb.select("id"), max_iter=30)
 
 

@@ -410,10 +410,11 @@ def link_entities(
     Distinct-surface sets under ``local_threshold`` link driver-locally
     (see link_entities_local); above it, the distributed LSH path runs.
     """
-    # single-action size probe: collect up to threshold+1 rows; if the
-    # limit didn't bite we ALREADY hold the whole table and the local
-    # path starts with zero further jobs (the old materialize -> count
-    # -> collect chain was three driver round-trips for the same bytes)
+    # the shared single-action size probe of util.size_dispatch, kept
+    # inline because the threshold counts surfaces, not a row budget:
+    # collect up to threshold+1 rows; if the limit didn't bite we
+    # ALREADY hold the whole table and the local path starts with zero
+    # further jobs
     probe_cols = [c for c in ("surface", "surface_id", "n_mentions", "vec")
                   if c in surfaces.columns]
     probe = surfaces.select(*probe_cols).limit(local_threshold + 1).collect()

@@ -77,7 +77,7 @@ def _reset_bloated_stats(ck: DataFrame) -> DataFrame:
 # (string IRIs, vec-weighted edges) could be hundreds of MB. The
 # helper converts a byte budget into a row threshold using a static
 # per-type width estimate — no sampling action, so dispatch stays one
-# count() cheap.
+# bounded collect.
 
 LOCAL_DISPATCH_BYTE_BUDGET = 64 << 20  # 64 MiB of Arrow-collected columns
 
@@ -137,36 +137,34 @@ def size_dispatch(
     through ``local_fn`` on the driver when it is driver-sized, through
     ``dist_fn`` otherwise.
 
-    - ``df`` is materialized ONCE first: the count and the collect are
-      two actions, and without the checkpoint each would re-run an
-      arbitrarily expensive upstream (the kNN kernel costs more than a
-      whole PageRank loop at bench scale).
-    - Above ``local_dispatch_rows(df.schema, default_rows)`` rows — a
-      byte budget turned into a row count, so wide rows dispatch
-      earlier — the result is ``dist_fn(df)``.
-    - Otherwise ``df`` is collected once through Arrow and the result
-      is ``local_fn(pdf)``, a pandas frame whose columns are in
-      ``schema`` order, built under the explicit DDL ``schema`` with
-      ``{id}`` filled in from the type of ``df``'s first column.
-      ``local_fn`` also sees an empty input (seeds, a node list or a
-      seed check can make the answer to no edges non-empty); a
+    - The size probe IS the collect: ``df.limit(thr + 1)`` comes back
+      through Arrow in one action, ``thr`` being
+      ``local_dispatch_rows(df.schema, default_rows)`` (a byte budget
+      turned into rows, so wide rows dispatch earlier). If the limit
+      does not bite, the result is ``local_fn(pdf)`` with no checkpoint
+      and no count: a pandas frame of ``df``'s columns in, an answer
+      built under the DDL ``schema`` (``{id}`` = the type of ``df``'s
+      first column) out. ``local_fn`` also sees an empty input (seeds
+      or a node list can make the answer to no edges non-empty); a
       zero-row answer needs no schema inference, and the frame plans as
       a LocalRelation whose cells Spark converts to Python natives with
       Arrow on or off (numpy scalars hard-error under Arrow-off row
       verification — the CORRECTNESS_r02 kmeans lesson).
+    - Otherwise the result is ``dist_fn(materialize(df))``, so the
+      distributed sweeps never re-run the upstream. The trade: over
+      budget, the bounded probe (at most the byte budget) is discarded
+      and the upstream runs again for the checkpoint.
     - ``local_fn`` may decline by returning ``None``: a driver-sized
       input can still carry work that is not (a quadratic join space),
-      and only the twin can size that from the collected frame. The
-      materialized ``df`` then goes to ``dist_fn`` as if it were over
-      the row budget.
+      and only the twin can size that from the collected frame. ``df``
+      then goes to ``dist_fn`` as if it were over the row budget.
 
     Tests and stress scripts force either path by patching
     ``local_dispatch_rows`` in this module."""
-    df = materialize(df)
-    if df.count() > local_dispatch_rows(df.schema, default_rows):
-        return dist_fn(df)
-    ddl = schema.replace("{id}", df.schema.fields[0].dataType.simpleString())
-    out = local_fn(df.toPandas())
+    thr = local_dispatch_rows(df.schema, default_rows)
+    pdf = df.limit(thr + 1).toPandas()
+    out = local_fn(pdf) if len(pdf) <= thr else None
     if out is None:
-        return dist_fn(df)
+        return dist_fn(materialize(df))
+    ddl = schema.replace("{id}", df.schema.fields[0].dataType.simpleString())
     return df.sparkSession.createDataFrame(out if len(out) else [], ddl)

@@ -159,6 +159,54 @@ def test_size_dispatch_local_fn_none_declines_to_dist(spark):
     assert sorted(map(tuple, out.collect())) == [("a", 2), ("b", 3)]
 
 
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_size_dispatch_probe_boundary(spark, monkeypatch, arrow):
+    """The size probe is the collect: under a budget of N rows, N rows
+    take local_fn and N + 1 take dist_fn (local_fn never called), with
+    Arrow on or off. With Arrow on the local path is ONE Spark job (no
+    checkpoint, no count); dist_fn gets a checkpointed leaf."""
+    from simkit_spark.util import size_dispatch
+
+    n = 37
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: n)
+    old = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(rows, group):
+        seen = []
+
+        def local(pdf):
+            seen.append(("local", len(pdf)))
+            return pdf
+
+        def dist(e):
+            leaf = e._jdf.queryExecution().logical().getClass().getSimpleName()
+            seen.append(("dist", leaf))
+            return e
+
+        df = spark.range(0, rows, 1, 4).selectExpr("id AS src", "id + 1 AS dst")
+        sc.setJobGroup(group, group)
+        try:
+            out = size_dispatch(df, local, dist, "src {id}, dst long")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sorted(r.src for r in out.collect()) == list(range(rows))
+        return seen, len(tracker.getJobIdsForGroup(group))
+
+    try:
+        seen, jobs = run(n, f"dispatch-local-{arrow}")
+        assert seen == [("local", n)]
+        if arrow == "true":
+            assert jobs == 1
+        seen, _ = run(n + 1, f"dispatch-dist-{arrow}")
+        assert seen == [("dist", "LogicalRDD")]
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_materialize_resets_bloated_join_stats(spark):
     # Catalyst multiplies children's sizeInBytes at every join and
     # checkpoints inherit the product into the new leaf: in a fixpoint

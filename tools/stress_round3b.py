@@ -91,7 +91,7 @@ def main():
     hb_d = _xor_hash(kcore(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_dist_secs"] = round(time.time() - t0, 2)
     t0 = time.time()
-    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 1 << 40):
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 10_000_000):
         hb_l = _xor_hash(kcore_auto(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_local_secs"] = round(time.time() - t0, 2)
     res["kcore_paths_identical"] = hb_d == hb_l
