@@ -17,6 +17,7 @@ replacement.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from .. import util
 from ..util import materialize, size_dispatch
 
 
@@ -29,14 +30,22 @@ def connected_components_auto(
     a driver-sized edge list is collected through Arrow as numpy arrays
     — never Row objects: 300k edges is ~5 MB of int64 columns vs
     hundreds of MB of Rows — and runs union-find in one job round-trip
-    instead of ~2 jobs per propagation round; larger graphs run the
-    distributed loop. Same (id, component) contract, component = min
-    node id. ``nodes`` defaults to the edge endpoints."""
+    instead of ~2 jobs per propagation round; larger graphs, or a
+    ``nodes`` list past the same row budget, run the distributed loop.
+    Same (id, component) contract, component = min node id. ``nodes``
+    defaults to the edge endpoints."""
+
+    def local(epd):
+        if nodes is None:
+            return _union_find(epd, None)
+        ids = nodes.select("id")
+        thr = util.local_dispatch_rows(ids.schema, 300_000)
+        npd = ids.limit(thr + 1).toPandas()
+        return None if len(npd) > thr else _union_find(epd, npd)
+
     return size_dispatch(
         edges.select("src", "dst"),
-        lambda epd: _union_find(
-            epd, None if nodes is None else nodes.select("id").toPandas()
-        ),
+        local,
         lambda e: connected_components(e, nodes, max_iter),
         "id {id}, component {id}",
         default_rows=300_000,

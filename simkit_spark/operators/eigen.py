@@ -26,8 +26,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from ..util import materialize
+from ..util import materialize, size_dispatch
 
 
 def _matvec(edges: DataFrame, v: DataFrame, k: int, shift: float = 0.0) -> DataFrame:
@@ -185,154 +186,74 @@ def eigensolve(
     return x, lam - rho
 
 
+# Largest graph the local path solves densely: a 3000-node block is
+# ~72 MB of float64 and one numpy eigh, in place of ~2 jobs per sweep.
+MAX_LOCAL_NODES = 3000
+
+
 def eigensolve_auto(
     edges: DataFrame,
-    nodes: DataFrame | None = None,
     k: int = 3,
     max_iter: int = 100,
     tol: float = 1e-7,
     seed: int = 42,
-    local_threshold: int = 3000,
     symmetric: bool = True,
 ) -> tuple[DataFrame, np.ndarray]:
-    """Size-dispatched eigensolve (SURVEY.md §7.4.1): blocks up to
-    ``local_threshold`` nodes collect to the driver and solve densely
-    (numpy eigh — an n<=3k block is <75 MB dense, one job instead of
-    ~2 per sweep); larger graphs run the matrix-free distributed
+    """Size-dispatched eigensolve (SURVEY.md §7.4.1) on
+    ``util.size_dispatch``: an edge list within the dispatch byte
+    budget (~2.8M (src, dst, weight) rows) whose endpoints number at
+    most ``MAX_LOCAL_NODES`` is solved densely on the driver
+    (eigen_local); anything larger runs the matrix-free distributed
     iteration. After connected-components blocking the small case is
     the common one; the distributed path is the mega-cluster safety
-    net. Same return convention as eigensolve.
+    net. A graph of at most 3000 nodes carried by more than ~2.8M edge
+    rows also goes distributed; no caller here is near that (the
+    spectral queries' embeddings.parquet inputs hold at most 2,000
+    points). The vertex set is the edge endpoints. Same return
+    convention as eigensolve.
 
     Pass ``symmetric=False`` for non-symmetric operators (directed-kNN
     graphs, "rw" laplacians) so the local path does not mirror the
-    edge list (see eigen_local)."""
-    # materialize the edge list ONCE before the dispatch's
-    # count/collect actions — without this every action re-runs the
-    # whole upstream affinity chain (pairwise kernel + windows +
-    # laplacian), tripling the stage cost
-    edges = materialize(edges)
-    spark = edges.sparkSession
+    edge list (see eigen_local). Their edge list is de-duplicated
+    before the dispatch, and past the local solve they raise
+    ValueError: the distributed solver assumes a symmetric operator."""
+    lam = []
 
-    def _require_symmetric() -> None:
-        # the distributed solver's Gram/Ritz iteration assumes a
-        # symmetric operator; silently running it on a non-symmetric
-        # one would make 'rw'-style results diverge from the local
-        # path at the size boundary (ADVICE r2 #2). Stay loud.
+    def local(epd):
+        ids = np.unique(np.concatenate([epd["src"].to_numpy(), epd["dst"].to_numpy()]))
+        if len(ids) > MAX_LOCAL_NODES:
+            return None
+        vals, x, idx = eigen_local(
+            epd.itertuples(index=False, name=None), ids.tolist(), k, symmetric
+        )
+        lam.append(vals)
+        return pd.DataFrame({"id": list(idx), "vec": [x[j].tolist() for j in idx.values()]})
+
+    def dist(e):
+        # silently running the Gram/Ritz iteration on a non-symmetric
+        # operator would make 'rw' results diverge from the local path
+        # at the size boundary (ADVICE r2 #2). Stay loud.
         if not symmetric:
             raise ValueError(
-                "eigensolve_auto(symmetric=False) exceeds local_threshold="
-                f"{local_threshold}: the distributed eigensolve only handles "
-                "symmetric operators — symmetrize the edge list (or "
-                "similarity-transform the 'rw' laplacian to 'sym', same "
-                "spectrum) before calling, or raise local_threshold"
+                "eigensolve_auto(symmetric=False) is past the local solve "
+                f"({MAX_LOCAL_NODES} nodes within the util.size_dispatch "
+                "budget): the distributed eigensolve only handles symmetric "
+                "operators — symmetrize the edge list (or similarity-transform "
+                "the 'rw' laplacian to 'sym', same spectrum) before calling"
             )
+        x, vals = eigensolve(e, None, k, max_iter, tol, seed)
+        lam.append(vals)
+        return x
 
-    if nodes is None:
-        # vertex set == edge endpoints: ONE Arrow collect serves the
-        # dispatch decision AND the local solve (the distinct + count +
-        # two collects it replaces were 4 driver-sequential jobs — pure
-        # scheduling latency on a loaded box)
-        n_edges = edges.count()
-        if n_edges <= local_threshold * local_threshold:
-            # cap = lt^2 rows (a dense lt-node directed block; ~24 bytes
-            # a row). Past ~2M rows one extra distinct-count job is
-            # cheaper than risking a wasted / driver-heavy collect when
-            # the node count turns out to exceed the threshold
-            # (ADVICE r2 #3).
-            if n_edges > 2_000_000:
-                n_ids = (
-                    edges.select(F.explode(F.array("src", "dst")).alias("id"))
-                    .agg(F.approx_count_distinct("id").alias("n"))
-                    .first()["n"]
-                )
-                too_big = n_ids > 1.1 * local_threshold
-                if too_big and not symmetric:
-                    # the HLL estimate (~5% rsd) must not turn a legal
-                    # local solve into a hard error: a symmetric=False
-                    # caller has no distributed fallback, so spend one
-                    # exact count before deciding its fate
-                    too_big = (
-                        edges.select(F.explode(F.array("src", "dst")).alias("id"))
-                        .distinct()
-                        .count()
-                        > local_threshold
-                    )
-                if too_big:
-                    _require_symmetric()
-                    nodes = (
-                        edges.select(F.col("src").alias("id"))
-                        .union(edges.select(F.col("dst").alias("id")))
-                        .distinct()
-                    )
-                    return eigensolve(edges, materialize(nodes), k, max_iter, tol, seed)
-            epd = edges.select("src", "dst", "weight").toPandas()
-            ids = np.unique(np.concatenate([epd["src"].to_numpy(), epd["dst"].to_numpy()]))
-            if len(ids) <= local_threshold:
-                rows = list(epd.itertuples(index=False, name=None))
-                lam, x, idx = eigen_local(rows, [int(i) for i in ids], k, symmetric=symmetric)
-                import pandas as pd  # noqa: PLC0415
-
-                out = spark.createDataFrame(
-                    pd.DataFrame(
-                        {"id": [int(i) for i in idx], "vec": [x[j].tolist() for j in idx.values()]}
-                    ),
-                    "id long, vec array<double>",
-                )
-                return out, lam
-        elif not symmetric:
-            # n_edges > lt^2 can still be a small graph (duplicate edge
-            # rows); a symmetric=False caller has no distributed
-            # fallback, so check the exact node count before raising
-            # and solve locally on the deduplicated rows when legal
-            n_exact = (
-                edges.select(F.explode(F.array("src", "dst")).alias("id"))
-                .distinct()
-                .count()
-            )
-            if n_exact <= local_threshold:
-                dd = edges.select("src", "dst", "weight").dropDuplicates(
-                    ["src", "dst", "weight"]
-                )
-                epd = dd.limit(local_threshold * local_threshold + 1).toPandas()
-                if len(epd) <= local_threshold * local_threshold:
-                    ids = np.unique(
-                        np.concatenate([epd["src"].to_numpy(), epd["dst"].to_numpy()])
-                    )
-                    rows = list(epd.itertuples(index=False, name=None))
-                    lam, x, idx = eigen_local(
-                        rows, [int(i) for i in ids], k, symmetric=symmetric
-                    )
-                    import pandas as pd  # noqa: PLC0415
-
-                    out = spark.createDataFrame(
-                        pd.DataFrame(
-                            {
-                                "id": [int(i) for i in idx],
-                                "vec": [x[j].tolist() for j in idx.values()],
-                            }
-                        ),
-                        "id long, vec array<double>",
-                    )
-                    return out, lam
-        _require_symmetric()
-        nodes = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        return eigensolve(edges, materialize(nodes), k, max_iter, tol, seed)
-    nodes = materialize(nodes)
-    n = nodes.count()
-    if n > local_threshold:
-        _require_symmetric()
-        return eigensolve(edges, nodes, k, max_iter, tol, seed)
-    ids = [r["id"] for r in nodes.collect()]
-    rows = [(r["src"], r["dst"], r["weight"]) for r in edges.collect()]
-    lam, x, idx = eigen_local(rows, ids, k, symmetric=symmetric)
-    out = spark.createDataFrame(
-        [(int(i), x[j].tolist()) for i, j in idx.items()], "id long, vec array<double>"
+    e = edges.select("src", "dst", "weight")
+    x = size_dispatch(
+        e if symmetric else e.distinct(),
+        local,
+        dist,
+        "id long, vec array<double>",
+        default_rows=MAX_LOCAL_NODES * MAX_LOCAL_NODES,
     )
-    return out, lam
+    return x, lam[0]
 
 
 def eigen_local(

@@ -27,10 +27,11 @@ from __future__ import annotations
 from math import comb
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .kernels import distance_expr
-from ..util import materialize
+from ..util import materialize, size_dispatch
 
 
 def _centroid_expr(vec_col, centroid: np.ndarray, kernel: str):
@@ -125,77 +126,78 @@ def kmeans(
     return assigned, centroids
 
 
+# Largest point set the local path iterates in numpy on the driver.
+MAX_LOCAL_POINTS = 200_000
+
+
 def kmeans_auto(
     points: DataFrame,
     k: int,
     max_iter: int = 100,
     seed: int = 42,
     kernel: str = "euclidean",
-    local_threshold: int = 200_000,
 ) -> tuple[DataFrame, np.ndarray]:
-    """Size-dispatched k-means (same pattern as eigensolve_auto /
-    connected_components_auto): point sets under ``local_threshold``
-    collect once and iterate in numpy on the driver — the distributed
-    loop pays ~1 job per sweep plus k init jobs, pure latency for
-    driver-sized data — while larger sets run the distributed loop.
-    Same farthest-first init, same argmin/mean update rules, same
-    (assigned, centroids) contract."""
-    pts = points.select("id", "vec").transform(materialize)
-    n = pts.count()
-    if n > local_threshold or kernel != "euclidean":
+    """Size-dispatched k-means on ``util.size_dispatch``: up to
+    ``MAX_LOCAL_POINTS`` euclidean points collect once, with
+    xxhash64(id, seed) riding the collect, and iterate in numpy on the
+    driver — the distributed loop
+    pays ~1 job per sweep plus k init jobs, pure latency for
+    driver-sized data — while larger sets and other kernels run the
+    distributed loop. Same farthest-first init, same argmin/mean update
+    rules, same (assigned, centroids) contract."""
+    if kernel != "euclidean":
         return kmeans(points, k, max_iter, seed, kernel)
-    rows = pts.collect()
-    ids = np.array([r["id"] for r in rows])
-    v = np.array([r["vec"] for r in rows], dtype=np.float64)
-    # farthest-first init, first point by hash — replicate init_centroids
-    # ordering via one tiny Spark job for the identical hash winner
-    first = (
-        pts.select("id")
-        .orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
-        .limit(1)
-        .collect()[0]["id"]
-    )
-    chosen = [v[int(np.nonzero(ids == first)[0][0])]]
-    for _ in range(k - 1):
-        d = np.min(
-            np.stack([np.sqrt(((v - c) ** 2).sum(1)) for c in chosen]), axis=0
-        )
-        # ties -> lowest id (argmax scans in row order; sort by id first)
-        order = np.argsort(ids)
-        far = order[int(np.argmax(d[order]))]
-        # strict argmax with tie -> lowest id: argmax returns first max
-        chosen.append(v[far])
-    centroids = np.array(chosen)
-    for _ in range(max_iter):
-        d = np.stack([np.sqrt(((v - c) ** 2).sum(1)) for c in centroids])
-        assign_idx = np.argmin(d, axis=0)  # ties -> lowest cluster index
-        new = []
-        for c in range(len(centroids)):
-            members = v[assign_idx == c]
-            if len(members):
-                new.append(members.mean(0))
-        new = np.array(new)
-        if new.shape == centroids.shape and np.allclose(new, centroids, atol=0.0):
-            centroids = new
-            break
-        centroids = new
-    d = np.stack([np.sqrt(((v - c) ** 2).sum(1)) for c in centroids])
-    assign_idx = np.argmin(d, axis=0)
-    spark = points.sparkSession
-    import pandas as pd  # noqa: PLC0415
+    cents = []
 
-    # tolist() everywhere: non-Arrow sessions (the PySpark default)
-    # verify rows element-by-element and reject numpy scalars inside
-    # array<double> — `list(v)` (numpy row views) hard-errors there
-    # (CORRECTNESS_r02 kmeans_clusters). Python natives work under both
-    # Arrow and row-verification paths.
-    assigned = spark.createDataFrame(
-        pd.DataFrame(
-            {"id": ids.tolist(), "vec": v.tolist(), "cluster": assign_idx.tolist()}
-        ),
+    def local(pdf):
+        # id order makes the means' summation order, and so the
+        # centroids, independent of the input's partitioning
+        pdf = pdf.sort_values("id", kind="stable")
+        ids = pdf["id"].to_numpy()
+        v = np.array(pdf["vec"].tolist(), dtype=np.float64)
+
+        def dists(cs):
+            return np.stack([np.sqrt(((v - c) ** 2).sum(1)) for c in cs])
+
+        # farthest-first init as init_centroids: first point = smallest
+        # xxhash64(id, seed), ties (argmin/argmax: first) -> lowest id
+        chosen = [v[int(np.argmin(pdf["h"].to_numpy()))]]
+        for _ in range(k - 1):
+            chosen.append(v[int(np.argmax(dists(chosen).min(0)))])
+        centroids = np.array(chosen)
+        for _ in range(max_iter):
+            assign_idx = dists(centroids).argmin(0)  # ties -> lowest cluster index
+            new = []
+            for c in range(len(centroids)):
+                members = v[assign_idx == c]
+                if len(members):
+                    new.append(members.mean(0))
+            new = np.array(new)
+            if new.shape == centroids.shape and np.allclose(new, centroids, atol=0.0):
+                centroids = new
+                break
+            centroids = new
+        cents.append(centroids)
+        # tolist(): Python natives for the Arrow-off row path
+        # (CORRECTNESS_r02 kmeans_clusters)
+        return pd.DataFrame(
+            {"id": ids.tolist(), "vec": v.tolist(),
+             "cluster": dists(centroids).argmin(0).tolist()}
+        )
+
+    def dist(pts):
+        assigned, centroids = kmeans(pts, k, max_iter, seed, kernel)
+        cents.append(centroids)
+        return assigned
+
+    assigned = size_dispatch(
+        points.select("id", "vec", F.xxhash64(F.col("id"), F.lit(seed)).alias("h")),
+        local,
+        dist,
         "id long, vec array<double>, cluster int",
+        default_rows=MAX_LOCAL_POINTS,
     )
-    return assigned, centroids
+    return assigned, cents[0]
 
 
 def silhouette_points(

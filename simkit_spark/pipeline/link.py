@@ -24,12 +24,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..operators.components import connected_components_auto
-from ..util import materialize
+from ..util import materialize, size_dispatch
 from .refine import (
     DEFAULT_MIN_SIZE,
     DEFAULT_NCUT_MAX,
     refine_component_rows,
 )
+
+
+# Largest distinct-surface set linked on the driver (link_entities'
+# size_dispatch cap); lsh_params pins the round-1 band layout up to it.
+LOCAL_SURFACES = 20_000
 
 
 def lsh_params(
@@ -56,13 +61,13 @@ def lsh_params(
     edge at 25k surfaces; the rescore is memory-bandwidth-bound, so
     candidate volume IS the linking cost).
 
-    Below the 20k local-dispatch threshold the layout pins to the
-    round-1 (16, 4) so small-corpus behavior (and every fixture) is
-    bit-identical; pairs near the tau floor get lower recall at scale
+    Up to ``LOCAL_SURFACES`` (link_entities' local-dispatch cap) the
+    layout pins to the round-1 (16, 4) so small-corpus behavior (and
+    every fixture) is bit-identical; pairs near the tau floor get lower recall at scale
     by design — those are the noisy edges spectral refinement exists
     to resist.
     """
-    if n <= 20_000:
+    if n <= LOCAL_SURFACES:
         return 16, 4
     p1 = 1.0 - np.arccos(min(tau_design, 1.0)) / np.pi
     # rpb tracks log2(n)+1 (clamped) so random collisions stay
@@ -223,41 +228,34 @@ def similarity_edges(
     return joined.mapInPandas(cos, "src long, dst long, weight double")
 
 
-def link_entities_local(
-    surfaces: DataFrame,
+def _link_local(
+    pdf: pd.DataFrame,
     mentions: DataFrame,
     dim: int,
     tau: float,
     seed: int,
-    refine: bool = True,
-    refine_min_size: int = DEFAULT_MIN_SIZE,
-    refine_ncut_max: float = DEFAULT_NCUT_MAX,
-    rows: list | None = None,
-) -> DataFrame:
-    """Driver-local twin of link_entities for small distinct-surface
-    sets (the common case: distinct surfaces ≈ entity vocabulary, not
-    corpus size). One collect + numpy LSH/cosine/union-find instead of
-    ~15 driver-sequential small-data jobs — the same size dispatch as
-    eigensolve_auto / connected_components_auto. Identical output
-    contract and identical bucket/threshold semantics (same hyperplane
-    seed, same band layout, same >= tau cut).
-
-    ``rows``: pre-collected surface rows (the dispatch in link_entities
-    already holds them from its size probe — re-collecting would redo
-    the job). Mention frequencies come from the surfaces' `n_mentions`
-    column when present (it rides the surfaces stage's own groupBy);
-    only legacy callers without it pay a mentions aggregation job."""
-    if rows is None:
-        rows = surfaces.collect()
-    if rows and "n_mentions" in rows[0].__fields__:
-        freq = {r["surface"]: r["n_mentions"] for r in rows}
+    refine: bool,
+    refine_min_size: int,
+    refine_ncut_max: float,
+) -> pd.DataFrame:
+    """Driver-local twin of link_entities over the collected distinct
+    surfaces (the common case: distinct surfaces ≈ entity vocabulary,
+    not corpus size): numpy LSH/cosine/union-find instead of ~15
+    driver-sequential small-data jobs. Identical output contract and
+    identical bucket/threshold semantics (same hyperplane seed, same
+    band layout, same >= tau cut). Mention frequencies come from the
+    surfaces' `n_mentions` column when present (it rides the surfaces
+    stage's own groupBy); only legacy callers without it pay a mentions
+    aggregation job."""
+    if "n_mentions" in pdf.columns:
+        freq = dict(zip(pdf["surface"], pdf["n_mentions"]))
     else:
         freq_rows = mentions.groupBy("surface").count().collect()
         freq = {r["surface"]: r["count"] for r in freq_rows}
-    ids = np.array([r["surface_id"] for r in rows])
-    surfs = [r["surface"] for r in rows]
-    vecs = np.array([r["vec"] for r in rows], dtype=np.float64)
-    n = len(rows)
+    ids = pdf["surface_id"].to_numpy()
+    surfs = pdf["surface"].tolist()
+    vecs = np.array(pdf["vec"].tolist(), dtype=np.float64)
+    n = len(pdf)
     rng = np.random.RandomState(seed)
     n_planes, n_bands = lsh_params(n)  # same layout rule as distributed
     rpb = n_planes // n_bands
@@ -338,9 +336,7 @@ def link_entities_local(
             )
             for m in grp:
                 out.append((surfs[m], int(ids[m]), entity_id, canonical))
-    return surfaces.sparkSession.createDataFrame(
-        out, "surface string, surface_id long, entity_id long, canonical string"
-    )
+    return pd.DataFrame(out, columns=["surface", "surface_id", "entity_id", "canonical"])
 
 
 def refine_components(
@@ -390,7 +386,6 @@ def link_entities(
     tau: float = 0.75,
     seed: int = 42,
     cc_max_iter: int = 30,
-    local_threshold: int = 20_000,
     refine: bool = True,
     refine_min_size: int = DEFAULT_MIN_SIZE,
     refine_ncut_max: float = DEFAULT_NCUT_MAX,
@@ -407,65 +402,64 @@ def link_entities(
     cluster's most frequent mention surface (ties -> longest, then
     lexicographically smallest — longer forms carry the suffix).
 
-    Distinct-surface sets under ``local_threshold`` link driver-locally
-    (see link_entities_local); above it, the distributed LSH path runs.
+    Size-dispatched on ``util.size_dispatch`` with
+    ``default_rows=LOCAL_SURFACES``: up to that many distinct surfaces
+    link on the driver (_link_local); above it, the distributed LSH
+    path runs.
     """
-    # the shared single-action size probe of util.size_dispatch, kept
-    # inline because the threshold counts surfaces, not a row budget:
-    # collect up to threshold+1 rows; if the limit didn't bite we
-    # ALREADY hold the whole table and the local path starts with zero
-    # further jobs
-    probe_cols = [c for c in ("surface", "surface_id", "n_mentions", "vec")
-                  if c in surfaces.columns]
-    probe = surfaces.select(*probe_cols).limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
-        return link_entities_local(
-            surfaces, mentions, dim, tau, seed,
-            refine=refine,
-            refine_min_size=refine_min_size,
-            refine_ncut_max=refine_ncut_max,
-            rows=probe,
+
+    def dist(surfaces):
+        pairs = candidate_pairs(surfaces, dim, seed=seed)
+        edges = materialize(similarity_edges(surfaces, pairs, tau))
+        comp = connected_components_auto(
+            edges.select("src", "dst"),
+            nodes=surfaces.select(F.col("surface_id").alias("id")),
+            max_iter=cc_max_iter,
         )
-    surfaces = materialize(surfaces)
-    pairs = candidate_pairs(surfaces, dim, seed=seed)
-    edges = materialize(similarity_edges(surfaces, pairs, tau))
-    comp = connected_components_auto(
-        edges.select("src", "dst"),
-        nodes=surfaces.select(F.col("surface_id").alias("id")),
-        max_iter=cc_max_iter,
-    )
-    if refine:
-        refined = refine_components(
-            edges, comp, min_size=refine_min_size, ncut_max=refine_ncut_max
-        )
-        assign = (
-            comp.withColumnRenamed("id", "surface_id")
-            .join(refined, "surface_id", "left")
-            .select(
-                "surface_id",
-                F.coalesce("entity_id", F.col("component")).alias("entity_id"),
+        if refine:
+            refined = refine_components(
+                edges, comp, min_size=refine_min_size, ncut_max=refine_ncut_max
             )
+            assign = (
+                comp.withColumnRenamed("id", "surface_id")
+                .join(refined, "surface_id", "left")
+                .select(
+                    "surface_id",
+                    F.coalesce("entity_id", F.col("component")).alias("entity_id"),
+                )
+            )
+        else:
+            assign = comp.select(
+                F.col("id").alias("surface_id"), F.col("component").alias("entity_id")
+            )
+        mapped = surfaces.select("surface", "surface_id").join(assign, "surface_id")
+        if "n_mentions" in surfaces.columns:
+            # frequency already rode the surfaces stage's groupBy — no
+            # second aggregation pass over the (corpus-sized) mentions table
+            freq = surfaces.select("surface", F.col("n_mentions").alias("count"))
+        else:
+            freq = mentions.groupBy("surface").count()
+        scored = mapped.join(freq, "surface", "left").fillna(0, ["count"])
+        w = Window.partitionBy("entity_id").orderBy(
+            F.col("count").desc(), F.length("surface").desc(), F.col("surface").asc()
         )
-    else:
-        assign = comp.select(
-            F.col("id").alias("surface_id"), F.col("component").alias("entity_id")
+        canon = (
+            scored.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("entity_id", F.col("surface").alias("canonical"))
         )
-    mapped = surfaces.select("surface", "surface_id").join(assign, "surface_id")
-    if "n_mentions" in surfaces.columns:
-        # frequency already rode the surfaces stage's groupBy — no
-        # second aggregation pass over the (corpus-sized) mentions table
-        freq = surfaces.select("surface", F.col("n_mentions").alias("count"))
-    else:
-        freq = mentions.groupBy("surface").count()
-    scored = mapped.join(freq, "surface", "left").fillna(0, ["count"])
-    w = Window.partitionBy("entity_id").orderBy(
-        F.col("count").desc(), F.length("surface").desc(), F.col("surface").asc()
-    )
-    canon = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("entity_id", F.col("surface").alias("canonical"))
-    )
-    return mapped.join(canon, "entity_id").select(
-        "surface", "surface_id", "entity_id", "canonical"
+        return mapped.join(canon, "entity_id").select(
+            "surface", "surface_id", "entity_id", "canonical"
+        )
+
+    cols = [c for c in ("surface", "surface_id", "n_mentions", "vec")
+            if c in surfaces.columns]
+    return size_dispatch(
+        surfaces.select(*cols),
+        lambda pdf: _link_local(
+            pdf, mentions, dim, tau, seed, refine, refine_min_size, refine_ncut_max
+        ),
+        dist,
+        "surface string, surface_id long, entity_id long, canonical string",
+        default_rows=LOCAL_SURFACES,
     )

@@ -101,3 +101,29 @@ def test_auto_empty_nodes_raises_keyerror(spark):
     nodes = spark.createDataFrame([], "id long")
     with pytest.raises(KeyError, match="endpoint not in nodes"):
         connected_components_auto(edges, nodes=nodes)
+
+
+def test_auto_nodes_past_budget_go_distributed(spark, monkeypatch):
+    """A node list past the row budget is not collected to the driver:
+    edges that fit still run connected_components when nodes do not."""
+    from simkit_spark.operators import components
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    local = {
+        r["id"]: r["component"]
+        for r in components.connected_components_auto(edges, nodes).collect()
+    }
+    assert local == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5, 6: 5, 7: 7, 8: 8, 9: 9}
+    calls = []
+    real = components.connected_components
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(components, "connected_components", spy)
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 5)
+    got = components.connected_components_auto(edges, nodes)
+    assert calls == [1]
+    assert {r["id"]: r["component"] for r in got.collect()} == local

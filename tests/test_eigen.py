@@ -72,9 +72,9 @@ def test_eigengap():
     assert eigengap_k(np.array([0.5, 0.6])) == 2  # floor at 2
 
 
-def test_eigensolve_auto_nonsymmetric_distributed_raises(spark):
+def test_eigensolve_auto_nonsymmetric_distributed_raises(spark, force_distributed):
     # ADVICE r2 #2: the distributed solver assumes a symmetric operator;
-    # symmetric=False past local_threshold must fail loudly, not
+    # symmetric=False past the local solve must fail loudly, not
     # silently diverge from the local path
     import pytest
 
@@ -83,27 +83,46 @@ def test_eigensolve_auto_nonsymmetric_distributed_raises(spark):
     edges = spark.createDataFrame(
         [(i, (i + 1) % 8, 1.0) for i in range(8)], "src long, dst long, weight double"
     )
-    nodes = spark.createDataFrame([(i,) for i in range(8)], "id long")
-    with pytest.raises(ValueError, match="symmetric"):
-        eigensolve_auto(edges, nodes, k=2, local_threshold=4, symmetric=False)
+    with force_distributed(), pytest.raises(ValueError, match="symmetric"):
+        eigensolve_auto(edges, k=2, symmetric=False)
 
 
-def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark):
-    """Duplicate edge rows can push n_edges past local_threshold^2 while
-    the true node count stays local-sized; symmetric=False must dedupe
-    and solve locally instead of raising (review r3 finding)."""
+def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark, monkeypatch):
+    """Duplicate edge rows can push the edge-row count past the dispatch
+    budget while the de-duplicated graph fits; symmetric=False must
+    dedupe and solve locally instead of raising (review r3 finding)."""
     import numpy as np
     from simkit_spark.operators.eigen import eigensolve_auto
 
     base = [(i, (i + 1) % 4, 0.5) for i in range(4)] + [
         (i, i, 0.5) for i in range(4)
     ]
-    dup = base * 30  # 240 rows > local_threshold^2 at lt=4
+    dup = base * 30  # 240 rows > the 16-row budget; 8 distinct rows fit
     edges = spark.createDataFrame(dup, "src long, dst long, weight double")
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 16)
     x, lam = eigensolve_auto(
-        edges, k=2, max_iter=50, tol=1e-8, seed=42,
-        local_threshold=4, symmetric=False,
+        edges, k=2, max_iter=50, tol=1e-8, seed=42, symmetric=False,
     )
     assert x.count() == 4
     # row-stochastic operator: top eigenvalue exactly 1
     assert abs(lam[-1] - 1.0) < 1e-8
+
+
+def test_eigensolve_auto_local_path_one_job(spark):
+    """The local path's size probe is its only Spark job: one bounded
+    Arrow collect, then numpy eigh on the driver."""
+    from simkit_spark.operators.eigen import eigensolve_auto
+
+    rows = [(i, j, 1.0 / (1 + i + j)) for i in range(6) for j in range(6) if i != j]
+    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    sc = spark.sparkContext
+    sc.setJobGroup("eigensolve-auto-local", "eigensolve-auto-local")
+    try:
+        x, lam = eigensolve_auto(edges, k=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("eigensolve-auto-local")) == 1
+    want_lam, want_x, idx = eigen_local(rows, list(range(6)), 2)
+    assert np.array_equal(lam, want_lam)
+    got = {r["id"]: r["vec"] for r in x.collect()}
+    assert all(np.array_equal(got[i], want_x[j]) for i, j in idx.items())

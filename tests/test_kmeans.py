@@ -81,3 +81,45 @@ def test_silhouette_approx_ranks_like_exact(spark, blobs):
     assert s_approx > 0.8  # same verdict as the exact form on separated blobs
     # forced-approx dispatch path returns a sane mean too
     assert silhouette(assigned, exact_threshold=0) == pytest.approx(s_approx, abs=1e-9)
+
+
+def test_kmeans_auto_local_partition_invariant(spark):
+    """The local twin's centroids do not depend on the input's
+    partitioning: the collect order used to set the means' summation
+    order (last-bit differences, up to ~7e-15, across repartitions)."""
+    from simkit_spark.operators.kmeans import kmeans_auto
+
+    rng = np.random.RandomState(3)
+    centers = 5.0 * rng.randn(8, 16)
+    rows = [(i, (centers[i % 8] + rng.randn(16)).tolist()) for i in range(5000)]
+    pts = spark.createDataFrame(rows, "id long, vec array<double>")
+    _, want = kmeans_auto(pts, k=8, seed=42)
+    for n in (3, 7, 13):
+        _, got = kmeans_auto(pts.repartition(n), k=8, seed=42)
+        assert np.array_equal(got, want), n
+
+
+def test_kmeans_auto_local_matches_distributed(spark, blobs, force_distributed):
+    from simkit_spark.operators.kmeans import kmeans_auto
+
+    loc_a, loc_c = kmeans_auto(blobs, k=3, seed=42)
+    with force_distributed():
+        dist_a, dist_c = kmeans_auto(blobs, k=3, seed=42)
+    assert np.allclose(loc_c, dist_c, rtol=0.0, atol=1e-12)
+    cluster = lambda a: {r["id"]: r["cluster"] for r in a.collect()}  # noqa: E731
+    assert cluster(loc_a) == cluster(dist_a)
+
+
+def test_kmeans_auto_local_path_one_job(spark, blobs):
+    """The first centroid's hash rides the size probe, so the local
+    path runs exactly one Spark job."""
+    from simkit_spark.operators.kmeans import kmeans_auto
+
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-auto-local", "kmeans-auto-local")
+    try:
+        _, centroids = kmeans_auto(blobs, k=3, seed=42)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("kmeans-auto-local")) == 1
+    assert centroids.shape == (3, 2)

@@ -154,7 +154,7 @@ def test_pipeline_prf_gate(spark, corpus, tmp_path_factory):
     assert out["provenance"].count() == out["triples"].count()
 
 
-def test_link_local_vs_distributed_parity(spark, corpus):
+def test_link_local_vs_distributed_parity(spark, corpus, force_distributed):
     from simkit_spark.pipeline.embed import embed_distinct_surfaces
     from simkit_spark.pipeline.extract import detect_mentions
     from simkit_spark.pipeline.link import link_entities
@@ -162,9 +162,10 @@ def test_link_local_vs_distributed_parity(spark, corpus):
     docs, _ = corpus
     mentions = detect_mentions(explode_spans(docs))
     surfaces = embed_distinct_surfaces(mentions)
-    # local_threshold=0 forces the distributed LSH+CC path; default takes
+    # force_distributed takes the distributed LSH+CC path; default takes
     # the driver-local union-find path — identical entity maps required
-    dist = link_entities(surfaces, mentions, 256, 0.65, 42, local_threshold=0)
+    with force_distributed():
+        dist = link_entities(surfaces, mentions, 256, 0.65, 42)
     loc = link_entities(surfaces, mentions, 256, 0.65, 42)
     d = {r["surface_id"]: (r["entity_id"], r["canonical"]) for r in dist.collect()}
     l = {r["surface_id"]: (r["entity_id"], r["canonical"]) for r in loc.collect()}
@@ -203,7 +204,7 @@ def test_salted_join_matches_plain_join(spark):
     assert sorted(map(key, got)) == sorted(map(key, want))
 
 
-def test_pipeline_prf_gate_distributed_link(spark, corpus):
+def test_pipeline_prf_gate_distributed_link(spark, corpus, force_distributed):
     """The DISTRIBUTED linking path (LSH buckets -> similarity edges ->
     CC -> spectral refine via applyInPandas) must hit the same P/R gate
     as the driver-local dispatch the other tests exercise."""
@@ -216,7 +217,8 @@ def test_pipeline_prf_gate_distributed_link(spark, corpus):
     mentions = detect_mentions(spans)
     raw = extract_raw_triples(spans)
     surfaces = embed_distinct_surfaces(mentions)
-    emap = link_entities(surfaces, mentions, 256, 0.65, 42, local_threshold=0)
+    with force_distributed():
+        emap = link_entities(surfaces, mentions, 256, 0.65, 42)
     triples = resolve_triples(raw, emap, use_salting=True)
     vocab = build_vocab(60, 42)
     alias_rows = [(a, v["canonical"]) for v in vocab for a in v["aliases"]]

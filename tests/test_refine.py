@@ -92,20 +92,19 @@ def bridged_surfaces(spark):
     return surfaces, mentions
 
 
-@pytest.mark.parametrize("local_threshold", [20_000, 0])
-def test_link_entities_spectral_separation(spark, bridged_surfaces, local_threshold):
+@pytest.mark.parametrize("budget", [20_000, 0])  # 0: the distributed path
+def test_link_entities_spectral_separation(spark, bridged_surfaces, monkeypatch, budget):
     surfaces, mentions = bridged_surfaces
+    monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: budget)
     # without refinement: CC transitively merges everything into ONE entity
     merged = link_entities(
-        surfaces, mentions, DIM, tau=0.65, seed=42,
-        local_threshold=local_threshold, refine=False,
+        surfaces, mentions, DIM, tau=0.65, seed=42, refine=False,
     )
     assert merged.select("entity_id").distinct().count() == 1
 
     # with refinement: the bridge no longer glues A to B
     refined = link_entities(
-        surfaces, mentions, DIM, tau=0.65, seed=42,
-        local_threshold=local_threshold, refine=True,
+        surfaces, mentions, DIM, tau=0.65, seed=42, refine=True,
     )
     ent = {r["surface"]: r["entity_id"] for r in refined.collect()}
     a_ents = {ent[f"alpha{i}"] for i in range(4)}
@@ -114,10 +113,11 @@ def test_link_entities_spectral_separation(spark, bridged_surfaces, local_thresh
     assert a_ents != b_ents
 
 
-def test_link_local_vs_distributed_refine_parity(spark, bridged_surfaces):
+def test_link_local_vs_distributed_refine_parity(spark, bridged_surfaces, force_distributed):
     surfaces, mentions = bridged_surfaces
     loc = link_entities(surfaces, mentions, DIM, tau=0.65, seed=42)
-    dist = link_entities(surfaces, mentions, DIM, tau=0.65, seed=42, local_threshold=0)
+    with force_distributed():
+        dist = link_entities(surfaces, mentions, DIM, tau=0.65, seed=42)
     l = {r["surface_id"]: r["entity_id"] for r in loc.collect()}
     d = {r["surface_id"]: r["entity_id"] for r in dist.collect()}
     assert l == d

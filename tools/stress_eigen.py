@@ -1,7 +1,8 @@
 """Stress the DISTRIBUTED eigensolve past the local dispatch (round-3
-verdict #4: eigensolve_auto's local_threshold=3000 meant the
-distributed path had unit tests + the refine stress but no committed
-large-graph datapoint the way PPR/SSSP do).
+verdict #4: eigensolve_auto solves graphs of at most
+eigen.MAX_LOCAL_NODES (3000) nodes on the driver, so the distributed
+path had unit tests + the refine stress but no committed large-graph
+datapoint the way PPR/SSSP do). It calls eigensolve directly.
 
 Graph: n nodes, d pseudo-random out-edges each (multiply-shift over
 node id — deterministic), symmetrized, unit weights -> sym normalized
