@@ -219,17 +219,7 @@ def eigensolve_auto(
     ValueError: the distributed solver assumes a symmetric operator."""
     lam = []
 
-    def local(epd):
-        ids = np.unique(np.concatenate([epd["src"].to_numpy(), epd["dst"].to_numpy()]))
-        if len(ids) > MAX_LOCAL_NODES:
-            return None
-        vals, x, idx = eigen_local(
-            epd.itertuples(index=False, name=None), ids.tolist(), k, symmetric
-        )
-        lam.append(vals)
-        return pd.DataFrame({"id": list(idx), "vec": [x[j].tolist() for j in idx.values()]})
-
-    def dist(e):
+    def nonsymmetric_raise():
         # silently running the Gram/Ritz iteration on a non-symmetric
         # operator would make 'rw' results diverge from the local path
         # at the size boundary (ADVICE r2 #2). Stay loud.
@@ -241,6 +231,21 @@ def eigensolve_auto(
                 "operators — symmetrize the edge list (or similarity-transform "
                 "the 'rw' laplacian to 'sym', same spectrum) before calling"
             )
+
+    def local(epd):
+        ids = np.unique(np.concatenate([epd["src"].to_numpy(), epd["dst"].to_numpy()]))
+        if len(ids) > MAX_LOCAL_NODES:
+            # raise here, before size_dispatch checkpoints the upstream
+            nonsymmetric_raise()
+            return None
+        vals, x, idx = eigen_local(
+            epd.itertuples(index=False, name=None), ids.tolist(), k, symmetric
+        )
+        lam.append(vals)
+        return pd.DataFrame({"id": list(idx), "vec": [x[j].tolist() for j in idx.values()]})
+
+    def dist(e):
+        nonsymmetric_raise()
         x, vals = eigensolve(e, None, k, max_iter, tol, seed)
         lam.append(vals)
         return x

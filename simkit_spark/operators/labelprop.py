@@ -13,7 +13,7 @@ no rounding contract needed).
 Scale: per sweep = one join of the (node-sized) label table into a
 fixed edge partitioning + two hash aggregations; the tie-break pick is
 min(struct(-count, label)) — an aggregation with map-side partials,
-NOT a per-node window sort. Lineage broken every few sweeps.
+NOT a per-node window sort. Lineage broken every sweep.
 """
 
 from __future__ import annotations
@@ -23,9 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..util import materialize, size_dispatch
 
 
-def label_propagation(
-    edges: DataFrame, n_iter: int = 5, checkpoint_every: int = 1
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """(src, dst) in any orientation -> (id, community) after
     ``n_iter`` synchronous sweeps. Self-loops dropped; duplicate edges
     de-duplicated (each neighbor votes once)."""
@@ -62,7 +60,7 @@ def label_propagation(
             labels.join(pick, "id", "left")
             .select("id", F.coalesce("new_label", "label").alias("label"))
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if i + 1 < n_iter:
             labels = materialize(labels)
     out = materialize(labels.select("id", F.col("label").alias("community")))
     e.unpersist()

@@ -8,6 +8,15 @@ entity salience over those graphs is the natural KG-side companion:
 rank entities by the random-walk stationary distribution of the edge
 list the linker materializes.
 
+One kernel, four operators: PageRank, personalized PageRank, weighted
+PageRank and Katz are the same exact-integer power sweep. They differ
+only in the base table (nodes, or nodes with a teleport vector t), the
+per-edge contrib rule, whether dangling mass is used, and the float
+update. ``_sweeps`` is the distributed half and ``_sweeps_local`` the
+numpy half; each variant supplies its setup and ONE update callable
+that builds both the Spark Column and the ndarray expression, so its
+float operation order is written exactly once for both paths.
+
 Scale design (the part that must survive 100 TB):
 - One shuffle per iteration: the edge table is hash-partitioned on
   ``src`` ONCE and persisted; each sweep joins the (node-sized) rank
@@ -17,12 +26,12 @@ Scale design (the part that must survive 100 TB):
 - Dangling mass is a 1-row aggregate broadcast into the update
   (crossJoin of a broadcast singleton) — no per-iteration driver
   action, no collect.
-- Lineage is broken EVERY sweep by default (util.materialize: reliable
-  checkpoint when a checkpoint dir is configured, localCheckpoint in
-  tests): each sweep's rank table feeds three consumers (inflow, the
-  dangling aggregate, the update join), so a lazy multi-sweep segment
-  re-evaluates shared subplans combinatorially — measured 104s -> 30s
-  for 10 sweeps over 1M edges going from checkpoint_every=4 to 1.
+- Lineage is broken EVERY sweep (util.materialize: reliable checkpoint
+  when a checkpoint dir is configured, localCheckpoint in tests): each
+  sweep's rank table feeds three consumers (inflow, the dangling
+  aggregate, the update join), so a lazy multi-sweep segment
+  re-evaluates shared subplans combinatorially — 10 sweeps over 1M
+  edges measured 104 s breaking it every 4th sweep, 30 s every sweep.
 
 Determinism contract (exact-integer fixed point):
 - Ranks are carried as int64 numerators ``rank_i`` at scale
@@ -63,100 +72,103 @@ def _rank_expr(update: "F.Column", scale: int) -> "F.Column":
     return F.floor(update * F.lit(float(scale)) + F.lit(0.5))
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = DAMPING,
-    iter_dp: int = PR_ITER_DP,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """(src, dst) directed edge list -> (id, rank) after ``n_iter``
-    power sweeps of rank = (1-d)/N + d*(inflow + dangling/N).
+def _layout(e: DataFrame, norm=None, t=None):
+    """(ed, base, dangling, n): the loop-invariant tables of ``_sweeps``.
 
-    Unweighted edges: each src splits its rank evenly across out-edges.
-    Nodes with no out-edges (dangling) teleport their whole rank.
-    Deterministic: fixed iteration count, exact-integer rank numerators
-    at scale 10**iter_dp (see module docstring).
-    """
-    id_t = edges.schema["src"].dataType.simpleString()
-    e = edges.select("src", "dst").repartition("src").persist()
-    nodes = (
+    ``ed`` is ``e`` hash-partitioned AND sorted on src ONCE and
+    persisted: the cached plan keeps its outputOrdering, so every
+    sweep's sort-merge join streams the edge table without re-sorting
+    it (only the node-sized rank side sorts per sweep) — SMJ's
+    robustness with none of its per-sweep edge-side cost, and no
+    shuffled-hash build-memory risk at cluster scale. With ``norm`` (a
+    per-source aggregate) the divisor ``s`` is baked into that layout
+    once instead of re-joined every sweep, and ``dangling`` holds the
+    ids with no out-edge (the set is loop-invariant; only its mass
+    changes); without it ``dangling`` is None. ``base`` is the persisted
+    node table (id), with the column ``t`` when given; n its size."""
+    e = e.repartition("src").persist()
+    base = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .persist()
     )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], f"id {id_t}, rank double")
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # outdeg is loop-INVARIANT: bake it into the persisted edge layout
-    # once instead of re-joining it every sweep (one fewer shuffle per
-    # iteration; the per-sweep work is then rank-shuffle-in + agg-out)
-    # hash-partition AND sort by src ONCE: the cached plan keeps its
-    # outputOrdering, so every sweep's sort-merge join streams the
-    # edge table without re-sorting it (only the node-sized rank side
-    # sorts per sweep) — SMJ's robustness with none of its per-sweep
-    # edge-side cost, and no shuffled-hash build-memory risk at
-    # cluster scale
-    ed = e.join(outdeg, "src").sortWithinPartitions("src").persist()
-    ed.count()  # materialize before the loop reuses it n_iter times
-    # the dangling node SET is loop-invariant too (only its rank mass
-    # changes per sweep)
-    dangling_ids = nodes.join(
-        e.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).persist()
-    dangling_ids.count()
+    base = (base if t is None else base.withColumn("t", t)).persist()
+    n = base.count()
+    ed = e if norm is None else e.join(e.groupBy("src").agg(norm.alias("s")), "src")
+    ed = ed.sortWithinPartitions("src").persist()
+    ed.count()
+    dangling = None
+    if norm is not None:
+        dangling = base.select("id").join(
+            e.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
+        ).persist()
+        dangling.count()
     e.unpersist()
-    scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    teleport = (1.0 - damping) / float(n)
+    return ed, base, dangling, n
 
-    r0 = math.floor((1.0 / float(n)) * float(scale) + 0.5)
-    ranks = nodes.select("id", F.lit(r0).cast("long").alias("rank_i"))
-    for i in range(n_iter):
-        src_rank = ranks.select(
-            F.col("id").alias("src"), F.col("rank_i").alias("srank_i")
-        )
+
+def _sweeps(ed, base, r0, contrib, update, dangling, n_iter, scale):
+    """The distributed power sweep: (id, rank_i) after ``n_iter`` sweeps
+    of rank_i = floor(update(inflow, dmass) * scale + 0.5), starting
+    from the Column ``r0`` over ``base``.
+
+    inflow_i = SUM(``contrib``) per dst is an exact-integer SQL
+    expression of the source numerator ``srank_i`` and ``ed``'s
+    columns; dmass_i = SUM(rank_i) over ``dangling`` (None: no dangling
+    term, ``update`` gets None). ``update`` sees both as double Columns
+    and ``base``'s columns by name. Per sweep: one join of the
+    node-sized rank table into the fixed edge layout, one hash
+    aggregation on dst, the broadcast 1-row dmass, one materialize.
+    Unpersists ed, base and dangling."""
+    ranks = base.select("id", r0.alias("rank_i"))
+    for _ in range(n_iter):
+        src_rank = ranks.select(F.col("id").alias("src"), F.col("rank_i").alias("srank_i"))
         inflow = (
             ed.join(src_rank, "src")
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.expr("srank_i div outdeg")).alias("inflow_i"))
+            .agg(F.sum(F.expr(contrib)).alias("inflow_i"))
         )
-        dmass = (
-            ranks.join(dangling_ids.hint("shuffle_hash"), "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank_i"), F.lit(0)).cast("long").alias("dmass_i"))
+        step = base.join(inflow.hint("shuffle_hash"), "id", "left")
+        dmass = None
+        if dangling is not None:
+            step = step.crossJoin(F.broadcast(
+                ranks.join(dangling.hint("shuffle_hash"), "id", "left_semi")
+                .agg(F.coalesce(F.sum("rank_i"), F.lit(0)).cast("long").alias("dmass_i"))
+            ))
+            dmass = F.col("dmass_i").cast("double")
+        inflow_d = F.coalesce(F.col("inflow_i"), F.lit(0)).cast("double")
+        ranks = materialize(
+            step.select("id", _rank_expr(update(inflow_d, dmass), scale).alias("rank_i"))
         )
-        ranks = (
-            nodes.join(inflow.hint("shuffle_hash"), "id", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "id",
-                _rank_expr(
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow_i"), F.lit(0)).cast("double")
-                        * F.lit(inv)
-                        + F.col("dmass_i").cast("double")
-                        * F.lit(inv)
-                        / F.lit(float(n))
-                    ),
-                    scale,
-                ).alias("rank_i"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = materialize(ranks)
-    out = materialize(
-        ranks.select("id", (F.col("rank_i").cast("double") * F.lit(inv)).alias("rank"))
-    )
-    ed.unpersist()
-    nodes.unpersist()
-    dangling_ids.unpersist()
-    return out
+    for df in (ed, base, dangling):
+        if df is not None:
+            df.unpersist()
+    return ranks
+
+
+def _sweeps_local(src, dst, w, r0, update, n_iter, scale):
+    """numpy half of ``_sweeps`` over the edge positions of ``_indexed``:
+    int64 numerators from ``r0``, ONE exact int64 accumulator per sweep.
+
+    With int64 edge weights ``w`` each source splits its numerator by
+    contrib = r[src] * w div s[src], s = the source's weight sum (its
+    out-degree for unit weights), and the nodes without an out-edge
+    feed dmass; ``w=None`` (Katz) sums r[src] undivided, dmass None."""
+    import numpy as np
+
+    n = len(r0)
+    s = np.zeros(n, dtype=np.int64)
+    if w is not None:
+        np.add.at(s, src, w)
+    r = r0
+    for _ in range(n_iter):
+        inflow = np.zeros(n, dtype=np.int64)
+        np.add.at(inflow, dst, r[src] if w is None else (r[src] * w) // s[src])
+        dmass = None if w is None else float(r[s == 0].sum())
+        r = np.floor(
+            update(inflow.astype(np.float64), dmass) * float(scale) + 0.5
+        ).astype(np.int64)
+    return r
 
 
 def _indexed(pdf):
@@ -166,6 +178,78 @@ def _indexed(pdf):
 
     ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
     return ids, np.searchsorted(ids, pdf["src"].values), np.searchsorted(ids, pdf["dst"].values)
+
+
+def _scaled(ranks: DataFrame, scale: int, name: str) -> DataFrame:
+    return ranks.select(
+        "id", (F.col("rank_i").cast("double") * F.lit(1.0 / float(scale))).alias(name)
+    )
+
+
+# The update callables below take (inflow, dmass) as double Columns or
+# as an ndarray and a python float. A python scalar on the left of a
+# Column operator builds the mirrored Spark expression (c*x, not x*c);
+# IEEE + and * are commutative, so both engines stay bit-identical.
+
+
+def _pr_update(damping: float, n: float, scale: int):
+    """PageRank's (and weighted PageRank's) update:
+    teleport + d*(inflow*inv + dmass*inv/n)."""
+    inv = 1.0 / float(scale)
+    teleport = (1.0 - damping) / n
+    return lambda inflow, dmass: teleport + damping * (inflow * inv + dmass * inv / n)
+
+
+def _pr_sweeps(e: DataFrame, n_iter: int, damping: float, iter_dp: int) -> DataFrame:
+    """Distributed PageRank over (src, dst), or weighted over quantized
+    (src, dst, w_q): contrib = rank_i div outdeg, or
+    rank_i * w_q div strength."""
+    weighted = "w_q" in e.columns
+    ed, nodes, dangling, n = _layout(e, F.sum("w_q") if weighted else F.count(F.lit(1)))
+    n = float(max(n, 1))  # an empty graph sweeps zero rows
+    scale = 10**iter_dp
+    ranks = _sweeps(
+        ed,
+        nodes,
+        F.lit(math.floor((1.0 / n) * float(scale) + 0.5)).cast("long"),
+        "(srank_i * w_q) div s" if weighted else "srank_i div s",
+        _pr_update(damping, n, scale),
+        dangling,
+        n_iter,
+        scale,
+    )
+    return _scaled(ranks, scale, "rank")
+
+
+def _pr_local(pdf, n_iter, damping, iter_dp):
+    """numpy twin of ``_pr_sweeps``; unit weights without ``w_q``."""
+    import numpy as np
+    import pandas as pd
+
+    ids, src, dst = _indexed(pdf)
+    n = float(max(len(ids), 1))
+    scale = 10**iter_dp
+    w = pdf["w_q"].to_numpy(np.int64) if "w_q" in pdf else np.ones(len(src), np.int64)
+    r0 = np.full(len(ids), math.floor((1.0 / n) * float(scale) + 0.5), dtype=np.int64)
+    r = _sweeps_local(src, dst, w, r0, _pr_update(damping, n, scale), n_iter, scale)
+    return pd.DataFrame({"id": ids, "rank": r * (1.0 / float(scale))})
+
+
+def pagerank(
+    edges: DataFrame,
+    n_iter: int = 10,
+    damping: float = DAMPING,
+    iter_dp: int = PR_ITER_DP,
+) -> DataFrame:
+    """(src, dst) directed edge list -> (id, rank) after ``n_iter``
+    power sweeps of rank = (1-d)/N + d*(inflow + dangling/N).
+
+    Unweighted edges: each src splits its rank evenly across out-edges.
+    Nodes with no out-edges (dangling) teleport their whole rank.
+    Deterministic: fixed iteration count, exact-integer rank numerators
+    at scale 10**iter_dp (see module docstring).
+    """
+    return _pr_sweeps(edges.select("src", "dst"), n_iter, damping, iter_dp)
 
 
 def pagerank_auto(
@@ -182,44 +266,10 @@ def pagerank_auto(
     invisible."""
     return size_dispatch(
         edges.select("src", "dst"),
-        lambda pdf: _pagerank_local(pdf, n_iter, damping, iter_dp),
-        lambda e: pagerank(e, n_iter, damping, iter_dp),
+        lambda pdf: _pr_local(pdf, n_iter, damping, iter_dp),
+        lambda e: _pr_sweeps(e, n_iter, damping, iter_dp),
         "id {id}, rank double",
     )
-
-
-def _pagerank_local(pdf, n_iter, damping, iter_dp):
-    import numpy as np
-    import pandas as pd
-
-    ids, src, dst = _indexed(pdf)
-    n = len(ids)
-    if not n:
-        return pdf
-    out = np.bincount(src, minlength=n)
-    dangling = out == 0
-    safe_out = np.where(dangling, 1, out).astype(np.int64)
-    scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    teleport = (1.0 - damping) / float(n)
-    r_i = np.full(n, math.floor((1.0 / float(n)) * float(scale) + 0.5), dtype=np.int64)
-    for _ in range(n_iter):
-        contrib_i = r_i // safe_out  # exact int64; dangling never appear as src
-        # integer-valued float64 sums are exact below 2^53 (total rank
-        # mass <= scale = 1e12), hence order-independent
-        inflow_i = np.bincount(
-            dst, weights=contrib_i[src].astype(np.float64), minlength=n
-        )
-        dmass_i = int(r_i[dangling].sum())
-        r_i = np.floor(
-            (
-                teleport
-                + damping * (inflow_i * inv + (float(dmass_i) * inv) / float(n))
-            )
-            * float(scale)
-            + 0.5
-        ).astype(np.int64)
-    return pd.DataFrame({"id": ids, "rank": r_i * inv})
 
 
 def personalized_pagerank(
@@ -228,7 +278,6 @@ def personalized_pagerank(
     n_iter: int = 10,
     damping: float = DAMPING,
     iter_dp: int = PR_ITER_DP,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Personalized PageRank (random-walk-with-restart): teleport mass
     goes to ``seeds`` (1/|S| each) instead of uniformly to all nodes,
@@ -256,8 +305,17 @@ def personalized_pagerank(
     return size_dispatch(
         edges.select("src", "dst"),
         lambda pdf: _ppr_local(pdf, seed_set, n_iter, damping, iter_dp),
-        lambda e: _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp, checkpoint_every),
+        lambda e: _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp),
         "id {id}, rank double",
+    )
+
+
+def _ppr_update(damping: float, t, scale: int):
+    """Personalized PageRank's update over the teleport vector ``t`` (a
+    Column or an ndarray): (1-d)*t + d*(inflow*inv + dmass*inv*t)."""
+    inv = 1.0 / float(scale)
+    return lambda inflow, dmass: (
+        (1.0 - damping) * t + damping * (inflow * inv + dmass * inv * t)
     )
 
 
@@ -266,111 +324,54 @@ def _ppr_local(pdf, seed_set, n_iter, damping, iter_dp):
     import pandas as pd
 
     ids, src, dst = _indexed(pdf)
-    n = len(ids)
     missing = sorted(set(seed_set) - set(ids.tolist()))
     if missing:
         raise KeyError(f"seeds not present in the edge list: {missing}")
-    pos = np.searchsorted(ids, np.array(seed_set))
-    out = np.bincount(src, minlength=n)
-    dangling = out == 0
-    safe_out = np.where(dangling, 1, out).astype(np.int64)
     scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    t = np.zeros(n)
-    t[pos] = 1.0 / float(len(seed_set))
-    r_i = np.floor(t * float(scale) + 0.5).astype(np.int64)
-    for _ in range(n_iter):
-        contrib_i = r_i // safe_out
-        inflow_i = np.bincount(
-            dst, weights=contrib_i[src].astype(np.float64), minlength=n
-        )
-        dmass_i = int(r_i[dangling].sum())
-        r_i = np.floor(
-            (
-                (1.0 - damping) * t
-                + damping * (inflow_i * inv + (float(dmass_i) * inv) * t)
-            )
-            * float(scale)
-            + 0.5
-        ).astype(np.int64)
-    return pd.DataFrame({"id": ids, "rank": r_i * inv})
+    t = np.zeros(len(ids))
+    t[np.searchsorted(ids, np.array(seed_set))] = 1.0 / float(len(seed_set))
+    r0 = np.floor(t * float(scale) + 0.5).astype(np.int64)
+    ones = np.ones(len(src), np.int64)
+    r = _sweeps_local(src, dst, ones, r0, _ppr_update(damping, t, scale), n_iter, scale)
+    return pd.DataFrame({"id": ids, "rank": r * (1.0 / float(scale))})
 
 
-def _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp, checkpoint_every):
-    ts = 1.0 / float(len(seed_set))
-    scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    ep = e.repartition("src").persist()
-    nodes = (
-        ep.select(F.col("src").alias("id"))
-        .union(ep.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    outdeg = ep.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # sorted-once persisted edge layout — see pagerank()
-    ed = ep.join(outdeg, "src").sortWithinPartitions("src").persist()
-    ed.count()
-    # teleport vector baked into the persisted node table (loop-invariant)
-    tv = nodes.select(
-        "id",
-        F.when(F.col("id").isin(seed_set), F.lit(ts)).otherwise(F.lit(0.0)).alias("t"),
-    ).persist()
-    n_seeds_found = tv.where(F.col("t") > 0).count()
-    if n_seeds_found != len(seed_set):
-        ed.unpersist(); ep.unpersist(); tv.unpersist()
+def _ppr_sweeps(e, seed_set, n_iter, damping, iter_dp):
+    # the teleport vector is baked into the persisted node table
+    t = F.when(F.col("id").isin(seed_set), F.lit(1.0 / float(len(seed_set))))
+    ed, tv, dangling, _ = _layout(e, F.count(F.lit(1)), t.otherwise(F.lit(0.0)))
+    if tv.where(F.col("t") > 0).count() != len(seed_set):
+        for df in (ed, tv, dangling):
+            df.unpersist()
         raise KeyError("some seeds are not present in the edge list")
-    dangling_ids = tv.select("id").join(
-        ep.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).persist()
-    dangling_ids.count()
-    ep.unpersist()
-
-    ranks = tv.select(
-        "id", _rank_expr(F.col("t"), scale).alias("rank_i")
+    scale = 10**iter_dp
+    ranks = _sweeps(
+        ed,
+        tv,
+        _rank_expr(F.col("t"), scale),
+        "srank_i div s",
+        _ppr_update(damping, F.col("t"), scale),
+        dangling,
+        n_iter,
+        scale,
     )
-    for i in range(n_iter):
-        src_rank = ranks.select(
-            F.col("id").alias("src"), F.col("rank_i").alias("srank_i")
-        )
-        inflow = (
-            ed.join(src_rank, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.expr("srank_i div outdeg")).alias("inflow_i"))
-        )
-        dmass = (
-            ranks.join(dangling_ids.hint("shuffle_hash"), "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank_i"), F.lit(0)).cast("long").alias("dmass_i"))
-        )
-        ranks = (
-            tv.join(inflow.hint("shuffle_hash"), "id", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "id",
-                _rank_expr(
-                    F.lit(1.0 - damping) * F.col("t")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow_i"), F.lit(0)).cast("double")
-                        * F.lit(inv)
-                        + F.col("dmass_i").cast("double") * F.lit(inv) * F.col("t")
-                    ),
-                    scale,
-                ).alias("rank_i"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = materialize(ranks)
-    out = materialize(
-        ranks.select("id", (F.col("rank_i").cast("double") * F.lit(inv)).alias("rank"))
-    )
-    ed.unpersist()
-    tv.unpersist()
-    dangling_ids.unpersist()
-    return out
+    return _scaled(ranks, scale, "rank")
 
 
 WPR_ITER_DP = 9
 WPR_WEIGHT_DP = 6
+
+
+def _quantized(edges: DataFrame, weight_dp: int) -> DataFrame:
+    """(src, dst, weight) -> (src, dst, w_q), w_q = floor(w·10^dp + 0.5)
+    int64, zero-quantized edges dropped."""
+    return edges.select(
+        "src",
+        "dst",
+        F.floor(F.col("weight") * F.lit(float(10**weight_dp)) + F.lit(0.5))
+        .cast("long")
+        .alias("w_q"),
+    ).where(F.col("w_q") > 0)
 
 
 def weighted_pagerank(
@@ -379,7 +380,6 @@ def weighted_pagerank(
     damping: float = DAMPING,
     iter_dp: int = WPR_ITER_DP,
     weight_dp: int = WPR_WEIGHT_DP,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(src, dst, weight) -> (id, rank): PageRank where each source
     splits its rank proportionally to edge weight — entity salience
@@ -397,83 +397,7 @@ def weighted_pagerank(
     unweighted 12) so rank_i * w_q <= 10^9·10^6 = 10^15 stays exact in
     int64 AND in the double converts. Dangling = no kept out-edge.
     """
-    w_scale = 10**weight_dp
-    e = (
-        edges.select(
-            "src",
-            "dst",
-            F.floor(F.col("weight") * F.lit(float(w_scale)) + F.lit(0.5))
-            .cast("long")
-            .alias("w_q"),
-        )
-        .where(F.col("w_q") > 0)
-        .repartition("src")
-        .persist()
-    )
-    nodes = materialize(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        return nodes.select("id", F.lit(0.0).alias("rank"))
-    strength = e.groupBy("src").agg(F.sum("w_q").alias("strength"))
-    ed = e.join(strength, "src").sortWithinPartitions("src").persist()
-    ed.count()
-    dangling_ids = nodes.join(
-        e.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).persist()
-    dangling_ids.count()
-    e.unpersist()
-    scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    teleport = (1.0 - damping) / float(n)
-
-    r0 = math.floor((1.0 / float(n)) * float(scale) + 0.5)
-    ranks = nodes.select("id", F.lit(r0).cast("long").alias("rank_i"))
-    for i in range(n_iter):
-        src_rank = ranks.select(
-            F.col("id").alias("src"), F.col("rank_i").alias("srank_i")
-        )
-        inflow = (
-            ed.join(src_rank, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.expr("(srank_i * w_q) div strength")).alias("inflow_i"))
-        )
-        dmass = (
-            ranks.join(dangling_ids.hint("shuffle_hash"), "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank_i"), F.lit(0)).cast("long").alias("dmass_i"))
-        )
-        ranks = (
-            nodes.join(inflow.hint("shuffle_hash"), "id", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "id",
-                _rank_expr(
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow_i"), F.lit(0)).cast("double")
-                        * F.lit(inv)
-                        + F.col("dmass_i").cast("double")
-                        * F.lit(inv)
-                        / F.lit(float(n))
-                    ),
-                    scale,
-                ).alias("rank_i"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = materialize(ranks)
-    out = materialize(
-        ranks.select("id", (F.col("rank_i").cast("double") * F.lit(inv)).alias("rank"))
-    )
-    ed.unpersist()
-    nodes.unpersist()
-    dangling_ids.unpersist()
-    return out
+    return _pr_sweeps(_quantized(edges, weight_dp), n_iter, damping, iter_dp)
 
 
 def weighted_pagerank_auto(
@@ -488,60 +412,13 @@ def weighted_pagerank_auto(
     int64 sums) plus the single fixed-order float update make the
     numpy twin bit-identical to the distributed loop — parity-tested
     on long and string ids, dangling mass, and zero-weight edge
-    drops."""
-    e = edges.select(
-        "src",
-        "dst",
-        F.floor(F.col("weight") * F.lit(float(10**weight_dp)) + F.lit(0.5))
-        .cast("long")
-        .alias("w_q"),
-    ).where(F.col("w_q") > 0)
-    # the distributed path gets the quantized integers as weights at
-    # weight_dp=0: the inner floor(w_q*1+0.5) reproduces w_q exactly for
-    # every integer-valued double < 2^53 (a w_q/10^dp division would
-    # drift past ~2^51), and the sweep math consumes only w_q — identical
+    drops. Both paths take the quantized (src, dst, w_q) frame."""
     return size_dispatch(
-        e,
-        lambda pdf: _weighted_pagerank_local(pdf, n_iter, damping, iter_dp),
-        lambda e: weighted_pagerank(
-            e.select("src", "dst", F.col("w_q").cast("double").alias("weight")),
-            n_iter,
-            damping,
-            iter_dp,
-            weight_dp=0,
-        ),
+        _quantized(edges, weight_dp),
+        lambda pdf: _pr_local(pdf, n_iter, damping, iter_dp),
+        lambda e: _pr_sweeps(e, n_iter, damping, iter_dp),
         "id {id}, rank double",
     )
-
-
-def _weighted_pagerank_local(pdf, n_iter, damping, iter_dp):
-    import numpy as np
-    import pandas as pd
-
-    ids, src, dst = _indexed(pdf)
-    n = len(ids)
-    if not n:
-        return pdf
-    w_q = pdf["w_q"].values.astype(np.int64)
-    strength = np.zeros(n, dtype=np.int64)
-    np.add.at(strength, src, w_q)
-    dangling = strength == 0
-    scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    teleport = (1.0 - damping) / float(n)
-    rank_i = np.full(n, math.floor((1.0 / float(n)) * float(scale) + 0.5), dtype=np.int64)
-    safe_strength = np.where(dangling, 1, strength)
-    for _ in range(n_iter):
-        contrib = (rank_i[src] * w_q) // safe_strength[src]
-        inflow = np.zeros(n, dtype=np.int64)
-        np.add.at(inflow, dst, contrib)
-        dmass = int(rank_i[dangling].sum())
-        # engine float-op order: tele + d*(inflow*inv + dmass*inv/n)
-        update = teleport + damping * (
-            inflow.astype(np.float64) * inv + float(dmass) * inv / float(n)
-        )
-        rank_i = np.floor(update * float(scale) + 0.5).astype(np.int64)
-    return pd.DataFrame({"id": ids, "rank": rank_i.astype(np.float64) * inv})
 
 
 KATZ_BETA = 0.05
@@ -566,12 +443,17 @@ def _katz_overflow_check(minmax, beta: float) -> None:
         )
 
 
+def _katz_update(beta: float, scale: int):
+    """Katz's update: 1 + beta*(inflow*inv) (no dangling term)."""
+    inv = 1.0 / float(scale)
+    return lambda inflow, _dmass: 1.0 + beta * (inflow * inv)
+
+
 def katz_centrality(
     edges: DataFrame,
     n_iter: int = 8,
     beta: float = KATZ_BETA,
     iter_dp: int = KATZ_ITER_DP,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Katz centrality by fixed truncated sweeps of
     x <- 1 + beta * A^T x (x_0 = 1): x(v) counts incoming walks of
@@ -581,69 +463,28 @@ def katz_centrality(
 
     Same engine-parity contract as pagerank: int64 numerators at scale
     10**iter_dp, exact integer inflow sums, and a fixed-order float
-    update floor((1.0 + beta * (inflow * inv)) * scale + 0.5) mirrored
-    verbatim by the DuckDB twin and the numpy twin. Keep
+    update floor((1.0 + beta * (inflow * inv)) * scale + 0.5) written
+    once for the distributed sweep and the numpy twin and mirrored
+    verbatim by the DuckDB twin. Keep
     beta * max_in_degree modest: values grow geometrically when
     beta * lambda_max >= 1, and the truncated sum is still
     well-defined but the int64 numerators must stay under 2^53 for the
     float64 aggregation paths (beta=0.05, dp=9 gives ~3 orders of
-    headroom on degree <= 50 graphs).
+    headroom on degree <= 50 graphs); past that it raises ValueError.
 
-    Scale: identical sweep shape to pagerank minus the out-degree join
-    and the dangling pass — sorted-once persisted edge layout, per
-    sweep one node-sized rank shuffle in + one hash-agg out.
+    Scale: the shared ``_sweeps`` shape minus the divisor join and the
+    dangling pass — sorted-once persisted edge layout, per sweep one
+    node-sized rank shuffle in + one hash-agg out, lineage broken
+    every sweep.
     """
-    id_t = edges.schema["src"].dataType.simpleString()
-    e = edges.select("src", "dst").repartition("src").persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], f"id {id_t}, katz double")
-    ed = e.sortWithinPartitions("src").persist()
-    ed.count()
-    e.unpersist()
+    ed, nodes, _, _ = _layout(edges.select("src", "dst"))
     scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    ranks = nodes.select("id", F.lit(int(scale)).cast("long").alias("x_i"))
-    for i in range(n_iter):
-        src_rank = ranks.select(
-            F.col("id").alias("src"), F.col("x_i").alias("sx_i")
-        )
-        inflow = (
-            ed.join(src_rank, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("sx_i").alias("inflow_i"))
-        )
-        ranks = (
-            nodes.join(inflow.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                _rank_expr(
-                    F.lit(1.0)
-                    + F.lit(beta)
-                    * (
-                        F.coalesce(F.col("inflow_i"), F.lit(0)).cast("double")
-                        * F.lit(inv)
-                    ),
-                    scale,
-                ).cast("long").alias("x_i"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == n_iter - 1:
-            ranks = ranks.transform(materialize)
-    nodes.unpersist()
-    ed.unpersist()
-    _katz_overflow_check(
-        ranks.agg(F.min("x_i"), F.max("x_i")).first(), beta=beta
+    ranks = _sweeps(
+        ed, nodes, F.lit(int(scale)).cast("long"), "srank_i",
+        _katz_update(beta, scale), None, n_iter, scale,
     )
-    return ranks.select("id", (F.col("x_i").cast("double") * F.lit(inv)).alias("katz"))
+    _katz_overflow_check(ranks.agg(F.min("rank_i"), F.max("rank_i")).first(), beta=beta)
+    return _scaled(ranks, scale, "katz")
 
 
 def katz_auto(
@@ -669,16 +510,9 @@ def _katz_local(pdf, n_iter, beta, iter_dp):
     import pandas as pd
 
     ids, src, dst = _indexed(pdf)
-    n = len(ids)
     scale = 10**iter_dp
-    inv = 1.0 / float(scale)
-    x_i = np.full(n, int(scale), dtype=np.int64)
-    for _ in range(n_iter):
-        inflow = np.zeros(n, dtype=np.int64)
-        np.add.at(inflow, dst, x_i[src])
-        x_i = np.floor(
-            (1.0 + beta * (inflow.astype(np.float64) * inv)) * float(scale) + 0.5
-        ).astype(np.int64)
-    if n:
-        _katz_overflow_check((int(x_i.min()), int(x_i.max())), beta=beta)
-    return pd.DataFrame({"id": ids, "katz": x_i * inv})
+    x0 = np.full(len(ids), int(scale), dtype=np.int64)
+    x = _sweeps_local(src, dst, None, x0, _katz_update(beta, scale), n_iter, scale)
+    if len(x):
+        _katz_overflow_check((int(x.min()), int(x.max())), beta=beta)
+    return pd.DataFrame({"id": ids, "katz": x * (1.0 / float(scale))})

@@ -87,6 +87,23 @@ def test_eigensolve_auto_nonsymmetric_distributed_raises(spark, force_distribute
         eigensolve_auto(edges, k=2, symmetric=False)
 
 
+def test_eigensolve_auto_nonsymmetric_past_nodes_raises_before_checkpoint(spark, monkeypatch):
+    """Past MAX_LOCAL_NODES the twin itself raises the symmetric-only
+    ValueError, so size_dispatch never checkpoints (re-runs) the
+    upstream for a distributed solve that cannot happen."""
+    from simkit_spark.operators import eigen
+
+    calls = []
+    monkeypatch.setattr(eigen, "MAX_LOCAL_NODES", 4)
+    monkeypatch.setattr("simkit_spark.util.materialize", lambda *a, **k: calls.append(a))
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 8, 1.0) for i in range(8)], "src long, dst long, weight double"
+    )
+    with pytest.raises(ValueError, match="symmetric"):
+        eigen.eigensolve_auto(edges, k=2, symmetric=False)
+    assert calls == []
+
+
 def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark, monkeypatch):
     """Duplicate edge rows can push the edge-row count past the dispatch
     budget while the de-duplicated graph fits; symmetric=False must

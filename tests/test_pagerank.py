@@ -436,3 +436,65 @@ def test_katz_overflow_guard_raises(spark, force_distributed):
         katz_auto(e, n_iter=4, beta=10.0)
     with pytest.raises(ValueError, match="2\\^53"):
         katz_auto(e, n_iter=4, beta=10.0)
+
+
+@pytest.mark.parametrize("op", ["ppr", "wpr", "katz"])
+def test_family_distributed_partition_invariant(spark, force_distributed, op):
+    """Exact-integer sums make every distributed sweep of the family
+    independent of the input partitioning, bit for bit (string ids,
+    dangling sinks)."""
+    from simkit_spark.operators.pagerank import (
+        katz_auto,
+        personalized_pagerank,
+        weighted_pagerank_auto,
+    )
+
+    rows = [(f"v{i}", f"v{(i * 7 + 3) % 24}", 0.1 + (i % 9) / 10) for i in range(40)]
+    rows += [("v1", "sink:a", 0.35), ("v2", "sink:b", 0.8), ("v30", "sink:a", 0.05)]
+    df = spark.createDataFrame(rows, "src string, dst string, weight double").where(
+        "src <> dst"
+    )
+    run = {
+        "ppr": lambda d: personalized_pagerank(d, ["v1", "v5"], n_iter=6),
+        "wpr": lambda d: weighted_pagerank_auto(d, n_iter=6),
+        "katz": lambda d: katz_auto(d, n_iter=6),
+    }[op]
+    with force_distributed():
+        got = [
+            sorted(map(tuple, run(d).collect()))
+            for d in (df, df.repartition(3), df.repartition(7))
+        ]
+    assert got[0] and got[0] == got[1] == got[2]
+
+
+def test_katz_inflow_past_2_53_stays_exact(spark, force_distributed):
+    """Numerators stay under 2^53 but a hub's inflow SUM passes it
+    (here ~15·2^53): both paths must sum in exact int64 — a float64
+    accumulator rounds there and moves the hub's numerator."""
+    import random
+
+    from simkit_spark.operators.pagerank import katz_auto
+
+    rng = random.Random(11)
+    edges = []
+    for m in range(200):
+        edges += [(f"l{a}", f"m{m}") for a in rng.sample(range(40), 1 + m % 5)]
+    for h in range(8):
+        edges += [(f"m{m}", f"h{h}") for m in rng.sample(range(200), 128)]
+    beta, scale = 1 / 30, 10**15
+    x = {v: scale for e in edges for v in e}
+    for _ in range(2):
+        inflow = dict.fromkeys(x, 0)
+        for s, t in edges:
+            inflow[t] += x[s]  # python ints: exact
+        x = {
+            v: math.floor((1.0 + beta * (float(inflow[v]) * (1.0 / scale))) * float(scale) + 0.5)
+            for v in x
+        }
+    want = sorted((v, x[v] * (1.0 / scale)) for v in x)
+    e = spark.createDataFrame(edges, "src string, dst string")
+    assert max(inflow.values()) > 2**56 and max(x.values()) < 2**53
+    assert sorted(map(tuple, katz_auto(e, n_iter=2, beta=beta, iter_dp=15).collect())) == want
+    with force_distributed():
+        dist = sorted(map(tuple, katz_auto(e, n_iter=2, beta=beta, iter_dp=15).collect()))
+    assert dist == want
