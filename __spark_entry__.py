@@ -56,8 +56,13 @@ GNN_FANOUTS = [3, 2]  # GraphSAGE sampling fanouts per hop
 
 
 # ---------------------------------------------------------------- loaders
+# the embeddings table's parquet schema, declared: an inferred schema
+# costs a footer-reading Spark job on every read of the table
+_EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    return spark.read.schema(_EMB_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("vec"),
         "label",
@@ -1493,7 +1498,9 @@ def _kg_triples(spark, sf_dir):
     return t.select("subj", "pred", "obj").distinct()
 
 
-_TPCH_NAMES = ["orders", "lineitem", "customer", "supplier", "part", "nation", "region"]
+# the tables kg.relational_triples reads (region is only an IRI
+# prefix there: nation part_of region:<n_regionkey>)
+_TPCH_NAMES = ["orders", "lineitem", "customer", "supplier", "part", "nation"]
 
 
 _KG_REL_CACHE: dict = {}

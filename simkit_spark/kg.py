@@ -1256,13 +1256,16 @@ def rule_mining(
     levels the chain pair space is 9x the base one. This is AMIE's
     practice of mining over base facts.
 
-    Size-dispatched (``util.size_dispatch``) on the distinct
-    (pred, subj, obj) table. Both paths produce the same integer count
-    table (everything but the two ratios, support >= min_support):
+    Size-dispatched (``util.size_dispatch``) on the (pred, subj, obj)
+    projection, with no Spark ``distinct`` ahead of the dispatch: the
+    usual input (an entailed KG) is distinct already, so the row budget
+    counts duplicate rows where there are any. Both paths de-duplicate
+    and produce the same integer count table (everything but the two
+    ratios, support >= min_support):
 
     - driver-sized: one Arrow collect and a numpy twin
       (:func:`_rule_counts_local`) over factorized entity/predicate
-      codes. A driver-sized triple table can still have a quadratic
+      codes, de-duplicated there. A driver-sized triple table can still have a quadratic
       chain space, so before any merge the twin computes the exact
       chain pair space sum_z in(z)*out(z) (from bincounts) and the row
       counts of its two (x, y)-keyed self-merges, and declines —
@@ -1270,7 +1273,8 @@ def rule_mining(
       byte budget's worth of three-long rows
       (``util.local_dispatch_rows``, ~2.8M rows for 64 MiB); the head
       match of the distinct chain pairs is held to the same bound.
-    - otherwise: the distributed plan (:func:`_rule_counts_dist`).
+    - otherwise: the distributed plan (:func:`_rule_counts_dist`) over
+      the materialized ``distinct()`` of the projection.
 
     The ratios are then ONE Spark projection over either count table,
     so they are Spark's rounded division on both paths.
@@ -1295,9 +1299,11 @@ def rule_mining(
     """
     excl = list(chain_exclude or [])
     counts = size_dispatch(
-        triples.select("pred", "subj", "obj").distinct(),
+        triples.select("pred", "subj", "obj"),
         lambda pdf: _rule_counts_local(pdf, min_support, max_join_degree, excl),
-        lambda t: _rule_counts_dist(t, min_support, max_join_degree, excl),
+        lambda t: _rule_counts_dist(
+            materialize(t.distinct()), min_support, max_join_degree, excl
+        ),
         "rule_type string, body1 string, body2 string, head string, "
         "support long, body_size long, head_size long",
     )
@@ -1468,7 +1474,7 @@ def _rule_counts_local(
     pdf: pd.DataFrame, min_support: int, max_join_degree: int, chain_exclude: list[str]
 ) -> pd.DataFrame | None:
     """Driver twin of :func:`_rule_counts_dist` over the collected
-    distinct triple frame, or None when a join it would run exceeds
+    triple frame (duplicates allowed), or None when a join it would run exceeds
     the driver budget. Null cells behave as in the Spark plan: sizes
     count every row of their predicate, equi-joins never match a null
     key, and a null predicate scores no rule (its body and head groups
@@ -1479,6 +1485,15 @@ def _rule_counts_local(
     p, preds = pd.factorize(pdf["pred"])
     p, names = p.astype(np.int64), preds.to_numpy(dtype=object)
     n_ent, n_pred = max(len(ents), 1), max(len(names), 1)
+    # the distinct triples: one (p, s, o) lexsort, then the first row of
+    # each run; null cells (code -1) equal each other, as in Spark's
+    # distinct. No packed key: (p, s, o) codes outgrow int64 past ~1.3M
+    # rows, which a patched dispatch budget can reach.
+    order = np.lexsort((o, s, p))
+    p, s, o = p[order], s[order], o[order]
+    first = np.ones(n, dtype=bool)
+    first[1:] = (p[1:] != p[:-1]) | (s[1:] != s[:-1]) | (o[1:] != o[:-1])
+    p, s, o = p[first], s[first], o[first]
     size = np.bincount(p[p >= 0], minlength=n_pred)
 
     # heads (pred, x*n_ent + y), sorted by key; rkey is each head

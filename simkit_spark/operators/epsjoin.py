@@ -25,6 +25,10 @@ Every step is a column expression or an Arrow-batched numpy block; the
 only shuffle is the groupBy(cell). Parallelism = P cells and the eps
 predicate is applied inside candidate generation, which is the whole
 point.
+
+Driver-sized inputs (up to kernels.MAX_LOCAL_POINTS points) skip all of
+this: one Arrow collect and one numpy pass over the kernel matrix on
+the driver (see eps_neighbor_pairs).
 """
 
 from __future__ import annotations
@@ -33,9 +37,19 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from .kernels import np_kernel
+from .. import util
+from ..util import size_dispatch
+from .kernels import (
+    MAX_LOCAL_POINTS,
+    _local_matrix,
+    _pairwise_numpy,
+    _points,
+    auto_n_blocks,
+    np_kernel,
+    rows_and_dim,
+)
 
 
 def _pivot_matrix(
@@ -68,6 +82,17 @@ def eps_neighbor_pairs(
     (``strict=True`` -> < eps, the reference eps-graph semantics,
     ReadCsvTestData.java:308-326). Exact under every method.
 
+    Size-dispatched (``util.size_dispatch``) on the (id, vec) points:
+    up to ``kernels.MAX_LOCAL_POINTS`` they come back in one Arrow
+    collect and :func:`_eps_local` evaluates the kernel matrix on the
+    driver, keeping each pair under the same claim rule as the cell
+    tasks (src = the smaller id), so both paths return the same rows
+    bit for bit. The twin declines (returns None, and the points take
+    the distributed plan) when the matches would pass
+    ``util.local_dispatch_rows`` of the output schema. ``method``,
+    ``n_pivots``, ``seed`` and ``chunk`` only shape the distributed
+    plan:
+
     method="pivot": the partitioned join described above — wins when
     the data has locality at the eps scale (cells prune most pairs).
     method="block": the chunked block kernel with the eps predicate
@@ -85,19 +110,71 @@ def eps_neighbor_pairs(
 
     ``kernel`` must be a metric for the pivot path (euclidean /
     manhattan; triangle-inequality windows are unsound for
-    cosine/jaccard similarities); block accepts any kernel."""
-    out_cols = "src long, dst long" + (", dist double" if with_dist else "")
-    pts = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    pts = pts.localCheckpoint()
-    n = pts.count()
-    if n == 0:
-        return pts.sparkSession.createDataFrame([], out_cols)
+    cosine/jaccard similarities); block accepts any kernel. An explicit
+    ``method="pivot"`` with another kernel raises before any job runs."""
     if method != "block" and kernel not in ("euclidean", "manhattan"):
         if method == "pivot":
             raise ValueError(
                 f"eps_neighbor_pairs(method='pivot') needs a metric kernel, got {kernel!r}"
             )
         method = "block"
+    pts = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    return size_dispatch(
+        pts,
+        lambda pdf: _eps_local(pdf, eps, kernel, strict, directed, with_dist),
+        lambda p: _eps_dist(
+            p, eps, kernel, n_pivots, seed, strict, directed, with_dist, chunk, method
+        ),
+        "src long, dst long" + (", dist double" if with_dist else ""),
+        default_rows=MAX_LOCAL_POINTS,
+    )
+
+
+def _eps_local(
+    pdf: pd.DataFrame,
+    eps: float,
+    kernel: str,
+    strict: bool,
+    directed: bool,
+    with_dist: bool,
+) -> pd.DataFrame | None:
+    """Driver twin of :func:`_eps_dist` over the collected points, or
+    None when its output rows would pass the driver budget (counted
+    before any row is built)."""
+    ids, v = _points(pdf)
+    d = _local_matrix(v, kernel)
+    ok = (d < eps) if strict else (d <= eps)
+    ok &= ids[:, None] < ids[None, :]
+    cols = ["src", "dst"] + (["dist"] if with_dist else [])
+    schema = T.StructType(
+        [T.StructField(c, T.DoubleType() if c == "dist" else T.LongType()) for c in cols]
+    )
+    if np.count_nonzero(ok) * (2 if directed else 1) > util.local_dispatch_rows(schema):
+        return None
+    i, j = np.nonzero(ok)
+    if directed:
+        i, j = np.concatenate([i, j]), np.concatenate([j, i])
+    return pd.DataFrame({"src": ids[i], "dst": ids[j], "dist": d[i, j]})[cols]
+
+
+def _eps_dist(
+    pts: DataFrame,
+    eps: float,
+    kernel: str,
+    n_pivots: int | None,
+    seed: int,
+    strict: bool,
+    directed: bool,
+    with_dist: bool,
+    chunk: int,
+    method: str,
+) -> DataFrame:
+    """The pivot / block plans of :func:`eps_neighbor_pairs` over the
+    materialized (id, vec) points."""
+    out_schema = "src long, dst long" + (", dist double" if with_dist else "")
+    n, dim = rows_and_dim(pts)
+    if n == 0:
+        return pts.sparkSession.createDataFrame([], out_schema)
     if n_pivots is None:
         n_pivots = int(min(max(int(np.ceil(np.sqrt(n))), 1), 1024))
     pivots = None
@@ -115,11 +192,6 @@ def eps_neighbor_pairs(
         est_copies = float((dpp <= r_proxy[None, :] + eps).sum(1).mean()) + 1.0
         method = "pivot" if est_copies <= max(4.0, np.sqrt(len(pivots))) else "block"
     if method == "block":
-        from .kernels import _pairwise_numpy, auto_n_blocks, vec_dim
-
-        # dim from the probe's pivot matrix when available (free);
-        # otherwise one limit-1 job on the checkpointed points
-        dim = pivots.shape[1] if pivots is not None and len(pivots) else vec_dim(pts)
         n_blocks = auto_n_blocks(
             n, pts.sparkSession.sparkContext.defaultParallelism, dim=dim
         )
@@ -179,8 +251,6 @@ def eps_neighbor_pairs(
     fanned = pts.mapInPandas(
         fan_fn, "cell int, id long, vec array<double>, is_home boolean"
     )
-
-    out_schema = "src long, dst long" + (", dist double" if with_dist else "")
 
     def cell_fn(key, pdf):
         hm = pdf[pdf["is_home"]]

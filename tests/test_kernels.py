@@ -149,3 +149,86 @@ def test_auto_n_blocks_dim_aware():
     assert _task_chunk(2048, np.zeros((10, 32))) == 2048
     assert _task_chunk(2048, np.zeros((10, 512))) == 256
     assert _task_chunk(2048, np.zeros((0,))) == 2048
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _emb(spark):
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["euclidean", "manhattan", "cosine", "k_ge_n", "ties", "empty"]
+)
+def test_pairwise_topk_local_matches_distributed(spark, force_distributed, case):
+    """The driver twin returns the block plan's rows bit for bit:
+    distances, the (dist, dst) tie order and the ranks."""
+    import numpy as np
+
+    from simkit_spark.operators.kernels import pairwise_topk
+
+    rng = np.random.RandomState(7)
+    ids = rng.permutation(1000)[:150] * 3  # sparse, unordered ids
+    rows = [(int(i), rng.randn(8).tolist()) for i in ids]
+    k, kernel, largest = 6, "euclidean", False
+    if case == "manhattan":
+        kernel = "manhattan"
+    elif case == "cosine":
+        kernel, largest = "cosine", True
+    elif case == "k_ge_n":
+        rows, k = rows[:9], 12
+    elif case == "ties":  # integer grid: duplicate points, equal distances
+        rows = [(int(i), np.round(rng.randn(3)).tolist()) for i in ids]
+    elif case == "empty":
+        rows = []
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    local = _rows(pairwise_topk(df, k, kernel, largest=largest))
+    with force_distributed():
+        dist = _rows(pairwise_topk(df, k, kernel, largest=largest, n_blocks=3))
+    assert local == dist
+    assert len(local) == len(rows) * min(k, max(len(rows) - 1, 0))
+
+
+def test_cosine_is_independent_of_blocking(spark, force_distributed):
+    """Cosine distances must not depend on how the points are blocked
+    (a BLAS matmul sums in a block-shape-dependent order), or the
+    result would depend on the cluster's parallelism."""
+    from simkit_spark.operators.kernels import pairwise_distances, pairwise_topk
+
+    emb = _emb(spark).localCheckpoint()
+    with force_distributed():
+        tops = [
+            _rows(pairwise_topk(emb, 10, "cosine", n_blocks=b, largest=True))
+            for b in (1, 2, 3, 5)
+        ]
+    assert all(t == tops[0] for t in tops[1:])
+    dists = [_rows(pairwise_distances(emb, "cosine", n_blocks=b)) for b in (1, 2, 3, 5)]
+    assert all(d == dists[0] for d in dists[1:])
+
+
+@pytest.mark.parametrize("op", ["topk", "eps"])
+def test_driver_sized_similarity_graph_is_one_job(spark, op):
+    """On the local path the bounded Arrow collect is the only Spark
+    job: no row count, no checkpoint, no block plan."""
+    from simkit_spark.operators.epsjoin import eps_neighbor_pairs
+    from simkit_spark.operators.kernels import pairwise_topk
+
+    emb = _emb(spark)
+    sc = spark.sparkContext
+    group = f"similarity-local-{op}"
+    sc.setJobGroup(group, group)
+    try:
+        if op == "topk":
+            out = pairwise_topk(emb, 5)
+        else:
+            out = eps_neighbor_pairs(emb, 1.15, strict=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()

@@ -40,7 +40,7 @@ def _pairs_oracle(pdf: pd.DataFrame, where: str) -> set:
 
 
 @pytest.mark.parametrize("method", ["block", "pivot"])
-def test_eps_cut_exact_and_sqrt_ties(spark, method):
+def test_eps_cut_exact_and_sqrt_ties(spark, method, force_distributed):
     from simkit_spark.operators.epsjoin import eps_neighbor_pairs
 
     # integer grid: many dists exactly 1.0 and sqrt(2); eps below,
@@ -49,11 +49,19 @@ def test_eps_cut_exact_and_sqrt_ties(spark, method):
     pdf = pd.DataFrame({"id": [p[0] for p in pts], "vec": [p[1] for p in pts]})
     df = spark.createDataFrame(pdf, "id long, vec array<double>")
     for eps, strict in [(1.0, True), (1.0, False), (float(np.sqrt(2.0)), True), (float(np.sqrt(2.0)), False)]:
+        want = _pairs_oracle(pdf, f"< {eps!r}" if strict else f"<= {eps!r}")
+        # the grid is driver-sized: the local twin answers by default,
+        # and the forced distributed path runs the named method
         got = {
             (r["src"], r["dst"])
             for r in eps_neighbor_pairs(df, eps, strict=strict, method=method).collect()
         }
-        want = _pairs_oracle(pdf, f"< {eps!r}" if strict else f"<= {eps!r}")
+        assert got == want, (eps, strict, got ^ want)
+        with force_distributed():
+            got = {
+                (r["src"], r["dst"])
+                for r in eps_neighbor_pairs(df, eps, strict=strict, method=method).collect()
+            }
         assert got == want, (eps, strict, got ^ want)
 
 

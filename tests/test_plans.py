@@ -70,10 +70,13 @@ def test_text_ops_are_codegen(spark, docs):
         "ivf_topk",
     ],
 )
-def test_headline_plans_have_no_cartesian(spark, name):
+def test_headline_plans_have_no_cartesian(spark, name, force_distributed):
     import __spark_entry__ as e
 
-    plan = _plan(e.queries()[name](spark, SF))
+    # the kNN and eps graphs are driver-sized at sf0.01: audit the
+    # distributed plans
+    with force_distributed():
+        plan = _plan(e.queries()[name](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan, name
     assert "CartesianProduct" not in plan, name
 

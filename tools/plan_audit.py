@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import nullcontext
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -14,6 +16,11 @@ from simkit_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
+# Driver-sized at sf0.01, so their default plan is one LocalTableScan;
+# their notes describe the distributed kernel plans, which are audited
+# under a forced-distributed dispatch (as tests/test_plans.py does).
+FORCED = ("gaussian_affinity", "eps_graph")
+
 AUDITED = {
     "dup_spans": "ExactSubstr windowed-hash spans: first shuffle carries "
     "(doc_id, off, hash64) only — window text re-derived just for hash-hot "
@@ -21,10 +28,13 @@ AUDITED = {
     "pairwise_euclidean": "block fan-out is a pure column explode (no join); "
     "kernel matrices exist only inside applyInPandas tasks",
     "knn_graph": "per-block top-k kernel: the window ranks n*B*k candidate rows, "
-    "never the n^2 directed pair space",
-    "gaussian_affinity": "sigmas from the top-k kernel; equi-joins only",
+    "never the n^2 directed pair space. Size-dispatched: the sf0.01 plan "
+    "shown is the local twin's (a one-partition LocalTableScan)",
+    "gaussian_affinity": "sigmas from the top-k kernel; equi-joins only. "
+    "Size-dispatched: the plan shown is the forced distributed one",
     "eps_graph": "eps predicate applied INSIDE the kernel task (method-dispatched "
-    "pivot/block exact eps join)",
+    "pivot/block exact eps join). Size-dispatched: the plan shown is the "
+    "forced distributed one",
     "silhouette_labels": "block kernel + equi-joins + hash aggregation; "
     "no BroadcastNestedLoopJoin (round-1 regression guard)",
     "ivf_topk": "sqrt(n) cell key (no 8-value join skew); per-cell numpy rescore; "
@@ -269,7 +279,9 @@ def main() -> None:
         "",
     ]
     for name, note in AUDITED.items():
-        df = qs[name](spark, SF)
+        force = mock.patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1)
+        with force if name in FORCED else nullcontext():
+            df = qs[name](spark, SF)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
