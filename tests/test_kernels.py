@@ -4,6 +4,8 @@ to 2 dp exactly as the reference asserts (:115-121)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from simkit_spark.operators.kernels import pairwise_distances
@@ -158,7 +160,8 @@ def _rows(df):
 def _emb(spark):
     from pyspark.sql import functions as F
 
-    return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
+    path = Path(__file__).parent.parent / "perfbench/testdata/sf0.01/embeddings.parquet"
+    return spark.read.parquet(str(path)).select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
     )
 
