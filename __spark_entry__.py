@@ -72,6 +72,21 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
+def _per_app(cache: dict, spark, key: tuple, build):
+    """The entry for ``(applicationId, *key)`` in ``cache``, built once
+    by ``build()``. A build evicts other applications' entries: their
+    checkpoint blocks died with the old executors, and the dict must
+    not grow unboundedly in a process that creates many sessions."""
+    app = spark.sparkContext.applicationId
+    full = (app, *key)
+    hit = cache.get(full)
+    if hit is None:
+        for stale in [k for k in cache if k[0] != app]:
+            del cache[stale]
+        hit = cache[full] = build()
+    return hit
+
+
 _KNN_TOPK_CACHE: dict = {}
 
 
@@ -85,26 +100,17 @@ def _knn_topk(spark, sf_dir, k=None):
     materialized stage table. Keyed by application id so a fresh
     session rebuilds instead of touching a dead checkpoint."""
     from simkit_spark.operators.kernels import pairwise_topk
+    from simkit_spark.util import materialize
 
     if k is None:
         k = KNN_K
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, k)
-    hit = _KNN_TOPK_CACHE.get(key)
-    if hit is None:
-        # evict other applications' entries: their checkpoint blocks
-        # died with the old executors, and the dict must not grow
-        # unboundedly in a process that creates many sessions
-        for stale in [k2 for k2 in _KNN_TOPK_CACHE if k2[0] != app]:
-            del _KNN_TOPK_CACHE[stale]
-        from simkit_spark.util import materialize
-
-        # reliable checkpoint when the session configured a checkpoint
-        # dir (cluster runs — survives executor loss), localCheckpoint
-        # otherwise (tests/bench)
-        hit = materialize(pairwise_topk(_emb(spark, sf_dir), k, "euclidean"))
-        _KNN_TOPK_CACHE[key] = hit
-    return hit
+    # reliable checkpoint when the session configured a checkpoint dir
+    # (cluster runs — survives executor loss), localCheckpoint
+    # otherwise (tests/bench)
+    return _per_app(
+        _KNN_TOPK_CACHE, spark, (sf_dir, k),
+        lambda: materialize(pairwise_topk(_emb(spark, sf_dir), k, "euclidean")),
+    )
 
 
 def _knn_edges(spark, sf_dir):
@@ -125,15 +131,15 @@ def _dist(spark: SparkSession, sf_dir: str, kernel: str, directed: bool = False)
 # --------------------------------------------------------------- entry
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: spectral clustering of the sf0.001 embeddings."""
-    from simkit_spark.operators.eigen import eigensolve_auto
+    from simkit_spark.operators.eigen import eigensolve
     from simkit_spark.operators.graphs import mutual_knn_from_points, symmetrize
-    from simkit_spark.operators.kmeans import kmeans_auto
+    from simkit_spark.operators.kmeans import kmeans
     from simkit_spark.operators.laplacian import laplacian
 
     emb = _emb(spark, "/root/testdata/sf0.001")
     lap = laplacian(symmetrize(mutual_knn_from_points(emb, 15)), "sym")
-    x, _ = eigensolve_auto(lap, k=3, max_iter=40, tol=1e-7, seed=42)
-    assigned, _ = kmeans_auto(x, k=3, max_iter=20, seed=42)
+    x, _ = eigensolve(lap, k=3, max_iter=40, tol=1e-7, seed=42)
+    assigned, _ = kmeans(x, k=3, max_iter=20, seed=42)
     return assigned.select("id", F.col("cluster").cast("long").alias("cluster"))
 
 
@@ -712,10 +718,10 @@ def _token_quantiles(spark, sf_dir):
 
 
 def _communities_knn(spark, sf_dir):
-    from simkit_spark.operators.labelprop import label_propagation_auto
+    from simkit_spark.operators.labelprop import label_propagation
 
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    return label_propagation_auto(edges, n_iter=LPA_ITER)
+    return label_propagation(edges, n_iter=LPA_ITER)
 
 
 SSSP_K = 6
@@ -725,12 +731,12 @@ def _sssp_knn(spark, sf_dir):
     # weighted shortest distances from node 0 over the directed kNN
     # graph (euclidean weights rounded 6dp -> engine-identical inputs),
     # bounded at SSSP_K Bellman-Ford sweeps
-    from simkit_spark.operators.sssp import bounded_sssp_auto
+    from simkit_spark.operators.sssp import bounded_sssp
 
     e = _knn_topk(spark, sf_dir).select(
         "src", "dst", F.round("dist", 6).alias("weight")
     )
-    d = bounded_sssp_auto(e, [0], k=SSSP_K)
+    d = bounded_sssp(e, [0], k=SSSP_K)
     return d.select("id", F.round("dist", 6).alias("dist"))
 
 
@@ -739,11 +745,11 @@ def _modularity_knn(spark, sf_dir):
     # per-community rows so every value is integer-derived (exact)
     from simkit_spark.operators.labelprop import (
         community_modularity,
-        label_propagation_auto,
+        label_propagation,
     )
 
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    labels = label_propagation_auto(edges, n_iter=LPA_ITER)
+    labels = label_propagation(edges, n_iter=LPA_ITER)
     return community_modularity(edges, labels)
 
 
@@ -777,11 +783,11 @@ def _conductance_knn(spark, sf_dir):
     # all-integer inputs, per-row IEEE division (exact oracle parity)
     from simkit_spark.operators.labelprop import (
         community_conductance,
-        label_propagation_auto,
+        label_propagation,
     )
 
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    labels = label_propagation_auto(edges, n_iter=LPA_ITER)
+    labels = label_propagation(edges, n_iter=LPA_ITER)
     return community_conductance(edges, labels)
 
 
@@ -852,21 +858,21 @@ def _events_hourly(spark, sf_dir):
 
 
 def _pagerank_knn(spark, sf_dir):
-    from simkit_spark.operators.pagerank import pagerank_auto
+    from simkit_spark.operators.pagerank import pagerank
 
     # entity importance over the similarity graph: 10 power sweeps over
     # exact-integer rank numerators (scale 1e12) — bit-reproducible
     # across engines and across the size-dispatched local/distributed
     # paths with no decimal re-rounding (see operators/pagerank.py)
     edges = _knn_edges(spark, sf_dir)
-    return pagerank_auto(edges, n_iter=PAGERANK_ITER)
+    return pagerank(edges, n_iter=PAGERANK_ITER)
 
 
 HITS_ITER = 5
 
 
 def _hits_knn(spark, sf_dir):
-    from simkit_spark.operators.hits import hits_auto
+    from simkit_spark.operators.hits import hits
 
     # hubs/authorities over the directed kNN graph: 5 exact-integer
     # L1-normalized sweeps (scale 1e9) — bit-reproducible across
@@ -874,7 +880,7 @@ def _hits_knn(spark, sf_dir):
     # which PageRank's single score conflates (operators/hits.py);
     # size-dispatched to the numpy twin at bench scale
     edges = _knn_edges(spark, sf_dir)
-    return hits_auto(edges, n_iter=HITS_ITER)
+    return hits(edges, n_iter=HITS_ITER)
 
 
 def _weighted_pagerank_affinity(spark, sf_dir):
@@ -882,7 +888,7 @@ def _weighted_pagerank_affinity(spark, sf_dir):
     # kNN edges carry their self-tuned Gaussian affinities (the
     # unweighted variant throws the kernel away); exact-integer sweeps
     # at scale 1e9 with weights quantized once at 6dp
-    from simkit_spark.operators.pagerank import weighted_pagerank_auto
+    from simkit_spark.operators.pagerank import weighted_pagerank
 
     t = _knn_topk(spark, sf_dir, max(KNN_K, SIGMA_K))
     sig = t.where(F.col("rank") == SIGMA_K).select(
@@ -901,11 +907,11 @@ def _weighted_pagerank_affinity(spark, sf_dir):
             ).alias("weight"),
         )
     )
-    return weighted_pagerank_auto(e, n_iter=PAGERANK_ITER)
+    return weighted_pagerank(e, n_iter=PAGERANK_ITER)
 
 
 def _kcore_knn(spark, sf_dir):
-    from simkit_spark.operators.kcore import kcore_auto
+    from simkit_spark.operators.kcore import kcore
 
     # densely-linked entity nucleus of the similarity graph: fixed
     # KCORE_ITER peeling sweeps at threshold KCORE_K (converged =
@@ -916,7 +922,7 @@ def _kcore_knn(spark, sf_dir):
     # discriminating (355/500 survive at k=3). Canonical (src < dst)
     # mutual edges off the shared cached kernel, not a second top-k run
     edges = _mutual_knn_k(spark, sf_dir).where(F.col("src") < F.col("dst"))
-    return kcore_auto(edges, k=KCORE_K, n_iter=KCORE_ITER)
+    return kcore(edges, k=KCORE_K, n_iter=KCORE_ITER)
 
 
 def _mutual_knn_k(spark, sf_dir):
@@ -930,7 +936,7 @@ def _mutual_knn_k(spark, sf_dir):
 
 
 def _ktruss_knn(spark, sf_dir):
-    from simkit_spark.operators.truss import ktruss_auto
+    from simkit_spark.operators.truss import ktruss
 
     # edge-cohesion nucleus of the similarity graph: fixed KTRUSS_ITER
     # support-peeling sweeps at k=KTRUSS_K (every surviving edge closes
@@ -939,7 +945,7 @@ def _ktruss_knn(spark, sf_dir):
     # real sweeps (47 -> 6 edges), so the check discriminates the
     # iteration, not just the first support pass (the mutual graph's
     # truss converges in one sweep). All-integer -> exact oracle parity.
-    return ktruss_auto(
+    return ktruss(
         _knn_edges(spark, sf_dir).select("src", "dst"),
         k=KTRUSS_K,
         n_iter=KTRUSS_ITER,
@@ -947,19 +953,19 @@ def _ktruss_knn(spark, sf_dir):
 
 
 def _mis_knn(spark, sf_dir):
-    from simkit_spark.operators.mis import maximal_independent_set_auto
+    from simkit_spark.operators.mis import maximal_independent_set
 
     # deterministic Luby MIS (md5-priority coins) over the mutual kNN
     # graph — the conflict-free entity-merge batch selector; (id,
     # sweep) output makes the check discriminate the sweep schedule,
     # not just the final set
-    return maximal_independent_set_auto(
+    return maximal_independent_set(
         _mutual_knn_k(spark, sf_dir), n_iter=MIS_ITER, seed=42
     )
 
 
 def _matching_knn(spark, sf_dir):
-    from simkit_spark.operators.matching import maximal_matching_auto
+    from simkit_spark.operators.matching import maximal_matching
 
     # heavy-edge (here: CLOSEST-pair, weight = 6dp euclidean distance
     # ascending) deterministic maximal matching over the mutual kNN
@@ -971,7 +977,7 @@ def _matching_knn(spark, sf_dir):
     edges = knn.join(rev, ["src", "dst"], "leftsemi").select(
         "src", "dst", F.round("dist", 6).alias("weight")
     )
-    return maximal_matching_auto(
+    return maximal_matching(
         edges, n_iter=MATCH_ITER, seed=42, weight_col="weight"
     )
 
@@ -1175,9 +1181,9 @@ def _katz_knn(spark, sf_dir):
     # attenuated-walk counts (beta=0.05, 8 sweeps) under the pagerank
     # exact-integer sweep contract — complements PageRank (no
     # out-degree normalization) and HITS (single score)
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
-    return katz_auto(
+    return katz_centrality(
         _knn_edges(spark, sf_dir).select("src", "dst"), n_iter=KATZ_ITER
     )
 
@@ -1269,7 +1275,7 @@ def _lm_score(spark, sf_dir):
 
 
 def _random_walks_knn(spark, sf_dir):
-    from simkit_spark.operators.walks import random_walks_auto
+    from simkit_spark.operators.walks import random_walks
 
     # node2vec/DeepWalk-style walk corpus over the similarity graph —
     # md5-derived next-hop choice, so the walks are engine- and
@@ -1277,28 +1283,28 @@ def _random_walks_knn(spark, sf_dir):
     # size-dispatched (bench graphs are driver-sized, so the hashlib
     # twin replaces walk_len sequential join+checkpoint jobs)
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    return random_walks_auto(edges, walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE)
+    return random_walks(edges, walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE)
 
 
 def _skipgram_knn(spark, sf_dir):
-    from simkit_spark.operators.walks import random_walks_auto, skipgram_pairs
+    from simkit_spark.operators.walks import random_walks, skipgram_pairs
 
     # walk corpus -> weighted SGNS (center, context) pairs: the last hop
     # of the KG -> graph-embedding training-data bridge
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    walks = random_walks_auto(edges, walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE)
+    walks = random_walks(edges, walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE)
     return skipgram_pairs(walks, window=SKIPGRAM_WINDOW)
 
 
 def _node2vec_knn(spark, sf_dir):
-    from simkit_spark.operators.walks import node2vec_walks_auto
+    from simkit_spark.operators.walks import node2vec_walks
 
     # second-order (p/q-biased) walk corpus — the node2vec upgrade of
     # _random_walks_knn; the all-integer md5*cost pick rule makes the
     # unrolled DuckDB twin exact with no rounding contract;
     # size-dispatched like _random_walks_knn
     edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    return node2vec_walks_auto(
+    return node2vec_walks(
         edges,
         walk_len=WALK_LEN,
         walks_per_node=WALKS_PER_NODE,
@@ -1383,24 +1389,24 @@ def _semantic_dedup(spark, sf_dir):
 
 
 def _spectral_embedding(spark, sf_dir):
-    from simkit_spark.operators.eigen import eigensolve_auto
+    from simkit_spark.operators.eigen import eigensolve
     from simkit_spark.operators.graphs import symmetrize
     from simkit_spark.operators.laplacian import laplacian
 
     lap = laplacian(symmetrize(_mutual_knn_edges(spark, sf_dir)), "sym")
-    x, _ = eigensolve_auto(lap, k=2, max_iter=30, tol=1e-6, seed=42)
+    x, _ = eigensolve(lap, k=2, max_iter=30, tol=1e-6, seed=42)
     return x.select("id", F.col("vec")[0].alias("e0"), F.col("vec")[1].alias("e1"))
 
 
 def _kmeans_clusters(spark, sf_dir):
-    from simkit_spark.operators.kmeans import kmeans_auto
+    from simkit_spark.operators.kmeans import kmeans
 
-    assigned, _ = kmeans_auto(_emb(spark, sf_dir), k=5, max_iter=15, seed=42)
+    assigned, _ = kmeans(_emb(spark, sf_dir), k=5, max_iter=15, seed=42)
     return assigned.select("id", F.col("cluster").cast("long").alias("cluster"))
 
 
 def _connected_components_eps(spark, sf_dir):
-    from simkit_spark.operators.components import connected_components_auto
+    from simkit_spark.operators.components import connected_components
     from simkit_spark.operators.epsjoin import eps_neighbor_pairs
 
     emb = _emb(spark, sf_dir)
@@ -1408,7 +1414,7 @@ def _connected_components_eps(spark, sf_dir):
     # size-dispatched CC (union-find under one Arrow collect below the
     # threshold; pointer-doubling loop above) — the bounded collect runs
     # the eps join once; only the distributed path checkpoints it
-    return connected_components_auto(edges, nodes=emb.select("id"), max_iter=30)
+    return connected_components(edges, nodes=emb.select("id"), max_iter=30)
 
 
 def _dbscan(spark, sf_dir):
@@ -1418,12 +1424,12 @@ def _dbscan(spark, sf_dir):
 
 
 def _eigengap(spark, sf_dir):
-    from simkit_spark.operators.eigen import eigengap_k, eigensolve_auto
+    from simkit_spark.operators.eigen import eigengap_k, eigensolve
     from simkit_spark.operators.graphs import mutual_knn_from_points, symmetrize
     from simkit_spark.operators.laplacian import laplacian
 
     lap = laplacian(symmetrize(mutual_knn_from_points(_emb(spark, sf_dir), TOPK)), "sym")
-    _, lam = eigensolve_auto(lap, k=8, max_iter=30, tol=1e-6, seed=42)
+    _, lam = eigensolve(lap, k=8, max_iter=30, tol=1e-6, seed=42)
     k_opt = eigengap_k(lam)
     return spark.createDataFrame([(int(k_opt),)], "k_opt int")
 
@@ -1446,14 +1452,10 @@ def _pq_topk(spark, sf_dir):
     # cost is the query path (encode + ADC + rescore).
     from simkit_spark.functions.pq import pq_topk, train_codebooks
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        for stale in [k2 for k2 in _PQ_BOOKS_CACHE if k2[0] != app]:
-            del _PQ_BOOKS_CACHE[stale]
-        books = train_codebooks(_emb(spark, sf_dir), m=16, n_centroids=256)
-        _PQ_BOOKS_CACHE[key] = books
+    books = _per_app(
+        _PQ_BOOKS_CACHE, spark, (sf_dir,),
+        lambda: train_codebooks(_emb(spark, sf_dir), m=16, n_centroids=256),
+    )
     return pq_topk(
         _emb(spark, sf_dir), k=TOPK, m=16, n_centroids=256, rescore=8,
         books=books,
@@ -1520,23 +1522,16 @@ def _kg_rel(spark, sf_dir):
     (whose executor storage doesn't hold the old checkpoint)
     rebuilds."""
     from simkit_spark.kg import relational_triples
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _KG_REL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k2 for k2 in _KG_REL_CACHE if k2[0] != app]:
-        del _KG_REL_CACHE[stale]
     from simkit_spark.util import materialize
 
-    tri = materialize(
-        relational_triples(
-            {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in _TPCH_NAMES}
-        )
+    return _per_app(
+        _KG_REL_CACHE, spark, (sf_dir,),
+        lambda: materialize(
+            relational_triples(
+                {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in _TPCH_NAMES}
+            )
+        ),
     )
-    _KG_REL_CACHE[key] = tri
-    return tri
 
 
 def _kg_relational_triples(spark, sf_dir):
@@ -1665,16 +1660,10 @@ def _kg_ent(spark, sf_dir):
     from simkit_spark.kg import rdfs_entail
     from simkit_spark.util import materialize
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _KG_ENT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k2 for k2 in _KG_ENT_CACHE if k2[0] != app]:
-        del _KG_ENT_CACHE[stale]
-    ent = materialize(rdfs_entail(_kg_rel(spark, sf_dir), _KG_ONTOLOGY))
-    _KG_ENT_CACHE[key] = ent
-    return ent
+    return _per_app(
+        _KG_ENT_CACHE, spark, (sf_dir,),
+        lambda: materialize(rdfs_entail(_kg_rel(spark, sf_dir), _KG_ONTOLOGY)),
+    )
 
 
 def _kg_rdfs_entail(spark, sf_dir):
@@ -3470,7 +3459,7 @@ FROM tr LEFT JOIN hits h USING (doc_id)"""
 # closure is small enough for DuckDB's WITH RECURSIVE: reach(id, root)
 # seeded with (id, id) and expanded over symmetrized edges terminates by
 # UNION-dedup, and min(root) per id is exactly the "component = min node
-# id" contract of connected_components_auto.  This upgrades three
+# id" contract of connected_components.  This upgrades three
 # formerly rows-only queries to full value-hash verification.
 _CC_EPS_SQL = (
     "WITH RECURSIVE "

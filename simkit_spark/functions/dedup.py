@@ -196,7 +196,7 @@ def neardup_resolve(
     Everything up to the CC merge is the same banded plan as
     minhash_band_pairs (no O(n^2)); the merge is the pointer-doubling
     CC operator, size-dispatched."""
-    from ..operators.components import connected_components_auto
+    from ..operators.components import connected_components
 
     docs = docs.localCheckpoint()
     sigs = minhash_signatures(docs, text_col, n_hashes, shingle_n)
@@ -227,7 +227,7 @@ def neardup_resolve(
         .withColumnRenamed("nid", "dst_id")
         .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
     )
-    comp = connected_components_auto(e, nodes=ids.select(F.col("nid").alias("id")))
+    comp = connected_components(e, nodes=ids.select(F.col("nid").alias("id")))
     mapped = ids.join(comp.withColumnRenamed("id", "nid"), "nid")
     # keeper = lexicographically smallest doc_id in the component (the
     # component id is a hash, not meaningful — resolve back to doc_ids)

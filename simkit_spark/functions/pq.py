@@ -20,7 +20,7 @@ error only costs recall, never precision of reported scores.
 
 Training is a driver-side seeded Lloyd per subspace over a
 deterministic hash-ordered sample (bounded collect, same dispatch
-philosophy as kmeans_auto / eigensolve_auto); codebooks broadcast to
+philosophy as kmeans / eigensolve); codebooks broadcast to
 the encoders. Everything is seeded and partitioning-independent, so
 results are content-hash stable (ROWSONLY_HASHES).
 """

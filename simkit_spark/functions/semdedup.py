@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.kmeans import kmeans_auto
+from ..operators.kmeans import kmeans
 
 
 def _resolve_component(ids: np.ndarray, vecs: np.ndarray, tau: float) -> np.ndarray:
@@ -94,7 +94,7 @@ def semantic_dedup(
     if n == 0:
         return pts.sparkSession.createDataFrame([], "id long, cluster long, rep long")
     k = n_clusters or max(1, -(-n // max(1, max_cluster // 2)))
-    assigned, _ = kmeans_auto(pts, k=k, seed=seed)
+    assigned, _ = kmeans(pts, k=k, seed=seed)
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("csz"))
     salted = (
         assigned.join(F.broadcast(sizes), "cluster")

@@ -170,9 +170,9 @@ def ivf_topk(
             pts.orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
             .limit(train_sample)
         )
-        from ..operators.kmeans import kmeans_auto
+        from ..operators.kmeans import kmeans
 
-        _, cents = kmeans_auto(sample, k=n_cells, max_iter=10, seed=seed)
+        _, cents = kmeans(sample, k=n_cells, max_iter=10, seed=seed)
         cents = np.asarray(cents, dtype=np.float64)
     elif quantizer == "lowid":
         cent_rows = pts.orderBy("id").limit(n_cells).collect()

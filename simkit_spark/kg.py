@@ -1189,19 +1189,19 @@ def sameas_canonicalize(
     (id != component rows only, usually broadcastable) plus one
     distinct: the same no-instance-iteration shape as ``rdfs_entail``.
     Size dispatch (numpy union-find under one Arrow collect vs the
-    distributed loop) is inherited from ``connected_components_auto``.
+    distributed loop) is inherited from ``connected_components``.
 
     The reference's merge is implicit in its dense k-means cluster ids
     (simkit has no triple store); this is the KG-native equivalent the
     linking pipeline's resolve stage (pipeline/materialize.py) applies
     to mention-level entity maps.
     """
-    from .operators.components import connected_components_auto
+    from .operators.components import connected_components
 
     sa = triples.where(F.col("pred") == sameas_pred).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    comp = connected_components_auto(sa)
+    comp = connected_components(sa)
     # only non-identity rewrites join back — the map stays alias-sized
     m = comp.where(F.col("id") != F.col("component"))
     rest = triples.select("subj", "pred", "obj").where(

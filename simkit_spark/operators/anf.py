@@ -8,7 +8,7 @@ profiler; this extends the graph-statistics surface (SURVEY §2
 extension) over the same (src, dst) edge lists as
 operators.graphstats.
 
-Two paths, size-dispatched like every iterative operator in this repo:
+Two paths on ``util.size_dispatch``, like every iterative operator here:
 
 - EXACT for a driver-sized graph (at most ``util.local_dispatch_rows``
   edges and ``MAX_LOCAL_NODES`` nodes): one Arrow collect, dense
@@ -38,8 +38,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
-from .. import util
-from ..util import materialize
+from ..util import materialize, size_dispatch
 
 # the exact path holds n^2 BITS on the driver: edge count alone doesn't
 # bound that (a 300k-edge graph can have 60k nodes = 450 MB of
@@ -66,45 +65,53 @@ def neighborhood_function(
     docstring) it is exact; above, n_pairs is the HyperANF estimate
     (rounded to a whole pair count).
     """
-    e = _symmetrized(edges).transform(materialize)
-    n_edges = e.count()
-    spark = edges.sparkSession
-    n_nodes = e.select("src").distinct().count()
-    if n_edges <= util.local_dispatch_rows(e.schema) and n_nodes <= MAX_LOCAL_NODES:
-        import numpy as np
-        import pandas as pd
+    return size_dispatch(
+        _symmetrized(edges),
+        lambda pdf: _anf_local(pdf, max_h),
+        lambda e: _hyperanf(e, max_h, p, seed),
+        "h int, n_pairs bigint, frac double",
+    )
 
-        pdf = e.toPandas()
-        ids = np.unique(
-            np.concatenate([pdf["src"].values, pdf["dst"].values])
-        ) if len(pdf) else np.array([])
-        n = len(ids)
-        rows = []
-        if n:
-            # bitset rows (uint64 words) + bitwise_or scatter: each
-            # sweep is O(E * n/64) word-ops — a dense bool matmul is
-            # O(n^3) and took ~19 s at n=5000 where this takes ~0.1 s
-            words = (n + 63) // 64
-            si = np.searchsorted(ids, pdf["src"].values)
-            di = np.searchsorted(ids, pdf["dst"].values)
-            reach = np.zeros((n, words), dtype=np.uint64)
-            ar = np.arange(n)
-            reach[ar, ar // 64] |= np.uint64(1) << (ar % 64).astype(np.uint64)
-            pop = np.array(
-                [bin(i).count("1") for i in range(256)], dtype=np.int64
-            )
-            rows.append((0, n, round(n / float(n * n), 6)))
-            for h in range(1, max_h + 1):
-                nxt = reach.copy()
-                np.bitwise_or.at(nxt, si, reach[di])
-                reach = nxt
-                c = int(pop[reach.view(np.uint8)].sum())
-                rows.append((h, c, round(c / float(n * n), 6)))
-        res = pd.DataFrame(rows, columns=["h", "n_pairs", "frac"])
-        return spark.createDataFrame(
-            res, schema="h int, n_pairs bigint, frac double"
+
+def _anf_local(pdf, max_h: int):
+    """Exact twin: bitset BFS over the collected symmetrized edges, or
+    None past ``MAX_LOCAL_NODES`` nodes."""
+    import numpy as np
+    import pandas as pd
+
+    ids = np.unique(
+        np.concatenate([pdf["src"].values, pdf["dst"].values])
+    ) if len(pdf) else np.array([])
+    n = len(ids)
+    if n > MAX_LOCAL_NODES:
+        return None
+    rows = []
+    if n:
+        # bitset rows (uint64 words) + bitwise_or scatter: each
+        # sweep is O(E * n/64) word-ops — a dense bool matmul is
+        # O(n^3) and took ~19 s at n=5000 where this takes ~0.1 s
+        words = (n + 63) // 64
+        si = np.searchsorted(ids, pdf["src"].values)
+        di = np.searchsorted(ids, pdf["dst"].values)
+        reach = np.zeros((n, words), dtype=np.uint64)
+        ar = np.arange(n)
+        reach[ar, ar // 64] |= np.uint64(1) << (ar % 64).astype(np.uint64)
+        pop = np.array(
+            [bin(i).count("1") for i in range(256)], dtype=np.int64
         )
+        rows.append((0, n, round(n / float(n * n), 6)))
+        for h in range(1, max_h + 1):
+            nxt = reach.copy()
+            np.bitwise_or.at(nxt, si, reach[di])
+            reach = nxt
+            c = int(pop[reach.view(np.uint8)].sum())
+            rows.append((h, c, round(c / float(n * n), 6)))
+    return pd.DataFrame(rows, columns=["h", "n_pairs", "frac"])
 
+
+def _hyperanf(e: DataFrame, max_h: int, p: int, seed: int) -> DataFrame:
+    """Distributed path of ``neighborhood_function`` over the
+    materialized symmetrized edges."""
     # ---- HyperANF: one register set per node, max-merge sweeps
     m = 1 << p
     rest_bits = 32 - p
@@ -186,7 +193,9 @@ def neighborhood_function(
         ],
         columns=["h", "n_pairs", "frac"],
     )
-    return spark.createDataFrame(res, schema="h int, n_pairs bigint, frac double")
+    return e.sparkSession.createDataFrame(
+        res, schema="h int, n_pairs bigint, frac double"
+    )
 
 
 def effective_diameter(

@@ -21,19 +21,22 @@ from .. import util
 from ..util import materialize, size_dispatch
 
 
-def connected_components_auto(
+def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 50,
 ) -> DataFrame:
-    """Size-dispatched CC (``util.size_dispatch``, 300k-row default):
-    a driver-sized edge list is collected through Arrow as numpy arrays
+    """edges: (src, dst) any orientation. Returns (id, component) where
+    component = min node id in the component; ``nodes`` defaults to
+    the edge endpoints.
+
+    Size-dispatched (``util.size_dispatch``, 300k-row default): a
+    driver-sized edge list is collected through Arrow as numpy arrays
     — never Row objects: 300k edges is ~5 MB of int64 columns vs
     hundreds of MB of Rows — and runs union-find in one job round-trip
     instead of ~2 jobs per propagation round; larger graphs, or a
-    ``nodes`` list past the same row budget, run the distributed loop.
-    Same (id, component) contract, component = min node id. ``nodes``
-    defaults to the edge endpoints."""
+    ``nodes`` list past the same row budget, run the distributed
+    loop."""
 
     def local(epd):
         if nodes is None:
@@ -46,7 +49,7 @@ def connected_components_auto(
     return size_dispatch(
         edges.select("src", "dst"),
         local,
-        lambda e: connected_components(e, nodes, max_iter),
+        lambda e: _components_dist(e, nodes, max_iter),
         "id {id}, component {id}",
         default_rows=300_000,
     )
@@ -75,7 +78,7 @@ def _union_find(epd, npd):
             # violation loud AND well-typed
             raise KeyError(
                 f"edge endpoint not in nodes: ({esrc[0]}, {edst[0]}) — "
-                "connected_components_auto requires nodes to cover every endpoint"
+                "connected_components requires nodes to cover every endpoint"
             )
         bad = (
             (src >= len(ids)) | (dst >= len(ids))
@@ -86,7 +89,7 @@ def _union_find(epd, npd):
             i = int(np.nonzero(bad)[0][0])
             raise KeyError(
                 f"edge endpoint not in nodes: ({esrc[i]}, {edst[i]}) — "
-                "connected_components_auto requires nodes to cover every endpoint"
+                "connected_components requires nodes to cover every endpoint"
             )
     parent = np.arange(len(ids))
 
@@ -109,13 +112,10 @@ def _union_find(epd, npd):
     return pd.DataFrame({"id": ids, "component": comp})
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iter: int = 50,
+def _components_dist(
+    edges: DataFrame, nodes: DataFrame | None, max_iter: int
 ) -> DataFrame:
-    """edges: (src, dst) any orientation. Returns (id, component) where
-    component = min node id in the component."""
+    """Distributed path of ``connected_components``."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize
-from .components import connected_components_auto
+from .components import connected_components
 from .epsjoin import eps_neighbor_pairs
 
 
@@ -73,7 +73,7 @@ def dbscan(
         .join(core.withColumnRenamed("id", "dst"), "dst", "leftsemi")
         .select("src", "dst")
     )
-    comp = connected_components_auto(core_edges, nodes=core, max_iter=cc_max_iter)
+    comp = connected_components(core_edges, nodes=core, max_iter=cc_max_iter)
 
     core_assign = comp.select("id", F.col("component").alias("cluster")).withColumn(
         "is_core", F.lit(True)

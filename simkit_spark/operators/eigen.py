@@ -110,22 +110,11 @@ def _init_v(nodes: DataFrame, k: int, seed: int) -> DataFrame:
     return nodes.select(F.col("id"), F.array(*cols).alias("vec"))
 
 
-def eigensolve(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    k: int = 3,
-    max_iter: int = 100,
-    tol: float = 1e-7,
-    seed: int = 42,
+def _eigensolve_dist(
+    edges: DataFrame, k: int, max_iter: int, tol: float, seed: int
 ) -> tuple[DataFrame, np.ndarray]:
-    """Dominant-k eigenpairs of the symmetric edge-list operator.
-
-    Returns (X, eigenvalues) where X = DataFrame(id, vec: array[k]) with
-    columns ordered by ASCENDING eigenvalue, matching the reference's
-    output convention (EigenCalculation.java:277-308: ascending sort,
-    X = last-k columns => column j of X corresponds to eigenvalues[j]).
-    eigenvalues is the ascending numpy array of the k Ritz values.
-    """
+    """Distributed path of ``eigensolve``: matrix-free block power
+    iteration over the symmetric edge-list operator."""
     # The edge list is read once per sweep — materialize it (in prod this
     # is the persisted affinity stage table; here localCheckpoint), then
     # pin a dst-hash + dst-SORTED persisted layout: the cached plan keeps
@@ -139,10 +128,9 @@ def eigensolve(
         .sortWithinPartitions("dst")
         .persist()
     )
-    if nodes is None:
-        nodes = edges.select(F.col("src").alias("id")).union(
-            edges.select(F.col("dst").alias("id"))
-        ).distinct()
+    nodes = edges.select(F.col("src").alias("id")).union(
+        edges.select(F.col("dst").alias("id"))
+    ).distinct()
     # Gershgorin bound on the spectral radius -> PSD shift (one agg job).
     rho = (
         edges.groupBy("src")
@@ -191,7 +179,7 @@ def eigensolve(
 MAX_LOCAL_NODES = 3000
 
 
-def eigensolve_auto(
+def eigensolve(
     edges: DataFrame,
     k: int = 3,
     max_iter: int = 100,
@@ -199,7 +187,16 @@ def eigensolve_auto(
     seed: int = 42,
     symmetric: bool = True,
 ) -> tuple[DataFrame, np.ndarray]:
-    """Size-dispatched eigensolve (SURVEY.md §7.4.1) on
+    """Dominant-k eigenpairs of the (src, dst, weight) edge-list
+    operator.
+
+    Returns (X, eigenvalues) where X = DataFrame(id, vec: array[k]) with
+    columns ordered by ASCENDING eigenvalue, matching the reference's
+    output convention (EigenCalculation.java:277-308: ascending sort,
+    X = last-k columns => column j of X corresponds to eigenvalues[j]).
+    eigenvalues is the ascending numpy array of the k Ritz values.
+
+    Size-dispatched (SURVEY.md §7.4.1) on
     ``util.size_dispatch``: an edge list within the dispatch byte
     budget (~2.8M (src, dst, weight) rows) whose endpoints number at
     most ``MAX_LOCAL_NODES`` is solved densely on the driver
@@ -209,8 +206,7 @@ def eigensolve_auto(
     net. A graph of at most 3000 nodes carried by more than ~2.8M edge
     rows also goes distributed; no caller here is near that (the
     spectral queries' embeddings.parquet inputs hold at most 2,000
-    points). The vertex set is the edge endpoints. Same return
-    convention as eigensolve.
+    points). The vertex set is the edge endpoints.
 
     Pass ``symmetric=False`` for non-symmetric operators (directed-kNN
     graphs, "rw" laplacians) so the local path does not mirror the
@@ -225,7 +221,7 @@ def eigensolve_auto(
         # at the size boundary (ADVICE r2 #2). Stay loud.
         if not symmetric:
             raise ValueError(
-                "eigensolve_auto(symmetric=False) is past the local solve "
+                "eigensolve(symmetric=False) is past the local solve "
                 f"({MAX_LOCAL_NODES} nodes within the util.size_dispatch "
                 "budget): the distributed eigensolve only handles symmetric "
                 "operators — symmetrize the edge list (or similarity-transform "
@@ -246,7 +242,7 @@ def eigensolve_auto(
 
     def dist(e):
         nonsymmetric_raise()
-        x, vals = eigensolve(e, None, k, max_iter, tol, seed)
+        x, vals = _eigensolve_dist(e, k, max_iter, tol, seed)
         lam.append(vals)
         return x
 

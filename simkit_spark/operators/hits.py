@@ -57,25 +57,28 @@ from ..util import materialize, size_dispatch
 HITS_ITER_DP = 9
 
 
-def hits_auto(
+def hits(
     edges: DataFrame,
     n_iter: int = 5,
     iter_dp: int = HITS_ITER_DP,
 ) -> DataFrame:
-    """Size-dispatched HITS (``util.size_dispatch``): a driver-sized
-    distinct edge list runs vectorized numpy sweeps over one Arrow
-    collect, replacing ~4 shuffle stages per sweep. The exact-integer
-    L1 contract (module docstring) makes both paths bit-identical —
-    integer raw sums are exact in any accumulator below 2**53, and the
-    single re-quantization float expression runs in the same IEEE
-    operation order on both engines (parity-tested, long and string
-    ids)."""
+    """(src, dst) directed edge list -> (id, hub, authority) after
+    ``n_iter`` full HITS sweeps under the exact-integer L1-normalized
+    contract (module docstring). Every node in the edge list gets a
+    row; nodes with no in-edges have authority 0, no out-edges hub 0.
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized distinct
+    edge list runs vectorized numpy sweeps over one Arrow collect,
+    replacing ~4 shuffle stages per sweep. The exact-integer L1
+    contract makes both paths bit-identical — integer raw sums are
+    exact in any accumulator below 2**53, and the single
+    re-quantization float expression runs in the same IEEE operation
+    order on both engines (parity-tested, long and string ids)."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     return size_dispatch(
         edges.select("src", "dst").distinct(),
         lambda pdf: _hits_local(pdf, n_iter, iter_dp),
-        # already distinct + materialized: skip hits()'s own pass
         lambda e: _hits_from_distinct(e, n_iter, iter_dp),
         "id {id}, hub double, authority double",
     )
@@ -117,23 +120,9 @@ def _hits_local(pdf, n_iter, iter_dp):
     )
 
 
-def hits(edges: DataFrame, n_iter: int = 5, iter_dp: int = HITS_ITER_DP) -> DataFrame:
-    """(src, dst) directed edge list -> (id, hub, authority) after
-    ``n_iter`` full HITS sweeps under the exact-integer L1-normalized
-    contract (module docstring). Every node in the edge list gets a
-    row; nodes with no in-edges have authority 0, no out-edges hub 0.
-    """
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    return _hits_from_distinct(
-        materialize(edges.select("src", "dst").distinct()), n_iter, iter_dp
-    )
-
-
 def _hits_from_distinct(e: DataFrame, n_iter: int, iter_dp: int) -> DataFrame:
-    """Sweep loop over an already-distinct, already-materialized edge
-    list — split out so hits_auto's above-threshold dispatch doesn't
-    pay a second distinct shuffle + checkpoint."""
+    """Distributed path of ``hits``: the sweep loop over an
+    already-distinct, already-materialized edge list."""
     scale = 10**iter_dp
     inv = 1.0 / float(scale)
     nodes = materialize(

@@ -37,12 +37,26 @@ from pyspark.sql import DataFrame, functions as F
 from ..util import materialize, size_dispatch
 
 
-def kcore(
-    edges: DataFrame, k: int, n_iter: int = 10
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
     """(src, dst) in any orientation -> (id, core_deg) for the nodes
     surviving ``n_iter`` peeling sweeps at threshold ``k``; core_deg is
-    the degree within the surviving subgraph."""
+    the degree within the surviving subgraph.
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    a numpy bincount peeling loop over one Arrow collect, which beats
+    ~3 shuffle stages per sweep; a larger one runs the distributed
+    sweeps. All-integer arithmetic, so the two paths are exactly
+    identical (parity-tested)."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _kcore_local(pdf, k, n_iter),
+        lambda e: _kcore_dist(e, k, n_iter),
+        "id {id}, core_deg long",
+    )
+
+
+def _kcore_dist(edges: DataFrame, k: int, n_iter: int) -> DataFrame:
+    """Distributed path of ``kcore``."""
     und = (
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
@@ -98,20 +112,6 @@ def kcore(
     out = materialize(deg.select("id", F.col("deg").alias("core_deg")))
     e.unpersist()
     return out
-
-
-def kcore_auto(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
-    """Size-dispatched k-core (``util.size_dispatch``): a driver-sized
-    graph runs a numpy bincount peeling loop over one Arrow collect,
-    which beats ~3 shuffle stages per sweep; a larger one runs the
-    distributed operator. All-integer arithmetic, so the two paths are
-    exactly identical (parity-tested)."""
-    return size_dispatch(
-        edges.select("src", "dst"),
-        lambda pdf: _kcore_local(pdf, k, n_iter),
-        lambda e: kcore(e, k, n_iter),
-        "id {id}, core_deg long",
-    )
 
 
 def _kcore_local(pdf, k, n_iter):

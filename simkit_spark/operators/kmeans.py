@@ -103,14 +103,11 @@ def recompute_centroids(assigned: DataFrame, dim: int) -> dict[int, np.ndarray]:
     return {r["cluster"]: np.array([r[f"m{d}"] for d in range(dim)]) for r in rows}
 
 
-def kmeans(
-    points: DataFrame,
-    k: int,
-    max_iter: int = 100,
-    seed: int = 42,
-    kernel: str = "euclidean",
+def _kmeans_dist(
+    points: DataFrame, k: int, max_iter: int, seed: int, kernel: str
 ) -> tuple[DataFrame, np.ndarray]:
-    """Returns (assigned: DataFrame(id, vec, cluster), centroids)."""
+    """Distributed path of ``kmeans``: ~1 job per sweep plus k init
+    jobs."""
     dim = len(points.select("vec").first()["vec"])
     centroids = init_centroids(points, k, seed)
     pts = points.select("id", "vec").transform(materialize)
@@ -130,23 +127,24 @@ def kmeans(
 MAX_LOCAL_POINTS = 200_000
 
 
-def kmeans_auto(
+def kmeans(
     points: DataFrame,
     k: int,
     max_iter: int = 100,
     seed: int = 42,
     kernel: str = "euclidean",
 ) -> tuple[DataFrame, np.ndarray]:
-    """Size-dispatched k-means on ``util.size_dispatch``: up to
+    """Returns (assigned: DataFrame(id, vec, cluster), centroids).
+
+    Size-dispatched on ``util.size_dispatch``: up to
     ``MAX_LOCAL_POINTS`` euclidean points collect once, with
     xxhash64(id, seed) riding the collect, and iterate in numpy on the
-    driver — the distributed loop
-    pays ~1 job per sweep plus k init jobs, pure latency for
-    driver-sized data — while larger sets and other kernels run the
-    distributed loop. Same farthest-first init, same argmin/mean update
-    rules, same (assigned, centroids) contract."""
+    driver — the distributed loop pays ~1 job per sweep plus k init
+    jobs, pure latency for driver-sized data — while larger sets and
+    other kernels run the distributed loop. Same farthest-first init,
+    same argmin/mean update rules on both paths."""
     if kernel != "euclidean":
-        return kmeans(points, k, max_iter, seed, kernel)
+        return _kmeans_dist(points, k, max_iter, seed, kernel)
     cents = []
 
     def local(pdf):
@@ -186,7 +184,7 @@ def kmeans_auto(
         )
 
     def dist(pts):
-        assigned, centroids = kmeans(pts, k, max_iter, seed, kernel)
+        assigned, centroids = _kmeans_dist(pts, k, max_iter, seed, kernel)
         cents.append(centroids)
         return assigned
 

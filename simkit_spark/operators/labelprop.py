@@ -26,7 +26,23 @@ from ..util import materialize, size_dispatch
 def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """(src, dst) in any orientation -> (id, community) after
     ``n_iter`` synchronous sweeps. Self-loops dropped; duplicate edges
-    de-duplicated (each neighbor votes once)."""
+    de-duplicated (each neighbor votes once).
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    the synchronous sweeps as vectorized numpy over one Arrow collect
+    (all-integer arithmetic — the local twin is EXACTLY the operator's
+    fixed point, no rounding contract needed); a larger one runs the
+    distributed loop."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _label_propagation_local(pdf, n_iter),
+        lambda e: _label_propagation_dist(e, n_iter),
+        "id {id}, community {id}",
+    )
+
+
+def _label_propagation_dist(edges: DataFrame, n_iter: int) -> DataFrame:
+    """Distributed path of ``label_propagation``."""
     und = (
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
@@ -205,20 +221,6 @@ def community_conductance(
                 6,
             ).alias("conductance"),
         )
-    )
-
-
-def label_propagation_auto(edges: DataFrame, n_iter: int = 5) -> DataFrame:
-    """Size-dispatched LPA (``util.size_dispatch``): a driver-sized
-    graph runs the synchronous sweeps as vectorized numpy over one
-    Arrow collect (all-integer arithmetic — the local twin is EXACTLY
-    the operator's fixed point, no rounding contract needed); a larger
-    one runs the distributed loop."""
-    return size_dispatch(
-        edges.select("src", "dst"),
-        lambda pdf: _label_propagation_local(pdf, n_iter),
-        lambda e: label_propagation(e, n_iter),
-        "id {id}, community {id}",
     )
 
 

@@ -61,7 +61,24 @@ def maximal_matching(
     index). With ``weight_col``, the weight (quantized to int64 at
     ``weight_dp`` — the weighted_pagerank convention) leads the
     priority, ascending: smaller weight matches first. Duplicate
-    (u, v) rows keep the smallest quantized weight."""
+    (u, v) rows keep the smallest quantized weight.
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    a hashlib replica of the sweep rule over one Arrow collect; a
+    larger one runs the distributed sweeps. All-integer keys, so the
+    paths are exactly identical (parity-tested on long AND string
+    ids)."""
+    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
+    return size_dispatch(
+        edges.select(*cols),
+        lambda pdf: _matching_local(pdf, n_iter, seed, weight_col, weight_dp),
+        lambda e: _matching_dist(e, n_iter, seed, weight_col, weight_dp),
+        "u {id}, v {id}, sweep int",
+    )
+
+
+def _matching_dist(edges, n_iter, seed, weight_col, weight_dp) -> DataFrame:
+    """Distributed path of ``maximal_matching``."""
     und = edges.select(
         F.least("src", "dst").alias("u"),
         F.greatest("src", "dst").alias("v"),
@@ -127,27 +144,6 @@ def maximal_matching(
     for p in parts[1:]:
         out = out.union(p)
     return materialize(out.select("u", "v", F.col("sweep").cast("int").alias("sweep")))
-
-
-def maximal_matching_auto(
-    edges: DataFrame,
-    n_iter: int = 10,
-    seed: int = 42,
-    weight_col: str | None = None,
-    weight_dp: int = 6,
-) -> DataFrame:
-    """Size-dispatched maximal matching (``util.size_dispatch``): a
-    driver-sized graph runs a hashlib replica of the sweep rule over
-    one Arrow collect; a larger one runs the distributed operator.
-    All-integer keys, so the paths are exactly identical (parity-tested
-    on long AND string ids)."""
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    return size_dispatch(
-        edges.select(*cols),
-        lambda pdf: _matching_local(pdf, n_iter, seed, weight_col, weight_dp),
-        lambda e: maximal_matching(e, n_iter, seed, weight_col, weight_dp),
-        "u {id}, v {id}, sweep int",
-    )
 
 
 def _matching_local(pdf, n_iter, seed, weight_col, weight_dp):

@@ -54,7 +54,23 @@ def maximal_independent_set(
     the undirected simple graph (self-loops dropped), with the sweep
     (1-based) each member was selected in. Isolated nodes (no edges)
     are not in the input's node universe and thus not emitted — pass
-    their ids through separately if needed."""
+    their ids through separately if needed.
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    a hashlib replica of the sweep loop over one Arrow collect; a
+    larger one runs the distributed sweeps. All-integer (hash, id)
+    comparisons, so the two paths are exactly identical (parity-tested
+    on long AND string ids)."""
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _mis_local(pdf, n_iter, seed),
+        lambda e: _mis_dist(e, n_iter, seed),
+        "id {id}, sweep int",
+    )
+
+
+def _mis_dist(edges: DataFrame, n_iter: int, seed: int) -> DataFrame:
+    """Distributed path of ``maximal_independent_set``."""
     und = (
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
@@ -113,24 +129,6 @@ def maximal_independent_set(
     out = materialize(out.select("id", F.col("sweep").cast("int").alias("sweep")))
     e.unpersist()
     return out
-
-
-def maximal_independent_set_auto(
-    edges: DataFrame,
-    n_iter: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """Size-dispatched MIS (``util.size_dispatch``): a driver-sized
-    graph runs a hashlib replica of the sweep loop over one Arrow
-    collect; a larger one runs the distributed operator. All-integer
-    (hash, id) comparisons, so the two paths are exactly identical
-    (parity-tested on long AND string ids)."""
-    return size_dispatch(
-        edges.select("src", "dst"),
-        lambda pdf: _mis_local(pdf, n_iter, seed),
-        lambda e: maximal_independent_set(e, n_iter, seed),
-        "id {id}, sweep int",
-    )
 
 
 def _mis_local(pdf, n_iter, seed):

@@ -135,7 +135,7 @@ def _boruvka(e: DataFrame, max_rounds: int) -> DataFrame:
         tree = tree.transform(materialize)
         # contract: CC over the chosen COMPONENT graph (component-count
         # sized), then relabel nodes through their old component
-        from .components import connected_components_auto
+        from .components import connected_components
 
         cpairs = (
             chosen.join(lu, "u")
@@ -143,7 +143,7 @@ def _boruvka(e: DataFrame, max_rounds: int) -> DataFrame:
             .select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
             .distinct()
         )
-        cmap = connected_components_auto(cpairs).select(
+        cmap = connected_components(cpairs).select(
             F.col("id").alias("comp"), F.col("component").alias("newc")
         )
         labels = (
@@ -174,7 +174,7 @@ def single_linkage_labels(
     heaviest first), and label nodes by connected component (min
     member id). Disconnected inputs yield extra clusters — the
     single-linkage dendrogram cut at the k-cluster level."""
-    from .components import connected_components_auto
+    from .components import connected_components
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -196,7 +196,7 @@ def single_linkage_labels(
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    return connected_components_auto(
+    return connected_components(
         keep.select(F.col("u").alias("src"), F.col("v").alias("dst")),
         nodes=nodes,
     )

@@ -248,22 +248,13 @@ def pagerank(
     Nodes with no out-edges (dangling) teleport their whole rank.
     Deterministic: fixed iteration count, exact-integer rank numerators
     at scale 10**iter_dp (see module docstring).
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    a vectorized numpy loop over one Arrow collect, which beats ~3
+    shuffle stages per sweep by orders of magnitude; a larger one runs
+    the distributed sweeps. The exact-integer rank contract makes both
+    paths bit-identical (parity-tested), so the dispatch is invisible.
     """
-    return _pr_sweeps(edges.select("src", "dst"), n_iter, damping, iter_dp)
-
-
-def pagerank_auto(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = DAMPING,
-    iter_dp: int = PR_ITER_DP,
-) -> DataFrame:
-    """Size-dispatched PageRank (``util.size_dispatch``): a driver-sized
-    graph runs a vectorized numpy loop over one Arrow collect, which
-    beats ~3 shuffle stages per sweep by orders of magnitude; a larger
-    one runs the distributed operator. The exact-integer rank contract
-    makes both paths bit-identical (parity-tested), so the dispatch is
-    invisible."""
     return size_dispatch(
         edges.select("src", "dst"),
         lambda pdf: _pr_local(pdf, n_iter, damping, iter_dp),
@@ -396,23 +387,13 @@ def weighted_pagerank(
     all integer, order-independent. iter_dp defaults to 9 (not the
     unweighted 12) so rank_i * w_q <= 10^9·10^6 = 10^15 stays exact in
     int64 AND in the double converts. Dangling = no kept out-edge.
+
+    Size-dispatched (``util.size_dispatch``) on the quantized
+    (src, dst, w_q) frame: the all-integer contrib rule plus the single
+    fixed-order float update make the numpy twin bit-identical to the
+    distributed loop — parity-tested on long and string ids, dangling
+    mass, and zero-weight edge drops.
     """
-    return _pr_sweeps(_quantized(edges, weight_dp), n_iter, damping, iter_dp)
-
-
-def weighted_pagerank_auto(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = DAMPING,
-    iter_dp: int = WPR_ITER_DP,
-    weight_dp: int = WPR_WEIGHT_DP,
-) -> DataFrame:
-    """Size-dispatched ``weighted_pagerank`` (``util.size_dispatch``):
-    the all-integer contrib rule (rank_i * w_q div strength, exact
-    int64 sums) plus the single fixed-order float update make the
-    numpy twin bit-identical to the distributed loop — parity-tested
-    on long and string ids, dangling mass, and zero-weight edge
-    drops. Both paths take the quantized (src, dst, w_q) frame."""
     return size_dispatch(
         _quantized(edges, weight_dp),
         lambda pdf: _pr_local(pdf, n_iter, damping, iter_dp),
@@ -472,12 +453,25 @@ def katz_centrality(
     float64 aggregation paths (beta=0.05, dp=9 gives ~3 orders of
     headroom on degree <= 50 graphs); past that it raises ValueError.
 
-    Scale: the shared ``_sweeps`` shape minus the divisor join and the
-    dangling pass — sorted-once persisted edge layout, per sweep one
-    node-sized rank shuffle in + one hash-agg out, lineage broken
-    every sweep.
+    Scale: size-dispatched (``util.size_dispatch``) — a driver-sized
+    graph runs the numpy twin over one Arrow collect, bit-identical to
+    the distributed loop (same integer numerators, same fixed-order
+    float update); a larger one runs the shared ``_sweeps`` shape minus
+    the divisor join and the dangling pass — sorted-once persisted edge
+    layout, per sweep one node-sized rank shuffle in + one hash-agg
+    out, lineage broken every sweep.
     """
-    ed, nodes, _, _ = _layout(edges.select("src", "dst"))
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _katz_local(pdf, n_iter, beta, iter_dp),
+        lambda e: _katz_sweeps(e, n_iter, beta, iter_dp),
+        "id {id}, katz double",
+    )
+
+
+def _katz_sweeps(e: DataFrame, n_iter: int, beta: float, iter_dp: int) -> DataFrame:
+    """Distributed path of ``katz_centrality``."""
+    ed, nodes, _, _ = _layout(e)
     scale = 10**iter_dp
     ranks = _sweeps(
         ed, nodes, F.lit(int(scale)).cast("long"), "srank_i",
@@ -485,24 +479,6 @@ def katz_centrality(
     )
     _katz_overflow_check(ranks.agg(F.min("rank_i"), F.max("rank_i")).first(), beta=beta)
     return _scaled(ranks, scale, "katz")
-
-
-def katz_auto(
-    edges: DataFrame,
-    n_iter: int = 8,
-    beta: float = KATZ_BETA,
-    iter_dp: int = KATZ_ITER_DP,
-) -> DataFrame:
-    """Size-dispatched Katz (``util.size_dispatch``): a numpy twin over
-    one Arrow collect for a driver-sized graph — bit-identical to the
-    distributed loop (same integer numerators, same fixed-order float
-    update) — else the distributed sweeps."""
-    return size_dispatch(
-        edges.select("src", "dst"),
-        lambda pdf: _katz_local(pdf, n_iter, beta, iter_dp),
-        lambda e: katz_centrality(e, n_iter=n_iter, beta=beta, iter_dp=iter_dp),
-        "id {id}, katz double",
-    )
 
 
 def _katz_local(pdf, n_iter, beta, iter_dp):

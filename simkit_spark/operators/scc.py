@@ -8,7 +8,7 @@ member id — the same contract as connected_components, so downstream
 relabel joins are interchangeable.
 
 Size dispatch (``util.size_dispatch``, 300k-row default, as
-components.connected_components_auto):
+components.connected_components):
 
 - LOCAL for a driver-sized edge list: one Arrow collect, iterative
   Tarjan (explicit stack, no recursion) over CSR adjacency — exact,

@@ -37,11 +37,33 @@ def bounded_sssp(
     weight over all such paths (sources at 0.0). Nodes beyond k hops
     are absent. Negative weights are legal (bounded sweeps cannot
     diverge on a negative cycle), but distances are only k-hop-optimal.
-    """
+
+    Size-dispatched (``util.size_dispatch``): for a driver-sized edge
+    list the k sweeps run driver-side.
+    Bit parity mechanism: min() is order-independent, and the per-sweep
+    rounding replicates Spark's Round expression exactly — Java
+    BigDecimal.valueOf(double) parses Double.toString's
+    shortest-roundtrip decimal, which is Python repr(float), so
+    Decimal(repr(x)).quantize(1e-iter_dp, ROUND_HALF_UP) reproduces the
+    engine digit-for-digit (parity-tested, incl. negative weights).
+    Caveat: Double.toString emits the SHORTEST round-trip decimal only
+    since JDK 19 (Ryu, JDK-4511638); on older JVMs a value whose
+    longer Java rendering straddles a HALF_UP boundary at the
+    iter_dp-th digit could round differently — not observed on the
+    Java 17 test matrix (parity + oracle gates are green), but the
+    contract is strongest on JDK 19+."""
+    return size_dispatch(
+        edges.select("src", "dst", F.col(weight_col).alias("w")),
+        lambda pdf: _sssp_local(pdf, sources, k, iter_dp),
+        lambda e: _sssp_dist(e, sources, k, iter_dp),
+        "id {id}, dist double",
+    )
+
+
+def _sssp_dist(edges: DataFrame, sources: list, k: int, iter_dp: int) -> DataFrame:
+    """Distributed path of ``bounded_sssp`` over (src, dst, w)."""
     spark = edges.sparkSession
-    e = edges.select(
-        "src", "dst", F.col(weight_col).alias("w")
-    ).repartition("src").sortWithinPartitions("src").persist()
+    e = edges.repartition("src").sortWithinPartitions("src").persist()
     try:
         id_type = e.schema["src"].dataType.simpleString()
         dist = spark.createDataFrame(
@@ -72,35 +94,6 @@ def bounded_sssp(
         return dist
     finally:
         e.unpersist()
-
-
-def bounded_sssp_auto(
-    edges: DataFrame,
-    sources: list,
-    k: int,
-    weight_col: str = "weight",
-    iter_dp: int = 12,
-) -> DataFrame:
-    """Size-dispatched ``bounded_sssp`` (``util.size_dispatch``): for a
-    driver-sized edge list the k sweeps run driver-side.
-    Bit parity mechanism: min() is order-independent, and the per-sweep
-    rounding replicates Spark's Round expression exactly — Java
-    BigDecimal.valueOf(double) parses Double.toString's
-    shortest-roundtrip decimal, which is Python repr(float), so
-    Decimal(repr(x)).quantize(1e-iter_dp, ROUND_HALF_UP) reproduces the
-    engine digit-for-digit (parity-tested, incl. negative weights).
-    Caveat: Double.toString emits the SHORTEST round-trip decimal only
-    since JDK 19 (Ryu, JDK-4511638); on older JVMs a value whose
-    longer Java rendering straddles a HALF_UP boundary at the
-    iter_dp-th digit could round differently — not observed on the
-    Java 17 test matrix (parity + oracle gates are green), but the
-    contract is strongest on JDK 19+."""
-    return size_dispatch(
-        edges.select("src", "dst", F.col(weight_col).alias("w")),
-        lambda pdf: _sssp_local(pdf, sources, k, iter_dp),
-        lambda e: bounded_sssp(e, sources, k, "w", iter_dp),
-        "id {id}, dist double",
-    )
 
 
 def _sssp_local(pdf, sources, k, iter_dp):

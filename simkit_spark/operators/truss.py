@@ -78,9 +78,25 @@ def ktruss(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
     surviving ``n_iter`` support-peeling sweeps at threshold ``k``
     (sup >= k-2 to survive); sup is the triangle support within the
     surviving edge set (a not-yet-converged support-0 survivor
-    legitimately reports 0 — the kcore final-sweep contract)."""
+    legitimately reports 0 — the kcore final-sweep contract).
+
+    Size-dispatched (``util.size_dispatch``): a driver-sized graph runs
+    a python set-intersection peeling loop over one Arrow collect,
+    which beats ~4 shuffle stages per sweep; a larger one runs the
+    distributed sweeps. All-integer, so the two paths are exactly
+    identical (parity-tested)."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3 (k-2 triangle witnesses), got {k}")
+    return size_dispatch(
+        edges.select("src", "dst"),
+        lambda pdf: _ktruss_local(pdf, k, n_iter),
+        lambda e: _ktruss_dist(e, k, n_iter),
+        "u {id}, v {id}, sup long",
+    )
+
+
+def _ktruss_dist(edges: DataFrame, k: int, n_iter: int) -> DataFrame:
+    """Distributed path of ``ktruss``."""
     cur = materialize(_dedup_undirected(edges))
     for _ in range(n_iter):
         sup = _edge_support(cur)
@@ -92,22 +108,6 @@ def ktruss(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
     final_sup = _edge_support(cur)
     return cur.join(final_sup, ["u", "v"], "left").select(
         "u", "v", F.coalesce("sup", F.lit(0)).cast("long").alias("sup")
-    )
-
-
-def ktruss_auto(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
-    """Size-dispatched k-truss (``util.size_dispatch``): a driver-sized
-    graph runs a python set-intersection peeling loop over one Arrow
-    collect, which beats ~4 shuffle stages per sweep; a larger one runs
-    the distributed operator. All-integer, so the two paths are exactly
-    identical (parity-tested)."""
-    if k < 3:
-        raise ValueError(f"k-truss needs k >= 3 (k-2 triangle witnesses), got {k}")
-    return size_dispatch(
-        edges.select("src", "dst"),
-        lambda pdf: _ktruss_local(pdf, k, n_iter),
-        lambda e: ktruss(e, k, n_iter),
-        "u {id}, v {id}, sup long",
     )
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import util
-from ..util import materialize
+from ..util import materialize, size_dispatch
 
 
 def _score(seed: int, step: int, start, w, cur, b) -> F.Column:
@@ -57,6 +57,9 @@ def _undirected(edges: DataFrame) -> DataFrame:
     )
 
 
+_WALKS = "start_id {id}, walk int, step int, node_id {id}"
+
+
 def random_walks(
     edges: DataFrame,
     walk_len: int = 4,
@@ -67,16 +70,29 @@ def random_walks(
     ``walks_per_node`` walks of ``walk_len`` hops from every non-isolated
     node over the symmetrized simple graph; step 0 is the start node.
     A walk that reaches a dead end stops early (cannot happen on a
-    symmetrized graph — every reachable node has the return edge)."""
-    return _random_walks_from_und(_undirected(edges), walk_len, walks_per_node, seed)
+    symmetrized graph — every reachable node has the return edge).
+
+    Size-dispatched (``util.size_dispatch``) on the distinct pair set:
+    a driver-sized graph walks in one hashlib loop over one Arrow
+    collect in place of ``walk_len`` sequential join+agg+checkpoint
+    rounds; the md5 pick rule is engine-portable, so both paths are
+    bit-identical (parity-tested, long and string ids)."""
+    und = _undirected(edges)
+    return size_dispatch(
+        und,
+        lambda pdf: _walks_local(
+            pdf, walk_len, walks_per_node, seed, util.local_dispatch_rows(und.schema)
+        ),
+        lambda u: _random_walks_from_und(u, walk_len, walks_per_node, seed),
+        _WALKS,
+    )
 
 
 def _random_walks_from_und(
     und: DataFrame, walk_len: int, walks_per_node: int, seed: int
 ) -> DataFrame:
-    """Loop body over an already-distinct (u < v) pair set — split out
-    so the *_auto dispatcher doesn't pay a second distinct shuffle on
-    the above-threshold path."""
+    """Distributed path of ``random_walks`` over the distinct (u < v)
+    pair set."""
     e = (
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
@@ -132,15 +148,6 @@ def _random_walks_from_und(
     return out
 
 
-def _local_adj(und_pdf):
-    """symmetric adjacency dict from the (u, v) pandas collect."""
-    adj: dict = {}
-    for u, v in zip(und_pdf["u"].tolist(), und_pdf["v"].tolist()):
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
-    return adj
-
-
 def _py_score(seed: int, step: int, start, w: int, cur, b) -> int:
     """driver-side replica of ``_score`` — same md5("<seed>:..."), first
     8 hex chars as an int, so picks are bit-identical to the engine."""
@@ -150,112 +157,47 @@ def _py_score(seed: int, step: int, start, w: int, cur, b) -> int:
     return int(hashlib.md5(key.encode()).hexdigest()[:8], 16)
 
 
-def random_walks_auto(
-    edges: DataFrame,
-    walk_len: int = 4,
-    walks_per_node: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Size-dispatched ``random_walks``: within the
-    ``util.local_dispatch_rows`` budget the graph is driver-sized,
-    so one Arrow collect + a hashlib loop replaces ``walk_len``
-    sequential join+agg+checkpoint rounds (each a full Spark job) —
-    the md5 pick rule is engine-portable, so both paths are
-    bit-identical (parity-tested, long and string ids). Above it, the
-    distributed operator runs on the already-distinct pair set (no
-    second distinct shuffle). The dispatch bounds the OUTPUT too: the
-    local path amplifies n_nodes into n_nodes * walks_per_node *
-    (walk_len+1) driver tuples, so a graph that fits the input budget
-    can still be refused locally (nodes <= 2*pairs bounds it)."""
-    und = _undirected(edges).transform(materialize)
-    n_und = und.count()
-    # nodes <= 2*pairs bounds the amplified walk output; one budget
-    # bounds every driver-side materialization, input AND output
-    est_out = 2 * n_und * walks_per_node * (walk_len + 1)
-    if max(2 * n_und, est_out) > util.local_dispatch_rows(und.schema):
-        return _random_walks_from_und(und, walk_len, walks_per_node, seed)
+def _walks_local(pdf, walk_len, walks_per_node, seed, thr, bias=None):
+    """Driver twin of both walk operators over the collected (u, v)
+    pairs: the pick of each hop minimizes (md5 score * cost, neighbor),
+    as the engine does, so the walks do not depend on row order. With
+    ``bias`` = (p_cost, q_cost) the cost is node2vec's from step 2 on;
+    otherwise it is 1. Declines (None) when the amplified output —
+    nodes <= 2 * pairs, so at most 2 * pairs * walks_per_node *
+    (walk_len + 1) rows — passes the ``thr`` row budget."""
+    import pandas as pd
 
-    spark = edges.sparkSession
-    id_t = und.schema["u"].dataType.simpleString()
-    schema = f"start_id {id_t}, walk int, step int, node_id {id_t}"
-    adj = _local_adj(und.toPandas())
-    out = []
-    for start in adj:
-        for w in range(walks_per_node):
-            cur = start
-            out.append((start, w, 0, cur))
-            for t in range(1, walk_len + 1):
-                cur = min(
-                    adj[cur], key=lambda b: (_py_score(seed, t, start, w, cur, b), b)
-                )
-                out.append((start, w, t, cur))
-    # plain-tuple createDataFrame: no Arrow dependency (driver-harness
-    # runs with Arrow disabled — see tests/test_arrow_disabled.py)
-    return spark.createDataFrame(out, schema)
-
-
-def node2vec_walks_auto(
-    edges: DataFrame,
-    walk_len: int = 4,
-    walks_per_node: int = 2,
-    p_cost: int = 4,
-    q_cost: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Size-dispatched ``node2vec_walks`` — same contract as
-    ``random_walks_auto``; the all-integer md5_score * {p_cost, 1,
-    q_cost} pick rule makes the driver twin bit-identical to the
-    distributed dual-layout implementation (parity-tested). Dispatch
-    bounds both the input collect and the amplified walk output, and
-    the above-threshold path reuses the distinct pair set (see
-    random_walks_auto)."""
-    und = _undirected(edges).transform(materialize)
-    n_und = und.count()
-    est_out = 2 * n_und * walks_per_node * (walk_len + 1)
-    if max(2 * n_und, est_out) > util.local_dispatch_rows(und.schema):
-        return _node2vec_from_und(
-            und, walk_len, walks_per_node, p_cost, q_cost, seed
-        )
-
-    spark = edges.sparkSession
-    id_t = und.schema["u"].dataType.simpleString()
-    schema = f"start_id {id_t}, walk int, step int, node_id {id_t}"
-    pdf = und.toPandas()
-    adj = _local_adj(pdf)
-    pairs = set()
+    if 2 * len(pdf) * walks_per_node * (walk_len + 1) > thr:
+        return None
+    adj: dict = {}
     for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-        pairs.add((u, v))
-        pairs.add((v, u))
+        adj.setdefault(u, []).append(v)
+        adj.setdefault(v, []).append(u)
+    nbrs = {a: set(bs) for a, bs in adj.items()} if bias else {}
 
-    def _cost(prev, b) -> int:
+    def cost(prev, b) -> int:
         # precedence mirrors the engine's F.when chain: return-to-prev
         # first, then distance-1 (triangle) candidates, then distance-2
-        if b == prev:
-            return p_cost
-        if (prev, b) in pairs:
+        if not bias or prev is None:
             return 1
-        return q_cost
+        if b == prev:
+            return bias[0]
+        return 1 if b in nbrs[prev] else bias[1]
 
-    out = []
+    rows = []
     for start in adj:
         for w in range(walks_per_node):
-            cur = start
-            out.append((start, w, 0, cur))
-            # step 1: uniform (no prev), identical to random_walks
-            prev, cur = cur, min(
-                adj[cur], key=lambda b: (_py_score(seed, 1, start, w, cur, b), b)
-            )
-            out.append((start, w, 1, cur))
-            for t in range(2, walk_len + 1):
+            prev, cur = None, start
+            rows.append((start, w, 0, cur))
+            for t in range(1, walk_len + 1):
                 prev, cur = cur, min(
                     adj[cur],
                     key=lambda b: (
-                        _py_score(seed, t, start, w, cur, b) * _cost(prev, b),
-                        b,
+                        _py_score(seed, t, start, w, cur, b) * cost(prev, b), b
                     ),
                 )
-                out.append((start, w, t, cur))
-    return spark.createDataFrame(out, schema)
+                rows.append((start, w, t, cur))
+    return pd.DataFrame(rows, columns=["start_id", "walk", "step", "node_id"])
 
 
 def node2vec_walks(
@@ -284,9 +226,22 @@ def node2vec_walks(
     — never a neighbor-list x neighbor-list expansion. Frontier lineage
     breaks every step. Output is the long format of ``random_walks``:
     (start_id, walk, step, node_id), step 0 = start.
+
+    Size-dispatched like ``random_walks``: the all-integer pick rule
+    makes the driver twin bit-identical to the distributed dual-layout
+    implementation (parity-tested).
     """
-    return _node2vec_from_und(
-        _undirected(edges), walk_len, walks_per_node, p_cost, q_cost, seed
+    und = _undirected(edges)
+    return size_dispatch(
+        und,
+        lambda pdf: _walks_local(
+            pdf, walk_len, walks_per_node, seed,
+            util.local_dispatch_rows(und.schema), (p_cost, q_cost),
+        ),
+        lambda u: _node2vec_from_und(
+            u, walk_len, walks_per_node, p_cost, q_cost, seed
+        ),
+        _WALKS,
     )
 
 
@@ -298,8 +253,8 @@ def _node2vec_from_und(
     q_cost: int,
     seed: int,
 ) -> DataFrame:
-    """Loop body over an already-distinct (u < v) pair set (see
-    _random_walks_from_und)."""
+    """Distributed path of ``node2vec_walks`` over the distinct (u < v)
+    pair set."""
     e = (
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))

@@ -23,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..operators.components import connected_components_auto
+from ..operators.components import connected_components
 from ..util import materialize, size_dispatch
 from .refine import (
     DEFAULT_MIN_SIZE,
@@ -354,15 +354,23 @@ def refine_components(
     mega-components through unsplit instead of OOMing a task).
 
     edges(src, dst, weight), comp(id, component) ->
-    (surface_id, entity_id) for every member of an edge-bearing
-    component. Isolated nodes (no >= tau edge) never appear — the
-    caller coalesces them to their singleton component id.
+    (surface_id, entity_id) for every member of a component with at
+    least ``min_size`` members. ``spectral_split`` never splits a
+    smaller one, so its edges are dropped before the grouped map; the
+    caller coalesces those members, like isolated nodes (no >= tau
+    edge), to their component id.
     """
     import pandas as pd  # noqa: PLC0415
 
+    splittable = (
+        comp.groupBy("component")
+        .count()
+        .where(F.col("count") >= min_size)
+        .select("component")
+    )
     tagged = edges.join(
         comp.select(F.col("id").alias("src"), "component"), "src"
-    )
+    ).join(splittable, "component", "left_semi")
 
     def split_fn(key, pdf):
         srcs = pdf["src"].to_numpy()
@@ -411,7 +419,7 @@ def link_entities(
     def dist(surfaces):
         pairs = candidate_pairs(surfaces, dim, seed=seed)
         edges = materialize(similarity_edges(surfaces, pairs, tau))
-        comp = connected_components_auto(
+        comp = connected_components(
             edges.select("src", "dst"),
             nodes=surfaces.select(F.col("surface_id").alias("id")),
             max_iter=cc_max_iter,

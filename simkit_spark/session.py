@@ -13,9 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_mem_bytes() -> int:
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
 def _driver_mem(master: str) -> str:
     """Heap for the single local-mode JVM: ~1.5 GiB per task slot,
-    16 GiB floor. Explicit SPARK_DRIVER_MEM always wins."""
+    16 GiB floor, capped at ~3/4 of the host's physical memory (a heap
+    past it lets the JVM be killed mid-query). Explicit
+    SPARK_DRIVER_MEM always wins."""
     env = os.environ.get("SPARK_DRIVER_MEM")
     if env:
         return env
@@ -23,7 +29,8 @@ def _driver_mem(master: str) -> str:
     if master.startswith("local"):
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "1"
         slots = os.cpu_count() or 8 if inner in ("*", "") else int(inner.split(",")[0])
-    return f"{max(16, slots * 3 // 2)}g"
+    cap = max(1, _host_mem_bytes() * 3 // 4 >> 30)
+    return f"{min(max(16, slots * 3 // 2), cap)}g"
 
 
 def get_spark(

@@ -61,7 +61,7 @@ def test_bad_agg_raises(spark):
         )
 
 
-def test_multilevel_halving(spark):
+def test_multilevel_halving(spark, force_distributed):
     # a 32-cycle: a maximal matching matches >= 1/2 - ish of vertices;
     # after contraction the graph stays a connected cycle-like chain
     # and node count drops; iterate two levels and check monotone
@@ -70,7 +70,8 @@ def test_multilevel_halving(spark):
     n = 32
     edges = _e(spark, [(i, (i + 1) % n) for i in range(n)])
     for _ in range(2):
-        matched = maximal_matching(edges, n_iter=10, seed=42).select("u", "v")
+        with force_distributed():
+            matched = maximal_matching(edges, n_iter=10, seed=42).select("u", "v")
         nxt = coarsen_graph(edges, matched)
         nodes_before = (
             edges.selectExpr("src AS id")

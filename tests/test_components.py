@@ -3,47 +3,51 @@ from __future__ import annotations
 from simkit_spark.operators.components import connected_components
 
 
-def test_two_components(spark):
+def test_two_components(spark, force_distributed):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6), (6, 7), (7, 5)], "src long, dst long"
     )
-    labels = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    with force_distributed():
+        labels = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert labels == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5, 7: 5}
 
 
-def test_chain_converges(spark):
+def test_chain_converges(spark, force_distributed):
     # a long path stresses the propagation loop
     n = 40
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
-    labels = connected_components(edges, max_iter=n + 2).collect()
+    with force_distributed():
+        labels = connected_components(edges, max_iter=n + 2).collect()
     assert {r["component"] for r in labels} == {0}
 
 
-def test_chain_converges_in_log_rounds(spark):
+def test_chain_converges_in_log_rounds(spark, force_distributed):
     # pointer doubling: a 64-node path must resolve well under 64 rounds
     n = 64
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
-    labels = connected_components(edges, max_iter=12).collect()
+    with force_distributed():
+        labels = connected_components(edges, max_iter=12).collect()
     assert {r["component"] for r in labels} == {0}
 
 
-def test_isolated_nodes_kept(spark):
+def test_isolated_nodes_kept(spark, force_distributed):
     edges = spark.createDataFrame([(0, 1)], "src long, dst long")
     nodes = spark.createDataFrame([(0,), (1,), (9,)], "id long")
-    labels = {r["id"]: r["component"] for r in connected_components(edges, nodes).collect()}
+    with force_distributed():
+        labels = {r["id"]: r["component"] for r in connected_components(edges, nodes).collect()}
     assert labels == {0: 0, 1: 0, 9: 9}
 
 
 def test_auto_empty_edges_each_node_own_component(spark):
     # zero edges (e.g. dbscan with no core points) must not hit the
     # empty-createDataFrame schema-inference error on the local path
-    from simkit_spark.operators.components import connected_components_auto
+    from simkit_spark.operators.components import connected_components
 
     edges = spark.createDataFrame([], "src long, dst long")
     nodes = spark.createDataFrame([(3,), (7,)], "id long")
     labels = {
         r["id"]: r["component"]
-        for r in connected_components_auto(edges, nodes).collect()
+        for r in connected_components(edges, nodes).collect()
     }
     assert labels == {3: 3, 7: 7}
 
@@ -53,15 +57,15 @@ def test_auto_missing_endpoint_raises(spark):
     # missing from `nodes` — the contract violation stays loud
     import pytest
 
-    from simkit_spark.operators.components import connected_components_auto
+    from simkit_spark.operators.components import connected_components
 
     edges = spark.createDataFrame([(0, 99)], "src long, dst long")
     nodes = spark.createDataFrame([(0,), (1,)], "id long")
     with pytest.raises(KeyError, match="endpoint not in nodes"):
-        connected_components_auto(edges, nodes).collect()
+        connected_components(edges, nodes).collect()
 
 
-def test_reliable_checkpoint_used_when_configured(spark, tmp_path):
+def test_reliable_checkpoint_used_when_configured(spark, tmp_path, force_distributed):
     """With a reliable checkpoint dir set, iterative operators must use
     checkpoint() (fault-tolerant) instead of executor-resident
     localCheckpoint — one lost executor must not kill iteration 39."""
@@ -78,7 +82,8 @@ def test_reliable_checkpoint_used_when_configured(spark, tmp_path):
             [(i, i + 1) for i in range(0, 200, 2)] + [(i, i + 2) for i in range(0, 100, 2)],
             "src long, dst long",
         )
-        comp = connected_components(edges, max_iter=20)
+        with force_distributed():
+            comp = connected_components(edges, max_iter=20)
         assert comp.count() > 0
         # reliable checkpoint files actually landed on disk
         found = any(files for _, _, files in os.walk(ckdir))
@@ -95,12 +100,12 @@ def test_auto_empty_nodes_raises_keyerror(spark):
     documented KeyError, not numpy IndexError (review r3 finding)."""
     import pytest
 
-    from simkit_spark.operators.components import connected_components_auto
+    from simkit_spark.operators.components import connected_components
 
     edges = spark.createDataFrame([(0, 99)], "src long, dst long")
     nodes = spark.createDataFrame([], "id long")
     with pytest.raises(KeyError, match="endpoint not in nodes"):
-        connected_components_auto(edges, nodes=nodes)
+        connected_components(edges, nodes=nodes)
 
 
 def test_auto_nodes_past_budget_go_distributed(spark, monkeypatch):
@@ -112,7 +117,7 @@ def test_auto_nodes_past_budget_go_distributed(spark, monkeypatch):
     nodes = spark.createDataFrame([(i,) for i in range(10)], "id long")
     local = {
         r["id"]: r["component"]
-        for r in components.connected_components_auto(edges, nodes).collect()
+        for r in components.connected_components(edges, nodes).collect()
     }
     assert local == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5, 6: 5, 7: 7, 8: 8, 9: 9}
     calls = []
@@ -124,6 +129,6 @@ def test_auto_nodes_past_budget_go_distributed(spark, monkeypatch):
 
     monkeypatch.setattr(components, "connected_components", spy)
     monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 5)
-    got = components.connected_components_auto(edges, nodes)
+    got = components.connected_components(edges, nodes)
     assert calls == [1]
     assert {r["id"]: r["component"] for r in got.collect()} == local

@@ -25,10 +25,11 @@ def _dense(rows, n):
     return a
 
 
-def test_eigensolve_matches_numpy_tiny(spark, lap_edges):
+def test_eigensolve_matches_numpy_tiny(spark, lap_edges, force_distributed):
     a = _dense(lap_edges.collect(), 5)
     lam_np = np.linalg.eigvalsh(a)  # ascending
-    x, lam = eigensolve(lap_edges, k=2, max_iter=200, tol=1e-12, seed=7)
+    with force_distributed():
+        x, lam = eigensolve(lap_edges, k=2, max_iter=200, tol=1e-12, seed=7)
     # dominant 2 eigenvalues, reported ascending
     assert lam == pytest.approx(lam_np[-2:], abs=1e-6)
     # eigenvector subspace parity: projector onto top-2 subspace matches
@@ -39,7 +40,7 @@ def test_eigensolve_matches_numpy_tiny(spark, lap_edges):
     assert np.abs(p_got - p_want).max() < 1e-5
 
 
-def test_eigensolve_larger_graph(spark):
+def test_eigensolve_larger_graph(spark, force_distributed):
     rng = np.random.RandomState(42)
     n, k = 120, 3
     # 3-block stochastic-block-model-ish affinity
@@ -52,7 +53,8 @@ def test_eigensolve_larger_graph(spark):
     lap = laplacian(symmetrize(full_affinity(dist, sigma_k=7)), "sym")
     a = _dense(lap.collect(), n)
     lam_np = np.linalg.eigvalsh(a)
-    _, lam = eigensolve(lap, k=k, max_iter=150, tol=1e-10, seed=1)
+    with force_distributed():
+        _, lam = eigensolve(lap, k=k, max_iter=150, tol=1e-10, seed=1)
     assert lam == pytest.approx(lam_np[-k:], abs=1e-5)
 
 
@@ -78,13 +80,13 @@ def test_eigensolve_auto_nonsymmetric_distributed_raises(spark, force_distribute
     # silently diverge from the local path
     import pytest
 
-    from simkit_spark.operators.eigen import eigensolve_auto
+    from simkit_spark.operators.eigen import eigensolve
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 8, 1.0) for i in range(8)], "src long, dst long, weight double"
     )
     with force_distributed(), pytest.raises(ValueError, match="symmetric"):
-        eigensolve_auto(edges, k=2, symmetric=False)
+        eigensolve(edges, k=2, symmetric=False)
 
 
 def test_eigensolve_auto_nonsymmetric_past_nodes_raises_before_checkpoint(spark, monkeypatch):
@@ -100,7 +102,7 @@ def test_eigensolve_auto_nonsymmetric_past_nodes_raises_before_checkpoint(spark,
         [(i, (i + 1) % 8, 1.0) for i in range(8)], "src long, dst long, weight double"
     )
     with pytest.raises(ValueError, match="symmetric"):
-        eigen.eigensolve_auto(edges, k=2, symmetric=False)
+        eigen.eigensolve(edges, k=2, symmetric=False)
     assert calls == []
 
 
@@ -109,7 +111,7 @@ def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark, monkeyp
     budget while the de-duplicated graph fits; symmetric=False must
     dedupe and solve locally instead of raising (review r3 finding)."""
     import numpy as np
-    from simkit_spark.operators.eigen import eigensolve_auto
+    from simkit_spark.operators.eigen import eigensolve
 
     base = [(i, (i + 1) % 4, 0.5) for i in range(4)] + [
         (i, i, 0.5) for i in range(4)
@@ -117,7 +119,7 @@ def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark, monkeyp
     dup = base * 30  # 240 rows > the 16-row budget; 8 distinct rows fit
     edges = spark.createDataFrame(dup, "src long, dst long, weight double")
     monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 16)
-    x, lam = eigensolve_auto(
+    x, lam = eigensolve(
         edges, k=2, max_iter=50, tol=1e-8, seed=42, symmetric=False,
     )
     assert x.count() == 4
@@ -128,14 +130,14 @@ def test_eigensolve_auto_nonsymmetric_duplicate_edges_stays_local(spark, monkeyp
 def test_eigensolve_auto_local_path_one_job(spark):
     """The local path's size probe is its only Spark job: one bounded
     Arrow collect, then numpy eigh on the driver."""
-    from simkit_spark.operators.eigen import eigensolve_auto
+    from simkit_spark.operators.eigen import eigensolve
 
     rows = [(i, j, 1.0 / (1 + i + j)) for i in range(6) for j in range(6) if i != j]
     edges = spark.createDataFrame(rows, "src long, dst long, weight double")
     sc = spark.sparkContext
     sc.setJobGroup("eigensolve-auto-local", "eigensolve-auto-local")
     try:
-        x, lam = eigensolve_auto(edges, k=2)
+        x, lam = eigensolve(edges, k=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("eigensolve-auto-local")) == 1

@@ -58,10 +58,21 @@ def test_driver_mem_scales_with_local_slots(monkeypatch):
     from simkit_spark.session import _driver_mem
 
     monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    # a large host: the slot rule decides
+    monkeypatch.setattr(
+        "simkit_spark.session._host_mem_bytes", lambda: 256 << 30
+    )
     assert _driver_mem("local[8]") == "16g"
     assert _driver_mem("local[32]") == "48g"
     assert _driver_mem("local[4,2]") == "16g"
     assert _driver_mem("yarn") == "16g"
+    # a 15 GiB host: the heap stops at ~3/4 of physical memory, where
+    # a 16 GiB floor let the JVM be killed mid-query (kg_rules at sf0.1)
+    monkeypatch.setattr(
+        "simkit_spark.session._host_mem_bytes", lambda: 15 << 30
+    )
+    assert _driver_mem("local[4]") == "11g"
+    assert _driver_mem("local[32]") == "11g"
     monkeypatch.setenv("SPARK_DRIVER_MEM", "9g")
     assert _driver_mem("local[32]") == "9g"
 

@@ -11,34 +11,38 @@ def _run(spark, edges, n_iter=5):
     return {r["id"]: r["community"] for r in label_propagation(df, n_iter).collect()}
 
 
-def test_two_cliques_with_bridge(spark):
+def test_two_cliques_with_bridge(spark, force_distributed):
     """Two K4s joined by one bridge edge: each clique converges to its
     own min label; the bridge doesn't merge them (1 vote vs 3)."""
     k4a = [(a, b) for a in range(0, 4) for b in range(a + 1, 4)]
     k4b = [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
-    out = _run(spark, k4a + k4b + [(3, 10)])
+    with force_distributed():
+        out = _run(spark, k4a + k4b + [(3, 10)])
     assert {out[i] for i in range(0, 4)} == {0}
     assert {out[i] for i in range(10, 14)} == {10}
 
 
-def test_tie_breaks_to_smallest_label(spark):
+def test_tie_breaks_to_smallest_label(spark, force_distributed):
     # node 2's neighbors {1, 3} each vote once -> tie -> label 1
-    out = _run(spark, [(1, 2), (2, 3)], n_iter=1)
+    with force_distributed():
+        out = _run(spark, [(1, 2), (2, 3)], n_iter=1)
     assert out[2] == 1
 
 
-def test_clique_is_fixed_point_at_min_label(spark):
+def test_clique_is_fixed_point_at_min_label(spark, force_distributed):
     tri = [(5, 6), (6, 7), (5, 7)]
     for n in (3, 6):
-        out = _run(spark, tri, n_iter=n)
+        with force_distributed():
+            out = _run(spark, tri, n_iter=n)
         assert out == {5: 5, 6: 5, 7: 5}, n
 
 
-def test_partition_invariant(spark):
+def test_partition_invariant(spark, force_distributed):
     edges = [(i, (i * 7) % 23) for i in range(23) if i != (i * 7) % 23]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = sorted(map(tuple, label_propagation(df, 4).collect()))
-    b = sorted(map(tuple, label_propagation(df.repartition(9), 4).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, label_propagation(df, 4).collect()))
+        b = sorted(map(tuple, label_propagation(df.repartition(9), 4).collect()))
     assert a == b
 
 
@@ -63,36 +67,31 @@ def test_modularity_two_triangles_exact(spark):
     assert len(q) == 1 and q[0]["q_c"] == 0.0 and q[0]["inner_edges"] == 7
 
 
-def test_lpa_auto_local_distributed_parity(spark):
+def test_lpa_auto_local_distributed_parity(spark, force_distributed):
     """All-integer sweeps: the numpy twin must equal the distributed
     loop exactly, including tiebreaks, on a graph with hubs + chains."""
     import random
 
-    from simkit_spark.operators.labelprop import (
-        label_propagation,
-        label_propagation_auto,
-    )
+    from simkit_spark.operators.labelprop import label_propagation
 
     rng = random.Random(11)
     edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(120)]
     edges += [(i, i + 1) for i in range(40, 55)]
     df = spark.createDataFrame(edges, "src long, dst long").where("src <> dst")
     for it in (1, 3, 5):
-        a = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
-        b = {r["id"]: r["community"] for r in label_propagation_auto(df, n_iter=it).collect()}
+        with force_distributed():
+            a = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
+        b = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
         assert a == b, it
 
 
-def test_lpa_auto_string_id_parity(spark):
+def test_lpa_auto_string_id_parity(spark, force_distributed):
     """String ids (KG IRIs) through the numpy twin: the old twin fed an
     object array to np.unique(axis=0), which raises TypeError — the
     dispatch must be invisible for the module's advertised KG use."""
     import random
 
-    from simkit_spark.operators.labelprop import (
-        label_propagation,
-        label_propagation_auto,
-    )
+    from simkit_spark.operators.labelprop import label_propagation
 
     rng = random.Random(7)
     edges = [
@@ -101,18 +100,19 @@ def test_lpa_auto_string_id_parity(spark):
     ] + [("chain:%d" % i, "chain:%d" % (i + 1)) for i in range(12)]
     df = spark.createDataFrame(edges, "src string, dst string")
     for it in (1, 4):
-        a = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
-        b = {r["id"]: r["community"] for r in label_propagation_auto(df, n_iter=it).collect()}
+        with force_distributed():
+            a = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
+        b = {r["id"]: r["community"] for r in label_propagation(df, n_iter=it).collect()}
         assert a == b, it
-    out = label_propagation_auto(df, n_iter=2)
+    out = label_propagation(df, n_iter=2)
     assert out.schema["id"].dataType.simpleString() == "string"
 
 
 def test_lpa_auto_all_self_loops(spark):
-    from simkit_spark.operators.labelprop import label_propagation_auto
+    from simkit_spark.operators.labelprop import label_propagation
 
     df = spark.createDataFrame([("a", "a"), ("b", "b")], "src string, dst string")
-    assert label_propagation_auto(df, n_iter=2).count() == 0
+    assert label_propagation(df, n_iter=2).count() == 0
 
 
 def test_conductance_two_triangles_closed_form(spark):

@@ -5,10 +5,7 @@ from __future__ import annotations
 import hashlib
 import itertools
 
-from simkit_spark.operators.mis import (
-    maximal_independent_set,
-    maximal_independent_set_auto,
-)
+from simkit_spark.operators.mis import maximal_independent_set
 
 
 def _edges(spark, pairs, id_t="long"):
@@ -44,8 +41,9 @@ _PAIRS = [
 ]
 
 
-def test_independence_and_maximality(spark):
-    got = maximal_independent_set(_edges(spark, _PAIRS), n_iter=12, seed=42)
+def test_independence_and_maximality(spark, force_distributed):
+    with force_distributed():
+        got = maximal_independent_set(_edges(spark, _PAIRS), n_iter=12, seed=42)
     mis = {r.id for r in got.collect()}
     nbr = {}
     for a, b in _PAIRS:
@@ -58,9 +56,10 @@ def test_independence_and_maximality(spark):
     assert all(nbr[x] & mis for x in nbr if x not in mis)
 
 
-def test_equals_sequential_greedy(spark):
-    got = {r.id for r in
-           maximal_independent_set(_edges(spark, _PAIRS), n_iter=12, seed=42).collect()}
+def test_equals_sequential_greedy(spark, force_distributed):
+    with force_distributed():
+        got = {r.id for r in
+               maximal_independent_set(_edges(spark, _PAIRS), n_iter=12, seed=42).collect()}
     assert got == _greedy_mis(_PAIRS, 42)
 
 
@@ -68,9 +67,9 @@ def test_auto_paths_bit_identical(spark, force_distributed):
     e = _edges(spark, _PAIRS)
     with force_distributed():
         dist = sorted((r.id, r.sweep) for r in
-                      maximal_independent_set_auto(e, 8, 42).collect())
+                      maximal_independent_set(e, 8, 42).collect())
     local = sorted((r.id, r.sweep) for r in
-                   maximal_independent_set_auto(e, 8, 42).collect())
+                   maximal_independent_set(e, 8, 42).collect())
     assert dist == local and dist
 
 
@@ -79,36 +78,39 @@ def test_string_ids_both_paths(spark, force_distributed):
     e = _edges(spark, pairs, "string")
     with force_distributed():
         dist = sorted((r.id, r.sweep) for r in
-                      maximal_independent_set_auto(e, 6, 7).collect())
+                      maximal_independent_set(e, 6, 7).collect())
     local = sorted((r.id, r.sweep) for r in
-                   maximal_independent_set_auto(e, 6, 7).collect())
+                   maximal_independent_set(e, 6, 7).collect())
     assert dist == local
     assert {x for x, _ in dist} == _greedy_mis(pairs, 7)
 
 
-def test_seed_changes_selection(spark):
+def test_seed_changes_selection(spark, force_distributed):
     e = _edges(spark, _PAIRS)
-    a = {r.id for r in maximal_independent_set(e, 12, seed=1).collect()}
-    b = {r.id for r in maximal_independent_set(e, 12, seed=2).collect()}
+    with force_distributed():
+        a = {r.id for r in maximal_independent_set(e, 12, seed=1).collect()}
+        b = {r.id for r in maximal_independent_set(e, 12, seed=2).collect()}
     assert a == _greedy_mis(_PAIRS, 1)
     assert b == _greedy_mis(_PAIRS, 2)
     assert a != b  # 60-node graph: astronomically unlikely to coincide
 
 
-def test_sweep_schedule_deterministic_and_partition_invariant(spark):
+def test_sweep_schedule_deterministic_and_partition_invariant(spark, force_distributed):
     e = _edges(spark, _PAIRS)
-    a = sorted((r.id, r.sweep) for r in
-               maximal_independent_set(e.repartition(17), 8, 42).collect())
-    b = sorted((r.id, r.sweep) for r in
-               maximal_independent_set(e.coalesce(1), 8, 42).collect())
+    with force_distributed():
+        a = sorted((r.id, r.sweep) for r in
+                   maximal_independent_set(e.repartition(17), 8, 42).collect())
+        b = sorted((r.id, r.sweep) for r in
+                   maximal_independent_set(e.coalesce(1), 8, 42).collect())
     assert a == b
     # sweep 1 selects exactly the local priority minima
     assert any(s == 1 for _, s in a) and all(s >= 1 for _, s in a)
 
 
-def test_isolated_pair_and_empty(spark):
+def test_isolated_pair_and_empty(spark, force_distributed):
     # a single edge: exactly one endpoint selected, in sweep 1
-    got = maximal_independent_set(_edges(spark, [(1, 2)]), 3, 42).collect()
+    with force_distributed():
+        got = maximal_independent_set(_edges(spark, [(1, 2)]), 3, 42).collect()
     assert len(got) == 1 and got[0].sweep == 1
     empty = _edges(spark, [])
-    assert maximal_independent_set_auto(empty, 3, 42).count() == 0
+    assert maximal_independent_set(empty, 3, 42).count() == 0

@@ -49,47 +49,50 @@ def _replica(edges, walk_len, walks_per_node, p_cost, q_cost, seed):
     return sorted(rows)
 
 
-def test_node2vec_matches_python_replica(spark):
-    edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
-        (i, (i + 7) % 23) for i in range(23)
-    ]
-    edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = sorted(
-        (r["start_id"], r["walk"], r["step"], r["node_id"])
-        for r in node2vec_walks(df, 5, 2, p_cost=4, q_cost=2, seed=42).collect()
-    )
-    assert got == _replica(edges, 5, 2, 4, 2, 42)
+def test_node2vec_matches_python_replica(spark, force_distributed):
+    with force_distributed():
+        edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
+            (i, (i + 7) % 23) for i in range(23)
+        ]
+        edges = [e for e in edges if e[0] != e[1]]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = sorted(
+            (r["start_id"], r["walk"], r["step"], r["node_id"])
+            for r in node2vec_walks(df, 5, 2, p_cost=4, q_cost=2, seed=42).collect()
+        )
+        assert got == _replica(edges, 5, 2, 4, 2, 42)
 
 
-def test_node2vec_follows_edges_and_partition_invariant(spark):
-    edges = [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    und = {frozenset(e) for e in edges}
-    a = node2vec_walks(df, 4, 2).collect()
-    paths: dict[tuple, dict] = {}
-    for r in a:
-        paths.setdefault((r["start_id"], r["walk"]), {})[r["step"]] = r["node_id"]
-    for (start, _), p in paths.items():
-        seq = [p[s] for s in sorted(p)]
-        assert seq[0] == start and len(seq) == 5
-        for x, y in zip(seq, seq[1:]):
-            assert frozenset((x, y)) in und
-    b = node2vec_walks(df.repartition(7), 4, 2).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+def test_node2vec_follows_edges_and_partition_invariant(spark, force_distributed):
+    with force_distributed():
+        edges = [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        und = {frozenset(e) for e in edges}
+        a = node2vec_walks(df, 4, 2).collect()
+        paths: dict[tuple, dict] = {}
+        for r in a:
+            paths.setdefault((r["start_id"], r["walk"]), {})[r["step"]] = r["node_id"]
+        for (start, _), p in paths.items():
+            seq = [p[s] for s in sorted(p)]
+            assert seq[0] == start and len(seq) == 5
+            for x, y in zip(seq, seq[1:]):
+                assert frozenset((x, y)) in und
+        b = node2vec_walks(df.repartition(7), 4, 2).collect()
+        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_node2vec_bias_changes_walks_and_forced_return(spark):
+def test_node2vec_bias_changes_walks_and_forced_return(spark, force_distributed):
     # K7: dense enough that p/q weighting actually flips some argmin
-    edges = [(a, b) for a in range(7) for b in range(a + 1, 7)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    flat = sorted(map(tuple, node2vec_walks(df, 6, 2, p_cost=1, q_cost=1).collect()))
-    biased = sorted(map(tuple, node2vec_walks(df, 6, 2, p_cost=40, q_cost=1).collect()))
-    assert flat != biased
-    # 2-cycle: returning is the ONLY candidate — cost must not exclude it
-    two = spark.createDataFrame([(0, 1)], "src long, dst long")
-    rows = node2vec_walks(two, 3, 1, p_cost=100).collect()
-    seqs = {}
-    for r in rows:
-        seqs.setdefault(r["start_id"], {})[r["step"]] = r["node_id"]
-    assert [seqs[0][s] for s in range(4)] == [0, 1, 0, 1]
+    with force_distributed():
+        edges = [(a, b) for a in range(7) for b in range(a + 1, 7)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        flat = sorted(map(tuple, node2vec_walks(df, 6, 2, p_cost=1, q_cost=1).collect()))
+        biased = sorted(map(tuple, node2vec_walks(df, 6, 2, p_cost=40, q_cost=1).collect()))
+        assert flat != biased
+        # 2-cycle: returning is the ONLY candidate — cost must not exclude it
+        two = spark.createDataFrame([(0, 1)], "src long, dst long")
+        rows = node2vec_walks(two, 3, 1, p_cost=100).collect()
+        seqs = {}
+        for r in rows:
+            seqs.setdefault(r["start_id"], {})[r["step"]] = r["node_id"]
+        assert [seqs[0][s] for s in range(4)] == [0, 1, 0, 1]

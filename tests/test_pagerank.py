@@ -61,9 +61,10 @@ def dangling_graph(spark):
     return edges, spark.createDataFrame(edges, "src long, dst long")
 
 
-def test_pagerank_matches_numpy_reference(spark, dangling_graph):
+def test_pagerank_matches_numpy_reference(spark, dangling_graph, force_distributed):
     edges, df = dangling_graph
-    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
+    with force_distributed():
+        got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
     want = _np_pagerank(edges, n_iter=10)
     assert set(got) == set(want)
     for v in want:
@@ -71,47 +72,51 @@ def test_pagerank_matches_numpy_reference(spark, dangling_graph):
         assert got[v] == want[v], v
 
 
-def test_pagerank_conserves_mass(spark, dangling_graph):
+def test_pagerank_conserves_mass(spark, dangling_graph, force_distributed):
     _, df = dangling_graph
-    total = sum(r["rank"] for r in pagerank(df, n_iter=10).collect())
+    with force_distributed():
+        total = sum(r["rank"] for r in pagerank(df, n_iter=10).collect())
     # floor division leaks < outdeg ulps of 1e-12 per source per sweep
     assert total == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_partition_invariant(spark, dangling_graph):
+def test_pagerank_partition_invariant(spark, dangling_graph, force_distributed):
     _, df = dangling_graph
-    a = sorted(map(tuple, pagerank(df, n_iter=6).collect()))
-    b = sorted(map(tuple, pagerank(df.repartition(7), n_iter=6).collect()))
+    with force_distributed():
+        a = sorted(map(tuple, pagerank(df, n_iter=6).collect()))
+        b = sorted(map(tuple, pagerank(df.repartition(7), n_iter=6).collect()))
     assert a == b
 
 
-def test_pagerank_empty_edges(spark):
+def test_pagerank_empty_edges(spark, force_distributed):
     df = spark.createDataFrame([], "src long, dst long")
-    out = pagerank(df, n_iter=3)
+    with force_distributed():
+        out = pagerank(df, n_iter=3)
     assert out.count() == 0
     # schema follows the input id type
     assert out.schema["id"].dataType.simpleString() == "bigint"
     df_s = spark.createDataFrame([], "src string, dst string")
-    assert pagerank(df_s, n_iter=3).schema["id"].dataType.simpleString() == "string"
+    with force_distributed():
+        assert pagerank(df_s, n_iter=3).schema["id"].dataType.simpleString() == "string"
 
 
 def test_pagerank_auto_paths_bit_identical(spark, dangling_graph, force_distributed):
     """The exact-integer contract makes the driver-local numpy path
     and the distributed path produce the same bits."""
-    from simkit_spark.operators.pagerank import pagerank_auto
+    from simkit_spark.operators.pagerank import pagerank
 
     _, df = dangling_graph
-    local = sorted(map(tuple, pagerank_auto(df, n_iter=10).collect()))
+    local = sorted(map(tuple, pagerank(df, n_iter=10).collect()))
     with force_distributed():
-        dist = sorted(map(tuple, pagerank_auto(df, n_iter=10).collect()))
+        dist = sorted(map(tuple, pagerank(df, n_iter=10).collect()))
     assert local == dist
 
 
 def test_pagerank_auto_empty(spark):
-    from simkit_spark.operators.pagerank import pagerank_auto
+    from simkit_spark.operators.pagerank import pagerank
 
     df = spark.createDataFrame([], "src long, dst long")
-    assert pagerank_auto(df, n_iter=3).count() == 0
+    assert pagerank(df, n_iter=3).count() == 0
 
 
 def _ppr_reference(edges, seeds, n_iter=10, d=0.85, dp=12):
@@ -258,7 +263,7 @@ def _py_weighted_pagerank(edges, n_iter=10, d=0.85, iter_dp=9, weight_dp=6):
     return {v: r[v] * inv for v in nodes}
 
 
-def test_weighted_pagerank_matches_python_twin_bitwise(spark):
+def test_weighted_pagerank_matches_python_twin_bitwise(spark, force_distributed):
     from simkit_spark.operators.pagerank import weighted_pagerank
 
     edges = [
@@ -267,7 +272,8 @@ def test_weighted_pagerank_matches_python_twin_bitwise(spark):
         ("a", "e", 0.0000001),                       # quantizes to 0 -> drops
     ]
     e = spark.createDataFrame(edges, "src string, dst string, weight double")
-    got = {r.id: r.rank for r in weighted_pagerank(e, n_iter=10).collect()}
+    with force_distributed():
+        got = {r.id: r.rank for r in weighted_pagerank(e, n_iter=10).collect()}
     want = _py_weighted_pagerank(edges, n_iter=10)
     assert got == want
     assert "e" not in got  # zero-quantized edge dropped with its node
@@ -275,7 +281,7 @@ def test_weighted_pagerank_matches_python_twin_bitwise(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_weighted_pagerank_weight_sensitivity(spark):
+def test_weighted_pagerank_weight_sensitivity(spark, force_distributed):
     """rank must actually follow the weights: b receives 9x c's share
     from a, so rank(b) > rank(c) on the star; in the unweighted
     variant they tie."""
@@ -285,25 +291,24 @@ def test_weighted_pagerank_weight_sensitivity(spark):
         [("a", "b", 0.9), ("a", "c", 0.1), ("b", "a", 1.0), ("c", "a", 1.0)],
         "src string, dst string, weight double",
     )
-    wr = {r.id: r.rank for r in weighted_pagerank(w, n_iter=10).collect()}
+    with force_distributed():
+        wr = {r.id: r.rank for r in weighted_pagerank(w, n_iter=10).collect()}
     assert wr["b"] > wr["c"]
-    ur = {
-        r.id: r.rank
-        for r in pagerank(w.select("src", "dst"), n_iter=10).collect()
-    }
+    with force_distributed():
+        ur = {
+            r.id: r.rank
+            for r in pagerank(w.select("src", "dst"), n_iter=10).collect()
+        }
     assert ur["b"] == ur["c"]
 
 
-def test_weighted_pagerank_auto_local_distributed_parity(spark):
+def test_weighted_pagerank_auto_local_distributed_parity(spark, force_distributed):
     """All-integer contribs + fixed-order float update: the numpy twin
     must equal the distributed loop bit-for-bit, including dangling
     mass and zero-weight edge drops."""
     import random
 
-    from simkit_spark.operators.pagerank import (
-        weighted_pagerank,
-        weighted_pagerank_auto,
-    )
+    from simkit_spark.operators.pagerank import weighted_pagerank
 
     rng = random.Random(17)
     rows = [
@@ -315,21 +320,19 @@ def test_weighted_pagerank_auto_local_distributed_parity(spark):
         "src <> dst"
     )
     for it in (1, 4, 10):
-        a = {r["id"]: r["rank"] for r in weighted_pagerank(df, n_iter=it).collect()}
+        with force_distributed():
+            a = {r["id"]: r["rank"] for r in weighted_pagerank(df, n_iter=it).collect()}
         b = {
             r["id"]: r["rank"]
-            for r in weighted_pagerank_auto(df, n_iter=it).collect()
+            for r in weighted_pagerank(df, n_iter=it).collect()
         }
         assert a == b, it
 
 
-def test_weighted_pagerank_auto_string_ids_and_empty(spark):
+def test_weighted_pagerank_auto_string_ids_and_empty(spark, force_distributed):
     import random
 
-    from simkit_spark.operators.pagerank import (
-        weighted_pagerank,
-        weighted_pagerank_auto,
-    )
+    from simkit_spark.operators.pagerank import weighted_pagerank
 
     rng = random.Random(18)
     rows = [
@@ -339,25 +342,26 @@ def test_weighted_pagerank_auto_string_ids_and_empty(spark):
     df = spark.createDataFrame(rows, "src string, dst string, weight double").where(
         "src <> dst"
     )
-    a = {r["id"]: r["rank"] for r in weighted_pagerank(df, n_iter=5).collect()}
-    b = {r["id"]: r["rank"] for r in weighted_pagerank_auto(df, n_iter=5).collect()}
+    with force_distributed():
+        a = {r["id"]: r["rank"] for r in weighted_pagerank(df, n_iter=5).collect()}
+    b = {r["id"]: r["rank"] for r in weighted_pagerank(df, n_iter=5).collect()}
     assert a == b and len(a) > 0
     empty = spark.createDataFrame([], "src string, dst string, weight double")
-    out = weighted_pagerank_auto(empty, n_iter=3)
+    out = weighted_pagerank(empty, n_iter=3)
     assert out.count() == 0
     assert out.schema["id"].dataType == empty.schema["src"].dataType
 
 
 def test_weighted_pagerank_auto_forced_distributed(spark, force_distributed):
-    from simkit_spark.operators.pagerank import weighted_pagerank_auto
+    from simkit_spark.operators.pagerank import weighted_pagerank
 
     df = spark.createDataFrame(
         [(0, 1, 0.5), (1, 2, 0.25), (2, 0, 1.0), (0, 2, 0.125)],
         "src long, dst long, weight double",
     )
     with force_distributed():
-        a = sorted(map(tuple, weighted_pagerank_auto(df, 5).collect()))
-    b = sorted(map(tuple, weighted_pagerank_auto(df, 5).collect()))
+        a = sorted(map(tuple, weighted_pagerank(df, 5).collect()))
+    b = sorted(map(tuple, weighted_pagerank(df, 5).collect()))
     assert a == b
 
 
@@ -365,10 +369,10 @@ def test_weighted_pagerank_auto_forced_distributed(spark, force_distributed):
 def test_katz_closed_form_star(spark):
     # star: 1..4 -> 0. x(0) after k sweeps = truncated sum
     # 1 + 4*beta*(1 + 4*beta*(...)) with leaf x = 1 each sweep
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
     e = spark.createDataFrame([(i, 0) for i in range(1, 5)], "src long, dst long")
-    got = {r["id"]: r["katz"] for r in katz_auto(e, n_iter=3, beta=0.05).collect()}
+    got = {r["id"]: r["katz"] for r in katz_centrality(e, n_iter=3, beta=0.05).collect()}
     # leaves have no inflow: x = 1.0 always
     for leaf in range(1, 5):
         assert got[leaf] == 1.0
@@ -385,7 +389,7 @@ def test_katz_closed_form_star(spark):
 def test_katz_local_distributed_bit_parity(spark, force_distributed):
     import hashlib
 
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
     n = 60
     edges = [(i, (i * 3 + 1) % n) for i in range(n)] + [
@@ -395,14 +399,14 @@ def test_katz_local_distributed_bit_parity(spark, force_distributed):
     e = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b], "src long, dst long"
     )
-    loc = sorted(tuple(r) for r in katz_auto(e, n_iter=6).collect())
+    loc = sorted(tuple(r) for r in katz_centrality(e, n_iter=6).collect())
     with force_distributed():
-        dist = sorted(tuple(r) for r in katz_auto(e, n_iter=6).collect())
+        dist = sorted(tuple(r) for r in katz_centrality(e, n_iter=6).collect())
     assert loc == dist  # bit-identical, not approximately
 
 
 def test_katz_string_ids_and_empty(spark):
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c")], "src string, dst string"
@@ -410,13 +414,13 @@ def test_katz_string_ids_and_empty(spark):
     import math
 
     scale = 10**9
-    got = {r["id"]: r["katz"] for r in katz_auto(e, n_iter=4).collect()}
+    got = {r["id"]: r["katz"] for r in katz_centrality(e, n_iter=4).collect()}
     assert got["a"] == 1.0
     xb = math.floor((1.0 + 0.05 * (scale * 1e-9)) * float(scale) + 0.5)
     assert got["b"] == xb * 1e-9
     xc = math.floor((1.0 + 0.05 * (xb * 1e-9)) * float(scale) + 0.5)
     assert got["c"] == xc * 1e-9  # 1 + beta*x(b), quantized
-    empty = katz_auto(spark.createDataFrame([], "src long, dst long"))
+    empty = katz_centrality(spark.createDataFrame([], "src long, dst long"))
     assert empty.count() == 0 and empty.columns == ["id", "katz"]
 
 
@@ -426,16 +430,16 @@ def test_katz_overflow_guard_raises(spark, force_distributed):
     # in float64 — where nothing else errors. The runtime guard must
     # raise loudly on both paths. (Past 2^63 Spark's ANSI sum raises
     # on its own; numpy would wrap silently — same guard covers it.)
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
     e = spark.createDataFrame(
         [(s, 0) for s in range(1, 40)] + [(0, s) for s in range(1, 40)],
         "src long, dst long",
     )
     with force_distributed(), pytest.raises(ValueError, match="2\\^53"):
-        katz_auto(e, n_iter=4, beta=10.0)
+        katz_centrality(e, n_iter=4, beta=10.0)
     with pytest.raises(ValueError, match="2\\^53"):
-        katz_auto(e, n_iter=4, beta=10.0)
+        katz_centrality(e, n_iter=4, beta=10.0)
 
 
 @pytest.mark.parametrize("op", ["ppr", "wpr", "katz"])
@@ -444,9 +448,9 @@ def test_family_distributed_partition_invariant(spark, force_distributed, op):
     independent of the input partitioning, bit for bit (string ids,
     dangling sinks)."""
     from simkit_spark.operators.pagerank import (
-        katz_auto,
+        katz_centrality,
         personalized_pagerank,
-        weighted_pagerank_auto,
+        weighted_pagerank,
     )
 
     rows = [(f"v{i}", f"v{(i * 7 + 3) % 24}", 0.1 + (i % 9) / 10) for i in range(40)]
@@ -456,8 +460,8 @@ def test_family_distributed_partition_invariant(spark, force_distributed, op):
     )
     run = {
         "ppr": lambda d: personalized_pagerank(d, ["v1", "v5"], n_iter=6),
-        "wpr": lambda d: weighted_pagerank_auto(d, n_iter=6),
-        "katz": lambda d: katz_auto(d, n_iter=6),
+        "wpr": lambda d: weighted_pagerank(d, n_iter=6),
+        "katz": lambda d: katz_centrality(d, n_iter=6),
     }[op]
     with force_distributed():
         got = [
@@ -473,7 +477,7 @@ def test_katz_inflow_past_2_53_stays_exact(spark, force_distributed):
     accumulator rounds there and moves the hub's numerator."""
     import random
 
-    from simkit_spark.operators.pagerank import katz_auto
+    from simkit_spark.operators.pagerank import katz_centrality
 
     rng = random.Random(11)
     edges = []
@@ -494,7 +498,7 @@ def test_katz_inflow_past_2_53_stays_exact(spark, force_distributed):
     want = sorted((v, x[v] * (1.0 / scale)) for v in x)
     e = spark.createDataFrame(edges, "src string, dst string")
     assert max(inflow.values()) > 2**56 and max(x.values()) < 2**53
-    assert sorted(map(tuple, katz_auto(e, n_iter=2, beta=beta, iter_dp=15).collect())) == want
+    assert sorted(map(tuple, katz_centrality(e, n_iter=2, beta=beta, iter_dp=15).collect())) == want
     with force_distributed():
-        dist = sorted(map(tuple, katz_auto(e, n_iter=2, beta=beta, iter_dp=15).collect()))
+        dist = sorted(map(tuple, katz_centrality(e, n_iter=2, beta=beta, iter_dp=15).collect()))
     assert dist == want

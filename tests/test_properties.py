@@ -207,6 +207,38 @@ def test_size_dispatch_probe_boundary(spark, monkeypatch, arrow):
         spark.conf.set(key, old)
 
 
+@pytest.mark.parametrize(
+    "op", ["random_walks", "node2vec_walks", "neighborhood_function"]
+)
+def test_walks_and_anf_local_path_is_one_job(spark, op):
+    """A driver-sized graph takes the twin with the size probe as its
+    only Spark job (no checkpoint, no count), and the answer is a
+    LocalTableScan. The input has one partition, as the cached kNN
+    table the walk and ANF queries read: over a wider input AQE runs
+    the probe's distinct shuffle as one more job."""
+    from simkit_spark.operators import anf, walks
+
+    fn = {
+        "random_walks": lambda e: walks.random_walks(e, 4, 2),
+        "node2vec_walks": lambda e: walks.node2vec_walks(e, 4, 2),
+        "neighborhood_function": lambda e: anf.neighborhood_function(e, 4),
+    }[op]
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)],
+        "src long, dst long",
+    ).coalesce(1)
+    sc = spark.sparkContext
+    group = f"local-path-{op}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.count() > 0
+
+
 def test_materialize_resets_bloated_join_stats(spark):
     # Catalyst multiplies children's sizeInBytes at every join and
     # checkpoints inherit the product into the new leaf: in a fixpoint

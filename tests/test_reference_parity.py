@@ -18,7 +18,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from simkit_spark.operators.eigen import eigensolve, eigensolve_auto
+from simkit_spark.operators.eigen import eigensolve
 from simkit_spark.operators.graphs import (
     epsilon_graph,
     full_affinity,
@@ -27,7 +27,7 @@ from simkit_spark.operators.graphs import (
     symmetrize,
 )
 from simkit_spark.operators.kernels import pairwise_distances
-from simkit_spark.operators.kmeans import adjusted_rand_index, kmeans_auto
+from simkit_spark.operators.kmeans import adjusted_rand_index, kmeans
 from simkit_spark.operators.laplacian import laplacian
 
 K = 3
@@ -124,16 +124,17 @@ def _graph_edges(df, graph):
     raise ValueError(graph)
 
 
-def _spark_chain(df, graph, lap_kind, distributed):
+def _spark_chain(df, graph, lap_kind, distributed, force_distributed):
     lap = laplacian(_graph_edges(df, graph), lap_kind)
     sym_op = lap_kind == "sym" and graph != "knn"
     if distributed:
-        x, lam = eigensolve(lap, k=K, max_iter=150, tol=1e-10, seed=SEED)
+        with force_distributed():
+            x, lam = eigensolve(lap, k=K, max_iter=150, tol=1e-10, seed=SEED)
     else:
-        x, lam = eigensolve_auto(
+        x, lam = eigensolve(
             lap, k=K, max_iter=150, tol=1e-10, seed=SEED, symmetric=sym_op
         )
-    assigned, _ = kmeans_auto(x, k=K, max_iter=100, seed=SEED)
+    assigned, _ = kmeans(x, k=K, max_iter=100, seed=SEED)
     rows = sorted(assigned.collect(), key=lambda r: r["id"])
     return np.array([r["cluster"] for r in rows]), lam, lap
 
@@ -162,9 +163,13 @@ def _numpy_chain(lap_edge_rows, n, sym):
         ("full", "rw", False),
     ],
 )
-def test_f2_iris_chain_parity(spark, iris_like, graph, lap_kind, distributed):
+def test_f2_iris_chain_parity(
+    spark, iris_like, graph, lap_kind, distributed, force_distributed
+):
     df, truth = iris_like
-    pred, lam, lap = _spark_chain(df, graph, lap_kind, distributed)
+    pred, lam, lap = _spark_chain(
+        df, graph, lap_kind, distributed, force_distributed
+    )
     # eigh needs a symmetric operator: the directed-kNN graph is
     # non-symmetric under every laplacian, rw always is
     sym_op = lap_kind == "sym" and graph != "knn"
@@ -183,7 +188,7 @@ def test_f2_iris_chain_parity(spark, iris_like, graph, lap_kind, distributed):
         assert _ari_np(pred, truth) >= 0.9
 
 
-def test_f3_cora_shaped_graph_chain(spark):
+def test_f3_cora_shaped_graph_chain(spark, force_distributed):
     """F3: explicit-edge (is_feature_based=false) path — stochastic
     block model, 3 blocks, n=300; adjacency comes from given edges
     (weight 1), not from feature kernels
@@ -199,8 +204,9 @@ def test_f3_cora_shaped_graph_chain(spark):
                 edges.append((i, j, 1.0))
     edf = spark.createDataFrame(edges, "src long, dst long, weight double")
     lap = laplacian(symmetrize(edf), "sym")
-    x, lam = eigensolve(lap, k=blocks, max_iter=150, tol=1e-9, seed=SEED)
-    assigned, _ = kmeans_auto(x, k=blocks, max_iter=100, seed=SEED)
+    with force_distributed():
+        x, lam = eigensolve(lap, k=blocks, max_iter=150, tol=1e-9, seed=SEED)
+    assigned, _ = kmeans(x, k=blocks, max_iter=100, seed=SEED)
     joined = assigned.join(
         spark.createDataFrame(
             [(int(i), int(l)) for i, l in enumerate(labels)], "id long, true int"

@@ -121,3 +121,35 @@ def test_link_local_vs_distributed_refine_parity(spark, bridged_surfaces, force_
     l = {r["surface_id"]: r["entity_id"] for r in loc.collect()}
     d = {r["surface_id"]: r["entity_id"] for r in dist.collect()}
     assert l == d
+
+
+def test_refine_maps_only_components_that_can_split(spark):
+    """The grouped map sees only components with at least ``min_size``
+    members: smaller ones get no row (spectral_split never splits
+    them; link_entities coalesces them to their component id)."""
+    from simkit_spark.pipeline.link import refine_components
+
+    s1, d1, w1 = _clique_edges([0, 1, 2, 3], 0.95)
+    s2, d2, w2 = _clique_edges([10, 11, 12, 13], 0.95)
+    src = s1 + s2 + [3, 13, 30, 40, 41]
+    dst = d1 + d2 + [20, 20, 31, 41, 42]
+    w = w1 + w2 + [0.71, 0.71, 0.9, 0.9, 0.9]
+    edges = spark.createDataFrame(
+        list(zip(src, dst, w)), "src long, dst long, weight double"
+    )
+    big = [0, 1, 2, 3, 10, 11, 12, 13, 20]
+    comp = spark.createDataFrame(
+        [(i, 0) for i in big] + [(30, 30), (31, 30)]
+        + [(40, 40), (41, 40), (42, 40)],
+        "id long, component long",
+    )
+    out = {
+        r["surface_id"]: r["entity_id"]
+        for r in refine_components(edges, comp, min_size=5).collect()
+    }
+    assert set(out) == set(big)
+    # the bridged cliques still split
+    assert out[0] != out[10]
+    # min_size 3 lets the 3-member chain through, unsplit
+    out3 = refine_components(edges, comp, min_size=3).collect()
+    assert {r["surface_id"] for r in out3} == set(big) | {40, 41, 42}

@@ -287,6 +287,23 @@ def test_anf_effective_diameter_monotone(spark):
     assert effective_diameter(nf, q=1.0) == 9.0
 
 
+def test_anf_local_declines_past_max_nodes(spark, monkeypatch):
+    # the exact twin holds n^2 bits, so past MAX_LOCAL_NODES nodes it
+    # hands a driver-sized edge list to HyperANF
+    from simkit_spark.operators import anf
+
+    calls = []
+    hyper = anf._hyperanf
+    monkeypatch.setattr(anf, "MAX_LOCAL_NODES", 9)
+    monkeypatch.setattr(
+        anf, "_hyperanf", lambda e, *a: calls.append(1) or hyper(e, *a)
+    )
+    neighborhood_function(_path_edges(spark, 9), max_h=2).collect()
+    assert calls == []
+    nf = neighborhood_function(_path_edges(spark, 10), max_h=2).collect()
+    assert calls == [1] and len(nf) == 3
+
+
 def test_hyperanf_tracks_exact(spark, force_distributed):
     # deterministic random-ish graph: 120 nodes, ring + md5 chords
     n = 120

@@ -67,7 +67,7 @@ def _replica(assigned_rows, tau, max_cluster):
 
 @pytest.mark.parametrize("max_cluster", [2000, 7])
 def test_semdedup_matches_replica(spark, max_cluster):
-    from simkit_spark.operators.kmeans import kmeans_auto
+    from simkit_spark.operators.kmeans import kmeans
 
     emb = _blobs(spark)
     out = semantic_dedup(
@@ -76,7 +76,7 @@ def test_semdedup_matches_replica(spark, max_cluster):
     got = {r["id"]: r["rep"] for r in out}
     # same seeded quantizer -> same assignment -> exact replica parity
     pts = emb.select("id", "vec")
-    assigned, _ = kmeans_auto(pts.localCheckpoint(), k=4, seed=42)
+    assigned, _ = kmeans(pts.localCheckpoint(), k=4, seed=42)
     want = _replica(assigned.collect(), 0.98, max_cluster)
     assert got == want
     # min-id representative: rep <= id, reps are their own rep

@@ -13,33 +13,37 @@ def _run(spark, edges, sources, k):
     return {r["id"]: r["dist"] for r in bounded_sssp(df, sources, k).collect()}
 
 
-def test_two_hop_light_path_beats_direct_heavy_edge(spark):
+def test_two_hop_light_path_beats_direct_heavy_edge(spark, force_distributed):
     edges = [(0, 2, 10.0), (0, 1, 1.0), (1, 2, 1.0)]
-    got = _run(spark, edges, [0], k=3)
+    with force_distributed():
+        got = _run(spark, edges, [0], k=3)
     assert got == {0: 0.0, 1: 1.0, 2: 2.0}
 
 
-def test_hop_bound_truncates(spark):
+def test_hop_bound_truncates(spark, force_distributed):
     chain = [(i, i + 1, 1.0) for i in range(5)]
-    got = _run(spark, chain, [0], k=2)
+    with force_distributed():
+        got = _run(spark, chain, [0], k=2)
     assert got == {0: 0.0, 1: 1.0, 2: 2.0}  # nodes 3..5 beyond 2 hops
 
 
-def test_later_sweep_improves_earlier_distance(spark):
+def test_later_sweep_improves_earlier_distance(spark, force_distributed):
     # direct edge reaches 3 in one hop at cost 10; the 3-hop chain
     # lowers it to 3.0 only at sweep 3 — exercises the min-merge
     edges = [(0, 3, 10.0), (0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)]
-    assert _run(spark, edges, [0], k=1)[3] == 10.0
-    assert _run(spark, edges, [0], k=3)[3] == 3.0
+    with force_distributed():
+        assert _run(spark, edges, [0], k=1)[3] == 10.0
+        assert _run(spark, edges, [0], k=3)[3] == 3.0
 
 
-def test_multi_source_takes_nearest(spark):
+def test_multi_source_takes_nearest(spark, force_distributed):
     edges = [(0, 5, 4.0), (9, 5, 1.0)]
-    got = _run(spark, edges, [0, 9], k=2)
+    with force_distributed():
+        got = _run(spark, edges, [0, 9], k=2)
     assert got == {0: 0.0, 9: 0.0, 5: 1.0}
 
 
-def test_matches_full_relaxation_reference(spark):
+def test_matches_full_relaxation_reference(spark, force_distributed):
     """Frontier-only relaxation must equal textbook Bellman-Ford that
     relaxes EVERY edge each sweep, on a dense-ish random graph."""
     import random
@@ -59,16 +63,17 @@ def test_matches_full_relaxation_reference(spark):
             if a in ref and round(ref[a] + w, 12) < nxt.get(b, float("inf")):
                 nxt[b] = round(ref[a] + w, 12)
         ref = nxt
-    assert _run(spark, edges, [0], k=k) == ref
+    with force_distributed():
+        assert _run(spark, edges, [0], k=k) == ref
 
 
-def test_sssp_auto_local_distributed_parity(spark):
+def test_sssp_auto_local_distributed_parity(spark, force_distributed):
     """min() is order-independent and the Decimal(repr()) rounding
     replicates Spark's BigDecimal HALF_UP — the twin must match the
     engine bit-for-bit, including negative weights."""
     import random
 
-    from simkit_spark.operators.sssp import bounded_sssp, bounded_sssp_auto
+    from simkit_spark.operators.sssp import bounded_sssp
 
     rng = random.Random(23)
     rows = [
@@ -79,20 +84,21 @@ def test_sssp_auto_local_distributed_parity(spark):
         "src <> dst"
     )
     for k in (1, 3, 6):
-        a = {r["id"]: r["dist"] for r in bounded_sssp(df, [0, 5], k).collect()}
-        b = {r["id"]: r["dist"] for r in bounded_sssp_auto(df, [0, 5], k).collect()}
+        with force_distributed():
+            a = {r["id"]: r["dist"] for r in bounded_sssp(df, [0, 5], k).collect()}
+        b = {r["id"]: r["dist"] for r in bounded_sssp(df, [0, 5], k).collect()}
         assert a == b, k
 
 
 def test_sssp_auto_string_ids_empty_and_forced(spark, force_distributed):
-    from simkit_spark.operators.sssp import bounded_sssp_auto
+    from simkit_spark.operators.sssp import bounded_sssp
 
     rows = [("a", "b", 1.5), ("b", "c", 0.25), ("c", "a", 2.0), ("x", "y", 1.0)]
     df = spark.createDataFrame(rows, "src string, dst string, weight double")
     with force_distributed():
-        a = sorted(map(tuple, bounded_sssp_auto(df, ["a"], 4).collect()))
-    b = sorted(map(tuple, bounded_sssp_auto(df, ["a"], 4).collect()))
+        a = sorted(map(tuple, bounded_sssp(df, ["a"], 4).collect()))
+    b = sorted(map(tuple, bounded_sssp(df, ["a"], 4).collect()))
     assert a == b and len(a) == 3
     empty = spark.createDataFrame([], "src string, dst string, weight double")
-    out = bounded_sssp_auto(empty, ["zzz"], 3)
+    out = bounded_sssp(empty, ["zzz"], 3)
     assert [tuple(r) for r in out.collect()] == [("zzz", 0.0)]

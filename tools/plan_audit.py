@@ -274,7 +274,7 @@ def main() -> None:
         "# PLANS — physical-plan audit of headline queries",
         "",
         "Generated by tools/plan_audit.py (sf0.01 inputs; plan shape is",
-        "size-independent except where *_auto size dispatches, noted inline).",
+        "size-independent except where an operator size-dispatches, noted inline).",
         "Invariants asserted mechanically in tests/test_plans.py.",
         "",
     ]

@@ -1,8 +1,9 @@
 """Stress the DISTRIBUTED eigensolve past the local dispatch (round-3
-verdict #4: eigensolve_auto solves graphs of at most
+verdict #4: eigensolve solves graphs of at most
 eigen.MAX_LOCAL_NODES (3000) nodes on the driver, so the distributed
 path had unit tests + the refine stress but no committed large-graph
-datapoint the way PPR/SSSP do). It calls eigensolve directly.
+datapoint the way PPR/SSSP do). It forces the distributed path by
+patching util.local_dispatch_rows.
 
 Graph: n nodes, d pseudo-random out-edges each (multiply-shift over
 node id — deterministic), symmetrized, unit weights -> sym normalized
@@ -22,6 +23,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -72,7 +74,8 @@ def main() -> None:
 
     eig._gram = counting_gram
     t0 = time.time()
-    x, lam = eig.eigensolve(lap, k=k, max_iter=60, tol=1e-7, seed=42)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        x, lam = eig.eigensolve(lap, k=k, max_iter=60, tol=1e-7, seed=42)
     n_rows = x.count()
     wall = round(time.time() - t0, 1)
     eig._gram = orig_gram

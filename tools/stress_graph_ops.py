@@ -61,17 +61,18 @@ def main():
     m = edges.count()
     res = {"nodes": n_nodes, "edges": m, "cpus": int(cpus)}
 
-    from simkit_spark.operators.pagerank import pagerank_auto
+    from simkit_spark.operators.pagerank import pagerank
     t0 = time.time()
     with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
-        pr = pagerank_auto(edges, n_iter=10)  # forced distributed
+        pr = pagerank(edges, n_iter=10)  # forced distributed
     total = pr.agg(F.sum("rank")).first()[0]
     res["pagerank_dist_secs"] = round(time.time() - t0, 2)
     res["pagerank_mass"] = round(float(total), 6)
 
     from simkit_spark.operators.labelprop import label_propagation
     t0 = time.time()
-    lp = label_propagation(edges, n_iter=5)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        lp = label_propagation(edges, n_iter=5)  # forced distributed
     n_comm = lp.select(F.count_distinct("community")).first()[0]
     res["lpa_secs"] = round(time.time() - t0, 2)
     res["lpa_communities"] = int(n_comm)
@@ -92,11 +93,12 @@ def main():
     res["doulion_edges"] = int(st["n_edges_sampled"])
     res["doulion_estimate_corner_sum"] = round(3.0 * st["tri_estimate"], 1)
 
-    # HITS: distributed exact-integer sweeps (no local twin — this IS
-    # the only path); hub/authority L1 masses must each be ~1
+    # HITS: distributed exact-integer sweeps (forced past the local
+    # twin); hub/authority L1 masses must each be ~1
     from simkit_spark.operators.hits import hits
     t0 = time.time()
-    ha = hits(edges, n_iter=5)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        ha = hits(edges, n_iter=5)
     masses = ha.agg(F.sum("hub"), F.sum("authority")).first()
     res["hits_secs"] = round(time.time() - t0, 2)
     res["hits_hub_mass"] = round(float(masses[0]), 6)

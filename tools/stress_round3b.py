@@ -74,10 +74,11 @@ def main():
     m = edges.count()
     res = {"nodes": n_nodes, "edges": m, "cpus": int(cpus)}
 
-    from simkit_spark.operators.kcore import kcore, kcore_auto
+    from simkit_spark.operators.kcore import kcore
 
     t0 = time.time()
-    kd = kcore(edges, k=8, n_iter=10)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        kd = kcore(edges, k=8, n_iter=10)
     res["kcore_dist_secs"] = round(time.time() - t0, 2)
     res["kcore_survivors"] = kd.count()
 
@@ -88,18 +89,20 @@ def main():
     bedges = synth_edges(spark, n_nodes // 2, 8).localCheckpoint()
     res["boundary_edges"] = bedges.count()
     t0 = time.time()
-    hb_d = _xor_hash(kcore(bedges, k=8, n_iter=10), ["id", "core_deg"])
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        hb_d = _xor_hash(kcore(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_dist_secs"] = round(time.time() - t0, 2)
     t0 = time.time()
     with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 10_000_000):
-        hb_l = _xor_hash(kcore_auto(bedges, k=8, n_iter=10), ["id", "core_deg"])
+        hb_l = _xor_hash(kcore(bedges, k=8, n_iter=10), ["id", "core_deg"])
     res["kcore_boundary_local_secs"] = round(time.time() - t0, 2)
     res["kcore_paths_identical"] = hb_d == hb_l
 
     from simkit_spark.operators.walks import random_walks
 
     t0 = time.time()
-    w = random_walks(edges, walk_len=4, walks_per_node=1)
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        w = random_walks(edges, walk_len=4, walks_per_node=1)
     res["walk_rows"] = w.count()
     res["walks_secs"] = round(time.time() - t0, 2)
 

@@ -18,6 +18,7 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -75,7 +76,8 @@ def main():
     )
     res["banded_edge_rows"] = banded.count()
     t0 = time.time()
-    kt = ktruss(banded, k=2 * band // 3, n_iter=6).persist()
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        kt = ktruss(banded, k=2 * band // 3, n_iter=6).persist()
     res["ktruss_rows"] = kt.count()
     res["ktruss_secs"] = round(time.time() - t0, 2)
     res["ktruss_min_sup"] = kt.agg(F.min("sup")).collect()[0][0]
@@ -85,7 +87,8 @@ def main():
     from simkit_spark.operators.mis import maximal_independent_set
 
     t0 = time.time()
-    mis = maximal_independent_set(edges, n_iter=8, seed=42).persist()
+    with patch("simkit_spark.util.local_dispatch_rows", lambda *a, **k: -1):
+        mis = maximal_independent_set(edges, n_iter=8, seed=42).persist()
     res["mis_rows"] = mis.count()
     res["mis_secs"] = round(time.time() - t0, 2)
     res["mis_max_sweep"] = mis.agg(F.max("sweep")).collect()[0][0]

@@ -48,7 +48,7 @@ def main():
     res = {"nodes": n_nodes, "edge_rows": edges.count(), "cpus": int(cpus)}
 
     # ---------------- Borůvka MSF, forced distributed + twin parity
-    from simkit_spark.operators.components import connected_components_auto
+    from simkit_spark.operators.components import connected_components
     from simkit_spark.operators.mst import minimum_spanning_forest
 
     t0 = time.time()
@@ -63,7 +63,7 @@ def main():
         .count()
     )
     comps = (
-        connected_components_auto(edges.select("src", "dst"))
+        connected_components(edges.select("src", "dst"))
         .select("component")
         .distinct()
         .count()
