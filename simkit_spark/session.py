@@ -13,14 +13,42 @@ import os
 from pyspark.sql import SparkSession
 
 
+# a container's memory limit (cgroup v2, then v1; v2 writes "max" and
+# v1 a huge number when there is none) and the kernel's free-memory
+# estimate
+_CGROUP_MEM_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_MEMINFO = "/proc/meminfo"
+
+
 def _host_mem_bytes() -> int:
-    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    """Memory the local JVM can take: the least of physical memory, the
+    cgroup limit (SC_PHYS_PAGES reports the host's RAM even inside a
+    container) and MemAvailable at session start (the heap grows to its
+    cap, so on a shared host a cap past free memory gets the JVM
+    killed)."""
+    limits = [os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")]
+    for path in _CGROUP_MEM_FILES:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+            break
+        except (OSError, ValueError):
+            continue
+    try:
+        with open(_MEMINFO) as f:
+            limits += [int(ln.split()[1]) << 10 for ln in f if ln.startswith("MemAvailable:")]
+    except OSError:
+        pass
+    return min(limits)
 
 
 def _driver_mem(master: str) -> str:
     """Heap for the single local-mode JVM: ~1.5 GiB per task slot,
-    16 GiB floor, capped at ~3/4 of the host's physical memory (a heap
-    past it lets the JVM be killed mid-query). Explicit
+    16 GiB floor, capped at ~3/4 of ``_host_mem_bytes`` (a heap past
+    it lets the JVM be killed mid-query). Explicit
     SPARK_DRIVER_MEM always wins."""
     env = os.environ.get("SPARK_DRIVER_MEM")
     if env:

@@ -121,13 +121,13 @@ def test_auto_nodes_past_budget_go_distributed(spark, monkeypatch):
     }
     assert local == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5, 6: 5, 7: 7, 8: 8, 9: 9}
     calls = []
-    real = components.connected_components
+    real = components._components_dist
 
     def spy(*a, **k):
         calls.append(1)
         return real(*a, **k)
 
-    monkeypatch.setattr(components, "connected_components", spy)
+    monkeypatch.setattr(components, "_components_dist", spy)
     monkeypatch.setattr("simkit_spark.util.local_dispatch_rows", lambda *a, **k: 5)
     got = components.connected_components(edges, nodes)
     assert calls == [1]

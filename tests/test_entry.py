@@ -66,7 +66,7 @@ def test_driver_mem_scales_with_local_slots(monkeypatch):
     assert _driver_mem("local[32]") == "48g"
     assert _driver_mem("local[4,2]") == "16g"
     assert _driver_mem("yarn") == "16g"
-    # a 15 GiB host: the heap stops at ~3/4 of physical memory, where
+    # a 15 GiB host: the heap stops at ~3/4 of its memory, where
     # a 16 GiB floor let the JVM be killed mid-query (kg_rules at sf0.1)
     monkeypatch.setattr(
         "simkit_spark.session._host_mem_bytes", lambda: 15 << 30
@@ -75,6 +75,34 @@ def test_driver_mem_scales_with_local_slots(monkeypatch):
     assert _driver_mem("local[32]") == "11g"
     monkeypatch.setenv("SPARK_DRIVER_MEM", "9g")
     assert _driver_mem("local[32]") == "9g"
+
+
+def test_host_mem_honours_cgroup_limit_and_free_memory(monkeypatch, tmp_path):
+    # SC_PHYS_PAGES is the host's RAM even inside a container, and on a
+    # shared host a heap sized to it grows past free memory: a smaller
+    # cgroup limit or MemAvailable wins, and "max" (v2, no limit) falls
+    # through to v1
+    from simkit_spark import session
+
+    phys = session.os.sysconf("SC_PHYS_PAGES") * session.os.sysconf("SC_PAGE_SIZE")
+    v2, v1 = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    meminfo = tmp_path / "meminfo"
+    monkeypatch.setattr(session, "_CGROUP_MEM_FILES", (str(v2), str(v1)))
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+    assert session._host_mem_bytes() == phys
+    v2.write_text("max\n")
+    v1.write_text(f"{2 << 30}\n")
+    assert session._host_mem_bytes() == min(phys, 2 << 30)
+    v2.write_text(f"{1 << 30}\n")
+    assert session._host_mem_bytes() == min(phys, 1 << 30)
+    v2.write_text(f"{phys * 4}\n")
+    assert session._host_mem_bytes() == phys
+    # 8 GiB free: a 6g heap (kg_rules at sf0.1 ran with 6g on such a host)
+    meminfo.write_text(f"MemTotal: {phys >> 10} kB\nMemAvailable: {8 << 20} kB\n")
+    assert session._host_mem_bytes() == min(phys, 8 << 30)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    if phys >= 8 << 30:
+        assert session._driver_mem("local[4]") == "6g"
 
 
 # --- driver-window rotation guard (VERDICT r4, Next round #1/#8) ---
