@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
 from ..util import materialize, size_dispatch
+from .graphs import indexed
 
 # the exact path holds n^2 BITS on the driver: edge count alone doesn't
 # bound that (a 300k-edge graph can have 60k nodes = 450 MB of
@@ -79,9 +80,7 @@ def _anf_local(pdf, max_h: int):
     import numpy as np
     import pandas as pd
 
-    ids = np.unique(
-        np.concatenate([pdf["src"].values, pdf["dst"].values])
-    ) if len(pdf) else np.array([])
+    ids, si, di = indexed(pdf)
     n = len(ids)
     if n > MAX_LOCAL_NODES:
         return None
@@ -91,8 +90,6 @@ def _anf_local(pdf, max_h: int):
         # sweep is O(E * n/64) word-ops — a dense bool matmul is
         # O(n^3) and took ~19 s at n=5000 where this takes ~0.1 s
         words = (n + 63) // 64
-        si = np.searchsorted(ids, pdf["src"].values)
-        di = np.searchsorted(ids, pdf["dst"].values)
         reach = np.zeros((n, words), dtype=np.uint64)
         ar = np.arange(n)
         reach[ar, ar // 64] |= np.uint64(1) << (ar % 64).astype(np.uint64)

@@ -28,6 +28,7 @@ from math import lcm
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize
+from .graphs import adjacency, undirected
 
 
 def _md5_rank(col: F.Column, seed: int) -> F.Column:
@@ -49,20 +50,7 @@ def harmonic_centrality(
     source (exact harmonic centrality restricted to the hop bound)."""
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     nodes = e.select(F.col("a").alias("id")).distinct()
     if n_sources is None:
         srcs = nodes
@@ -155,20 +143,7 @@ def stress_centrality(
             ResourceWarning,
             stacklevel=2,
         )
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     nodes = e.select(F.col("a").alias("id")).distinct().transform(materialize)
     if n_sources is None:
         srcs = nodes

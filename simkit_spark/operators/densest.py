@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize
+from .graphs import undirected
 
 
 def densest_subgraph_rounds(
@@ -39,14 +40,7 @@ def densest_subgraph_rounds(
     emptied the graph within ``max_rounds`` (loud, not truncated)."""
     import pandas as pd
 
-    e = materialize(
-        edges.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = materialize(undirected(edges))
     spark = edges.sparkSession
     rows = []
     for rnd in range(1, max_rounds + 1):

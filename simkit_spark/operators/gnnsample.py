@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..util import materialize
+from .graphs import adjacency, undirected
 
 
 def _rank_hash(seed: int, hop: int, root, parent, nb) -> F.Column:
@@ -45,20 +46,7 @@ def sample_neighborhoods(
     across parents — each parent draws independently)."""
     if not fanouts or any(f < 1 for f in fanouts):
         raise ValueError(f"fanouts must be non-empty positive ints, got {fanouts}")
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     frontier = materialize(
         e.select(F.col("a").alias("root")).distinct().select(
             "root", F.col("root").alias("node")

@@ -222,6 +222,67 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def undirected(edges: DataFrame) -> DataFrame:
+    """(src, dst) any orientation -> distinct (u < v) simple-graph pairs:
+    self-loops dropped, duplicates and reverse duplicates collapsed."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def adjacency(und: DataFrame) -> DataFrame:
+    """Distinct (u < v) pairs -> (a, b) in both orientations, the sweep
+    layout of the iterative graph operators: hash-partitioned AND
+    sorted on ``a`` once, then persisted. The cached plan keeps its
+    output ordering, so each sweep's sort-merge join on ``a`` streams
+    the cached edge side without re-sorting or re-shuffling it. The
+    caller unpersists it."""
+    return (
+        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
+        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
+        .repartition("a")
+        .sortWithinPartitions("a")
+        .persist()
+    )
+
+
+def indexed(pdf):
+    """Driver twins' id index: (ids, src, dst) — the sorted distinct
+    endpoints of a collected (src, dst) frame and each edge's positions
+    in them. Index order is value order, so id tie-breaks on positions
+    agree with the engine's."""
+    import numpy as np
+
+    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    return ids, np.searchsorted(ids, pdf["src"].values), np.searchsorted(ids, pdf["dst"].values)
+
+
+def undirected_indexed(pdf):
+    """Driver twin of ``adjacency(undirected(...))`` over a collected
+    (src, dst) frame: (ids, a, b) with ``ids`` the sorted endpoints of
+    the simple graph and (a, b) its pairs as positions in ``ids``, both
+    orientations. Ids are encoded BEFORE deduplicating, because
+    ``np.unique(..., axis=0)`` rejects object dtype and string ids (KG
+    IRIs like "part:17") must never reach it."""
+    import numpy as np
+
+    u = np.minimum(pdf["src"].values, pdf["dst"].values)
+    v = np.maximum(pdf["src"].values, pdf["dst"].values)
+    keep = u != v
+    ids = np.unique(np.concatenate([u[keep], v[keep]]))
+    n = len(ids)
+    enc = np.unique(
+        np.searchsorted(ids, u[keep]).astype(np.int64) * n
+        + np.searchsorted(ids, v[keep]).astype(np.int64)
+    )
+    ui, vi = enc // n, enc % n
+    return ids, np.concatenate([ui, vi]), np.concatenate([vi, ui])
+
+
 def build_affinity_graph(
     dist_edges: DataFrame, graph_type: str, param: float | int
 ) -> DataFrame:

@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .graphs import undirected
+
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
     """(src, dst) in any orientation -> ONE row
@@ -47,13 +49,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     The integer sums are part of the output on purpose: they are the
     exactly-checkable payload, r the derived IEEE double (NULL when the
     graph is degree-regular)."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = undirected(edges)
     deg = (
         und.select(F.col("u").alias("id"))
         .union(und.select(F.col("v").alias("id")))

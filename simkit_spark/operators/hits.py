@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
+from .graphs import indexed
 
 HITS_ITER_DP = 9
 
@@ -89,10 +90,8 @@ def _hits_local(pdf, n_iter, iter_dp):
     import pandas as pd
 
     scale = 10**iter_dp
-    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
+    ids, src, dst = indexed(pdf)
     n = len(ids)
-    src = np.searchsorted(ids, pdf["src"].values)
-    dst = np.searchsorted(ids, pdf["dst"].values)
 
     def _normalize(raw: "np.ndarray") -> "np.ndarray":
         # floor(raw/total * scale + 0.5) in the engine's operation order

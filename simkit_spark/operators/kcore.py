@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
+from .graphs import adjacency, undirected, undirected_indexed
 
 
 def kcore(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
@@ -57,23 +58,7 @@ def kcore(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
 
 def _kcore_dist(edges: DataFrame, k: int, n_iter: int) -> DataFrame:
     """Distributed path of ``kcore``."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    # both orientations, partitioned AND sorted once on the join key
-    # (the cached plan keeps its outputOrdering — per-sweep joins never
-    # re-sort the edge side; the pagerank/eigensolve lesson)
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     # INCREMENTAL peeling. The direct formulation re-derives degrees
     # among survivors each sweep with a semi-join of the 2|E| table
     # against the node-sized alive set on "b" — at scale (alive too
@@ -118,14 +103,8 @@ def _kcore_local(pdf, k, n_iter):
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    u = np.minimum(pdf["src"].values, pdf["dst"].values)
-    v = np.maximum(pdf["src"].values, pdf["dst"].values)
-    keep = u != v
-    uv = np.unique(np.stack([u[keep], v[keep]], axis=1), axis=0)
-    ids = np.unique(uv)
+    ids, a, b = undirected_indexed(pdf)
     n = len(ids)
-    a = np.concatenate([np.searchsorted(ids, uv[:, 0]), np.searchsorted(ids, uv[:, 1])])
-    b = np.concatenate([np.searchsorted(ids, uv[:, 1]), np.searchsorted(ids, uv[:, 0])])
     alive = np.ones(n, dtype=bool)
     for _ in range(n_iter):
         sel = alive[a] & alive[b]

@@ -306,7 +306,7 @@ def silhouette(
 
     Size-dispatched: up to ``exact_threshold`` points the exact O(n^2)
     block-kernel form runs; above it the centroid approximation — the
-    same dispatch pattern as every *_auto operator here, because the
+    same dispatch pattern as ``util.size_dispatch``, because the
     exact metric's pair space is quadratic no matter how well it's
     blocked."""
     assigned = assigned.transform(materialize)

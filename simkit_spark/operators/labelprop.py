@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
+from .graphs import adjacency, undirected, undirected_indexed
 
 
 def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
@@ -43,34 +44,21 @@ def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
 
 def _label_propagation_dist(edges: DataFrame, n_iter: int) -> DataFrame:
     """Distributed path of ``label_propagation``."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("b")
-        # sorted once: per-sweep SMJ streams the cached edge side with
-        # no re-sort (pagerank/eigensolve lesson, BENCH/STRESS.md r4)
-        .sortWithinPartitions("b")
-        .persist()
-    )
+    # node b tallies the labels of its neighbors a; the layout holds
+    # both orientations, so joining on its sort key a loses no vote
+    e = adjacency(undirected(edges))
     nodes = e.select(F.col("a").alias("id")).distinct().persist()
     labels = nodes.select("id", F.col("id").alias("label"))
     for i in range(n_iter):
         nb = e.join(
-            labels.select(F.col("id").alias("b"), F.col("label")), "b"
-        ).select(F.col("a"), F.col("label"))
+            labels.select(F.col("id").alias("a"), F.col("label")), "a"
+        ).select(F.col("b"), F.col("label"))
         pick = (
-            nb.groupBy("a", "label")
+            nb.groupBy("b", "label")
             .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("a")
+            .groupBy("b")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label").alias("lb"))).alias("m"))
-            .select(F.col("a").alias("id"), F.col("m.lb").alias("new_label"))
+            .select(F.col("b").alias("id"), F.col("m.lb").alias("new_label"))
         )
         labels = (
             labels.join(pick, "id", "left")
@@ -106,14 +94,7 @@ def community_modularity(
     # localCheckpoint (not persist+unpersist): the returned lazy plan
     # reads und for the inner-edge count AND both degree unions at the
     # caller's action, after this function has returned
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(materialize)
-    )
+    und = undirected(edges).transform(materialize)
     m = und.count()
     la = labels.select(F.col("id").alias("u"), F.col(label_col).alias("cu"))
     lb = labels.select(F.col("id").alias("v"), F.col(label_col).alias("cv"))
@@ -174,14 +155,7 @@ def community_conductance(
     Same scale shape as modularity: one count action for m, node-sized
     label equi-joins, two community-keyed hash aggregations.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(materialize)
-    )
+    und = undirected(edges).transform(materialize)
     m = und.count()
     la = labels.select(F.col("id").alias("u"), F.col(label_col).alias("cu"))
     lb = labels.select(F.col("id").alias("v"), F.col(label_col).alias("cv"))
@@ -228,26 +202,13 @@ def _label_propagation_local(pdf, n_iter):
     import numpy as np
     import pandas as pd
 
-    u = np.minimum(pdf["src"].values, pdf["dst"].values)
-    v = np.maximum(pdf["src"].values, pdf["dst"].values)
-    keep = u != v
-    # Encode endpoints to integer indices BEFORE deduplicating:
-    # np.unique(..., axis=0) rejects object dtype, so string ids (KG
-    # IRIs like "part:17") must never reach it. Index order == sorted
-    # value order, so tiebreaks below still agree with the operator.
-    ids = np.unique(np.concatenate([u[keep], v[keep]]))
+    ids, a, b = undirected_indexed(pdf)  # a's neighbor is b
     n = len(ids)
-    ue = np.searchsorted(ids, u[keep]).astype(np.int64)
-    ve = np.searchsorted(ids, v[keep]).astype(np.int64)
-    enc = np.unique(ue * n + ve)
-    ui, vi = enc // n, enc % n
-    a = np.concatenate([ui, vi])  # both orientations: a's neighbor is b
-    b = np.concatenate([vi, ui])
     # labels as indices into the SORTED id array: index order == value
     # order, so "smallest label" tiebreaks agree with the operator
     lab = np.arange(n)
     for _ in range(n_iter):
-        key = a.astype(np.int64) * n + lab[b]
+        key = a * n + lab[b]
         uk, counts = np.unique(key, return_counts=True)
         ka, klab = uk // n, uk % n
         order = np.lexsort((klab, -counts, ka))

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .graphs import undirected
+
 
 def link_prediction(
     edges: DataFrame,
@@ -34,13 +36,7 @@ def link_prediction(
     sum over common neighbors v of 1/ln(deg(v)). Existing edges are
     anti-joined away. Self-loops ignored.
     """
-    ue = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    ue = undirected(edges)
     und = ue.unionByName(ue.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy("u").agg(F.count("*").alias("deg")).withColumnRenamed("u", "id")
     # wedge centers carry their own degree for the Adamic-Adar term;

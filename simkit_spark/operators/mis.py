@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
 from ..util import materialize, size_dispatch
+from .graphs import adjacency, undirected
 
 
 def _priority(col: Column, seed: int) -> Column:
@@ -71,21 +72,7 @@ def maximal_independent_set(
 
 def _mis_dist(edges: DataFrame, n_iter: int, seed: int) -> DataFrame:
     """Distributed path of ``maximal_independent_set``."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    # both orientations, partitioned+sorted once on the probe endpoint
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     alive = materialize(
         e.select(F.col("a").alias("id"))
         .distinct()

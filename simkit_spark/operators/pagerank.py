@@ -62,6 +62,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
+from .graphs import indexed
 
 DAMPING = 0.85
 PR_ITER_DP = 12
@@ -147,7 +148,7 @@ def _sweeps(ed, base, r0, contrib, update, dangling, n_iter, scale):
 
 
 def _sweeps_local(src, dst, w, r0, update, n_iter, scale):
-    """numpy half of ``_sweeps`` over the edge positions of ``_indexed``:
+    """numpy half of ``_sweeps`` over the edge positions of ``graphs.indexed``:
     int64 numerators from ``r0``, ONE exact int64 accumulator per sweep.
 
     With int64 edge weights ``w`` each source splits its numerator by
@@ -169,15 +170,6 @@ def _sweeps_local(src, dst, w, r0, update, n_iter, scale):
             update(inflow.astype(np.float64), dmass) * float(scale) + 0.5
         ).astype(np.int64)
     return r
-
-
-def _indexed(pdf):
-    """(ids, src, dst): the sorted distinct endpoints of a collected
-    (src, dst) frame and each edge's positions in them."""
-    import numpy as np
-
-    ids = np.unique(np.concatenate([pdf["src"].values, pdf["dst"].values]))
-    return ids, np.searchsorted(ids, pdf["src"].values), np.searchsorted(ids, pdf["dst"].values)
 
 
 def _scaled(ranks: DataFrame, scale: int, name: str) -> DataFrame:
@@ -226,7 +218,7 @@ def _pr_local(pdf, n_iter, damping, iter_dp):
     import numpy as np
     import pandas as pd
 
-    ids, src, dst = _indexed(pdf)
+    ids, src, dst = indexed(pdf)
     n = float(max(len(ids), 1))
     scale = 10**iter_dp
     w = pdf["w_q"].to_numpy(np.int64) if "w_q" in pdf else np.ones(len(src), np.int64)
@@ -314,7 +306,7 @@ def _ppr_local(pdf, seed_set, n_iter, damping, iter_dp):
     import numpy as np
     import pandas as pd
 
-    ids, src, dst = _indexed(pdf)
+    ids, src, dst = indexed(pdf)
     missing = sorted(set(seed_set) - set(ids.tolist()))
     if missing:
         raise KeyError(f"seeds not present in the edge list: {missing}")
@@ -485,7 +477,7 @@ def _katz_local(pdf, n_iter, beta, iter_dp):
     import numpy as np
     import pandas as pd
 
-    ids, src, dst = _indexed(pdf)
+    ids, src, dst = indexed(pdf)
     scale = 10**iter_dp
     x0 = np.full(len(ids), int(scale), dtype=np.int64)
     x = _sweeps_local(src, dst, None, x0, _katz_update(beta, scale), n_iter, scale)

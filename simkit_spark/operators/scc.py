@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
+from .graphs import indexed
 
 
 def _tarjan_numpy(ids, src, dst):
@@ -118,12 +119,9 @@ def strongly_connected_components(
 
 
 def _scc_local(pdf):
-    import numpy as np
     import pandas as pd
 
-    ids = np.unique(np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-    src = np.searchsorted(ids, pdf["src"].to_numpy())
-    dst = np.searchsorted(ids, pdf["dst"].to_numpy())
+    ids, src, dst = indexed(pdf)
     return pd.DataFrame({"id": ids, "component": _tarjan_numpy(ids, src, dst)})
 
 

@@ -19,18 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dedup import _md5_long
-
-
-def _dedup_undirected(edges: DataFrame) -> DataFrame:
-    """any-orientation edge list -> distinct (u, v) with u < v, no
-    self-loops — the simple undirected graph both counters run on."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+from .graphs import undirected
 
 
 def _oriented_triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
@@ -69,7 +58,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     clustering coefficient 2T/(deg*(deg-1)) (0 when deg < 2), over the
     de-duplicated undirected simple graph (self-loops dropped).
     """
-    e = _dedup_undirected(edges)
+    e = undirected(edges)
     deg = (
         e.select(F.col("u").alias("id"))
         .union(e.select(F.col("v").alias("id")))
@@ -123,7 +112,7 @@ def sampled_triangle_total(
     """
     if not (0 < num <= den):
         raise ValueError(f"need 0 < num <= den, got {num}/{den}")
-    e = _dedup_undirected(edges)
+    e = undirected(edges)
     kept = e.where(
         _md5_long(
             F.concat_ws(

@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
-from .triangles import _dedup_undirected, _oriented_triangles
+from .graphs import undirected
+from .triangles import _oriented_triangles
 
 
 def _edge_support(e: DataFrame) -> DataFrame:
@@ -97,7 +98,7 @@ def ktruss(edges: DataFrame, k: int, n_iter: int = 10) -> DataFrame:
 
 def _ktruss_dist(edges: DataFrame, k: int, n_iter: int) -> DataFrame:
     """Distributed path of ``ktruss``."""
-    cur = materialize(_dedup_undirected(edges))
+    cur = materialize(undirected(edges))
     for _ in range(n_iter):
         sup = _edge_support(cur)
         # support-0 edges have no sup row: inner join drops them, which

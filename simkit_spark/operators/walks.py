@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import util
 from ..util import materialize, size_dispatch
+from .graphs import adjacency, undirected
 
 
 def _score(seed: int, step: int, start, w, cur, b) -> F.Column:
@@ -44,17 +45,6 @@ def _score(seed: int, step: int, start, w, cur, b) -> F.Column:
         b.cast("string"),
     )
     return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-
-
-def _undirected(edges: DataFrame) -> DataFrame:
-    """(src, dst) any orientation -> distinct (u < v) simple-graph pairs."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
 
 
 _WALKS = "start_id {id}, walk int, step int, node_id {id}"
@@ -77,7 +67,7 @@ def random_walks(
     collect in place of ``walk_len`` sequential join+agg+checkpoint
     rounds; the md5 pick rule is engine-portable, so both paths are
     bit-identical (parity-tested, long and string ids)."""
-    und = _undirected(edges)
+    und = undirected(edges)
     return size_dispatch(
         und,
         lambda pdf: _walks_local(
@@ -93,15 +83,7 @@ def _random_walks_from_und(
 ) -> DataFrame:
     """Distributed path of ``random_walks`` over the distinct (u < v)
     pair set."""
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        # sorted once: per-step SMJ streams the cached edge side with
-        # no re-sort (pagerank/eigensolve lesson, BENCH/STRESS.md r4)
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(und)
     frontier = (
         e.select(F.col("a").alias("start_id"))
         .distinct()
@@ -231,7 +213,7 @@ def node2vec_walks(
     makes the driver twin bit-identical to the distributed dual-layout
     implementation (parity-tested).
     """
-    und = _undirected(edges)
+    und = undirected(edges)
     return size_dispatch(
         und,
         lambda pdf: _walks_local(
@@ -255,13 +237,7 @@ def _node2vec_from_und(
 ) -> DataFrame:
     """Distributed path of ``node2vec_walks`` over the distinct (u < v)
     pair set."""
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(und)
     frontier = (
         e.select(F.col("a").alias("start_id"))
         .distinct()

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize
+from .graphs import adjacency, undirected
 
 
 def wl_colors(edges: DataFrame, iters: int = 2) -> DataFrame:
@@ -34,20 +35,7 @@ def wl_colors(edges: DataFrame, iters: int = 2) -> DataFrame:
     (no surviving edge) are excluded, as everywhere in this package."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .repartition("a")
-        .sortWithinPartitions("a")
-        .persist()
-    )
+    e = adjacency(undirected(edges))
     colors = materialize(
         e.groupBy(F.col("a").alias("node_id")).agg(
             F.count(F.lit(1)).cast("string").alias("color")

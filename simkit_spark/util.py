@@ -137,7 +137,7 @@ def local_dispatch_rows(
     default_rows: int = 500_000,
     byte_budget: int = LOCAL_DISPATCH_BYTE_BUDGET,
 ) -> int:
-    """Row threshold under which a *_auto operator collects locally:
+    """Row threshold under which ``size_dispatch`` collects locally:
     min(default_rows, rows-of-this-schema that fit byte_budget). For
     narrow (long,long) edge lists this returns default_rows unchanged
     (they fit 4M+ rows in the budget); wide rows shrink it so the

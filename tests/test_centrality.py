@@ -48,14 +48,16 @@ def _replica(edges, max_hops, sources):
 
 def test_harmonic_all_sources_matches_bfs(spark):
     edges = [(i, (i + 1) % 9) for i in range(9)] + [(0, 4), (2, 6), (20, 21)]
-    df = spark.createDataFrame(edges, "src long, dst long")
     adj_nodes = sorted({x for e in edges for x in e})
     want = _replica(edges, 3, adj_nodes)
-    got = {
-        r["node_id"]: (r["n_reached"], r["harmonic"])
-        for r in harmonic_centrality(df, max_hops=3).collect()
-    }
-    assert got == want
+    # second input: a repeated edge and a self-loop change nothing
+    for inp in (edges, edges + [(2, 6), (30, 30)]):
+        df = spark.createDataFrame(inp, "src long, dst long")
+        got = {
+            r["node_id"]: (r["n_reached"], r["harmonic"])
+            for r in harmonic_centrality(df, max_hops=3).collect()
+        }
+        assert got == want
     # the (20, 21) island must not see the big component
     assert got[20] == (1, 1.0) and got[21] == (1, 1.0)
 
@@ -97,10 +99,16 @@ def test_harmonic_rejects_bad_hops(spark):
 def test_stress_path_and_star(spark):
     from simkit_spark.operators.centrality import stress_centrality
 
-    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
-    got = {r["id"]: r["stress"] for r in stress_centrality(e, max_hops=5).collect()}
-    # ordered through-paths on the 4-path: middles carry 4 each
-    assert got == {0: 0, 1: 4, 2: 4, 3: 0}
+    path = [(0, 1), (1, 2), (2, 3)]
+    # second input: a reversed repeat of (1, 2) and a self-loop on a
+    # node with no other edge change nothing
+    for inp in (path, path + [(2, 1), (7, 7)]):
+        e = spark.createDataFrame(inp, "src long, dst long")
+        got = {
+            r["id"]: r["stress"] for r in stress_centrality(e, max_hops=5).collect()
+        }
+        # ordered through-paths on the 4-path: middles carry 4 each
+        assert got == {0: 0, 1: 4, 2: 4, 3: 0}
     star = spark.createDataFrame([(i, 9) for i in range(1, 5)], "src long, dst long")
     got = {r["id"]: r["stress"] for r in stress_centrality(star, max_hops=5).collect()}
     assert got[9] == 12 and all(got[i] == 0 for i in range(1, 5))

@@ -81,3 +81,17 @@ def test_partition_invariant(spark, force_distributed):
         a = sorted(map(tuple, kcore(df, 2, 6).collect()))
         b = sorted(map(tuple, kcore(df.repartition(7), 2, 6).collect()))
     assert a == b
+
+
+def test_string_ids_both_paths(spark, force_distributed):
+    """String ids (KG IRIs) on both paths: the driver twin must not
+    hand an object array to np.unique(..., axis=0)."""
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("b", "a")]
+    df = spark.createDataFrame(pairs, "src string, dst string")
+    with force_distributed():
+        dist = kcore(df, 2)
+        dist_rows = sorted(map(tuple, dist.collect()))
+    local = kcore(df, 2)
+    assert sorted(map(tuple, local.collect())) == dist_rows
+    assert dist_rows == [("a", 2), ("b", 2), ("c", 2)]
+    assert dict(local.dtypes)["id"] == dict(dist.dtypes)["id"] == "string"

@@ -108,11 +108,13 @@ def test_lpa_auto_string_id_parity(spark, force_distributed):
     assert out.schema["id"].dataType.simpleString() == "string"
 
 
-def test_lpa_auto_all_self_loops(spark):
+def test_lpa_auto_all_self_loops(spark, force_distributed):
     from simkit_spark.operators.labelprop import label_propagation
 
     df = spark.createDataFrame([("a", "a"), ("b", "b")], "src string, dst string")
     assert label_propagation(df, n_iter=2).count() == 0
+    with force_distributed():
+        assert label_propagation(df, n_iter=2).count() == 0
 
 
 def test_conductance_two_triangles_closed_form(spark):

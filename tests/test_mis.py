@@ -64,13 +64,20 @@ def test_equals_sequential_greedy(spark, force_distributed):
 
 
 def test_auto_paths_bit_identical(spark, force_distributed):
-    e = _edges(spark, _PAIRS)
-    with force_distributed():
-        dist = sorted((r.id, r.sweep) for r in
-                      maximal_independent_set(e, 8, 42).collect())
-    local = sorted((r.id, r.sweep) for r in
-                   maximal_independent_set(e, 8, 42).collect())
-    assert dist == local and dist
+    # second input: a repeated edge and a self-loop on the first node
+    # greedy selects must give the same rows on both paths
+    first = min(_greedy_mis(_PAIRS, 42), key=lambda x: (_h(42, x), x))
+    runs = []
+    for pairs in (_PAIRS, _PAIRS + [_PAIRS[0], (first, first)]):
+        e = _edges(spark, pairs)
+        with force_distributed():
+            dist = sorted((r.id, r.sweep) for r in
+                          maximal_independent_set(e, 8, 42).collect())
+        local = sorted((r.id, r.sweep) for r in
+                       maximal_independent_set(e, 8, 42).collect())
+        assert dist == local and dist
+        runs.append(dist)
+    assert runs[0] == runs[1]
 
 
 def test_string_ids_both_paths(spark, force_distributed):

@@ -111,6 +111,9 @@ def test_densest_peel_trajectory(spark):
     edges += [(4, 10)]
     e = spark.createDataFrame(edges, "src long, dst long")
     rounds = densest_subgraph_rounds(e).orderBy("round").collect()
+    # second input: a reversed repeat of (4, 10) and a self-loop change nothing
+    noisy = spark.createDataFrame(edges + [(10, 4), (50, 50)], "src long, dst long")
+    assert densest_subgraph_rounds(noisy).orderBy("round").collect() == rounds
     assert rounds[0]["round"] == 1
     best = max(r["density"] for r in rounds)
     assert best == 2.0  # the clique round: 10 edges / 5 nodes

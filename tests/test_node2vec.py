@@ -49,18 +49,26 @@ def _replica(edges, walk_len, walks_per_node, p_cost, q_cost, seed):
     return sorted(rows)
 
 
+def _walk_rows(df):
+    return sorted(
+        (r["start_id"], r["walk"], r["step"], r["node_id"])
+        for r in node2vec_walks(df, 5, 2, p_cost=4, q_cost=2, seed=42).collect()
+    )
+
+
 def test_node2vec_matches_python_replica(spark, force_distributed):
+    edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
+        (i, (i + 7) % 23) for i in range(23)
+    ]
+    edges = [e for e in edges if e[0] != e[1]]
+    want = _replica(edges, 5, 2, 4, 2, 42)
     with force_distributed():
-        edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
-            (i, (i + 7) % 23) for i in range(23)
-        ]
-        edges = [e for e in edges if e[0] != e[1]]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = sorted(
-            (r["start_id"], r["walk"], r["step"], r["node_id"])
-            for r in node2vec_walks(df, 5, 2, p_cost=4, q_cost=2, seed=42).collect()
-        )
-        assert got == _replica(edges, 5, 2, 4, 2, 42)
+        assert _walk_rows(spark.createDataFrame(edges, "src long, dst long")) == want
+    # second input: a repeated edge and a self-loop, on both paths
+    noisy = spark.createDataFrame(edges + [edges[0], (99, 99)], "src long, dst long")
+    with force_distributed():
+        assert _walk_rows(noisy) == want
+    assert _walk_rows(noisy) == want
 
 
 def test_node2vec_follows_edges_and_partition_invariant(spark, force_distributed):

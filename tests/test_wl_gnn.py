@@ -63,9 +63,11 @@ def _sage_replica(edges, fanouts, seed):
 def test_wl_matches_replica_and_discriminates(spark):
     # a path P5 glued to a triangle: degrees repeat but structure differs
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 3)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node_id"]: r["wl_color"] for r in wl_colors(df, iters=2).collect()}
-    assert got == _wl_replica(edges, 2)
+    # second input: a reversed repeat of (0, 1) and a self-loop change nothing
+    for inp in (edges, edges + [(1, 0), (9, 9)]):
+        df = spark.createDataFrame(inp, "src long, dst long")
+        got = {r["node_id"]: r["wl_color"] for r in wl_colors(df, iters=2).collect()}
+        assert got == _wl_replica(edges, 2)
     # triangle members 4 and 5 are symmetric -> same color; path end 0 differs
     assert got[4] == got[5] and got[0] != got[4]
 
@@ -88,12 +90,14 @@ def test_gnn_sample_matches_replica(spark):
         (i, (i + 11) % 29) for i in range(29)
     ]
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r["root"], r["hop"], r["parent"], r["node_id"])
-        for r in sample_neighborhoods(df, [3, 2], seed=42).collect()
-    }
-    assert got == _sage_replica(edges, [3, 2], 42)
+    # second input: a repeated edge and a self-loop change nothing
+    for inp in (edges, edges + [edges[0], (40, 40)]):
+        df = spark.createDataFrame(inp, "src long, dst long")
+        got = {
+            (r["root"], r["hop"], r["parent"], r["node_id"])
+            for r in sample_neighborhoods(df, [3, 2], seed=42).collect()
+        }
+        assert got == _sage_replica(edges, [3, 2], 42)
 
 
 def test_gnn_sample_fanout_bounds_and_determinism(spark):

@@ -144,7 +144,8 @@ def stress_pq(spark, n=100_000, dim=64, n_query_sample=500):
 
 
 def main():
-    spark = get_spark("stress_new_ops", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("stress_new_ops", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     res = {
         "asof": stress_asof(spark),
         "linkpred": stress_linkpred(spark),

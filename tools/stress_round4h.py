@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from simkit_spark.operators.graphs import undirected  # noqa: E402
 from simkit_spark.session import get_spark  # noqa: E402
 from stress_graph_ops import synth_edges  # noqa: E402
 
@@ -37,13 +38,7 @@ def main():
     )
     edges = synth_edges(spark, n_nodes, out_deg).localCheckpoint()
     res = {"nodes": n_nodes, "edge_rows": edges.count(), "cpus": int(cpus)}
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = undirected(edges)
     res["edges_undirected"] = und.count()
 
     from simkit_spark.operators.truss import ktruss

@@ -22,7 +22,8 @@ def main() -> None:
     from simkit_spark.functions.sketch import hll_distinct_by
     from simkit_spark.operators.pca import fit_pca, transform_pca
 
-    spark = get_spark("stress-r5", master="local[32]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("stress-r5", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     res: dict = {}
 
     # ---------------- PCA: 2M x 64 anisotropic vectors

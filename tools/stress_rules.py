@@ -63,7 +63,8 @@ def main() -> None:
     from simkit_spark.kg import chain_pair_space, rule_mining
 
     n = int(os.environ.get("STRESS_RULES_N", "10000000"))
-    spark = get_spark("stress-rules", master="local[32]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("stress-rules", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     res: dict = {"n_requested": n}
 
     triples = synth_chain_triples(spark, n, n_ent=2_000_000).localCheckpoint()
