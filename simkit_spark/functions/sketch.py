@@ -236,43 +236,43 @@ def _hll(df: DataFrame, col: str, by: list[str], p: int, seed: int) -> DataFrame
     """Registers and estimate of :func:`hll_distinct` (``by`` empty: one
     global row) and :func:`hll_distinct_by` (one row per group)."""
     bucket, rho = hll_register_cols(col, p=p, seed=seed)
-    m = 1 << p
-    k_scale = 32 - p + 1  # max rho; 2^(k_scale - rho) is >= 1
-    regs = (
+    n_filled, z_int, linear, est = _hll_fold(p)
+    return (
         df.select(*by, bucket.alias("bucket"), rho.alias("rho"))
         .groupBy(*by, "bucket")
         .agg(F.max("rho").alias("mrho"))
+        .groupBy(*by)
+        .agg(
+            F.lit(1 << p).alias("m"),
+            n_filled.alias("n_filled"),
+            z_int.alias("z_int"),
+            F.when(linear, F.lit("linear")).otherwise(F.lit("hll")).alias("branch"),
+            F.round(est, 3).alias("est_distinct"),
+        )
     )
-    # alpha_m * m^2 * 2^k_scale as ONE python-double literal, so both
-    # engines perform the identical single division by z_int
+
+
+def _hll_fold(p: int):
+    """Aggregate Columns (n_filled, z_int, linear, est) folding one
+    register set — its (bucket, mrho) rows, one per filled register —
+    into the HyperLogLog estimate: alpha_m * m^2 * 2^k_scale as ONE
+    python-double literal divided once by the exact-integer z_int, or
+    m * ln(m / zeros) when that lands <= 2.5m with empty registers left.
+    hll_distinct rounds ``est``; operators.anf sums it over node ids."""
+    m = 1 << p
+    k_scale = 32 - p + 1  # max rho; 2^(k_scale - rho) is >= 1
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    numer = alpha * m * m * float(1 << k_scale)
-    agg = regs.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("n_filled"),
-        F.coalesce(
-            F.sum(F.expr(f"cast(pow(2, {k_scale} - mrho) as bigint)")), F.lit(0)
-        ).alias("zf"),
+    numer = F.lit(alpha * m * m * float(1 << k_scale))
+    n_filled = F.count(F.lit(1))
+    zf = F.coalesce(
+        F.sum(F.expr(f"cast(pow(2, {k_scale} - mrho) as bigint)")), F.lit(0)
     )
-    z_int = (F.lit(m) - F.col("n_filled")) * F.lit(1 << k_scale) + F.col("zf")
-    linear = (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m)) & (
-        F.col("n_filled") < F.lit(m)
-    )
-    return agg.select(
-        *by, F.lit(m).alias("m"), F.col("n_filled"), z_int.alias("z_int")
-    ).select(
-        *by,
-        "m",
-        "n_filled",
-        "z_int",
-        F.when(linear, F.lit("linear")).otherwise(F.lit("hll")).alias("branch"),
-        F.round(
-            F.when(
-                linear,
-                F.lit(float(m)) * F.log(F.lit(float(m)) / (F.lit(m) - F.col("n_filled"))),
-            ).otherwise(F.lit(numer) / F.col("z_int")),
-            3,
-        ).alias("est_distinct"),
-    )
+    z_int = (F.lit(m) - n_filled) * F.lit(1 << k_scale) + zf
+    linear = (numer / z_int <= F.lit(2.5 * m)) & (n_filled < F.lit(m))
+    est = F.when(
+        linear, F.lit(float(m)) * F.log(F.lit(float(m)) / (F.lit(m) - n_filled))
+    ).otherwise(numer / z_int)
+    return n_filled, z_int, linear, est
 
 
 def hll_register_cols(col, p: int = 8, seed: int = 42):

@@ -28,16 +28,15 @@ Two paths on ``util.size_dispatch``, like every iterative operator here:
 
 Determinism: register hashes come from the portable md5 family, sweeps
 are fixed-count, merges are max() — order-independent integers
-throughout; the estimate division mirrors hll_distinct.
+throughout; the register update and the estimate are hll_distinct's own
+(functions.sketch.hll_register_cols / _hll_fold).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.dedup import _md5_long
+from ..functions.sketch import _hll_fold, hll_register_cols
 from ..util import materialize, size_dispatch
 from .graphs import indexed
 
@@ -64,12 +63,14 @@ def neighborhood_function(
     (edges are symmetrized; self-pairs count at h=0). ``frac`` =
     n_pairs / n^2, rounded 6 dp. For a driver-sized graph (module
     docstring) it is exact; above, n_pairs is the HyperANF estimate
-    (rounded to a whole pair count).
+    (rounded to a whole pair count). ``p`` must lie in [4, 16], as for
+    the sketches in functions.sketch, on either path.
     """
+    registers = hll_register_cols("id", p, seed)
     return size_dispatch(
         _symmetrized(edges),
         lambda pdf: _anf_local(pdf, max_h),
-        lambda e: _hyperanf(e, max_h, p, seed),
+        lambda e: _hyperanf(e, max_h, p, registers),
         "h int, n_pairs bigint, frac double",
     )
 
@@ -106,64 +107,25 @@ def _anf_local(pdf, max_h: int):
     return pd.DataFrame(rows, columns=["h", "n_pairs", "frac"])
 
 
-def _hyperanf(e: DataFrame, max_h: int, p: int, seed: int) -> DataFrame:
+def _hyperanf(e: DataFrame, max_h: int, p: int, registers) -> DataFrame:
     """Distributed path of ``neighborhood_function`` over the
-    materialized symmetrized edges."""
+    materialized symmetrized edges; ``registers`` is the
+    ``hll_register_cols`` (bucket, rho) pair over the node ids."""
     # ---- HyperANF: one register set per node, max-merge sweeps
-    m = 1 << p
-    rest_bits = 32 - p
-    k_scale = rest_bits + 1
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    numer = alpha * m * m * float(1 << k_scale)
-
     nodes = e.select(F.col("src").alias("id")).distinct().transform(materialize)
     n = nodes.count()
-    h0 = _md5_long(
-        F.concat_ws(":", F.col("id").cast("string"), F.lit(str(seed)))
-    )
-    bucket = (h0 / F.lit(1 << rest_bits)).cast("long")
-    rest = h0 % F.lit(1 << rest_bits)
-    bitlen = F.when(rest == 0, F.lit(0)).otherwise(
-        F.length(F.bin(rest))
-    )
+    bucket, rho = registers
     # state: (id, bucket, mrho) sparse registers — ball(0) = {id}
     state = nodes.select(
-        "id",
-        bucket.alias("bucket"),
-        (F.lit(rest_bits) - bitlen + F.lit(1)).alias("mrho"),
+        "id", bucket.alias("bucket"), rho.alias("mrho")
     ).transform(materialize)
+    *_, est = _hll_fold(p)
 
     def estimate(st: DataFrame) -> float:
-        row = (
-            st.groupBy("id", "bucket")
-            .agg(F.max("mrho").alias("mrho"))
-            .groupBy("id")
-            .agg(
-                F.count(F.lit(1)).alias("n_filled"),
-                F.sum(
-                    F.expr(f"cast(pow(2, {k_scale} - mrho) as bigint)")
-                ).alias("zf"),
-            )
-            .select(
-                (
-                    (F.lit(m) - F.col("n_filled")) * F.lit(1 << k_scale)
-                    + F.col("zf")
-                ).alias("z_int"),
-                F.col("n_filled"),
-            )
-            .select(
-                F.sum(
-                    F.when(
-                        (F.lit(numer) / F.col("z_int") <= F.lit(2.5 * m))
-                        & (F.col("n_filled") < F.lit(m)),
-                        F.lit(float(m))
-                        * F.log(F.lit(float(m)) / (F.lit(m) - F.col("n_filled"))),
-                    ).otherwise(F.lit(numer) / F.col("z_int"))
-                ).alias("tot")
-            )
-            .collect()[0]
-        )
-        return float(row["tot"])
+        # state is already one row per (id, bucket): fold each id's
+        # register set, then sum the per-node estimates
+        per_node = st.groupBy("id").agg(est.alias("est"))
+        return float(per_node.agg(F.sum("est")).collect()[0][0])
 
     import pandas as pd
 

@@ -19,7 +19,8 @@ TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 def _imported(tree: ast.AST) -> dict:
     """Local name -> object for every ``from simkit_spark... import
-    name [as alias]`` anywhere in the module, function bodies included."""
+    name [as alias]`` anywhere in the module, function bodies included;
+    a submodule name resolves to the submodule, imported if need be."""
     out = {}
     for node in ast.walk(tree):
         if (
@@ -29,7 +30,11 @@ def _imported(tree: ast.AST) -> dict:
         ):
             mod = importlib.import_module(node.module)
             for alias in node.names:
-                out[alias.asname or alias.name] = getattr(mod, alias.name)
+                out[alias.asname or alias.name] = (
+                    getattr(mod, alias.name)
+                    if hasattr(mod, alias.name)
+                    else importlib.import_module(f"{node.module}.{alias.name}")
+                )
     return out
 
 
