@@ -32,7 +32,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import materialize, size_dispatch
+from ..operators.graphs import relax
+from ..util import size_dispatch
 
 
 def funnel(
@@ -237,81 +238,22 @@ def _earliest_arrival_local(pdf: pd.DataFrame, seeds: list) -> pd.DataFrame:
 
 def _temporal_sweeps(c: DataFrame, seeds: list, max_sweeps: int) -> DataFrame:
     """Distributed path of :func:`temporal_reachability` over the
-    (src, dst, t long) contact table ``c``.
-
-    Scale shape: FRONTIER-DELTA label-correcting sweeps (delta-SSSP) —
-    any improvement to arrival(v) must route through a node whose own
-    arrival improved last sweep, so per sweep only the frontier (the
-    last-sweep-improved labels, seeds at sweep 0) joins the contact
-    list: contacts ⋈ frontier → min-t hash-agg → full-outer least
-    merge (joins only; no Union — the scc.py Catalyst lesson). The
-    frontier itself stays LAZY — the improvement filter over the two
-    cached label generations — so each sweep is one merge
-    materialization plus one cached-side convergence count, the same
-    per-sweep action budget as a full-rescan loop, while per-sweep
-    JOIN work is ∝ frontier out-degree, not corpus size (the old
-    shape re-joined the FULL arrival table against the full contact
-    set every sweep). Arrivals only ever decrease and new nodes only
-    ever appear, so convergence is monotone. Runs to fixpoint (the
-    oracle's recursive CTE does too); raises loudly if ``max_sweeps``
-    rounds don't converge.
-    """
+    (src, dst, t long) contact table ``c``: ``graphs.relax`` with the
+    seeds at 0 and each contact offering its t once it is no earlier
+    than the arrival at its src. Runs to fixpoint (the oracle's
+    recursive CTE does too) and raises if ``max_sweeps`` do not
+    converge."""
     id_t = c.schema["src"].dataType.simpleString()
     seed_ids = sorted(set(seeds))
     labels = c.sparkSession.createDataFrame(
-        pd.DataFrame({"id": seed_ids, "arr": [0] * len(seed_ids)}),
-        schema=f"id {id_t}, arr long",
-    ).localCheckpoint()
-    # prev = labels BEFORE the last merge; the frontier (labels that
-    # improved last sweep) is the LAZY improvement filter labels⋈prev —
-    # a join of two cached node-sized tables, re-evaluated inside the
-    # delta join instead of materialized. That keeps the per-sweep
-    # action count at the old shape's 2 (one merge materialize + one
-    # cached-side changed count) while the delta join still consumes
-    # only the frontier. A separately-materialized frontier (tried
-    # first) doubled the per-sweep job count and regressed the sf0.1
-    # bench 5.2 -> 19.5 s — fixed per-sweep cost dominates below the
-    # scale where the delta join's asymptotics pay.
-    prev = None
-    for _ in range(max_sweeps):
-        if prev is None:
-            frontier = labels
-        else:
-            frontier = (
-                labels.join(
-                    prev.withColumnRenamed("arr", "old"), "id", "left"
-                )
-                .where(F.col("old").isNull() | (F.col("arr") < F.col("old")))
-                .select("id", "arr")
-            )
-        delta = (
-            c.join(
-                frontier.select(
-                    F.col("id").alias("src"), F.col("arr").alias("sarr")
-                ),
-                "src",
-            )
-            .where(F.col("t") >= F.col("sarr"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("t").alias("narr"))
-        )
-        nxt = materialize(
-            labels.join(delta, "id", "full")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce("arr", "narr"), F.coalesce("narr", "arr")
-                ).alias("arr"),
-            )
-        )
-        changed = (
-            nxt.join(labels.withColumnRenamed("arr", "old"), "id", "left")
-            .where(F.col("old").isNull() | (F.col("arr") < F.col("old")))
-            .count()
-        )
-        prev, labels = labels, nxt
-        if changed == 0:
-            return labels.withColumnRenamed("arr", "arrival")
-    raise RuntimeError(
-        f"temporal reachability did not converge in {max_sweeps} sweeps"
+        pd.DataFrame({"id": seed_ids, "val": [0] * len(seed_ids)}),
+        schema=f"id {id_t}, val long",
     )
+    arrival, converged = relax(
+        c, labels, lambda v: F.when(F.col("t") >= v, F.col("t")), max_sweeps
+    )
+    if not converged:
+        raise RuntimeError(
+            f"temporal reachability did not converge in {max_sweeps} sweeps"
+        )
+    return arrival.withColumnRenamed("val", "arrival")

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import util
 from .functions.dedup import _md5_long
+from .operators.graphs import relax
 from .util import materialize, size_dispatch
 
 
@@ -166,36 +167,21 @@ def khop_reachability(
     k: int,
     undirected: bool = True,
     dedup_edges: bool = False,
-    broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """Min-hop BFS from ``seeds`` over the triple graph, bounded at k
     hops. Returns (entity, hop) with hop = shortest distance (seeds at
     hop 0). ``undirected`` follows edges both ways (the usual notion of
     a KG neighborhood).
 
-    Scale: the classic Pregel-lite loop — k is small and fixed (2-4 in
-    practice), so this is k joins, not an unbounded iteration. The
-    edge list is persisted ONCE and — the load-bearing detail — NEVER
-    shuffled: each sweep's frontier is a checkpointed table whose row
-    count we just measured, so frontiers (and prior layers in the
-    anti-joins) get an explicit broadcast hint while they are under
-    ``broadcast_rows``. Without the hint a checkpointed plan has no
-    size statistics, the static planner sort-merge-joins, and the
-    many-times-larger edge table reshuffles EVERY sweep (measured 5x
-    the whole traversal's cost at 10M triples) — AQE only downgrades
-    to broadcast after the map stage already ran. Past
-    ``broadcast_rows`` the sweep falls back to a shuffle join, the
-    regime where a node-sized frontier would want the walks.py fixed
-    edge partitioning instead. Work per sweep is proportional to the
-    *new* frontier (anti-joined against prior layers, never a
-    re-materialized cumulative set).
-    A global edge ``distinct`` is NOT needed for correctness (the
-    per-sweep frontier distinct absorbs multiplicity) and is the
-    single most expensive shuffle of the whole traversal, so it is
-    opt-in: set ``dedup_edges=True`` only when many subject-object
-    pairs repeat across predicates (parallel edges inflate the join
-    fan-out each sweep). For diameter-scale traversals use
-    operators.components (pointer doubling), not this.
+    Scale: k ``graphs.relax`` sweeps over the edge list, persisted once
+    and never shuffled (k is small and fixed, 2-4 in practice). A
+    global edge ``distinct`` is NOT needed for correctness (the
+    per-sweep min absorbs multiplicity) and is the single most
+    expensive shuffle of the whole traversal, so it is opt-in: set
+    ``dedup_edges=True`` only when many subject-object pairs repeat
+    across predicates (parallel edges inflate the join fan-out each
+    sweep). For diameter-scale traversals use operators.components
+    (pointer doubling), not this.
     """
     spark = triples.sparkSession
     if undirected:
@@ -215,39 +201,12 @@ def khop_reachability(
         edges = edges.distinct()
     edges = edges.persist()
     try:
-        frontier = spark.createDataFrame(
-            [(s, 0) for s in seeds], "entity string, hop int"
-        ).transform(materialize)
-        # (layer, row_count): counts are free (the layer was just
-        # checkpointed) and drive the broadcast hints
-        layers = [(frontier, len(seeds))]
-        f_cnt = len(seeds)
-        for i in range(1, k + 1):
-            f = F.broadcast(frontier) if f_cnt <= broadcast_rows else frontier
-            nxt = (
-                f.join(edges, frontier["entity"] == edges["src"])
-                .select(F.col("dst").alias("entity"))
-                .distinct()
-            )
-            for prev, pc in layers:
-                p = prev.select("entity")
-                if pc <= broadcast_rows:
-                    p = F.broadcast(p)
-                nxt = nxt.join(p, on="entity", how="left_anti")
-            # localCheckpoint: the frontier feeds k-i+1 consumers in
-            # later sweeps (join + anti-joins); without a lineage break
-            # each sweep re-evaluates the whole prefix (the PageRank
-            # lesson, operators/pagerank.py).
-            nxt = nxt.withColumn("hop", F.lit(i)).transform(materialize)
-            f_cnt = nxt.count()
-            if f_cnt == 0:
-                break
-            layers.append((nxt, f_cnt))
-            frontier = nxt
-        out = layers[0][0]
-        for layer, _ in layers[1:]:
-            out = out.unionByName(layer)
-        return out
+        ids = sorted(set(seeds))
+        labels = spark.createDataFrame(
+            pd.DataFrame({"id": ids, "val": [0] * len(ids)}), "id string, val int"
+        )
+        hops, _ = relax(edges, labels, lambda v: v + 1, k)
+        return hops.select(F.col("id").alias("entity"), F.col("val").alias("hop"))
     finally:
         edges.unpersist()
 
@@ -256,7 +215,6 @@ def transitive_closure(
     triples: DataFrame,
     preds: list[str] | None = None,
     max_iter: int = 64,
-    broadcast_rows: int = 1_000_000,
     dedup_edges: bool = False,
 ) -> DataFrame:
     """Unbounded reachability closure: every (subj, obj) pair connected
@@ -270,23 +228,16 @@ def transitive_closure(
     seedless and unbounded: it runs to convergence (empty delta), not
     to a fixed k, and returns pairs, not a per-entity hop map.
 
-    Scale: the base edge list is persisted once and never reshuffled;
-    each sweep's delta is a just-checkpointed table with a known row
-    count, so delta and prior layers get explicit broadcast hints
-    under ``broadcast_rows`` (checkpointed plans carry no stats — the
-    khop lesson; without the hint the static planner sort-merge-joins
-    and reshuffles the base every sweep). New pairs are anti-joined
-    against prior layers keyed by the full (subj, obj) pair, so work
-    per sweep is proportional to the frontier of NEW pairs. Sweeps are
-    bounded by the graph's diameter; ``max_iter`` is a loud backstop
-    (RuntimeError, never silent truncation) for adversarial inputs.
-    Cycles are safe: the pair space is finite and the anti-join stops
-    re-deriving a pair once it exists, so the delta empties. On a
-    graph whose closure is dense (|TC| ~ V^2) the output itself is the
-    bottleneck — that regime wants the components operator (one label
-    per node), not materialized pairs; the docholder here is the
-    shallow foreign-key DAG of the relational triple map
-    (kg.relational_triples), diameter <= 4.
+    Scale: the distributed sweeps are ``graphs.relax`` keyed by origin,
+    from the distinct edges at one hop. Sweeps are bounded by the
+    graph's diameter; ``max_iter`` is a loud backstop (RuntimeError,
+    never silent truncation) for adversarial inputs. Cycles are safe:
+    the pair space is finite and a pair's hop count only falls, so the
+    frontier empties. On a graph whose closure is dense (|TC| ~ V^2)
+    the output itself is the bottleneck — that regime wants the
+    components operator (one label per node), not materialized pairs;
+    the docholder here is the shallow foreign-key DAG of the
+    relational triple map (kg.relational_triples), diameter <= 4.
 
     Size-dispatched (``util.size_dispatch``): a driver-sized edge list
     is collected once through Arrow and closed by a per-source BFS over
@@ -308,7 +259,7 @@ def transitive_closure(
     return size_dispatch(
         e,
         _closure_local,
-        lambda e: _closure_sweeps(e, max_iter, broadcast_rows),
+        lambda e: _closure_sweeps(e, max_iter),
         "subj {id}, obj {id}, hops int",
     )
 
@@ -341,51 +292,21 @@ def _closure_local(pdf) -> pd.DataFrame:
     return pd.DataFrame(out_rows, columns=["subj", "obj", "hops"])
 
 
-def _closure_sweeps(e: DataFrame, max_iter: int, broadcast_rows: int) -> DataFrame:
-    """Distributed semi-naive sweeps over the materialized (src, dst)
-    edge list ``e``."""
-    paths = (
-        e.select("src", "dst").distinct()
-        .withColumn("hops", F.lit(1))
-        .transform(materialize)
-    )
-    layers = [(paths, paths.count())]
-    delta, d_cnt = paths, layers[0][1]
-    for i in range(2, max_iter + 2):
-        # rename the delta's columns up front: delta descends from e,
-        # and Spark's dataset-id ambiguity check rejects d["dst"] ==
-        # e["src"] even across a checkpoint boundary
-        d = delta.select(
-            F.col("src").alias("d_src"), F.col("dst").alias("d_dst")
-        )
-        if d_cnt <= broadcast_rows:
-            d = F.broadcast(d)
-        new = (
-            d.join(e, F.col("d_dst") == F.col("src"))
-            .select(F.col("d_src").alias("src"), F.col("dst"))
-            .distinct()
-        )
-        for prev, pc in layers:
-            p = prev.select("src", "dst")
-            if pc <= broadcast_rows:
-                p = F.broadcast(p)
-            new = new.join(p, on=["src", "dst"], how="left_anti")
-        new = new.withColumn("hops", F.lit(i)).transform(materialize)
-        d_cnt = new.count()
-        if d_cnt == 0:
-            break
-        layers.append((new, d_cnt))
-        delta = new
-    else:
+def _closure_sweeps(e: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed path: ``graphs.relax`` per origin over the
+    materialized (src, dst) edge list ``e``, from its distinct edges at
+    one hop."""
+    paths = e.select(
+        F.col("src").alias("origin"), F.col("dst").alias("id"), F.lit(1).alias("val")
+    ).distinct()
+    tc, converged = relax(e, paths, lambda v: v + 1, max_iter, by=("origin",))
+    if not converged:
         raise RuntimeError(
             f"transitive_closure did not converge in {max_iter} sweeps "
-            f"(last delta {d_cnt} pairs) — diameter exceeds the backstop"
+            "— diameter exceeds the backstop"
         )
-    out = layers[0][0]
-    for layer, _ in layers[1:]:
-        out = out.unionByName(layer)
-    return out.select(
-        F.col("src").alias("subj"), F.col("dst").alias("obj"), "hops"
+    return tc.select(
+        F.col("origin").alias("subj"), F.col("id").alias("obj"), F.col("val").alias("hops")
     )
 
 

@@ -9,10 +9,8 @@ Exact-at-scale design: all-pairs BFS is Theta(n*m) and unpayable at
 10^9 nodes, so the standard estimator samples sources (Eppstein-Wang)
 — here an md5-deterministic sample (lowest hash wins, ties by id), so
 every engine picks the same sources and the DuckDB twin is exact. The
-BFS itself is the repo's frontier pattern: the (src, node) frontier
-joins ONE fixed hash-partitioned edge layout per hop, anti-joins the
-visited set so per-hop work is proportional to the NEW frontier, and
-breaks lineage every hop (the pagerank/LPA iterative-plan lesson).
+BFS itself is ``graphs.relax`` keyed by source over ONE fixed
+hash-partitioned edge layout (``graphs.adjacency``).
 
 Float contract: 1/d sums are accumulated as integers scaled by
 lcm(1..max_hops) (12 for the default 4), so the sum is
@@ -28,7 +26,7 @@ from math import lcm
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize
-from .graphs import adjacency, undirected
+from .graphs import adjacency, relax, undirected
 
 
 def _md5_rank(col: F.Column, seed: int) -> F.Column:
@@ -63,28 +61,18 @@ def harmonic_centrality(
             .limit(n_sources)
             .select("id")
         )
-    frontier = materialize(
-        srcs.select(F.col("id").alias("src"), F.col("id").alias("node"))
+    labels = srcs.select(F.col("id").alias("origin"), "id", F.lit(0).alias("val"))
+    dist, _ = relax(
+        e.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+        labels, lambda v: v + 1, max_hops, by=("origin",),
     )
-    visited = frontier.withColumn("dist", F.lit(0))
     scale = lcm(*range(1, max_hops + 1))
-    for t in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["a"])
-            .select("src", F.col("b").alias("node"))
-            .distinct()
-            .join(visited.select("src", "node"), ["src", "node"], "left_anti")
-        )
-        frontier = materialize(nxt)
-        visited = materialize(
-            visited.unionByName(frontier.withColumn("dist", F.lit(t)))
-        )
     out = (
-        visited.where(F.col("dist") > 0)
-        .groupBy(F.col("node").alias("node_id"))
+        dist.where(F.col("val") > 0)
+        .groupBy(F.col("id").alias("node_id"))
         .agg(
             F.count(F.lit(1)).alias("n_reached"),
-            F.sum(F.lit(scale).cast("long") / F.col("dist")).cast("long").alias("num"),
+            F.sum(F.lit(scale).cast("long") / F.col("val")).cast("long").alias("num"),
         )
         .select(
             "node_id",

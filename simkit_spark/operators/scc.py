@@ -20,13 +20,13 @@ components.connected_components):
   unresolved id forward to fixpoint (F) and backward to fixpoint (B);
   nodes with F(v) == B(v) are mutually reachable with that min id and
   resolve to it; their edges drop out and the next round runs on the
-  remainder. Each propagation sweep is one equi-join + groupBy-min on
-  a fixed persisted edge layout (the pagerank sorted-once pattern);
-  per round at least the min-id node of every remaining component
-  resolves, and in similarity/KG graphs (few giant SCCs + singleton
-  tail) a handful of rounds clears everything. Worst case (a path of
-  n singleton SCCs) degrades to O(n) rounds — inherent to
-  label-propagation SCC; ``max_rounds`` keeps it loud, not silent.
+  remainder. Each propagation is ``graphs.relax`` over a fixed
+  persisted edge layout (the pagerank sorted-once pattern); per round
+  at least the min-id node of every remaining component resolves, and
+  in similarity/KG graphs (few giant SCCs + singleton tail) a handful
+  of rounds clears everything. Worst case (a path of n singleton SCCs)
+  degrades to O(n) rounds — inherent to label-propagation SCC;
+  ``max_rounds`` keeps it loud, not silent.
 
 Scale: sweeps never materialize pair-space reachability (that is the
 oracle's luxury at 500 nodes); state is one (id, label) row per node,
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, size_dispatch
-from .graphs import indexed
+from .graphs import indexed, relax
 
 
 def _tarjan_numpy(ids, src, dst):
@@ -142,48 +142,16 @@ def _fwbw_rounds(e0: DataFrame, max_rounds: int, max_sweeps: int) -> DataFrame:
     )
     resolved = None
 
-    def min_reach(live_e: DataFrame, nodes: DataFrame) -> DataFrame:
-        """labels(id, lab) = min id reachable (within live nodes) via
-        live_e, propagated to fixpoint."""
-        labels = nodes.select("id", F.col("id").alias("lab")).transform(materialize)
-        for _ in range(max_sweeps):
-            # inflow-min joined back with least(), NOT a union-then-min:
-            # Union's constraint-propagation rewrite hits a Catalyst
-            # NoSuchElementException ("key not found: id#...") on the
-            # checkpointed node-sized children at ~100k-node scale
-            inflow = (
-                live_e.join(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("lab").alias("nlab")
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("nlab").alias("nlab"))
+    def min_reach(rev_e: DataFrame, nodes: DataFrame) -> DataFrame:
+        """(id, lab): the min id that each live node reaches along the
+        REVERSED edges ``rev_e``, by ``graphs.relax`` to fixpoint."""
+        labels = nodes.select("id", F.col("id").alias("val"))
+        lab, converged = relax(rev_e, labels, lambda v: v, max_sweeps)
+        if not converged:
+            raise RuntimeError(
+                f"SCC min-label propagation did not converge in {max_sweeps} sweeps"
             )
-            nxt = (
-                labels.join(inflow, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("lab"), F.coalesce("nlab", "lab")
-                    ).alias("lab"),
-                )
-                .transform(materialize)
-            )
-            changed = (
-                nxt.join(
-                    labels.withColumnRenamed("lab", "old"), "id"
-                )
-                .where(F.col("lab") != F.col("old"))
-                .count()
-            )
-            labels = nxt
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"SCC min-label propagation did not converge in {max_sweeps} sweeps"
-        )
+        return lab.withColumnRenamed("val", "lab")
 
     for _ in range(max_rounds):
         n_live = live.count()
@@ -200,8 +168,8 @@ def _fwbw_rounds(e0: DataFrame, max_rounds: int, max_sweeps: int) -> DataFrame:
             .join(live.withColumnRenamed("id", "dst"), "dst", "leftsemi")
             .transform(materialize)
         )
-        fl = min_reach(fe, live)
-        bl = min_reach(be, live)
+        fl = min_reach(be, live)
+        bl = min_reach(fe, live)
         both = fl.join(
             bl.withColumnRenamed("lab", "blab"), "id"
         ).transform(materialize)

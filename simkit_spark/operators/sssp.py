@@ -12,17 +12,17 @@ bit. Frontier-only relaxation is exact, not an approximation: a node
 whose distance did not improve in sweep i already contributed its
 candidates in an earlier sweep, and min() keeps them dominated.
 
-Scale: edges shuffle into a fixed ``src`` partitioning ONCE; each
-sweep joins only the improved-node frontier into it (work per sweep is
-proportional to the frontier's out-edges, the delta-stepping intuition
-without the bucket machinery), then one hash-agg min merges candidates
-into the running distance table. Lineage is broken per sweep.
+Scale: the distributed sweeps are ``graphs.relax`` over edges shuffled
+into a fixed ``src`` partitioning once.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from ..util import materialize, size_dispatch
+
+from ..util import size_dispatch
+from .graphs import relax
 
 
 def bounded_sssp(
@@ -61,45 +61,25 @@ def bounded_sssp(
 
 
 def _sssp_dist(edges: DataFrame, sources: list, k: int, iter_dp: int) -> DataFrame:
-    """Distributed path of ``bounded_sssp`` over (src, dst, w)."""
-    spark = edges.sparkSession
+    """Distributed path of ``bounded_sssp`` over (src, dst, w): k
+    ``graphs.relax`` sweeps over the edges, shuffled into a fixed
+    ``src`` partitioning once."""
     e = edges.repartition("src").sortWithinPartitions("src").persist()
     try:
-        id_type = e.schema["src"].dataType.simpleString()
-        dist = spark.createDataFrame(
-            [(s, 0.0) for s in sources], f"id {id_type}, dist double"
-        ).transform(materialize)
-        frontier = dist
-        for _ in range(k):
-            cand = frontier.join(e, frontier["id"] == e["src"]).select(
-                F.col("dst").alias("id"),
-                F.round(F.col("dist") + F.col("w"), iter_dp).alias("dist"),
-            )
-            merged = (
-                dist.unionByName(cand)
-                .groupBy("id")
-                .agg(F.min("dist").alias("dist"))
-                .transform(materialize)
-            )
-            old = dist.select("id", F.col("dist").alias("old"))
-            frontier = (
-                merged.join(old, "id", "left")
-                .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-                .select("id", "dist")
-                .transform(materialize)
-            )
-            dist = merged
-            if frontier.isEmpty():
-                break
-        return dist
+        id_t = e.schema["src"].dataType.simpleString()
+        ids = sorted(set(sources))
+        labels = edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "val": [0.0] * len(ids)}),
+            f"id {id_t}, val double",
+        )
+        dist, _ = relax(e, labels, lambda v: F.round(v + F.col("w"), iter_dp), k)
+        return dist.withColumnRenamed("val", "dist")
     finally:
         e.unpersist()
 
 
 def _sssp_local(pdf, sources, k, iter_dp):
     from decimal import ROUND_HALF_UP, Decimal
-
-    import pandas as pd
 
     quantum = Decimal(1).scaleb(-iter_dp)
 

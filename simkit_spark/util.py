@@ -34,6 +34,28 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return _reset_bloated_stats(ck) if eager else ck
 
 
+def max_rows(df: DataFrame) -> int | None:
+    """The optimizer's static bound on ``df``'s row count (a driver-built
+    table's length, a ``limit``), or None when the plan has none. Reading
+    it runs no job."""
+    try:
+        bound = df._jdf.queryExecution().optimizedPlan().maxRows()
+        return int(bound.get()) if bound.isDefined() else None
+    except Py4JError:  # internal-API drift: no bound
+        return None
+
+
+def count_rows(df: DataFrame) -> int:
+    """``df.count()`` in one job: the row count of the physical plan's
+    RDD. ``count()`` adds a single-partition aggregate exchange, which
+    AQE runs as a job of its own."""
+    try:
+        rdd = df._jdf.queryExecution().toRdd()
+    except Py4JError:  # internal-API drift: the plain count
+        return df.count()
+    return int(rdd.count())
+
+
 def _plan_is_local(df: DataFrame) -> bool:
     """Whether ``df`` optimizes to a LocalRelation, under any
     repartition (``size_dispatch`` coalesces its answers)."""

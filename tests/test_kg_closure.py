@@ -69,6 +69,13 @@ def test_closure_max_iter_backstop(spark, force_distributed):
     long_chain = [(f"n{i}", f"n{i + 1}") for i in range(6)]
     with force_distributed(), pytest.raises(RuntimeError, match="did not converge"):
         transitive_closure(_triples(spark, long_chain), max_iter=3)
+    # exact at the bound: a 3-edge chain converges in 3 sweeps (hops 2
+    # and 3, then none new), a 4-edge chain needs a 4th
+    with force_distributed():
+        tc = transitive_closure(_triples(spark, long_chain[:3]), max_iter=3)
+        assert len(_as_set(tc)) == 6
+        with pytest.raises(RuntimeError, match="did not converge"):
+            transitive_closure(_triples(spark, long_chain[:4]), max_iter=3)
 
 
 def test_closure_parallel_edges_and_dedup(spark, force_distributed):

@@ -274,6 +274,42 @@ def test_kg_closure_local_dispatch_and_distributed_joins(spark, force_distribute
     }
 
 
+def test_relax_broadcasts_its_frontier(spark, monkeypatch):
+    """The khop lesson, pinned: with size-based broadcasts off, only
+    ``relax``'s count-driven hint can make a sweep join its frontier to
+    the edges by BroadcastHashJoin. Without the hint that join
+    sort-merges and the edge list reshuffles every sweep; the one
+    sort-merge join left is the full-outer merge into the labels."""
+    import simkit_spark.operators.graphs as g
+
+    plans = []
+    real = g.materialize
+
+    def spy(df, eager=True):
+        plans.append(_plan(df).split("== Physical Plan ==")[1])
+        return real(df, eager)
+
+    monkeypatch.setattr(g, "materialize", spy)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    labels = spark.createDataFrame([(0, 0)], "id long, val long")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out, converged = g.relax(edges, labels, lambda v: v + 1, 10)
+        rows = sorted(map(tuple, out.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert converged and rows == [(i, i) for i in range(6)]
+    sweeps = [p for p in plans if "Join" in p]
+    assert len(sweeps) == 6  # 5 that improve a label, 1 that improves none
+    for p in sweeps:
+        joins = [l for l in p.splitlines() if "Join " in l]
+        inner = [l for l in joins if "Inner" in l]
+        assert inner and all("BroadcastHashJoin" in l for l in inner), p
+        assert all("FullOuter" in l for l in joins if "SortMergeJoin" in l), p
+
+
 def test_round4g_sketch_and_fusion_plans(spark):
     """bloom_semijoin: the probe side joins ONLY via broadcast hash
     joins (the 4 per-hash left-semis + the membership flag) — zero

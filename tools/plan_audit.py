@@ -151,9 +151,11 @@ AUDITED = {
     "sorted edge layout + a composite-key (prev, cand) membership probe "
     "(candidate-sized, never neighbor-list x neighbor-list); min-struct "
     "hash agg picks the hop — no per-walk window sort",
-    "harmonic_centrality_knn": "bounded multi-source BFS: per hop the "
-    "NEW frontier only (anti-join vs visited) joins the fixed edge "
-    "layout; 1/d sums are lcm-scaled integers, one node-keyed hash agg",
+    "harmonic_centrality_knn": "bounded multi-source BFS by graphs.relax "
+    "keyed by source: per hop the improved frontier only joins the fixed "
+    "edge layout (the sweeps ran eagerly, so the plan shown is their "
+    "checkpointed result); 1/d sums are lcm-scaled integers, one "
+    "node-keyed hash agg",
     "bm25_topk": "postings from ONE tokenize+explode agg; query terms "
     "TakeOrdered then BroadcastHashJoin'd back; corpus totals as a "
     "broadcast 1-row aggregate; per-term window cut, no global sort",
@@ -168,11 +170,12 @@ AUDITED = {
     "layout; the fanout cut is a (root, parent)-partitioned window over "
     "frontier x degree candidate rows only; expansion from the DISTINCT "
     "sampled frontier",
-    "kg_closure": "semi-naive datalog TC: each sweep joins only the NEW "
-    "delta (broadcast-hinted under 1M rows) against the once-persisted "
-    "edge layout; anti-join vs prior layers keeps sweep work ~ frontier; "
-    "size-dispatched BFS twin below the byte budget (the sf0.01 plan "
-    "shown here is the local twin: scan-only, no joins)",
+    "kg_closure": "semi-naive datalog TC by graphs.relax keyed by origin: "
+    "each sweep joins only the pairs the last sweep improved "
+    "(broadcast-hinted under graphs.BROADCAST_ROWS) to the edge list, "
+    "and one full-outer join merges the min hops; size-dispatched BFS "
+    "twin below the byte budget (the sf0.01 plan shown here is the local "
+    "twin: scan-only, no joins)",
     "events_funnel": "one user-keyed groupBy+LEFT-join pair per stage; "
     "stage event_type filters reach the parquet scan as pushed filters; "
     "no window over raw events, no nested-loop",
@@ -247,10 +250,9 @@ AUDITED = {
     "the d*n > 3m test is all-integer (no float density in any comparison); "
     "edge set shrinks geometrically so total work is O(m log n)",
     "events_temporal_reach": "contacts from an (event_type, hour-bucket) "
-    "equi-self-join (group-bounded, never all-pairs); arrival sweeps are "
-    "the SSSP shape — node-sized label table joins the contact list, min "
-    "hash-agg, full-outer merge; joins only, no Union (the scc Catalyst "
-    "lesson)",
+    "equi-self-join (group-bounded, never all-pairs); past the driver "
+    "pass, arrival sweeps are graphs.relax — the improved frontier joins "
+    "the contact list, min hash-agg, one full-outer merge, no Union",
     "katz_knn": "size-dispatched: sf0.01 runs the numpy twin (scan-only); "
     "distributed sweeps are the pagerank shape minus the out-degree join "
     "and dangling pass — sorted-once persisted edge layout, per sweep one "
